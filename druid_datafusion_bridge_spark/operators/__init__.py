@@ -46,14 +46,13 @@ def spread(
     unnecessarily — a cheap narrow-column shuffle, never a correctness
     or memory hazard.
 
-    ``target_bytes`` (default SPREAD_MIN_BYTES_PER_PART, env override
-    SPARK_GRAFT_SPREAD_TARGET_BYTES) caps the width at
-    input_bytes / target_bytes: callers whose downstream per-row work
-    is light raise it so a sub-MB input gets a handful of partitions
-    instead of one per core (see SPREAD_MIN_BYTES_PER_PART comment).
-    The byte probe sums the input files' sizes — the FULL files, so a
-    filtered lineage is still sized by its source table; that only
-    errs toward more partitions, the pre-r13 behavior.
+    ``target_bytes`` (default SPREAD_MIN_BYTES_PER_PART) caps the width
+    at input_bytes / target_bytes: callers whose downstream per-row
+    work is light raise it so a sub-MB input gets a handful of
+    partitions instead of one per core (see SPREAD_MIN_BYTES_PER_PART
+    comment). The byte probe sums the input files' sizes — the FULL
+    files, so a filtered lineage is still sized by its source table;
+    that only errs toward more partitions.
     """
     n = df.sparkSession.sparkContext.defaultParallelism * factor
     try:
@@ -64,13 +63,8 @@ def spread(
         for f in files:
             path = f[5:] if f.startswith("file:") else f
             total += os.path.getsize(path)
-        if total and os.environ.get("SPARK_GRAFT_SPREAD_SIZE_CAP", "1") != "0":
-            tb = target_bytes or int(
-                os.environ.get(
-                    "SPARK_GRAFT_SPREAD_TARGET_BYTES",
-                    SPREAD_MIN_BYTES_PER_PART,
-                )
-            )
+        if total:
+            tb = target_bytes or SPREAD_MIN_BYTES_PER_PART
             n = min(n, max(1, total // tb))
             if len(files) >= n:
                 return df

@@ -22,8 +22,6 @@ k-means in the IVF path).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -584,15 +582,14 @@ def pq_quantize(
     double = squared reconstruction error of the whole vector).
 
     Scale shape: codebooks are (n_subspaces x codebook_size x subdim) —
-    tiny, broadcast; encoding (r13, same fusion as pq_adc_topk) is one
+    tiny, broadcast; encoding (same fusion as pq_adc_topk) is one
     in-row argmin expression per vector over the PACKED broadcast
     codebooks — no subvector explode, no per-(vector, subspace) min_by
     exchange and no repacking groupBy; the whole encode fuses into the
     corpus scan. Training sees the corpus ``n_subspaces`` times
     (bounded, small k); at 100 TB train on a hash-sample and freeze,
-    like the IVF maintenance path. (sq_err now sums the subspace
-    partials in fixed subspace order — the old shuffled SUM left that
-    4-term float addition order unspecified.)"""
+    like the IVF maintenance path. sq_err sums the subspace partials in
+    fixed subspace order, so the float addition order is pinned."""
     if dim % n_subspaces:
         raise ValueError("dim must divide evenly into subspaces")
     w = dim // n_subspaces
@@ -602,18 +599,6 @@ def pq_quantize(
         )
     )
     cb = _pq_train(v, w, n_subspaces, codebook_size, seed)
-    if os.environ.get("SPARK_GRAFT_OPT_PQADC", "1") == "0":
-        # pre-r13 explode/min_by/groupBy encode, kept for A/B
-        best = _pq_assign(v, cb, w, n_subspaces)
-        return best.groupBy("vec_id").agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("sub_id", F.col("b.code").alias("code")))
-                ),
-                lambda s: s["code"],
-            ).alias("codes"),
-            F.sum("b.d2").alias("sq_err"),
-        )
     best_expr = F.transform(
         F.sequence(F.lit(0), F.lit(n_subspaces - 1)),
         lambda s: F.array_min(
@@ -677,7 +662,23 @@ def _pq_cb_packed(cb: DataFrame) -> DataFrame:
     """The codebooks as ONE broadcastable row: cbs_all[sub][code] ->
     struct(code, cv), code-ordered within each subspace (array position
     i holds code i-1, so an in-row argmin/LUT lookup can index by code).
-    Shared by the r13 fused flat-PQ and IVF+PQ paths."""
+    Shared by the flat-PQ and IVF+PQ paths.
+
+    Raises ValueError unless every subspace's codes are exactly 0..k-1:
+    _pq_adc_expr indexes the LUT by code value, so a gap, shift or
+    duplicate (e.g. a hand-edited persisted index) would otherwise give
+    NULL or wrong distances with no error. The codebook is tiny
+    (n_subspaces x codebook_size rows), so the check is one small
+    collect."""
+    by_sub: dict = {}
+    for r in cb.select("sub_id", "code").collect():
+        by_sub.setdefault(r["sub_id"], []).append(r["code"])
+    for sub_id, codes in sorted(by_sub.items()):
+        if sorted(codes) != list(range(len(codes))):
+            raise ValueError(
+                f"PQ codebook subspace {sub_id}: codes must be exactly "
+                f"0..{len(codes) - 1}, got {sorted(codes)}"
+            )
     return (
         cb.groupBy("sub_id")
         .agg(
@@ -699,10 +700,9 @@ def _pq_codes_expr(vec_col: str, w: int, n_subspaces: int):
     """In-row PQ encoding: ALL subspace codes of one vector as a single
     expression over the packed broadcast codebooks (``cbs_all`` column
     from _pq_cb_packed). Per subspace: argmin over the codebook of the
-    same deterministic sqdist left-fold the join formulation used;
-    array_min over struct(d2, code) tie-breaks (d2, code) exactly like
-    the old min_by struct ordering. No subvector explode, no joined row
-    per (vector, subspace, code), no aggregation exchange."""
+    deterministic sqdist left-fold; array_min over struct(d2, code)
+    tie-breaks on (d2, code). No subvector explode, no joined row per
+    (vector, subspace, code), no aggregation exchange."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(n_subspaces - 1)),
         lambda s: F.array_min(
@@ -736,8 +736,8 @@ def _pq_lut_expr(q_col: str, w: int, n_subspaces: int):
 def _pq_adc_expr(n_subspaces: int):
     """In-row ADC distance: fixed-order sum of the n_subspaces LUT
     partials selected by the row's codes (columns ``lut``, ``codes``).
-    The old shuffled SUM left the 4-term float addition order
-    unspecified; this pins it to subspace order."""
+    The float addition order is pinned to subspace order, so the
+    distance does not depend on how rows were shuffled."""
     return F.aggregate(
         F.sequence(F.lit(0), F.lit(n_subspaces - 1)),
         F.lit(0.0),
@@ -745,27 +745,6 @@ def _pq_adc_expr(n_subspaces: int):
         + F.element_at(
             F.element_at("lut", s + 1), F.element_at("codes", s + 1) + 1
         ),
-    )
-
-
-def _pq_assign(
-    v: DataFrame, cb: DataFrame, w: int, n_subspaces: int
-) -> DataFrame:
-    """Nearest codebook centroid per (vector, subspace): (vec_id,
-    sub_id, b struct<code, d2>). Subvector-explode -> broadcast-join
-    -> argmin; a stateless corpus scan, no shuffle beyond the
-    explode's map-side regrouping."""
-    subs = v.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.slice("v", i * w + 1, w) for i in range(n_subspaces)])
-        ).alias("sub_id", "sv"),
-    )
-    return (
-        subs.join(F.broadcast(cb), "sub_id")
-        .select("vec_id", "sub_id", "code", _pq_sqdist("sv", "cv").alias("d2"))
-        .groupBy("vec_id", "sub_id")
-        .agg(F.min_by(F.struct("code", "d2"), F.struct("d2", "code")).alias("b"))
     )
 
 
@@ -928,65 +907,32 @@ def pq_adc_topk(
         .filter(F.col("nv") > 0)
         .select("probe_id", unit.alias("q"))
     )
-    if os.environ.get("SPARK_GRAFT_OPT_PQADC", "1") == "0":
-        # pre-r13 shape, kept for A/B: encode via subvector-explode ->
-        # broadcast-join -> min_by groupBy; ADC via (sub, code) join +
-        # (probe, vec) sum groupBy
-        codes = _pq_assign(v, cb, w, n_subspaces).select(
-            "vec_id", "sub_id", F.col("b.code").alias("code")
+    # Fused path (guide §2.4 — remove shuffles outright): the
+    # codebooks, PACKED as one broadcast row (cbs_all[sub][code] ->
+    # centroid, code-ordered), let each vector row compute ALL its
+    # subspace codes in ONE in-row argmin expression — no subvector
+    # explode, no joined row per (vector, subspace, code), no min_by
+    # aggregation exchange. The per-probe LUT is likewise packed
+    # (lut[sub][code] -> partial d2) so the ADC distance is an in-row
+    # fold against the broadcast LUT, with no (probe, vec)-keyed
+    # aggregation exchange of |corpus| x |probes| rows. The partials
+    # sum in fixed subspace order. The only exchange left before the
+    # rerank is the shortlist window's.
+    cb_packed = _pq_cb_packed(cb)
+    codes = v.crossJoin(F.broadcast(cb_packed)).select(
+        "vec_id", _pq_codes_expr("v", w, n_subspaces).alias("codes")
+    )
+    p_lut = p.crossJoin(F.broadcast(cb_packed)).select(
+        "probe_id", _pq_lut_expr("q", w, n_subspaces).alias("lut")
+    )
+    adc = (
+        codes.crossJoin(F.broadcast(p_lut))
+        .filter(F.col("vec_id") != F.col("probe_id"))
+        .select(
+            "probe_id", "vec_id",
+            _pq_adc_expr(n_subspaces).alias("adc_d2"),
         )
-        lut = (
-            p.select(
-                "probe_id",
-                F.posexplode(
-                    F.array(
-                        *[F.slice("q", i * w + 1, w) for i in range(n_subspaces)]
-                    )
-                ).alias("sub_id", "qv"),
-            )
-            .join(F.broadcast(cb), "sub_id")
-            .select(
-                "probe_id", "sub_id", "code", _pq_sqdist("qv", "cv").alias("pd")
-            )
-        )
-        adc = (
-            codes.join(F.broadcast(lut), ["sub_id", "code"])
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .groupBy("probe_id", "vec_id")
-            .agg(F.sum("pd").alias("adc_d2"))
-        )
-    else:
-        # r13 fused path (guide §2.4 — remove shuffles outright): the
-        # codebooks, PACKED as one broadcast row (cbs_all[sub][code] ->
-        # centroid, code-ordered), let each vector row compute ALL its
-        # subspace codes in ONE in-row argmin expression — no subvector
-        # explode, no 16x joined rows per (vector, subspace), and the
-        # min_by aggregation exchange disappears. The per-probe LUT is
-        # likewise packed (lut[sub][code] -> partial d2) so the ADC
-        # distance is an in-row 4-term fold against the broadcast LUT —
-        # the old (probe, vec)-keyed aggregation exchange, which at
-        # corpus scale carried |corpus| x |probes| rows, disappears
-        # too. Same arithmetic on the same slices (sqdist is the same
-        # deterministic left-fold; argmin tie-breaks (d2, code) exactly
-        # like min_by's struct ordering); the 4 partials now sum in
-        # fixed subspace order, which only pins what the old shuffled
-        # SUM left unspecified in the last float bits. The only
-        # exchange left before the rerank is the shortlist window's.
-        cb_packed = _pq_cb_packed(cb)
-        codes = v.crossJoin(F.broadcast(cb_packed)).select(
-            "vec_id", _pq_codes_expr("v", w, n_subspaces).alias("codes")
-        )
-        p_lut = p.crossJoin(F.broadcast(cb_packed)).select(
-            "probe_id", _pq_lut_expr("q", w, n_subspaces).alias("lut")
-        )
-        adc = (
-            codes.crossJoin(F.broadcast(p_lut))
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .select(
-                "probe_id", "vec_id",
-                _pq_adc_expr(n_subspaces).alias("adc_d2"),
-            )
-        )
+    )
     wnd = W.partitionBy("probe_id").orderBy(
         F.col("adc_d2").asc(), F.col("vec_id").asc()
     )
@@ -1081,8 +1027,8 @@ def _ivfpq_encode(
     the in-query path (ivf_pq_topk) and the persisted build
     (ivf_pq_build). Returns (assigned, codes): assigned carries
     (vec_id, cell, v) — cell assignment plus the float vector for
-    rerank storage — and codes carries one (vec_id, cell, sub_id, code)
-    row per subspace.
+    rerank storage — and codes carries one (vec_id, cell, codes
+    array<int>) row per vector, codes in sub_id order.
 
     Cell assignment + residual run via broadcast-centroid join and a
     vec_id-keyed argmax aggregation. This DOES hash-exchange the
@@ -1120,28 +1066,7 @@ def _ivfpq_encode(
             F.zip_with("v", "cv", lambda a, b: a - b).alias("r"),
         )
     )
-    if os.environ.get("SPARK_GRAFT_OPT_IVFPQ", "1") == "0":
-        # pre-r13 rows form, kept for A/B: per-subspace codes via
-        # explode -> broadcast-join -> min_by, cell kept on the row.
-        # Schema: one (vec_id, cell, sub_id, code) row per subspace —
-        # callers branch on the same env var.
-        subs = res.select(
-            "vec_id", "cell",
-            F.posexplode(
-                F.array(*[F.slice("r", i * w + 1, w) for i in range(n_subspaces)])
-            ).alias("sub_id", "sv"),
-        )
-        codes = (
-            subs.join(F.broadcast(cb), "sub_id")
-            .select(
-                "vec_id", "cell", "sub_id", "code",
-                _pq_sqdist("sv", "cv").alias("d2"),
-            )
-            .groupBy("vec_id", "cell", "sub_id")
-            .agg(F.min_by("code", F.struct("d2", "code")).alias("code"))
-        )
-        return assigned, codes
-    # r13 fused encode (guide §2.4, same as pq_adc_topk): all subspace
+    # Fused encode (guide §2.4, same as pq_adc_topk): all subspace
     # codes of a vector computed in ONE in-row argmin expression over
     # the packed broadcast codebooks — no subvector explode, no min_by
     # aggregation exchange, and the build path gets its sub_id-ordered
@@ -1150,7 +1075,6 @@ def _ivfpq_encode(
     # catastrophe — a LITERAL-codebook generator re-running the whole
     # residual chain once per codebook entry — cannot recur: Catalyst
     # never collapses a non-cheap expression into multiple references.
-    # Schema: one (vec_id, cell, codes array<int>) row per vector.
     codes = res.crossJoin(F.broadcast(_pq_cb_packed(cb))).select(
         "vec_id", "cell", _pq_codes_expr("r", w, n_subspaces).alias("codes")
     )
@@ -1189,11 +1113,10 @@ def ivf_pq_topk(
     fixed MB at any corpus size) and freeze; the corpus is touched by
     (1) the encode scan — cell/residual via broadcast-centroid joins
     (one bounded vector exchange; see the inline measurement note) and
-    codes via a broadcast-codebook join whose min_by aggregation
-    combines map-side — and (2) the ADC
-    scan, which reads only
-    (cell, codes) rows and — were the code table written partitioned
-    by cell, as ingest would — only the probed cells' partitions.
+    codes via an in-row argmin over the packed broadcast codebooks —
+    and (2) the ADC scan, which reads only (cell, codes) rows and —
+    were the code table written partitioned by cell, as ingest would —
+    only the probed cells' partitions.
     Floats are read once more for the per-probe ``shortlist`` exact
     rerank.
 
@@ -1271,50 +1194,24 @@ def ivf_pq_topk(
             F.zip_with("q", "cv", lambda a, b: a - b).alias("qr"),
         )
     )
-    if os.environ.get("SPARK_GRAFT_OPT_IVFPQ", "1") == "0":
-        # pre-r13: row-form LUT + (cell, sub, code) join + (probe, vec)
-        # sum aggregation, kept for A/B
-        lut = (
-            probe_cells.select(
-                "probe_id", "cell",
-                F.posexplode(
-                    F.array(
-                        *[F.slice("qr", i * w + 1, w) for i in range(n_subspaces)]
-                    )
-                ).alias("sub_id", "qv"),
-            )
-            .join(F.broadcast(cb), "sub_id")
-            .select(
-                "probe_id", "cell", "sub_id", "code",
-                _pq_sqdist("qv", "cv").alias("pd"),
-            )
+    # Fused ADC (same as pq_adc_topk): the per-(probe, cell) LUT
+    # rides packed on one broadcast row, the cell join IS the IVF
+    # prune, and the n_subspaces partials sum in-row — no (probe,
+    # vec)-keyed aggregation exchange. ||qr - code(r)||^2 ~ ||q - v||^2
+    # = 2 - 2 cos on the unit sphere.
+    lut_p = probe_cells.crossJoin(
+        F.broadcast(_pq_cb_packed(cb))
+    ).select(
+        "probe_id", "cell", _pq_lut_expr("qr", w, n_subspaces).alias("lut")
+    )
+    adc = (
+        codes.join(F.broadcast(lut_p), "cell")
+        .filter(F.col("vec_id") != F.col("probe_id"))
+        .select(
+            "probe_id", "vec_id",
+            _pq_adc_expr(n_subspaces).alias("adc_d2"),
         )
-        adc = (
-            codes.join(F.broadcast(lut), ["cell", "sub_id", "code"])
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .groupBy("probe_id", "vec_id")
-            .agg(F.sum("pd").alias("adc_d2"))
-        )
-    else:
-        # r13 fused ADC (same as pq_adc_topk): the per-(probe, cell)
-        # LUT rides packed on one broadcast row, the cell join IS the
-        # IVF prune, and the n_subspaces partials sum in-row — the
-        # (probe, vec)-keyed aggregation exchange (|probed corpus| x
-        # |probes| rows at scale) disappears. ||qr - code(r)||^2 ~
-        # ||q - v||^2 = 2 - 2 cos on the unit sphere, as before.
-        lut_p = probe_cells.crossJoin(
-            F.broadcast(_pq_cb_packed(cb))
-        ).select(
-            "probe_id", "cell", _pq_lut_expr("qr", w, n_subspaces).alias("lut")
-        )
-        adc = (
-            codes.join(F.broadcast(lut_p), "cell")
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .select(
-                "probe_id", "vec_id",
-                _pq_adc_expr(n_subspaces).alias("adc_d2"),
-            )
-        )
+    )
     wnd = W.partitionBy("probe_id").orderBy(
         F.col("adc_d2").asc(), F.col("vec_id").asc()
     )
@@ -1400,25 +1297,9 @@ def ivf_pq_build(
     if not n_train:
         raise ValueError("ivf_pq_build: empty corpus (no non-zero vectors)")
     assigned, codes = _ivfpq_encode(v, cents, cb, w, n_subspaces)
-    # one array<int> row per vector, sub_id order pinned by array_sort
-    # over (sub_id, code) structs before the code projection
-    if os.environ.get("SPARK_GRAFT_OPT_IVFPQ", "1") == "0":
-        # pre-r13 rows-form codes: pack one sub_id-ordered array per
-        # vector via groupBy (kept for A/B)
-        packed = (
-            codes.groupBy("vec_id", "cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub_id", "code"))),
-                    lambda s: s["code"],
-                ).alias("codes")
-            )
-            .join(assigned.select("vec_id", "v"), "vec_id")
-        )
-    else:
-        # r13 fused encode already yields the sub_id-ordered code array
-        # per vector — the packing groupBy (and its exchange) is gone
-        packed = codes.join(assigned.select("vec_id", "v"), "vec_id")
+    # the fused encode already yields one sub_id-ordered code array
+    # per vector, so no packing groupBy is needed
+    packed = codes.join(assigned.select("vec_id", "v"), "vec_id")
     cents.write.mode("overwrite").parquet(f"{out_dir}/centroids")
     cb.write.mode("overwrite").parquet(f"{out_dir}/codebooks")
     packed.write.mode("overwrite").partitionBy("cell").parquet(
@@ -1494,51 +1375,24 @@ def ivf_pq_query(
         if cells else F.lit(False)
     )
     w = len(cb.select("cv").first()[0])  # subvector width from codebook
-    if os.environ.get("SPARK_GRAFT_OPT_IVFPQ", "1") == "0":
-        # pre-r13 row-form LUT + ADC, kept for A/B
-        lut = (
-            probe_cells.select(
-                "probe_id", "cell",
-                F.posexplode(
-                    F.array(
-                        *[F.slice("qr", i * w + 1, w) for i in range(n_subspaces)]
-                    )
-                ).alias("sub_id", "qv"),
-            )
-            .join(F.broadcast(cb), "sub_id")
-            .select(
-                "probe_id", "cell", "sub_id", "code",
-                _pq_sqdist("qv", "cv").alias("pd"),
-            )
+    # fused ADC (see ivf_pq_topk): packed per-(probe, cell) LUT, cell
+    # join = the IVF prune, in-row fixed-order fold — no code-row
+    # explode, no (probe, vec) aggregation exchange
+    lut_p = probe_cells.crossJoin(
+        F.broadcast(_pq_cb_packed(cb))
+    ).select(
+        "probe_id", "cell",
+        _pq_lut_expr("qr", w, n_subspaces).alias("lut"),
+    )
+    adc = (
+        scan.select("vec_id", "cell", "codes")
+        .join(F.broadcast(lut_p), "cell")
+        .filter(F.col("vec_id") != F.col("probe_id"))
+        .select(
+            "probe_id", "vec_id",
+            _pq_adc_expr(n_subspaces).alias("adc_d2"),
         )
-        code_rows = scan.select(
-            "vec_id", "cell", F.posexplode("codes").alias("sub_id", "code")
-        )
-        adc = (
-            code_rows.join(F.broadcast(lut), ["cell", "sub_id", "code"])
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .groupBy("probe_id", "vec_id")
-            .agg(F.sum("pd").alias("adc_d2"))
-        )
-    else:
-        # r13 fused ADC (see ivf_pq_topk): packed per-(probe, cell)
-        # LUT, cell join = the IVF prune, in-row fixed-order fold —
-        # no code-row explode, no (probe, vec) aggregation exchange
-        lut_p = probe_cells.crossJoin(
-            F.broadcast(_pq_cb_packed(cb))
-        ).select(
-            "probe_id", "cell",
-            _pq_lut_expr("qr", w, n_subspaces).alias("lut"),
-        )
-        adc = (
-            scan.select("vec_id", "cell", "codes")
-            .join(F.broadcast(lut_p), "cell")
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .select(
-                "probe_id", "vec_id",
-                _pq_adc_expr(n_subspaces).alias("adc_d2"),
-            )
-        )
+    )
     wnd = W.partitionBy("probe_id").orderBy(
         F.col("adc_d2").asc(), F.col("vec_id").asc()
     )
@@ -1698,23 +1552,7 @@ def ivf_pq_append(
         .select("vec_id", unit.alias("v"))
     )
     assigned, codes = _ivfpq_encode(v, cents, cb, w, n_subspaces)
-    if os.environ.get("SPARK_GRAFT_OPT_IVFPQ", "1") == "0":
-        # pre-r13 rows-form codes: pack one sub_id-ordered array per
-        # vector via groupBy (kept for A/B)
-        packed = (
-            codes.groupBy("vec_id", "cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub_id", "code"))),
-                    lambda s: s["code"],
-                ).alias("codes")
-            )
-            .join(assigned.select("vec_id", "v"), "vec_id")
-        )
-    else:
-        # r13 fused encode already yields the sub_id-ordered code array
-        # per vector — the packing groupBy (and its exchange) is gone
-        packed = codes.join(assigned.select("vec_id", "v"), "vec_id")
+    packed = codes.join(assigned.select("vec_id", "v"), "vec_id")
     packed.write.mode("append").partitionBy("cell").parquet(
         f"{index_dir}/codes"
     )

@@ -36,102 +36,9 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The grading driver samples the FIRST 50 registry entries in
-# registration order. r1-r5 rotated at MODULE granularity; r6-r7 rotated
-# at ENTRY granularity and retired the never-sampled backlog: after
-# r7's driver run EVERY registry entry has at least one driver
-# correctness row, so since r8 the window's job is keeping the evidence
-# FRESH. r13 ROTATION (fixed at round-13 start, 2026-08-18, continuing
-# the staleness policy adjudicated r8-r12): round 13 is an OPTIMIZATION
-# round and registers no new queries (NEW_IN_R13 stays empty), so every
-# slot is a DELIBERATE RE-SAMPLE of the entries whose newest driver
-# rows are oldest after CORRECTNESS_r12 landed — the 35 remaining
-# r7-evidence entries (the block squeezed out of the r12 window plus
-# the r7 rows never refreshed since), then the first 15 of the 50
-# r8-evidence entries, each block in registry order. Entries squeezed
-# out here (the r8 tail) stay the stalest and lead r14's window.
-NEW_IN_R13: tuple[str, ...] = ()
-
-# Re-samples ordered by evidence age (oldest driver row first), computed
-# from the union of CORRECTNESS_r01–r12 at round-13 start.
-STALE_RESAMPLES: tuple[str, ...] = (
-    # newest driver row is r7 — all 35 remaining, registry order
-    "txp_vocab_coverage",
-    "txp_trigram_familiarity",
-    "txp_token_budget",
-    "em_binary_quantize",
-    "an_event_transitions",
-    "s12_orc_sink_roundtrip",
-    "s1k_druid_segment_prefix_filter",
-    "dm_segment_stats_plane",
-    "s1l_druid_segment_regex_filter",
-    "s1m_druid_segment_search_filter",
-    "s1n_druid_segment_like_filter",
-    "dm_search_query",
-    "s1o_druid_segment_split_scan",
-    "s1p_druid_segment_ordered_limit",
-    "s1q_druid_segment_recent_limit",
-    "lr_retention_drop_interval",
-    "lr_retention_period_load",
-    "lr_retention_drop_before",
-    "dd_lsh_verified_pairs",
-    "fd_mv_sql_text",
-    "fd_lookup_sql_text",
-    "fd_window_sql_text",
-    "sim_pq_adc_topk",
-    "nq_timeseries_zerofill",
-    "nq_groupby_subtotals",
-    "nq_groupby_filtered_limit",
-    "nq_topn_daily_revenue",
-    "nq_scan_filtered",
-    "nq_search_digits",
-    "nq_join_datasource",
-    "nq_ingest_spec_rollup",
-    "nq_time_boundary",
-    "nq_period_granularity_tz",
-    "nq_union_datasource",
-    "nq_datasource_metadata",
-    # newest driver row is r8 — first 15 in registry order, to window
-    # capacity (the r8 tail leads r14's window)
-    "txp_quality_median_cut",
-    "an_top_paths",
-    "s1b_druid_segment_scan",
-    "mv_tag_counts",
-    "s1c_druid_segment_time_prune",
-    "s1d_druid_segment_dim_filter",
-    "s2b_segment_compaction",
-    "s2c_schema_evolution_scan",
-    "cx_hll_rollup_merge",
-    "lr_retention_load_interval_overlap",
-    "s13_version_overshadow_scan",
-    "dm_rollup_pt15m",
-    "dm_rollup_hour_multi",
-    "dm_time_boundary",
-    "dm_info",
-)
-
-ROTATION: tuple[str, ...] = (NEW_IN_R13 + STALE_RESAMPLES)[:50]
-
-
-def _apply_rotation() -> None:
-    """Reorder QUERIES/ORACLES so ROTATION's names occupy the first
-    slots (plan order), everything else following in registration
-    order. Idempotent; unknown names are a loud error so the list can't
-    silently rot when a query is renamed."""
-    missing = [n for n in ROTATION if n not in QUERIES]
-    if missing:
-        raise ValueError(f"ROTATION names not in registry: {missing}")
-    rot = set(ROTATION)
-    order = list(ROTATION) + [n for n in QUERIES if n not in rot]
-    for d in (QUERIES, ORACLES):
-        reordered = {n: d[n] for n in order if n in d}
-        d.clear()
-        d.update(reordered)
-
-
 def load_all() -> None:
-    """Import every query module so registration side-effects run, then
-    apply the driver-sample ROTATION (see its comment)."""
+    """Import every query module so registration side-effects run;
+    registry order is registration order."""
     from . import (  # noqa: F401
         text_pipeline,
         multimodal,
@@ -159,8 +66,6 @@ def load_all() -> None:
         lookups,
         native,
     )
-
-    _apply_rotation()
 
 
 def all_queries() -> dict[str, QueryFn]:

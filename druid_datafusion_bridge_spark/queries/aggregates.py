@@ -218,30 +218,19 @@ def a9_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # heavy_scan: HLL sketch build + distinct dedup over the fact scan,
     # no join probe (r12 — same class as a10/prof_column_stats)
     li = table(spark, sf_dir, "lineitem", heavy_scan=True)
-    import os
-
-    if os.environ.get("SPARK_GRAFT_OPT_A9", "1") == "0":
-        # pre-r13 mixed distinct/HLL aggregate, kept for A/B: planning
-        # COUNT(DISTINCT) beside another aggregate forces an Expand
-        # that duplicates EVERY scan row once per aggregate branch
-        agged = li.groupBy("l_returnflag").agg(
-            F.approx_count_distinct("l_partkey", 0.02).alias("approx_parts"),
-            F.countDistinct("l_partkey").alias("exact_parts"),
-        )
-    else:
-        # r13 (guide §2.3 "aggregate before you shuffle"): dedup the
-        # (flag, partkey) pairs FIRST — partial aggregation folds them
-        # map-side, the exchange carries distinct pairs only, and with
-        # the distinct done, COUNT(DISTINCT) degenerates to COUNT and
-        # the HLL builds over the same value set (a sketch is
-        # duplicate-insensitive: same hash -> same register, so the
-        # estimate and the rsd flag are bit-identical). No Expand, no
-        # doubled scan output.
-        pairs = li.select("l_returnflag", "l_partkey").distinct()
-        agged = pairs.groupBy("l_returnflag").agg(
-            F.approx_count_distinct("l_partkey", 0.02).alias("approx_parts"),
-            F.count("l_partkey").alias("exact_parts"),
-        )
+    # Dedup the (flag, partkey) pairs FIRST (guide §2.3 "aggregate
+    # before you shuffle"): partial aggregation folds them map-side, the
+    # exchange carries distinct pairs only, and with the distinct done,
+    # COUNT(DISTINCT) degenerates to COUNT and the HLL builds over the
+    # same value set (a sketch is duplicate-insensitive: same hash ->
+    # same register, so the estimate and the rsd flag are unchanged).
+    # Mixing COUNT(DISTINCT) with another aggregate would instead plan an
+    # Expand that duplicates every scan row once per aggregate branch.
+    pairs = li.select("l_returnflag", "l_partkey").distinct()
+    agged = pairs.groupBy("l_returnflag").agg(
+        F.approx_count_distinct("l_partkey", 0.02).alias("approx_parts"),
+        F.count("l_partkey").alias("exact_parts"),
+    )
     err = F.abs(F.col("approx_parts") - F.col("exact_parts")) / F.col("exact_parts")
     return agged.select(
         "l_returnflag", "exact_parts", (err <= 0.06).alias("approx_within_rsd")

@@ -1,9 +1,4 @@
-"""Data-quality profiling operators (training-pipeline extension).
-
-Kept in their own module (loaded late in the registry rotation) so the
-driver's first-50 sample positions for the r4 front-loaded modules stay
-stable.
-"""
+"""Data-quality profiling operators (training-pipeline extension)."""
 
 from __future__ import annotations
 
@@ -52,58 +47,34 @@ def prof_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count, null count, exact distinct count, min, max — one row
     per profiled column.
 
-    ONE scan, ONE aggregate: all per-column statistics are expressions
-    of the same Aggregate node, then the 1-row wide result is pivoted
-    to long form with explode over literal structs (driver-side-free).
-    The multi-column exact COUNT(DISTINCT) makes Catalyst plan an
-    Expand (input rows x n_profiled_columns before the exchange) —
-    the standard single-pass trade; at 100 TB swap the exact distinct
-    for approx_count_distinct and the Expand disappears (kept exact
-    here for the bit-exact oracle). min/max serialize to strings so
-    heterogeneous column types share one output schema; only integer
-    and varchar columns are profiled so Spark and DuckDB render
-    identical text."""
-    import os
-
+    The non-distinct statistics are expressions of one Aggregate node;
+    each exact distinct count is its own dedup-then-count aggregation,
+    attached by broadcast cross join; the 1-row wide result is then
+    pivoted to long form with explode over literal structs
+    (driver-side-free). min/max serialize to strings so heterogeneous
+    column types share one output schema; only integer and varchar
+    columns are profiled so Spark and DuckDB render identical text."""
     li = table(spark, sf_dir, "lineitem", heavy_scan=True)
     cols = ["l_orderkey", "l_suppkey", "l_returnflag", "l_linestatus"]
-    if os.environ.get("SPARK_GRAFT_OPT_PROF", "1") == "0":
-        # pre-r13 single Aggregate, kept for A/B: the multi-column
-        # COUNT(DISTINCT) plans an Expand — every scan row duplicated
-        # once per profiled column before the exchange
-        aggs = [F.count("*").alias("n_rows")]
-        for c in cols:
-            aggs += [
-                (F.count("*") - F.count(c)).alias(f"nulls_{c}"),
-                F.count_distinct(F.col(c)).alias(f"nd_{c}"),
-                F.min(c).cast("string").alias(f"min_{c}"),
-                F.max(c).cast("string").alias(f"max_{c}"),
-            ]
-        wide = li.agg(*aggs)
-    else:
-        # r13 (a9's rewrite generalized): the non-distinct statistics
-        # stay one Expand-free Aggregate; each exact distinct count is
-        # its OWN dedup-then-count aggregation (partial aggregation
-        # folds duplicates map-side, the exchange carries distinct
-        # values only) and the four 1-row results attach by broadcast
-        # cross join. Counts identical: COUNT(c) over DISTINCT c rows
-        # == COUNT(DISTINCT c) (the NULL row survives dedup but COUNT
-        # skips it). Same scan count in wall-clock terms — the five
-        # aggregate subtrees are independent stages over the same
-        # mirror scan and schedule concurrently.
-        aggs = [F.count("*").alias("n_rows")]
-        for c in cols:
-            aggs += [
-                (F.count("*") - F.count(c)).alias(f"nulls_{c}"),
-                F.min(c).cast("string").alias(f"min_{c}"),
-                F.max(c).cast("string").alias(f"max_{c}"),
-            ]
-        wide = li.agg(*aggs)
-        for c in cols:
-            nd = li.select(c).distinct().agg(
-                F.count(c).alias(f"nd_{c}")
-            )
-            wide = wide.crossJoin(F.broadcast(nd))
+    # Keeping the distinct counts out of the main Aggregate keeps it
+    # Expand-free (a multi-column COUNT(DISTINCT) would duplicate every
+    # scan row once per profiled column before the exchange); partial
+    # aggregation folds duplicates map-side, so each distinct exchange
+    # carries distinct values only. Counts identical: COUNT(c) over
+    # DISTINCT c rows == COUNT(DISTINCT c) (the NULL row survives dedup
+    # but COUNT skips it). The five aggregate subtrees are independent
+    # stages over the same mirror scan and schedule concurrently.
+    aggs = [F.count("*").alias("n_rows")]
+    for c in cols:
+        aggs += [
+            (F.count("*") - F.count(c)).alias(f"nulls_{c}"),
+            F.min(c).cast("string").alias(f"min_{c}"),
+            F.max(c).cast("string").alias(f"max_{c}"),
+        ]
+    wide = li.agg(*aggs)
+    for c in cols:
+        nd = li.select(c).distinct().agg(F.count(c).alias(f"nd_{c}"))
+        wide = wide.crossJoin(F.broadcast(nd))
     rows = F.array(
         *[
             F.struct(

@@ -42,32 +42,13 @@ def txt_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token/char counting — whitespace+word-char tokenizer (BPE-ish regex
     pretokenization shape).
 
-    r13 (guide §1.2 per-task work): ONE regex pass instead of four. The
-    old form ran regexp_extract_all plus THREE regexp_replace over every
-    document; java regex replacement churns a match buffer per hit and
-    the stage is allocation-bandwidth-bound, not core-bound (measured:
-    core-count-independent at 10x scale, spread() no help). Now the
-    token array is extracted once in its own projection and reused —
-    n_word_chars = sum of token lengths == length(text with
-    [^A-Za-z0-9] removed), exactly — and the space/punct counts use
-    translate(), a regex-free single-char map. Values bit-identical;
-    3.9x at 10x scale, ~2x at sf0.1."""
-    import os
-
+    ONE regex pass (guide §1.2 per-task work): java regex replacement
+    churns a match buffer per hit and the stage is allocation-bandwidth-
+    bound, not core-bound. The token array is extracted once in its own
+    projection and reused — n_word_chars = sum of token lengths ==
+    length(text with [^A-Za-z0-9] removed), exactly — and the
+    space/punct counts use translate(), a regex-free single-char map."""
     docs = table(spark, sf_dir, "documents")
-    if os.environ.get("SPARK_GRAFT_OPT_TXT", "1") == "0":
-        return docs.select(
-            "doc_id",
-            F.length("text").cast("long").alias("n_chars_calc"),
-            F.size(F.regexp_extract_all(F.col("text"), F.lit("[A-Za-z0-9]+"), 0))
-            .cast("long")
-            .alias("n_tokens"),
-            F.length(F.regexp_replace("text", "[^A-Za-z0-9]", "")).cast("long").alias("n_word_chars"),
-            F.length(F.regexp_replace("text", "[^ ]", "")).cast("long").alias("n_spaces"),
-            (
-                F.length("text") - F.length(F.regexp_replace("text", "[.,!?;:]", ""))
-            ).cast("long").alias("n_punct"),
-        )
     toks = docs.select(
         "doc_id",
         F.length("text").cast("long").alias("n_chars_calc"),

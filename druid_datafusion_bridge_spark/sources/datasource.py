@@ -111,16 +111,28 @@ def ship_package(spark) -> None:
     zip_path = os.path.join(
         tempfile.gettempdir(), "druid_datafusion_bridge_spark_pkg.zip"
     )
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for dirpath, _dirnames, filenames in os.walk(pkg_root):
-            for fn in filenames:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    rel = os.path.join(
-                        os.path.basename(pkg_root),
-                        os.path.relpath(full, pkg_root),
-                    )
-                    zf.write(full, rel)
+    # Write under a private name in the same directory, then rename onto
+    # the shared path: a concurrent writer (another process or session)
+    # can only ever expose a complete zip to addPyFile, never a
+    # half-written one.
+    fd, tmp_path = tempfile.mkstemp(
+        suffix=".zip", dir=os.path.dirname(zip_path)
+    )
+    try:
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
+            for dirpath, _dirnames, filenames in os.walk(pkg_root):
+                for fn in filenames:
+                    if fn.endswith(".py"):
+                        full = os.path.join(dirpath, fn)
+                        rel = os.path.join(
+                            os.path.basename(pkg_root),
+                            os.path.relpath(full, pkg_root),
+                        )
+                        zf.write(full, rel)
+        os.replace(tmp_path, zip_path)
+    finally:
+        if os.path.exists(tmp_path):  # only when the write failed
+            os.unlink(tmp_path)
     sc.addPyFile(zip_path)
     sc._ddbs_pkg_shipped = True
 

@@ -1384,3 +1384,35 @@ def test_exclude_segments_removes_planning_io(registered, segment_root):
     )
     assert none.count() == 0
     assert none.columns == kept.columns
+
+
+def test_ship_package_zip_is_atomic_under_concurrent_writers():
+    """Two sessions shipping the package at once must each hand
+    addPyFile a complete zip: the archive is written under a private
+    name and renamed onto the shared path, so neither can observe the
+    other's half-written file."""
+    import threading
+    import zipfile
+    from types import SimpleNamespace
+
+    from druid_datafusion_bridge_spark.sources.datasource import ship_package
+
+    checked: list = []
+    barrier = threading.Barrier(2)
+
+    class FakeContext:
+        def addPyFile(self, path):
+            checked.append(zipfile.ZipFile(path).testzip())
+
+    def build():
+        barrier.wait(timeout=30)
+        for _ in range(5):
+            ship_package(SimpleNamespace(sparkContext=FakeContext()))
+
+    threads = [threading.Thread(target=build) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+        assert not t.is_alive()
+    assert checked == [None] * 10

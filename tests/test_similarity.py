@@ -390,6 +390,43 @@ def test_ivfpq_append_serves_new_vectors(spark, tmp_path):
     assert top["vec_id"] == 250 and top["sim"] > 0.999
 
 
+def test_ivfpq_query_rejects_foreign_codebook(spark, tmp_path):
+    """The packed-codebook lookups index by code value, so a persisted
+    codebook whose codes are not exactly 0..k-1 per subspace (here: one
+    code shifted past the end, as a hand edit would) must fail loudly
+    instead of serving NULL or wrong ADC distances."""
+    import numpy as np
+
+    from druid_datafusion_bridge_spark.operators.similarity import (
+        ivf_pq_build,
+        ivf_pq_query,
+    )
+
+    rs = np.random.RandomState(5)
+    vecs = rs.normal(size=(120, 64))
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in vecs[i]]) for i in range(120)],
+        "vec_id long, embedding array<double>",
+    )
+    idx = str(tmp_path / "idx")
+    ivf_pq_build(emb, idx, n_centroids=4, n_subspaces=8, codebook_size=8)
+    probe = spark.createDataFrame(
+        [(10_000, [float(x) for x in vecs[3]])],
+        "probe_id long, probe_vec array<double>",
+    )
+    ivf_pq_query(spark, idx, probe, k=3, nprobe=2).collect()  # intact: serves
+
+    cb = spark.read.parquet(f"{idx}/codebooks")
+    rows = [r.asDict() for r in cb.collect()]
+    shifted = next(r for r in rows if r["sub_id"] == 0 and r["code"] == 0)
+    shifted["code"] = max(r["code"] for r in rows) + 1
+    spark.createDataFrame(rows, cb.schema).write.mode("overwrite").parquet(
+        f"{idx}/codebooks"
+    )
+    with pytest.raises(ValueError, match="codebook subspace 0"):
+        ivf_pq_query(spark, idx, probe, k=3, nprobe=2)
+
+
 def test_ivfpq_cache_dir_fallback_on_unusable_base(monkeypatch, tmp_path):
     """An unusable shared cache base (here: a FILE squatting the
     ddbs_ivfpq path — permission bits don't stop root, which this

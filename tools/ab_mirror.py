@@ -5,7 +5,7 @@ Configs flip the mirror env knobs between runs; each config has its own
 mirror root so builds are cached per layout and never rebuilt inside the
 timed loop.
 
-Usage: python tools_r12/ab_mirror.py [passes]
+Usage: python tools/ab_mirror.py [passes]
 """
 
 from __future__ import annotations
@@ -34,9 +34,8 @@ CONFIGS = {
 
 def set_cfg(cfg: tuple[int, int, str]) -> None:
     os.environ["SPARK_GRAFT_MIRROR_MIN_BYTES"] = str(cfg[0])
-    # r13 fix (r12 ADVICE): the heavy profile has its OWN threshold, so
-    # without this the 'none' baseline still served heavy mirrors to
-    # heavy_scan reads and the A/B baseline was not mirror-free
+    # the heavy profile has its OWN threshold: without this the 'none'
+    # baseline would still serve heavy mirrors to heavy_scan reads
     os.environ["SPARK_GRAFT_HEAVY_MIRROR_MIN_BYTES"] = str(cfg[0])
     os.environ["SPARK_GRAFT_MIRROR_FILE_BYTES"] = str(cfg[1])
     os.environ["SPARK_GRAFT_MIRROR_ROOT"] = cfg[2]

@@ -1,8 +1,9 @@
 """Capture .explain('formatted') for headline (or named) queries into
-plans/r12/<query>_<tag>.txt — the optimization round's plan evidence.
+<out_dir>/<query>_<tag>.txt — before/after plan evidence for a change.
 
-Usage: python tools_r12/capture_plans.py <tag> [query ...]
-(tag is 'before' or 'after'; default query set = bench.py HEADLINE).
+Usage: python tools/capture_plans.py <out_dir> <tag> [query ...]
+(e.g. out_dir plans/r13, tag 'before' or 'after'; default query set =
+bench.py HEADLINE).
 """
 
 from __future__ import annotations
@@ -19,14 +20,12 @@ from druid_datafusion_bridge_spark.queries import all_queries  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or list(HEADLINE)
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    out_dir = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or list(HEADLINE)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r12",
-    )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="ddbs-capture-plans")
     build_scan_mirrors(spark, sf_dir)

@@ -1,12 +1,12 @@
 """Time EVERY registry query at sf0.1 with the noop sink (1 warm + 1
-timed run each) — the checklist instrument for the optimization round:
-which of the 285 query paths actually cost anything.
+timed run each): which of the registry's query paths actually cost
+anything.
 
 Prints one JSON line {"queries": {name: sec}, "total": sec} sorted by
-descending time. Not a grading artifact — a builder's profiling tool
-(bench.py stays the number of record).
+descending time. A profiling tool, not a benchmark (bench.py stays
+the number of record).
 
-Usage: python tools_r13/time_registry.py [out.json]
+Usage: python tools/time_registry.py [out.json]
 """
 
 from __future__ import annotations
