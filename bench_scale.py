@@ -732,10 +732,10 @@ def plan_main() -> None:
 
 
 def sweep_main() -> None:
-    import duckdb
-
     import __spark_entry__ as entry
     from pyspark.sql import SparkSession
+
+    from tests.oracle_harness import compare, make_duck
 
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     spark = (
@@ -749,42 +749,22 @@ def sweep_main() -> None:
         .getOrCreate()
     )
     qs, oracles = entry.queries(), entry.oracle_sql()
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = make_duck(sf_dir)
     bad, n = [], 0
     t0 = time.time()
     for name, fn in qs.items():
         n += 1
         try:
             sdf = fn(spark, sf_dir)
-            cols = sdf.columns
-            order = sorted(range(len(cols)), key=lambda i: cols[i])
-            srows = sorted(
-                tuple(str(r[i]) for i in order) for r in sdf.collect()
-            )
             if name in oracles:
-                cur = con.execute(oracles[name])
-                ocols = [d[0] for d in cur.description]
-                oorder = sorted(
-                    range(len(ocols)), key=lambda i: ocols[i]
-                )
-                orows = sorted(
-                    tuple(str(r[i]) for i in oorder)
-                    for r in cur.fetchall()
-                )
-                ok = sorted(cols) == sorted(ocols) and srows == orows
-                if not ok:
-                    bad.append((name, len(srows), len(orows)))
+                compare(sdf, con, oracles[name], name)
             else:
-                ok = True
+                sdf.collect()
+            print(f"{n}/{len(qs)} {name} OK", file=sys.stderr, flush=True)
+        except AssertionError as ex:
+            bad.append((name, "MISMATCH", str(ex)[:300]))
             print(
-                f"{n}/{len(qs)} {name} {'OK' if ok else 'MISMATCH'}",
+                f"{n}/{len(qs)} {name} MISMATCH {str(ex)[:200]}",
                 file=sys.stderr, flush=True,
             )
         except Exception as ex:  # noqa: BLE001 — record and continue

@@ -67,15 +67,12 @@ def normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
 # pushdown and column pruning work the same, and every query stays
 # order-insensitive (enforced by the full oracle suite running with
 # the mirror active). Measured: 2.7x on a q1-shaped scan-agg at sf0.1.
-# Disable with SPARK_GRAFT_SCAN_MIRROR=0; threshold via
-# SPARK_GRAFT_MIRROR_MIN_BYTES (tables below it read raw — scheduling
-# overhead beats parallelism for tiny dims like nation/region).
+# Tables below MIRROR_MIN_BYTES read raw — scheduling overhead beats
+# parallelism for tiny dims like nation/region.
 MIRROR_ROOT = "/tmp/ddbs_mirror"
-# ~8 MB per mirror file by default (one row group per file — file count
-# IS scan parallelism); SPARK_GRAFT_MIRROR_FILE_BYTES overrides for
-# A/B work and for clusters where bigger files are right (guide:
-# 128 MB-1 GB at real scale). Part of the mirror fingerprint, so a
-# layout built under one target never serves another.
+# ~8 MB per mirror file (one row group per file — file count IS scan
+# parallelism; guide: 128 MB-1 GB at real scale). Part of the mirror
+# fingerprint, so a layout built under one target never serves another.
 MIRROR_FILE_BYTES = 8 * 1024 * 1024
 # Engage only when one row group is genuinely more than one core should
 # own. Measured at sf0.1 (10 MB lineitem, 32 cores): mirroring every
@@ -216,41 +213,22 @@ def _scan_mirror(
     spark: SparkSession, sf_dir: str, name: str, heavy_scan: bool = False
 ) -> DataFrame | None:
     """A multi-file mirror read for ``sf_dir/name.parquet``, building it
-    on first use; None when mirroring is disabled or not worthwhile.
+    on first use; None when mirroring is not worthwhile.
     ``heavy_scan`` selects the fine-split profile (module comment)."""
     import hashlib
     import os
     import shutil
 
-    if os.environ.get("SPARK_GRAFT_SCAN_MIRROR", "1") == "0":
-        return None
     src = os.path.join(sf_dir, f"{name}.parquet")
     try:
         st = os.stat(src)
     except OSError:
         return None
-    if heavy_scan:
-        min_bytes = int(
-            os.environ.get(
-                "SPARK_GRAFT_HEAVY_MIRROR_MIN_BYTES", HEAVY_SCAN_MIN_BYTES
-            )
-        )
-    else:
-        min_bytes = int(
-            os.environ.get("SPARK_GRAFT_MIRROR_MIN_BYTES", MIRROR_MIN_BYTES)
-        )
+    min_bytes = HEAVY_SCAN_MIN_BYTES if heavy_scan else MIRROR_MIN_BYTES
     if st.st_size < min_bytes:
         return None
-    file_bytes = int(
-        os.environ.get("SPARK_GRAFT_MIRROR_FILE_BYTES", MIRROR_FILE_BYTES)
-    )
     block_bytes = (
-        int(
-            os.environ.get(
-                "SPARK_GRAFT_MIRROR_BLOCK_BYTES",
-                _heavy_block_bytes(st.st_size),
-            )
-        )
+        _heavy_block_bytes(st.st_size)
         if heavy_scan
         else 0  # writer default (128 MB) — one row group per file
     )
@@ -264,7 +242,7 @@ def _scan_mirror(
     # size/target (the per-profile split-size goal); 0 row groups means
     # the footer was unreadable and we keep the old assume-pathological
     # behavior.
-    target = block_bytes if heavy_scan else file_bytes
+    target = block_bytes if heavy_scan else MIRROR_FILE_BYTES
     needed = min(
         max(spark.sparkContext.defaultParallelism, 1),
         max(2, st.st_size // max(target, 1)),
@@ -282,7 +260,7 @@ def _scan_mirror(
     # fingerprint — a mirror built by an older or differently-sized
     # layout policy must rebuild, not serve (same bytes, different
     # parallelism/pruning)
-    fp = f"v3:{file_bytes}:{block_bytes}:{st.st_size}:{st.st_mtime_ns}"
+    fp = f"v3:{MIRROR_FILE_BYTES}:{block_bytes}:{st.st_size}:{st.st_mtime_ns}"
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     root = os.environ.get("SPARK_GRAFT_MIRROR_ROOT", MIRROR_ROOT)
     dest = os.path.join(root, tag, (name + "@heavy") if heavy_scan else name)
@@ -303,7 +281,7 @@ def _scan_mirror(
     # also costs a task, so fan-out stays proportional to size instead
     # of a fixed count (a fixed 16 over a 2 MB table measured as pure
     # scheduler overhead on every small-table query).
-    n_files = max(4, min(256, st.st_size // file_bytes))
+    n_files = max(4, min(256, st.st_size // MIRROR_FILE_BYTES))
     key = _MIRROR_RANGE_KEY.get(name)
     if key is not None:
         # RANGE-partition by the table's dominant filter column and sort
@@ -371,7 +349,7 @@ def build_scan_mirrors(
     only its scan. Idempotent — a fresh build writes each eligible
     mirror once; a warm call fingerprint-matches and writes NOTHING
     (pinned by tests/test_mirror.py). Returns {table: mirrored?}
-    (False = below threshold or mirroring disabled — raw file serves).
+    (False = below threshold or already well split — raw file serves).
     """
     out: dict[str, bool] = {}
     for name in names if names is not None else TABLES:
@@ -414,8 +392,8 @@ def table(
     if mirrored is not None:
         return mirrored
     if heavy_scan:
-        # heavy profile unavailable (too small / disabled / read-only
-        # tmp): fall back to the standard mirror, then to the raw file
+        # heavy profile unavailable (too small / read-only tmp): fall
+        # back to the standard mirror, then to the raw file
         mirrored = _scan_mirror(spark, sf_dir, name)
         if mirrored is not None:
             return mirrored

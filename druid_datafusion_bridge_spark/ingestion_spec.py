@@ -339,9 +339,12 @@ def transform_rows(df: DataFrame, schema: dict) -> DataFrame:
             raise ValueError(f"unsupported dimension type {d.get('type')!r}")
         dims.append((d["name"], F.col(d["name"]).cast(dtype)))
     if not dims:
-        # schemaless: every non-time column rides along as-is
+        # schemaless: every other column rides along as-is — except the
+        # timestampSpec source column, which became __time (Druid
+        # excludes it from discovered dimensions too)
+        ts_col = schema.get("timestampSpec", {}).get("column", "timestamp")
         dims = [
-            (c, F.col(c)) for c in df.columns if c != TIME_COLUMN
+            (c, F.col(c)) for c in df.columns if c not in (TIME_COLUMN, ts_col)
         ]
 
     query_gran: Any = gran_spec.get("queryGranularity", "none")

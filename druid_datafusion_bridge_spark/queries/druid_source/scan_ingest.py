@@ -84,10 +84,9 @@ def s1c_druid_segment_time_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """__time-filtered rollup over segments; the time_lower_ms scan
     option prunes segment 0 at planning time via its index.drd interval
     (the pruning the reference never implemented — SURVEY §4.1).
-    Option-driven rather than pushFilters-driven: options are part of
-    the relation identity, so Spark's scan caching stays correct (see
-    register_druid_datasource); the df.filter below is still applied by
-    Spark — the option only skips IO."""
+    Options are part of the relation identity, so Spark's scan caching
+    stays correct (see register_druid_datasource); the df.filter below
+    is still applied by Spark — the option only skips IO."""
     root = _ensure_segments(spark, sf_dir)
     cutoff_ms = BASE_MS + 60_000 * 12
     df = (
@@ -116,7 +115,7 @@ def s1c_druid_segment_time_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s1d_druid_segment_dim_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dimension-equality scan over real segments: the pushed
+    """Dimension-equality scan over real segments: the dim_eq
     event_type = 'click' predicate is answered by the roaring inverted
     index (dictionary lookup + bitmap row selection before any value
     column decodes) — the index path the reference parses but never

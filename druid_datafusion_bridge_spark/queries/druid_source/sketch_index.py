@@ -384,8 +384,7 @@ def s1k_druid_segment_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFra
     """Druid PrefixFilter (LIKE 'I%') answered by the sorted
     dictionary: a prefix is exactly the bound [p, next_prefix(p)), so
     the same binary-search + bitmap-union machinery as s1i serves it —
-    the dim_prefix option is pure sugar over dim_bound, and pushed
-    StringStartsWith filters take the identical route. Acceleration
+    the dim_prefix option is pure sugar over dim_bound. Acceleration
     only; the startswith filter re-applies row-level."""
     root = _ensure_segments(spark, sf_dir)
     df = (

@@ -8,8 +8,8 @@ directories can be queried as DataFrames.
 Improvements over the reference scan (src/datafusion_ext/execution_plan.rs:42):
 one InputPartition *per segment* instead of a single partition, projection
 pruning honored at decode time, and segment-level time-interval pruning via
-pushFilters — the reference parses the interval (metadata.rs:22-23) but
-never uses it to skip IO.
+the `time_lower_ms`/`time_upper_ms` options — the reference parses the
+interval (metadata.rs:22-23) but never uses it to skip IO.
 
 Also includes a segment *writer* so tests can round-trip (the reference's
 own build-then-parse test style, generic_indexed.rs:258-299) without the

@@ -20,14 +20,14 @@ with three upgrades over the reference's scan:
 - projection honored at decode time via the `columns` option (the Python
   DataSource API does not push projections, so it's an explicit option —
   SURVEY.md §4.1);
-- segment-level time-interval pruning through pushFilters: `__time`
-  bounds skip whole segments using the index.drd interval the reference
-  parses but never consults (src/segment/metadata.rs:22-23, SURVEY §4.3).
-  Pruned filters are still returned to Spark for row-level re-evaluation,
-  so correctness never depends on the pruning.
+- segment-level time-interval pruning through the `time_lower_ms` /
+  `time_upper_ms` options: `__time` bounds skip whole segments using the
+  index.drd interval the reference parses but never consults
+  (src/segment/metadata.rs:22-23, SURVEY §4.3). Callers keep their
+  df.filter(), which Spark re-applies row-level, so correctness never
+  depends on the pruning.
 
-Filter families (each both option-driven and, where a Spark Filter
-class exists, pushFilters-driven; all acceleration-only): __time
+Filter families (all option-driven and acceleration-only): __time
 intervals, dim equality/IN (bitmap union), lexicographic bounds +
 prefixes (sorted-dictionary bisect), numeric ranges (segment min/max +
 per-block zone maps), and dictionary predicates regex/contains/
@@ -43,30 +43,12 @@ listing, and decode parallelism is segment-count wide.
 
 from __future__ import annotations
 
-import datetime as dt
 import os
 from dataclasses import dataclass
 
 import numpy as np
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    InputPartition,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
-    StringContains,
-    StringEndsWith,
-    StringStartsWith,
-)
-
-
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -137,25 +119,14 @@ def ship_package(spark) -> None:
     sc._ddbs_pkg_shipped = True
 
 
-def register_druid_datasource(spark, enable_filter_pushdown: bool = False) -> None:
+def register_druid_datasource(spark) -> None:
     """Register the 'druidsegment' format (ships the package first).
 
-    Pruning is primarily OPTION-driven (`time_lower_ms`/`time_upper_ms`
-    for interval pruning, `dim_eq` JSON for bitmap-index equality) —
+    Pruning is OPTION-driven (`time_lower_ms`/`time_upper_ms` for
+    interval pruning, `dim_eq` JSON for bitmap-index equality, ...) —
     options are part of the relation identity, so Spark's plan caching
-    keys them correctly. ``enable_filter_pushdown=True`` additionally
-    turns on Spark 4.1's EXPERIMENTAL Python-source filter pushdown so
-    plain df.filter() predicates prune too — but that flag has a
-    wrong-results hazard on MULTI-query DataFrames: Spark caches the
-    first query's scan (partitions + pickled reader, pushed filters
-    baked in) on the shared relation and reuses it for later queries
-    that never pushed anything (verified empirically: a groupBy after a
-    filtered count returned the filtered subset; pushFilters/partitions
-    are simply not re-invoked). Only enable it for load-once/query-once
-    patterns."""
+    keys them correctly and registering touches no session config."""
     ship_package(spark)
-    if enable_filter_pushdown:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(DruidSegmentDataSource)
 
 
@@ -469,13 +440,8 @@ class SegmentPartition(InputPartition):
     # (Spark's Python DataSource calls read(None) if partitions() is
     # empty, so full pruning still needs one no-op partition)
     empty: bool = False
-    # dim equalities the roaring index answers at read time. Carried ON
-    # THE PARTITION, not on the reader: Spark reuses one reader across
-    # query plannings on the same DataFrame and only invokes
-    # pushFilters when a query HAS filters, so reader-held state leaks
-    # into later unfiltered queries (observed: a groupBy after a
-    # filtered count losing rows). partitions() snapshots the current
-    # pushdown into each partition and resets the reader.
+    # dim equalities the roaring index answers at read time:
+    # (col, accepted-value tuple) pairs
     eq_filters: tuple = ()
     # lexicographic bounds the index answers at read time:
     # (col, lower, upper, lower_strict, upper_strict) tuples
@@ -528,8 +494,6 @@ class DruidSegmentDataSource(DataSource):
         )
 
     def reader(self, schema: StructType) -> "DruidSegmentReader":
-        if str(self.options.get("filter_pushdown", "")).lower() == "true":
-            return DruidSegmentReaderWithPushdown(schema, self.options)
         return DruidSegmentReader(schema, self.options)
 
 
@@ -542,20 +506,6 @@ def _projected(options, all_columns: list[str]) -> list[str]:
     if unknown:
         raise ValueError(f"Unknown columns {unknown}; segment has {all_columns}")
     return cols
-
-
-def _to_millis(value) -> int | None:
-    if isinstance(value, dt.datetime):
-        # pyspark's TimestampType.fromInternal builds pushed filter
-        # values with datetime.fromtimestamp() — NAIVE, in the MACHINE's
-        # local timezone. value.timestamp() is its exact inverse (local
-        # interpretation), so the epoch millis are recovered correctly
-        # on any host; forcing tzinfo=UTC here would shift the bound by
-        # the host's UTC offset and wrongly prune segments.
-        return int(value.timestamp() * 1000)
-    if isinstance(value, (int, float)):
-        return int(value)
-    return None
 
 
 class DruidSegmentReader(DataSourceReader):
@@ -623,7 +573,7 @@ class DruidSegmentReader(DataSourceReader):
         # excluded segments start at/after the taken span's end, so
         # every one of their rows sorts strictly after k already-taken
         # rows; Spark's own orderBy+limit on top does the exact cut.
-        # Engages only when no other filter is pushed or set (a
+        # Engages only when no other filter option is set (a
         # row-dropping filter would invalidate the header-count cover);
         # takes precedence over split_rows.
         self.opt_order_limit = (
@@ -665,37 +615,11 @@ class DruidSegmentReader(DataSourceReader):
         ):
             raw = _json.loads(options.get(opt)) if options.get(opt) else {}
             self.opt_pred += [(c, kind, a) for c, a in raw.items()]
-        # [lower_ms, upper_ms) bounds accumulated from pushed __time filters
-        self.lower_ms: int | None = None
-        self.upper_ms: int | None = None
-        # numeric ranges accumulated from pushed comparison filters
-        self.num_filters: dict[str, tuple] = {}
-        # lexicographic bounds accumulated from pushed string comparisons
-        self.bound_filters: dict[str, tuple] = {}
-        # dictionary predicates accumulated from pushed contains/endswith
-        self.pred_filters: list[tuple[str, str, str]] = []
-        # dimension predicates answered by the inverted index at read
-        # time: col -> accepted-value tuple (conjunctive across cols,
-        # disjunctive within a tuple — covers = and IN)
-        self.eq_filters: dict[str, tuple] = {}
 
     def partitions(self) -> list[SegmentPartition]:
-        # explicit None checks — `x or y` would drop a legitimate bound
-        # of 0 (the epoch) or interact wrongly with negative epochs
-        bounds_lo = [b for b in (self.lower_ms, self.opt_lower_ms) if b is not None]
-        bounds_hi = [b for b in (self.upper_ms, self.opt_upper_ms) if b is not None]
-        lower = max(bounds_lo) if bounds_lo else None
-        upper = min(bounds_hi) if bounds_hi else None
-        eq = {**self.opt_eq, **self.eq_filters}
-        bound = {**self.opt_bound, **self.bound_filters}
-        preds = tuple(self.opt_pred) + tuple(self.pred_filters)
-        num = dict(self.opt_num)
-        for c, (lo, hi) in self.num_filters.items():
-            plo, phi = num.get(c, (None, None))
-            num[c] = (
-                plo if lo is None else (lo if plo is None else max(plo, lo)),
-                phi if hi is None else (hi if phi is None else min(phi, hi)),
-            )
+        lower, upper = self.opt_lower_ms, self.opt_upper_ms
+        eq, bound, num = self.opt_eq, self.opt_bound, self.opt_num
+        preds = tuple(self.opt_pred)
         if (
             self.opt_order_limit is not None
             and not eq
@@ -712,14 +636,6 @@ class DruidSegmentReader(DataSourceReader):
             all_dirs = find_segment_dirs(self.path)
             if all_dirs:
                 parts = [SegmentPartition(all_dirs[0], empty=True)]
-        # consume any pushFilters state: the next planning on this
-        # (possibly reused) reader starts from the options baseline
-        self.lower_ms = None
-        self.upper_ms = None
-        self.eq_filters = {}
-        self.num_filters = {}
-        self.bound_filters = {}
-        self.pred_filters = []
         return parts
 
     def _served_dirs(self) -> list[str]:
@@ -910,7 +826,7 @@ class DruidSegmentReader(DataSourceReader):
     def read(self, partition: SegmentPartition):
         seg = DruidSegment(partition.segment_dir)
         try:
-            # roaring-index row selection for pushed dim equalities: the
+            # roaring-index row selection for dim equalities: the
             # index answers "which rows" from the dictionary + bitmaps
             # alone, BEFORE any value column decodes; conjunctive
             # predicates intersect their row sets. None => no index on
@@ -1014,194 +930,4 @@ class DruidSegmentReader(DataSourceReader):
             yield pa.RecordBatch.from_arrays(arrays, names=list(self.columns))
         finally:
             seg.close()
-
-
-class DruidSegmentReaderWithPushdown(DruidSegmentReader):
-    """Opt-in variant implementing Spark 4.1's EXPERIMENTAL Python
-    filter pushdown (requires spark.sql.python.filterPushdown.enabled
-    AND .option("filter_pushdown", "true")). Spark REJECTS any reader
-    that merely defines pushFilters while the session flag is off, so
-    the method lives on this subclass only. See
-    register_druid_datasource for the multi-query scan-caching hazard
-    that makes option-driven pruning the default instead.
-    """
-
-    def pushFilters(self, filters: list[Filter]):
-        # Spark reuses this reader across query plannings on the same
-        # DataFrame, so pushdown state MUST reset per invocation — the
-        # accumulate-only form leaked one query's filters into the next
-        # (caught by the schema-evolution test: a groupBy after a
-        # filtered count returned the filtered rows only).
-        self.lower_ms = None
-        self.upper_ms = None
-        self.eq_filters = {}
-        self.num_filters = {}
-        self.bound_filters = {}
-        self.pred_filters = []
-
-        def merge_bound(col: str, lo, hi, ls: bool, us: bool) -> None:
-            # conjunction: tighten lexicographic bounds; equal bound
-            # values keep the stricter comparison
-            plo, phi, pls, pus = self.bound_filters.get(
-                col, (None, None, False, False)
-            )
-            if lo is not None:
-                if plo is None or lo > plo:
-                    plo, pls = lo, ls
-                elif lo == plo:
-                    pls = pls or ls
-            if hi is not None:
-                if phi is None or hi < phi:
-                    phi, pus = hi, us
-                elif hi == phi:
-                    pus = pus or us
-            self.bound_filters[col] = (plo, phi, pls, pus)
-
-        def merge_num(col: str, lo, hi) -> None:
-            # conjunction: tighten both bounds (loose — strict > maps to
-            # an inclusive lo, sound because pruning is segment-level
-            # acceleration and Spark re-applies the exact filter)
-            plo, phi = self.num_filters.get(col, (None, None))
-            self.num_filters[col] = (
-                plo if lo is None else (lo if plo is None else max(plo, lo)),
-                phi if hi is None else (hi if phi is None else min(phi, hi)),
-            )
-
-        def merge_dim(col: str, values: tuple) -> None:
-            # conjunction with any earlier predicate on the same column:
-            # intersect the accepted-value sets (can go empty — then the
-            # bitmap union matches nothing and the segment prunes)
-            if col in self.eq_filters:
-                values = tuple(v for v in self.eq_filters[col] if v in values)
-            self.eq_filters[col] = values
-
-        for f in filters:
-            handled = False
-            if (
-                isinstance(f, EqualTo)
-                and getattr(f, "attribute", None) != (TIME_COLUMN,)
-                and isinstance(f.value, str)
-                and len(getattr(f, "attribute", ())) == 1
-            ):
-                # bitmap-index acceleration; the filter is still yielded
-                # so Spark re-applies it (index use is a row-pruning
-                # fast path, not a correctness dependency — segments
-                # without an index scan as before)
-                merge_dim(f.attribute[0], (f.value,))
-            elif (
-                isinstance(f, In)
-                and getattr(f, "attribute", None) != (TIME_COLUMN,)
-                and len(getattr(f, "attribute", ())) == 1
-                and all(isinstance(v, str) for v in f.value)
-            ):
-                # IN-list: union of the per-value bitmaps (the Filter
-                # dataclass field is `value` — a tuple — despite the
-                # plural semantics, pyspark.sql.datasource.In)
-                merge_dim(f.attribute[0], tuple(f.value))
-            elif (
-                getattr(f, "attribute", None) is not None
-                and f.attribute != (TIME_COLUMN,)
-                and len(getattr(f, "attribute", ())) == 1
-                and isinstance(f, (GreaterThan, GreaterThanOrEqual,
-                                   LessThan, LessThanOrEqual, EqualTo))
-                and isinstance(getattr(f, "value", None), (int, float))
-                and not isinstance(f.value, bool)
-            ):
-                # numeric comparison -> metric min/max segment pruning
-                if isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                    merge_num(f.attribute[0], f.value, None)
-                elif isinstance(f, (LessThan, LessThanOrEqual)):
-                    merge_num(f.attribute[0], None, f.value)
-                else:
-                    merge_num(f.attribute[0], f.value, f.value)
-            elif (
-                isinstance(f, In)
-                and getattr(f, "attribute", None) != (TIME_COLUMN,)
-                and len(getattr(f, "attribute", ())) == 1
-                and f.value
-                and all(
-                    isinstance(v, (int, float)) and not isinstance(v, bool)
-                    for v in f.value
-                )
-            ):
-                # numeric IN-list -> its [min, max] hull as a zone-map
-                # window (superset semantics; exact membership is
-                # Spark's re-applied filter)
-                merge_num(f.attribute[0], min(f.value), max(f.value))
-            elif (
-                getattr(f, "attribute", None) is not None
-                and f.attribute != (TIME_COLUMN,)
-                and len(getattr(f, "attribute", ())) == 1
-                and isinstance(f, (GreaterThan, GreaterThanOrEqual,
-                                   LessThan, LessThanOrEqual))
-                and isinstance(getattr(f, "value", None), str)
-            ):
-                # string comparison -> BoundFilter via the sorted
-                # dictionary + inverted index (exact strictness kept:
-                # the index answers the bound itself, not a loose hull)
-                if isinstance(f, GreaterThan):
-                    merge_bound(f.attribute[0], f.value, None, True, False)
-                elif isinstance(f, GreaterThanOrEqual):
-                    merge_bound(f.attribute[0], f.value, None, False, False)
-                elif isinstance(f, LessThan):
-                    merge_bound(f.attribute[0], None, f.value, False, True)
-                else:
-                    merge_bound(f.attribute[0], None, f.value, False, False)
-            elif (
-                isinstance(f, StringStartsWith)
-                and getattr(f, "attribute", None) != (TIME_COLUMN,)
-                and len(getattr(f, "attribute", ())) == 1
-            ):
-                # Druid PrefixFilter == the dictionary bound
-                # [prefix, next_prefix) — LIKE 'p%' pushdown
-                merge_bound(
-                    f.attribute[0], f.value, _next_prefix(f.value), False, True
-                )
-            elif (
-                isinstance(f, IsNull)
-                and getattr(f, "attribute", None) != (TIME_COLUMN,)
-                and len(getattr(f, "attribute", ())) == 1
-            ):
-                # IS NULL == equality with the dictionary's null slot
-                merge_dim(f.attribute[0], (None,))
-            elif (
-                isinstance(f, (StringContains, StringEndsWith))
-                and getattr(f, "attribute", None) != (TIME_COLUMN,)
-                and len(getattr(f, "attribute", ())) == 1
-            ):
-                # LIKE '%x%' / LIKE '%x' -> dictionary predicate
-                # (Druid's search/contains filter family): evaluated
-                # once per distinct value, surviving ids' bitmaps union
-                self.pred_filters.append(
-                    (
-                        f.attribute[0],
-                        "contains" if isinstance(f, StringContains) else "endswith",
-                        f.value,
-                    )
-                )
-            if getattr(f, "attribute", None) == (TIME_COLUMN,):
-                if isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                    ms = _to_millis(f.value)
-                    if ms is not None:
-                        self.lower_ms = (
-                            ms
-                            if self.lower_ms is None
-                            else max(self.lower_ms, ms)
-                        )
-                        handled = True
-                elif isinstance(f, (LessThan, LessThanOrEqual)):
-                    ms = _to_millis(f.value)
-                    if ms is not None:
-                        self.upper_ms = min(self.upper_ms if self.upper_ms is not None else ms, ms)
-                        handled = True
-                elif isinstance(f, EqualTo):
-                    ms = _to_millis(f.value)
-                    if ms is not None:
-                        self.lower_ms = ms if self.lower_ms is None else max(self.lower_ms, ms)
-                        self.upper_ms = ms if self.upper_ms is None else min(self.upper_ms, ms)
-                        handled = True
-            # Pruning is segment-granular, not row-granular, so every
-            # filter (handled or not) is returned for Spark to apply.
-            _ = handled
-            yield f
 

@@ -166,8 +166,7 @@ def compact_segments(
     df = spark.read.format("druidsegment").option("path", src_root).load()
     if intervals:
         # interval-scoped compaction (Druid's ioConfig.inputSpec):
-        # the pushed __time bounds prune whole source segments at
-        # planning, so an out-of-interval forest costs nothing to skip
+        # only source rows inside the intervals are rewritten
         from ..native_query import _interval_pred
 
         df = df.filter(_interval_pred(TIME_COLUMN, intervals))

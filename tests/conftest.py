@@ -3,13 +3,13 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from druid_datafusion_bridge_spark import get_spark
-from druid_datafusion_bridge_spark.catalog import TABLES
+
+from .oracle_harness import make_duck
 
 # sf0.001 keeps the pytest loop fast; test_oracle_sf001 runs everything,
 # and the driver's own gate runs at sf0.01 (covered by `pytest -m sf01`).
@@ -23,15 +23,6 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
     s = get_spark(app_name="ddbs-tests")
     yield s
-
-
-def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con
 
 
 @pytest.fixture(scope="session")

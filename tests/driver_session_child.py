@@ -33,17 +33,10 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    import duckdb
-
-    from druid_datafusion_bridge_spark.catalog import TABLES
     from druid_datafusion_bridge_spark.queries import all_oracles, all_queries
-    from tests.oracle_harness import compare
+    from tests.oracle_harness import compare, make_duck
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = make_duck(sf_dir)
 
     queries = all_queries()
     oracles = all_oracles()

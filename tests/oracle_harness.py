@@ -16,6 +16,18 @@ from typing import Any
 import duckdb
 from pyspark.sql import DataFrame
 
+from druid_datafusion_bridge_spark.catalog import TABLES
+
+
+def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per testdata table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
 
 def _norm(v: Any) -> Any:
     if isinstance(v, Decimal):

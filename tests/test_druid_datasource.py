@@ -19,7 +19,6 @@ from druid_datafusion_bridge_spark.sources import (
     write_segment,
 )
 from druid_datafusion_bridge_spark.sources.datasource import DruidSegmentReader
-from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
 
 from .conftest import SF_DIR
 
@@ -91,35 +90,23 @@ def test_time_filter_correct_under_pruning(registered, segment_root):
 
 
 def test_reader_prunes_segments_by_interval(registered, segment_root):
-    from druid_datafusion_bridge_spark.sources.datasource import (
-        DruidSegmentReaderWithPushdown,
-    )
-
     df = registered.read.format("druidsegment").option("path", segment_root).load()
-    # pushFilters path (opt-in subclass — the base reader deliberately
-    # has no pushFilters so Spark accepts it with the session flag off)
-    r = DruidSegmentReaderWithPushdown(df.schema, {"path": segment_root})
-    # bound below the second segment's interval start => only seg_000 survives
-    list(r.pushFilters([LessThan(("__time",), BASE_MS + 60_000 * 5)]))
-    parts = r.partitions()
-    assert [os.path.basename(p.segment_dir) for p in parts] == ["seg_000"]
-
-    r2 = DruidSegmentReaderWithPushdown(df.schema, {"path": segment_root})
-    list(r2.pushFilters([GreaterThanOrEqual(("__time",), BASE_MS + 60_000 * 20)]))
-    assert [os.path.basename(p.segment_dir) for p in r2.partitions()] == ["seg_001"]
-
-    # option-driven path (the cache-safe default)
-    r3 = DruidSegmentReader(
+    # upper bound below the second segment's interval start => only
+    # seg_000 survives
+    r = DruidSegmentReader(
         df.schema,
         {"path": segment_root, "time_upper_ms": str(BASE_MS + 60_000 * 5)},
     )
-    assert [os.path.basename(p.segment_dir) for p in r3.partitions()] == ["seg_000"]
+    assert [os.path.basename(p.segment_dir) for p in r.partitions()] == ["seg_000"]
 
-    # non-__time filters are passed through untouched and prune nothing
-    r3 = DruidSegmentReader(df.schema, {"path": segment_root})
-    kept = list(r3.pushFilters([GreaterThanOrEqual(("n_nationkey",), 3)]))
-    assert len(kept) == 1
-    assert len(r3.partitions()) == 2
+    r2 = DruidSegmentReader(
+        df.schema,
+        {"path": segment_root, "time_lower_ms": str(BASE_MS + 60_000 * 20)},
+    )
+    assert [os.path.basename(p.segment_dir) for p in r2.partitions()] == ["seg_001"]
+
+    # no bounds => every segment planned
+    assert len(DruidSegmentReader(df.schema, {"path": segment_root}).partitions()) == 2
 
 
 def test_sql_over_segments(registered, segment_root):
@@ -289,9 +276,8 @@ def test_schema_evolution_across_segments(registered, tmp_path):
 
 def test_bitmap_index_in_list_union(registered, tmp_path):
     """IN-list pushdown: accepted-value lists union their per-value
-    bitmaps (dim_eq accepts a JSON list), contradictory conjunctions
-    prune to zero rows, and the experimental pushFilters path folds
-    EqualTo + In on the same column by intersecting value sets."""
+    bitmaps (dim_eq accepts a JSON list) and contradictory conjunctions
+    prune to zero rows."""
     import pyarrow as pa
 
     from druid_datafusion_bridge_spark.sources.segment import (
@@ -473,9 +459,6 @@ def test_numeric_range_pruning_is_metadata_only(registered, tmp_path, monkeypatc
     pass is metadata-plane only (decoding any value column while
     pruning is made a loud failure here)."""
     from druid_datafusion_bridge_spark.sources import segment as segmod
-    from druid_datafusion_bridge_spark.sources.datasource import (
-        DruidSegmentReaderWithPushdown,
-    )
 
     def band(lo):
         return pa.table(
@@ -514,20 +497,18 @@ def test_numeric_range_pruning_is_metadata_only(registered, tmp_path, monkeypatc
         "seg_001", "seg_002",
     ]
 
-    # pushFilters path: value < 9.5 keeps only the first band, and the
-    # filter is still yielded back for Spark to re-apply row-level
-    r2 = DruidSegmentReaderWithPushdown(df.schema, {"path": str(tmp_path)})
-    kept = list(r2.pushFilters([LessThan(("value",), 9.5)]))
-    assert len(kept) == 1
+    # open lower bound: value <= 9.5 keeps only the first band
+    r2 = DruidSegmentReader(
+        df.schema, {"path": str(tmp_path), "num_range": '{"value": [null, 9.5]}'}
+    )
     assert [os.path.basename(p.segment_dir) for p in r2.partitions()] == [
         "seg_000"
     ]
 
-    # conjunction tightens to a band in the middle
-    r3 = DruidSegmentReaderWithPushdown(df.schema, {"path": str(tmp_path)})
-    list(r3.pushFilters([
-        GreaterThanOrEqual(("value",), 10.0), LessThan(("value",), 19.5),
-    ]))
+    # a closed window selects the band in the middle
+    r3 = DruidSegmentReader(
+        df.schema, {"path": str(tmp_path), "num_range": '{"value": [10.0, 19.5]}'}
+    )
     assert [os.path.basename(p.segment_dir) for p in r3.partitions()] == [
         "seg_001"
     ]
@@ -546,11 +527,7 @@ def test_dim_bound_filter_index_and_pruning(registered, tmp_path):
     search must honor strict/inclusive bounds exactly, a segment whose
     dictionary has no value in range must be pruned planner-side, and
     the end-to-end query must select the right rows."""
-    from druid_datafusion_bridge_spark.sources.datasource import (
-        DruidSegmentReaderWithPushdown,
-    )
     from druid_datafusion_bridge_spark.sources.segment import DruidSegment
-    from pyspark.sql.datasource import GreaterThan, LessThanOrEqual
 
     def seg(values, offset):
         return pa.table(
@@ -590,16 +567,16 @@ def test_dim_bound_filter_index_and_pruning(registered, tmp_path):
     parts = reader.partitions()
     assert [os.path.basename(p.segment_dir) for p in parts] == ["seg_001"]
 
-    # pushFilters path: site > 'delta' AND site <= 'oscar'
+    # site > 'delta' AND site <= 'oscar': strict lower, inclusive upper
     df = (
         registered.read.format("druidsegment")
         .option("path", str(tmp_path)).load()
     )
-    r2 = DruidSegmentReaderWithPushdown(df.schema, {"path": str(tmp_path)})
-    kept = list(r2.pushFilters([
-        GreaterThan(("site",), "delta"), LessThanOrEqual(("site",), "oscar"),
-    ]))
-    assert len(kept) == 2  # both yielded back for Spark to re-apply
+    r2 = DruidSegmentReader(
+        df.schema,
+        {"path": str(tmp_path),
+         "dim_bound": '{"site": ["delta", "oscar", true, false]}'},
+    )
     parts2 = r2.partitions()
     assert [os.path.basename(p.segment_dir) for p in parts2] == ["seg_001"]
 
@@ -736,14 +713,10 @@ def test_time_interval_skips_blocks_within_segment(
 
 
 def test_numeric_in_list_hull_feeds_zone_maps(registered, tmp_path):
-    """A numeric IN-list pushes its [min, max] hull as a zone-map
-    window: values from one block => only that block's rows planned as
-    candidates (membership itself is Spark's re-applied filter)."""
-    from druid_datafusion_bridge_spark.sources.datasource import (
-        DruidSegmentReaderWithPushdown,
-    )
-    from pyspark.sql.datasource import In
-
+    """A numeric IN-list passes its [min, max] hull as a num_range
+    zone-map window: values from one block => only that block's rows
+    planned as candidates (membership itself is Spark's re-applied
+    filter)."""
     n = 20000
     t = pa.table(
         {
@@ -761,55 +734,18 @@ def test_numeric_in_list_hull_feeds_zone_maps(registered, tmp_path):
     got = df.filter(F.col("v").isin(9000, 9050))
     assert got.count() == 2
 
-    r = DruidSegmentReaderWithPushdown(df.schema, {"path": str(tmp_path)})
-    kept = list(r.pushFilters([In(("v",), (9000, 9050))]))
-    assert len(kept) == 1
+    r = DruidSegmentReader(
+        df.schema, {"path": str(tmp_path), "num_range": '{"v": [9000, 9050]}'}
+    )
     parts = r.partitions()
     assert parts[0].num_filters == (("v", 9000, 9050),)
-
-
-def test_string_in_list_pushfilters_uses_bitmap_union(registered, tmp_path):
-    """pushFilters IN on a string dim (the Filter dataclass field is
-    `value`, despite plural semantics — this path raised AttributeError
-    before) must land in eq_filters as the value tuple."""
-    from druid_datafusion_bridge_spark.sources.datasource import (
-        DruidSegmentReaderWithPushdown,
-    )
-    from pyspark.sql.datasource import In
-
-    t = pa.table(
-        {
-            "__time": pa.array(
-                [1704067200000 + i for i in range(4)], pa.timestamp("ms")
-            ),
-            "site": pa.array(["alpha", "bravo", "charlie", "delta"]),
-        }
-    )
-    write_segment(t, str(tmp_path / "seg_000"))
-    df = (
-        registered.read.format("druidsegment")
-        .option("path", str(tmp_path)).load()
-    )
-    r = DruidSegmentReaderWithPushdown(df.schema, {"path": str(tmp_path)})
-    kept = list(r.pushFilters([In(("site",), ("bravo", "delta"))]))
-    assert len(kept) == 1
-    parts = r.partitions()
-    assert parts[0].eq_filters == (("site", ("bravo", "delta")),)
-    rows = sorted(
-        sum((list(b.column(1).to_pylist()) for b in r.read(parts[0])), [])
-    )
-    assert rows == ["bravo", "delta"]
 
 
 def test_prefix_filter_and_is_null_pushdown(registered, tmp_path):
     """PrefixFilter (s1k): startswith(p) must reduce to the dictionary
     bound [p, next_prefix(p)) — correct rows selected, non-overlapping
-    segments pruned — and pushed IsNull must hit the null bitmap."""
-    from druid_datafusion_bridge_spark.sources.datasource import (
-        DruidSegmentReaderWithPushdown,
-        _next_prefix,
-    )
-    from pyspark.sql.datasource import IsNull, StringStartsWith
+    segments pruned — and a dim_eq null must hit the null bitmap."""
+    from druid_datafusion_bridge_spark.sources.datasource import _next_prefix
 
     assert _next_prefix("ab") == "ac"
     assert _next_prefix("a" + chr(0x10FFFF)) == "b"
@@ -847,10 +783,10 @@ def test_prefix_filter_and_is_null_pushdown(registered, tmp_path):
     parts = reader.partitions()
     assert [os.path.basename(p.segment_dir) for p in parts] == ["seg_001"]
 
-    # pushFilters: StringStartsWith routes to the same bound
-    r2 = DruidSegmentReaderWithPushdown(df.schema, {"path": str(tmp_path)})
-    kept = list(r2.pushFilters([StringStartsWith(("site",), "ap")]))
-    assert len(kept) == 1
+    # the matching prefix plans only seg_000 and selects its rows
+    r2 = DruidSegmentReader(
+        df.schema, {"path": str(tmp_path), "dim_prefix": '{"site": "ap"}'}
+    )
     parts2 = r2.partitions()
     assert [os.path.basename(p.segment_dir) for p in parts2] == ["seg_000"]
     sites = sorted(
@@ -858,9 +794,10 @@ def test_prefix_filter_and_is_null_pushdown(registered, tmp_path):
     )
     assert sites == ["app", "apple", "apricot"]
 
-    # IsNull -> null-slot bitmap: only the null row of seg_000
-    r3 = DruidSegmentReaderWithPushdown(df.schema, {"path": str(tmp_path)})
-    list(r3.pushFilters([IsNull(("site",))]))
+    # null equality -> null-slot bitmap: only the null row of seg_000
+    r3 = DruidSegmentReader(
+        df.schema, {"path": str(tmp_path), "dim_eq": '{"site": [null]}'}
+    )
     parts3 = r3.partitions()
     assert [os.path.basename(p.segment_dir) for p in parts3] == ["seg_000"]
     rows = [s for b in r3.read(parts3[0]) for s in b.column(1).to_pylist()]
@@ -871,14 +808,9 @@ def test_dictionary_predicate_filters(registered, tmp_path):
     """Regex / contains / icontains (s1l, s1m): evaluated once per
     DISTINCT dictionary value, answered via bitmap union — correct
     rows selected, zero-match segments pruned planner-side, NULL never
-    matching, and pushed StringContains/StringEndsWith routed to the
-    same path."""
-    from druid_datafusion_bridge_spark.sources.datasource import (
-        DruidSegmentReader,
-        DruidSegmentReaderWithPushdown,
-    )
+    matching, and dim_contains + dim_endswith conjoined on the same
+    column."""
     from druid_datafusion_bridge_spark.sources.segment import DruidSegment
-    from pyspark.sql.datasource import StringContains, StringEndsWith
 
     def seg(values, offset):
         return pa.table(
@@ -956,20 +888,16 @@ def test_dictionary_predicate_filters(registered, tmp_path):
     vals = [x for b in r_i.read(parts_i[0]) for x in b.column(1).to_pylist()]
     assert vals == ["apricot"]
 
-    # pushFilters: StringContains / StringEndsWith take the same route
-    r2 = DruidSegmentReaderWithPushdown(df.schema, {"path": str(tmp_path)})
-    kept = list(
-        r2.pushFilters(
-            [StringContains(("site",), "an"), StringEndsWith(("site",), "a")]
-        )
+    # contains 'an' AND endswith 'a': conjunctive, only banana
+    r2 = DruidSegmentReader(
+        df.schema,
+        {"path": str(tmp_path), "dim_contains": '{"site": "an"}',
+         "dim_endswith": '{"site": "a"}'},
     )
-    assert len(kept) == 2  # acceleration-only: Spark re-applies both
     parts2 = r2.partitions()
     assert [os.path.basename(p.segment_dir) for p in parts2] == ["seg_001"]
     vals = [x for b in r2.read(parts2[0]) for x in b.column(1).to_pylist()]
     assert vals == ["banana"]
-    # state reset: the next unfiltered planning sees every segment
-    assert len(r2.partitions()) == 2
 
 
 def test_like_filter_and_search_query(registered, tmp_path):

@@ -142,6 +142,67 @@ def test_ingest_spec_no_rollup_keeps_rows(spark, tmp_path):
     }
 
 
+def test_schemaless_parquet_excludes_timestamp_source_column(spark, tmp_path):
+    """Schemaless dimensions over parquet with a tz-aware timestamp
+    column: the timestampSpec source column becomes __time and is NOT
+    discovered as a dimension (the segment writer has no type for a
+    timestamp dimension)."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "input"
+    src.mkdir()
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    pq.write_table(
+        pa.table({
+            "ts": pa.array(
+                [t0 + dt.timedelta(hours=h) for h in (1, 2, 26)],
+                pa.timestamp("us", tz="UTC"),
+            ),
+            "k": ["a", "b", "a"],
+            "v": pa.array([1, 2, 3], pa.int64()),
+        }),
+        str(src / "part.parquet"),
+    )
+    spec = {
+        "type": "index_parallel",
+        "spec": {
+            "dataSchema": {
+                "dataSource": "schemaless",
+                "timestampSpec": {"column": "ts"},
+                "dimensionsSpec": {"dimensions": []},
+                "granularitySpec": {"segmentGranularity": "day",
+                                    "queryGranularity": "none",
+                                    "rollup": False},
+            },
+            "ioConfig": {
+                "inputSource": {"type": "local", "baseDir": str(src),
+                                "filter": "*.parquet"},
+                "inputFormat": {"type": "parquet"},
+            },
+        },
+    }
+    storage = str(tmp_path / "deep")
+    assert len(ingest(spark, spec, storage).collect()) == 2  # two days
+    from druid_datafusion_bridge_spark.sources import register_druid_datasource
+
+    register_druid_datasource(spark)
+    df = (
+        spark.read.format("druidsegment")
+        .option("path", storage + "/schemaless")
+        .load()
+    )
+    assert sorted(df.columns) == ["__time", "k", "v"]
+    got = sorted((str(r["__time"]), r["k"], r["v"]) for r in df.collect())
+    assert got == [
+        ("2024-01-01 01:00:00", "a", 1),
+        ("2024-01-01 02:00:00", "b", 2),
+        ("2024-01-02 02:00:00", "a", 3),
+    ]
+
+
 def test_ingest_spec_csv_and_millis_timestamp(spark, tmp_path):
     src = tmp_path / "csv"
     src.mkdir()

@@ -1,5 +1,5 @@
-"""Scan-mirror layer (catalog._scan_mirror): forced on via the
-threshold env, the mirror must serve bit-identical values from a
+"""Scan-mirror layer (catalog._scan_mirror): forced on by patching the
+byte threshold, the mirror must serve bit-identical values from a
 multi-file, range-partitioned layout whose per-file min/max stay tight
 on the table's hot filter column (the re-layout adds cores without
 surrendering parquet zone-map pruning)."""
@@ -18,8 +18,7 @@ from .conftest import SF_DIR
 
 @pytest.fixture()
 def forced_mirror(monkeypatch, spark):
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_MIRROR", "1")
-    monkeypatch.setenv("SPARK_GRAFT_MIRROR_MIN_BYTES", "1")
+    monkeypatch.setattr(catalog, "MIRROR_MIN_BYTES", 1)
     yield
 
 
@@ -57,18 +56,10 @@ def test_mirror_files_keep_tight_ranges(forced_mirror, spark):
     assert any((lo, hi) != whole for lo, hi in spans)
 
 
-def test_mirror_disabled_serves_source(monkeypatch, spark):
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_MIRROR", "0")
-    df = catalog.table(spark, SF_DIR, "lineitem")
-    assert all("lineitem.parquet" in f for f in df.inputFiles())
-
-
-def test_mirror_default_threshold_skips_small_tables(monkeypatch, spark):
+def test_mirror_default_threshold_skips_small_tables(spark):
     """At the default 32 MB threshold the sf0.001-0.1 testdata reads
     raw: re-layout pays only when one row group exceeds what one core
     should own (measured: mirroring 10 MB tables was a net loss)."""
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_MIRROR", "1")
-    monkeypatch.delenv("SPARK_GRAFT_MIRROR_MIN_BYTES", raising=False)
     df = catalog.table(spark, SF_DIR, "lineitem")
     assert all("lineitem.parquet" in f for f in df.inputFiles())
 
@@ -116,10 +107,8 @@ def test_multi_row_group_source_served_raw(monkeypatch, tmp_path, spark):
     pathological single/few-row-group inputs."""
     import pyarrow as pa
 
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_MIRROR", "1")
-    monkeypatch.setenv("SPARK_GRAFT_MIRROR_MIN_BYTES", "1")
-    monkeypatch.setenv("SPARK_GRAFT_HEAVY_MIRROR_MIN_BYTES", "1")
-    monkeypatch.delenv("SPARK_GRAFT_MIRROR_BLOCK_BYTES", raising=False)
+    monkeypatch.setattr(catalog, "MIRROR_MIN_BYTES", 1)
+    monkeypatch.setattr(catalog, "HEAVY_SCAN_MIN_BYTES", 1)
     src_dir = str(tmp_path)
     t = pa.table({"l_orderkey": list(range(30_000)),
                   "l_quantity": [float(i % 50) for i in range(30_000)]})
@@ -152,13 +141,12 @@ def test_heavy_scan_profile_values_and_splits(monkeypatch, spark):
     one file still fans out across cores) with bit-identical values,
     while the default read keeps the standard policy. Below its
     threshold the heavy read falls back (standard mirror or raw)."""
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_MIRROR", "1")
     # standard profile OFF for this table size, heavy ON:
-    monkeypatch.setenv("SPARK_GRAFT_MIRROR_MIN_BYTES", str(10**12))
-    monkeypatch.setenv("SPARK_GRAFT_HEAVY_MIRROR_MIN_BYTES", "1")
-    # 64 KiB row groups: small enough that even the sf0.01 fixture's
-    # ~280 KiB mirror files hold several row groups each
-    monkeypatch.setenv("SPARK_GRAFT_MIRROR_BLOCK_BYTES", str(64 * 1024))
+    monkeypatch.setattr(catalog, "MIRROR_MIN_BYTES", 10**12)
+    monkeypatch.setattr(catalog, "HEAVY_SCAN_MIN_BYTES", 1)
+    # 64 KiB row-group floor: small enough that even the sf0.01
+    # fixture's ~280 KiB mirror files hold several row groups each
+    monkeypatch.setattr(catalog, "HEAVY_SCAN_BLOCK_MIN_BYTES", 64 * 1024)
 
     raw = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
     heavy = catalog.table(spark, SF_DIR, "lineitem", heavy_scan=True)
@@ -173,6 +161,6 @@ def test_heavy_scan_profile_values_and_splits(monkeypatch, spark):
     default = catalog.table(spark, SF_DIR, "lineitem")
     assert all("@heavy" not in f for f in default.inputFiles())
     # below-threshold heavy read falls back without error
-    monkeypatch.setenv("SPARK_GRAFT_HEAVY_MIRROR_MIN_BYTES", str(10**12))
+    monkeypatch.setattr(catalog, "HEAVY_SCAN_MIN_BYTES", 10**12)
     fallback = catalog.table(spark, SF_DIR, "lineitem", heavy_scan=True)
     assert fallback.count() == raw.count()

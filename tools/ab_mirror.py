@@ -1,9 +1,9 @@
 """A/B the scan-mirror policy on the headline queries, in ONE session
 with round-robin interleaving (host noise hits every config equally).
 
-Configs flip the mirror env knobs between runs; each config has its own
-mirror root so builds are cached per layout and never rebuilt inside the
-timed loop.
+Configs flip the catalog's mirror thresholds in-process between runs;
+each config has its own mirror root so builds are cached per layout and
+never rebuilt inside the timed loop.
 
 Usage: python tools/ab_mirror.py [passes]
 """
@@ -18,8 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
-from druid_datafusion_bridge_spark import get_spark  # noqa: E402
-from druid_datafusion_bridge_spark.catalog import build_scan_mirrors  # noqa: E402
+from druid_datafusion_bridge_spark import catalog, get_spark  # noqa: E402
 from druid_datafusion_bridge_spark.queries import all_queries  # noqa: E402
 
 CONFIGS = {
@@ -33,11 +32,11 @@ CONFIGS = {
 
 
 def set_cfg(cfg: tuple[int, int, str]) -> None:
-    os.environ["SPARK_GRAFT_MIRROR_MIN_BYTES"] = str(cfg[0])
+    catalog.MIRROR_MIN_BYTES = cfg[0]
     # the heavy profile has its OWN threshold: without this the 'none'
     # baseline would still serve heavy mirrors to heavy_scan reads
-    os.environ["SPARK_GRAFT_HEAVY_MIRROR_MIN_BYTES"] = str(cfg[0])
-    os.environ["SPARK_GRAFT_MIRROR_FILE_BYTES"] = str(cfg[1])
+    catalog.HEAVY_SCAN_MIN_BYTES = cfg[0]
+    catalog.MIRROR_FILE_BYTES = cfg[1]
     os.environ["SPARK_GRAFT_MIRROR_ROOT"] = cfg[2]
 
 
@@ -49,7 +48,7 @@ def main() -> None:
 
     for name, cfg in CONFIGS.items():
         set_cfg(cfg)
-        out = build_scan_mirrors(spark, sf_dir)
+        out = catalog.build_scan_mirrors(spark, sf_dir)
         print(f"built {name}: {[t for t, v in out.items() if v]}", file=sys.stderr)
 
     # warm every (config, query) once
