@@ -2,7 +2,8 @@
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "cpus": ..., "default_parallelism":
+..., "affinity_cpus": ...}.
 
 Each query is forced with a noop write (full plan executes on the
 executors; nothing is collected to the driver). Times are HOT runs: each
@@ -34,6 +35,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -41,6 +43,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from druid_datafusion_bridge_spark import get_spark
 from druid_datafusion_bridge_spark.queries import all_queries
+from druid_datafusion_bridge_spark.sources.datasource import usable_cores
 
 # Representative, scale-sensitive subset: scan-agg, wide-agg, multi-join,
 # star join, filter-agg, time rollup, window, top-k per group, dedup LSH,
@@ -110,6 +113,18 @@ def _io_anchor(spark, sf_dir: str) -> float:
         run()
         best = min(best, time.perf_counter() - t0)
     return round(best, 3)
+
+
+def _master_cpus(spark) -> int:
+    """Cores the local master asks for: N of local[N], one for local,
+    every host core for local[*] (and for a non-local master, which
+    names none)."""
+    m = re.fullmatch(
+        r"local(?:\[(\d+|\*)(?:,\d+)?\])?", spark.sparkContext.master
+    )
+    if m is None or m.group(1) == "*":
+        return os.cpu_count()
+    return int(m.group(1) or 1)
 
 
 def _scaled_bench_dir(spark, sf_dir: str, factor: int) -> str:
@@ -212,6 +227,13 @@ def main() -> None:
                 "anchor_seconds": anchor,
                 "io_anchor_seconds": io_anchor,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                # the parallelism the run actually got: cores requested
+                # by the local master, Spark's default parallelism and
+                # the cores this process may run on (druidsegment scans
+                # pack into at most that many tasks)
+                "cpus": _master_cpus(spark),
+                "default_parallelism": spark.sparkContext.defaultParallelism,
+                "affinity_cpus": usable_cores(),
             }
         )
     )

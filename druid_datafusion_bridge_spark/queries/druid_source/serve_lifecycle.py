@@ -182,11 +182,12 @@ def dm_search_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s1o_druid_segment_split_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split scan: split_rows=5 fans the two nation segments into ~6
-    row-window partitions (planning reads only the __time header for
-    the row count), each decoding just its own windows' blocks — scan
-    parallelism beyond segment count, which Druid itself (one segment
-    per processing thread) and the reference (ONE partition for the
-    whole table, execution_plan.rs:42) both lack. The oracle proves
+    row windows (planning reads the row count from the manifest),
+    packed into at most one partition per usable core, each window
+    decoding just its own blocks — scan parallelism beyond segment
+    count, which Druid itself (one segment per processing thread) and
+    the reference (ONE partition for the whole table,
+    execution_plan.rs:42) both lack. The oracle proves
     the windows tile the table exactly: no row lost, none duplicated."""
     root = _ensure_segments(spark, sf_dir)
     df = (

@@ -6,8 +6,8 @@ Spark through the Python DataSource API (Spark 4) so real Druid segment
 directories can be queried as DataFrames.
 
 Improvements over the reference scan (src/datafusion_ext/execution_plan.rs:42):
-one InputPartition *per segment* instead of a single partition, projection
-pruning honored at decode time, and segment-level time-interval pruning via
+segments packed into at most one InputPartition per usable core instead of
+a single partition, projection pruning honored at decode time, and segment-level time-interval pruning via
 the `time_lower_ms`/`time_upper_ms` options — the reference parses the
 interval (metadata.rs:22-23) but never uses it to skip IO.
 

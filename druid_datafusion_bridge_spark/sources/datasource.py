@@ -11,12 +11,15 @@ Spark analog of the reference's DruidSegmentTable/DruidSegmentExec
 (src/datafusion_ext/table_provider.rs:27-72, execution_plan.rs:30-117),
 with three upgrades over the reference's scan:
 
-- one InputPartition PER SEGMENT (the reference advertises exactly one
-  partition for the whole table, execution_plan.rs:42), so a directory of
-  N segments scans on N cores/executors — and `split_rows` fans a big
-  segment out into row-window partitions on top (beyond Druid itself,
-  which processes one segment per thread), sliced decode keeping each
-  window O(its blocks);
+- scan tasks sized to the cores, not to the table: the planner builds
+  one unit per served segment (the reference advertises exactly one
+  partition for the whole table, execution_plan.rs:42), `split_rows`
+  fans a big segment out into row-window units on top (sliced decode
+  keeps each window O(its blocks)), and the units are then packed into
+  at most one InputPartition per usable core. Every Python task pays a
+  fixed worker start-up (~250 ms on Spark 4.1 / Python 3.11, mostly
+  re-reading the directories of the zips on the worker path), so a
+  root of N small segments costs that once per core instead of N times;
 - projection honored at decode time via the `columns` option (the Python
   DataSource API does not push projections, so it's an explicit option —
   SURVEY.md §4.1);
@@ -34,15 +37,18 @@ per-block zone maps), and dictionary predicates regex/contains/
 icontains/endswith/like (one pass over the value dictionary — Druid's
 RegexDimFilter / search / LikeDimFilter evaluation model).
 
-Scale posture: partitions() touches only meta.smoosh + index.drd +
-column JSON headers (a few KB per segment); column bytes are decoded on
-executors inside read(), which yields Arrow RecordBatches (zero row
-objects). For 100 TB = ~100k segments this planning cost is a metadata
-listing, and decode parallelism is segment-count wide.
+Scale posture: partitions() plans from the root's planning manifest
+(one _planmeta.json read; a segment whose entry is stale costs its
+meta.smoosh + index.drd + column JSON headers, a few KB); column bytes
+are decoded on executors inside read(), which yields Arrow
+RecordBatches (zero row objects), one per unit. For 100 TB = ~100k
+segments this planning cost is a metadata listing, and decode
+parallelism is core-count wide.
 """
 
 from __future__ import annotations
 
+import heapq
 import os
 from dataclasses import dataclass
 
@@ -299,7 +305,8 @@ def served_segment_dirs(
 
 # Driver-side value-pruning budget: above this many segments, inverted-
 # index emptiness proofs move wholly to the executors (see
-# _filtered_partitions). 64 keeps small/medium roots snappy while a
+# _filtered_partitions), where an empty segment costs one no-op unit
+# inside a packed task. 64 keeps small/medium roots snappy while a
 # catalog-scale root never serializes 100k index opens in the driver.
 VALUE_PRUNE_MAX_SEGMENTS = 64
 
@@ -434,7 +441,11 @@ def plan_ordered_limit_prefix(
 
 
 @dataclass
-class SegmentPartition(InputPartition):
+class SegmentPartition:
+    """One unit of scan work: a served segment, or one row window of
+    it, with the filters its read applies. ScanTask packs units into
+    Spark partitions."""
+
     segment_dir: str
     # sentinel: open the segment for its schema only, emit zero rows
     # (Spark's Python DataSource calls read(None) if partitions() is
@@ -453,9 +464,50 @@ class SegmentPartition(InputPartition):
     # dictionary predicates (regex/contains/…) answered by one
     # dictionary pass + bitmap union at read time: (col, kind, arg)
     pred_filters: tuple = ()
-    # [start, stop) row window for split scans (several partitions per
-    # big segment); None = the whole segment
+    # [start, stop) row window for split scans (several units per big
+    # segment); None = the whole segment
     row_range: tuple | None = None
+
+
+@dataclass
+class ScanTask(InputPartition):
+    """One Spark partition: the units one Python task reads, in planned
+    order, one Arrow batch each."""
+
+    units: tuple[SegmentPartition, ...]
+
+
+def usable_cores() -> int:
+    """Cores this process may run on — in local mode the planning
+    worker inherits the executor's affinity, so this is the core count
+    a scan can keep busy."""
+    return len(os.sched_getaffinity(0))
+
+
+def pack_units(
+    units: list[SegmentPartition], weights: list[int], n_tasks: int
+) -> list[ScanTask]:
+    """Group ``units`` into at most ``n_tasks`` ScanTasks balanced by
+    ``weights`` (rows): largest unit first, each to the least-loaded
+    task (LPT; ties go to the task with fewer units, so zero-weight
+    units still spread). Units keep their planned order within a task.
+    With no more units than tasks every unit is its own task.
+
+    Packing exists because each Spark Python task pays a fixed worker
+    start-up that dwarfs reading a small segment; one task per core
+    still keeps every core busy."""
+    if len(units) <= n_tasks:
+        return [ScanTask((u,)) for u in units]
+    heap = [(0, 0, b) for b in range(n_tasks)]
+    members: list[list[int]] = [[] for _ in range(n_tasks)]
+    for i in sorted(range(len(units)), key=lambda i: -weights[i]):
+        load, count, b = heapq.heappop(heap)
+        members[b].append(i)
+        heapq.heappush(heap, (load + weights[i], count + 1, b))
+    return [
+        ScanTask(tuple(units[i] for i in sorted(m)))
+        for m in sorted(members, key=min)
+    ]
 
 
 class DruidSegmentDataSource(DataSource):
@@ -616,10 +668,21 @@ class DruidSegmentReader(DataSourceReader):
             raw = _json.loads(options.get(opt)) if options.get(opt) else {}
             self.opt_pred += [(c, kind, a) for c, a in raw.items()]
 
-    def partitions(self) -> list[SegmentPartition]:
+    def partitions(self) -> list[ScanTask]:
+        """Plan one unit per served segment (or split_rows window) with
+        its filters, then pack the units into at most one ScanTask per
+        usable core, balanced by rows (pack_units)."""
         lower, upper = self.opt_lower_ms, self.opt_upper_ms
         eq, bound, num = self.opt_eq, self.opt_bound, self.opt_num
         preds = tuple(self.opt_pred)
+        # planning metadata (interval / row count / column min-max)
+        # comes from the root's cached manifest — one file read instead
+        # of one segment open per dir (see load_plan_meta). Loaded for
+        # the whole root like schema(): a manifest rewritten for the
+        # served subset would drop the excluded segments' entries.
+        all_dirs = find_segment_dirs(self.path)
+        metas = load_plan_meta(self.path, all_dirs)
+        dirs = self._served_dirs()
         if (
             self.opt_order_limit is not None
             and not eq
@@ -627,16 +690,20 @@ class DruidSegmentReader(DataSourceReader):
             and not preds
             and not num
         ):
-            parts = self._ordered_limit_partitions(lower, upper)
+            units = self._ordered_limit_partitions(dirs, metas, lower, upper)
         else:
-            parts = self._filtered_partitions(
-                lower, upper, eq, bound, preds, num
+            units = self._filtered_partitions(
+                dirs, metas, lower, upper, eq, bound, preds, num
             )
-        if not parts:
-            all_dirs = find_segment_dirs(self.path)
-            if all_dirs:
-                parts = [SegmentPartition(all_dirs[0], empty=True)]
-        return parts
+        if not units:
+            return [ScanTask((SegmentPartition(all_dirs[0], empty=True),))]
+        weights = [
+            u.row_range[1] - u.row_range[0]
+            if u.row_range is not None
+            else metas[u.segment_dir]["rows"]
+            for u in units
+        ]
+        return pack_units(units, weights, usable_cores())
 
     def _served_dirs(self) -> list[str]:
         """Segment dirs minus retention-dropped ones (exclude_segments)
@@ -647,7 +714,7 @@ class DruidSegmentReader(DataSourceReader):
         return served_segment_dirs(self.path, self.opt_exclude)
 
     def _ordered_limit_partitions(
-        self, lower=None, upper=None
+        self, dirs: list[str], metas: dict, lower=None, upper=None
     ) -> list[SegmentPartition]:
         """Minimal interval-ordered segment prefix covering
         ``order_limit`` rows (metadata-plane only, served from the
@@ -659,12 +726,10 @@ class DruidSegmentReader(DataSourceReader):
         only FULLY-contained segments count toward k — a partially
         overlapping segment contributes an unknown in-interval row
         count, so it rides along without counting. Spark still
-        re-applies the time filter row-level; surviving partitions
-        carry the interval as a __time zone-map hint exactly like the
+        re-applies the time filter row-level; surviving units carry
+        the interval as a __time zone-map hint exactly like the
         filtered path."""
         k = self.opt_order_limit
-        dirs = self._served_dirs()
-        metas = load_plan_meta(self.path, dirs)
         infos = []
         for seg_dir in dirs:
             m = metas[seg_dir]
@@ -692,6 +757,8 @@ class DruidSegmentReader(DataSourceReader):
 
     def _filtered_partitions(
         self,
+        dirs: list[str],
+        metas: dict,
         lower,
         upper,
         eq: dict,
@@ -700,29 +767,16 @@ class DruidSegmentReader(DataSourceReader):
         num: dict,
     ) -> list[SegmentPartition]:
         parts: list[SegmentPartition] = []
-        dirs = self._served_dirs()
-        # planning metadata (interval / row count / column min-max)
-        # comes from the root's cached manifest — one file read instead
-        # of one segment open per dir (see load_plan_meta)
-        metas = (
-            load_plan_meta(self.path, dirs)
-            if (
-                lower is not None
-                or upper is not None
-                or num
-                or self.opt_split is not None
-            )
-            else {}
-        )
         # driver-side value pruning (inverted-index emptiness proofs)
         # opens each surviving segment and, for dictionary predicates,
         # decodes its dictionary — unlike interval/min-max pruning it
         # cannot be served from the manifest (emptiness depends on the
-        # filter). Worth it while the per-query win (an elided task)
-        # exceeds the planning cost; past this many segments skip it and
-        # let executors do the same index check inside read(), where it
-        # parallelizes — correctness is identical either way (read()
-        # re-derives the row set; empty segments just cost a no-op task).
+        # filter). Worth it while the per-query win (a skipped segment
+        # open) exceeds the planning cost; past this many segments skip
+        # it and let executors do the same index check inside read(),
+        # where it parallelizes — correctness is identical either way
+        # (read() re-derives the row set; an empty segment just costs a
+        # no-op unit inside a packed task).
         value_prune = (eq or bound or preds) and len(
             dirs
         ) <= VALUE_PRUNE_MAX_SEGMENTS
@@ -823,7 +877,15 @@ class DruidSegmentReader(DataSourceReader):
         finally:
             seg.close()
 
-    def read(self, partition: SegmentPartition):
+    def read(self, partition: ScanTask):
+        """One Arrow batch per unit, in planned order. Each unit opens
+        and closes its own segment, and its arrays are dropped before
+        the next unit decodes, so a task's memory stays bounded by one
+        segment (or window) however many units it packs."""
+        for unit in partition.units:
+            yield from self._read_unit(unit)
+
+    def _read_unit(self, partition: SegmentPartition):
         seg = DruidSegment(partition.segment_dir)
         try:
             # roaring-index row selection for dim equalities: the

@@ -18,7 +18,11 @@ from druid_datafusion_bridge_spark.sources import (
     register_druid_datasource,
     write_segment,
 )
-from druid_datafusion_bridge_spark.sources.datasource import DruidSegmentReader
+from druid_datafusion_bridge_spark.sources import datasource
+from druid_datafusion_bridge_spark.sources.datasource import (
+    DruidSegmentReader,
+    usable_cores,
+)
 
 from .conftest import SF_DIR
 
@@ -31,6 +35,16 @@ def _nation_with_time() -> pa.Table:
         [BASE_MS + 60_000 * i for i in range(t.num_rows)], pa.timestamp("ms")
     )
     return t.append_column("__time", ms)
+
+
+def _units(parts) -> list:
+    """The planned units of packed scan tasks, task by task."""
+    return [u for task in parts for u in task.units]
+
+
+def _names(parts) -> list[str]:
+    """Segment-dir basenames of the planned units."""
+    return [os.path.basename(u.segment_dir) for u in _units(parts)]
 
 
 @pytest.fixture(scope="module")
@@ -60,9 +74,13 @@ def test_read_matches_parquet(registered, segment_root):
     assert set(df.columns) == set(want.column_names)
 
 
-def test_one_partition_per_segment(registered, segment_root):
+def test_segments_packed_into_at_most_one_task_per_core(
+    registered, segment_root
+):
     df = registered.read.format("druidsegment").option("path", segment_root).load()
-    assert df.rdd.getNumPartitions() == 2
+    assert df.rdd.getNumPartitions() == min(2, usable_cores())
+    reader = DruidSegmentReader(df.schema, {"path": segment_root})
+    assert sorted(_names(reader.partitions())) == ["seg_000", "seg_001"]
 
 
 def test_projection_option(registered, segment_root):
@@ -97,16 +115,17 @@ def test_reader_prunes_segments_by_interval(registered, segment_root):
         df.schema,
         {"path": segment_root, "time_upper_ms": str(BASE_MS + 60_000 * 5)},
     )
-    assert [os.path.basename(p.segment_dir) for p in r.partitions()] == ["seg_000"]
+    assert _names(r.partitions()) == ["seg_000"]
 
     r2 = DruidSegmentReader(
         df.schema,
         {"path": segment_root, "time_lower_ms": str(BASE_MS + 60_000 * 20)},
     )
-    assert [os.path.basename(p.segment_dir) for p in r2.partitions()] == ["seg_001"]
+    assert _names(r2.partitions()) == ["seg_001"]
 
     # no bounds => every segment planned
-    assert len(DruidSegmentReader(df.schema, {"path": segment_root}).partitions()) == 2
+    r3 = DruidSegmentReader(df.schema, {"path": segment_root})
+    assert len(_units(r3.partitions())) == 2
 
 
 def test_sql_over_segments(registered, segment_root):
@@ -227,7 +246,8 @@ def test_value_pruning_skips_whole_segments(registered, tmp_path):
         df.schema, {"path": str(tmp_path), "dim_eq": '{"site": "beta"}'}
     )
     parts = reader.partitions()
-    assert len(parts) == 1 and parts[0].segment_dir.endswith("seg_001")
+    units = _units(parts)
+    assert len(units) == 1 and units[0].segment_dir.endswith("seg_001")
 
 
 def test_schema_evolution_across_segments(registered, tmp_path):
@@ -493,7 +513,7 @@ def test_numeric_range_pruning_is_metadata_only(registered, tmp_path, monkeypatc
     reader = DruidSegmentReader(
         df.schema, {"path": str(tmp_path), "num_range": '{"value": [12.0, null]}'}
     )
-    assert [os.path.basename(p.segment_dir) for p in reader.partitions()] == [
+    assert _names(reader.partitions()) == [
         "seg_001", "seg_002",
     ]
 
@@ -501,7 +521,7 @@ def test_numeric_range_pruning_is_metadata_only(registered, tmp_path, monkeypatc
     r2 = DruidSegmentReader(
         df.schema, {"path": str(tmp_path), "num_range": '{"value": [null, 9.5]}'}
     )
-    assert [os.path.basename(p.segment_dir) for p in r2.partitions()] == [
+    assert _names(r2.partitions()) == [
         "seg_000"
     ]
 
@@ -509,7 +529,7 @@ def test_numeric_range_pruning_is_metadata_only(registered, tmp_path, monkeypatc
     r3 = DruidSegmentReader(
         df.schema, {"path": str(tmp_path), "num_range": '{"value": [10.0, 19.5]}'}
     )
-    assert [os.path.basename(p.segment_dir) for p in r3.partitions()] == [
+    assert _names(r3.partitions()) == [
         "seg_001"
     ]
 
@@ -519,7 +539,7 @@ def test_numeric_range_pruning_is_metadata_only(registered, tmp_path, monkeypatc
         df.schema, {"path": str(tmp_path), "num_range": '{"value": [100.0, null]}'}
     )
     parts = r4.partitions()
-    assert len(parts) == 1 and parts[0].empty
+    assert len(parts) == 1 and [u.empty for u in parts[0].units] == [True]
 
 
 def test_dim_bound_filter_index_and_pruning(registered, tmp_path):
@@ -565,7 +585,7 @@ def test_dim_bound_filter_index_and_pruning(registered, tmp_path):
         {"path": str(tmp_path), "dim_bound": '{"site": ["m", null, false, false]}'},
     )
     parts = reader.partitions()
-    assert [os.path.basename(p.segment_dir) for p in parts] == ["seg_001"]
+    assert _names(parts) == ["seg_001"]
 
     # site > 'delta' AND site <= 'oscar': strict lower, inclusive upper
     df = (
@@ -578,7 +598,7 @@ def test_dim_bound_filter_index_and_pruning(registered, tmp_path):
          "dim_bound": '{"site": ["delta", "oscar", true, false]}'},
     )
     parts2 = r2.partitions()
-    assert [os.path.basename(p.segment_dir) for p in parts2] == ["seg_001"]
+    assert _names(parts2) == ["seg_001"]
 
     # end-to-end rows through the DataSource + re-applied filter
     got = (
@@ -738,7 +758,7 @@ def test_numeric_in_list_hull_feeds_zone_maps(registered, tmp_path):
         df.schema, {"path": str(tmp_path), "num_range": '{"v": [9000, 9050]}'}
     )
     parts = r.partitions()
-    assert parts[0].num_filters == (("v", 9000, 9050),)
+    assert _units(parts)[0].num_filters == (("v", 9000, 9050),)
 
 
 def test_prefix_filter_and_is_null_pushdown(registered, tmp_path):
@@ -781,14 +801,14 @@ def test_prefix_filter_and_is_null_pushdown(registered, tmp_path):
         df.schema, {"path": str(tmp_path), "dim_prefix": '{"site": "ba"}'}
     )
     parts = reader.partitions()
-    assert [os.path.basename(p.segment_dir) for p in parts] == ["seg_001"]
+    assert _names(parts) == ["seg_001"]
 
     # the matching prefix plans only seg_000 and selects its rows
     r2 = DruidSegmentReader(
         df.schema, {"path": str(tmp_path), "dim_prefix": '{"site": "ap"}'}
     )
     parts2 = r2.partitions()
-    assert [os.path.basename(p.segment_dir) for p in parts2] == ["seg_000"]
+    assert _names(parts2) == ["seg_000"]
     sites = sorted(
         s for b in r2.read(parts2[0]) for s in b.column(1).to_pylist()
     )
@@ -799,7 +819,7 @@ def test_prefix_filter_and_is_null_pushdown(registered, tmp_path):
         df.schema, {"path": str(tmp_path), "dim_eq": '{"site": [null]}'}
     )
     parts3 = r3.partitions()
-    assert [os.path.basename(p.segment_dir) for p in parts3] == ["seg_000"]
+    assert _names(parts3) == ["seg_000"]
     rows = [s for b in r3.read(parts3[0]) for s in b.column(1).to_pylist()]
     assert rows == [None]
 
@@ -875,7 +895,7 @@ def test_dictionary_predicate_filters(registered, tmp_path):
         df.schema, {"path": str(tmp_path), "dim_contains": '{"site": "err"}'}
     )
     parts = reader.partitions()
-    assert [os.path.basename(p.segment_dir) for p in parts] == ["seg_001"]
+    assert _names(parts) == ["seg_001"]
     vals = [x for b in reader.read(parts[0]) for x in b.column(1).to_pylist()]
     assert vals == ["berry"]
 
@@ -884,7 +904,7 @@ def test_dictionary_predicate_filters(registered, tmp_path):
         df.schema, {"path": str(tmp_path), "dim_icontains": '{"site": "RICOT"}'}
     )
     parts_i = r_i.partitions()
-    assert [os.path.basename(p.segment_dir) for p in parts_i] == ["seg_000"]
+    assert _names(parts_i) == ["seg_000"]
     vals = [x for b in r_i.read(parts_i[0]) for x in b.column(1).to_pylist()]
     assert vals == ["apricot"]
 
@@ -895,7 +915,7 @@ def test_dictionary_predicate_filters(registered, tmp_path):
          "dim_endswith": '{"site": "a"}'},
     )
     parts2 = r2.partitions()
-    assert [os.path.basename(p.segment_dir) for p in parts2] == ["seg_001"]
+    assert _names(parts2) == ["seg_001"]
     vals = [x for b in r2.read(parts2[0]) for x in b.column(1).to_pylist()]
     assert vals == ["banana"]
 
@@ -980,9 +1000,9 @@ def test_split_rows_partitions_within_segment(registered, tmp_path):
     )
     parts = reader.partitions()
     # 5 rows -> windows [0,2),[2,4),[4,5); 2 rows -> unsplit
-    assert [
-        (os.path.basename(p.segment_dir), p.row_range) for p in parts
-    ] == [
+    assert sorted(
+        (os.path.basename(u.segment_dir), u.row_range) for u in _units(parts)
+    ) == [
         ("seg_000", (0, 2)),
         ("seg_000", (2, 4)),
         ("seg_000", (4, 5)),
@@ -1037,9 +1057,7 @@ def test_order_limit_plans_segment_prefix(registered, tmp_path):
             .load()
         )
         reader = DruidSegmentReader(df.schema, options)
-        return sorted(
-            os.path.basename(p.segment_dir) for p in reader.partitions()
-        ), df
+        return sorted(_names(reader.partitions())), df
 
     # asc k=5: seg_a alone covers it; nothing overlaps [0, 10)
     names, df = plan(order_limit=5)
@@ -1282,7 +1300,7 @@ def test_exclude_segments_removes_planning_io(registered, segment_root):
         {"path": segment_root,
          "exclude_segments": _json.dumps(["seg_000"])},
     )
-    assert [os.path.basename(p.segment_dir) for p in r.partitions()] == [
+    assert _names(r.partitions()) == [
         "seg_001"]
     # ordered-limit planning starts from the served list too
     r2 = DruidSegmentReader(
@@ -1290,7 +1308,7 @@ def test_exclude_segments_removes_planning_io(registered, segment_root):
         {"path": segment_root, "order_limit": "5",
          "exclude_segments": _json.dumps(["seg_000"])},
     )
-    assert [os.path.basename(p.segment_dir) for p in r2.partitions()] == [
+    assert _names(r2.partitions()) == [
         "seg_001"]
     # end-to-end rows: seg_000 holds nationkeys 0..11
     kept = (
@@ -1344,3 +1362,166 @@ def test_ship_package_zip_is_atomic_under_concurrent_writers():
         t.join(timeout=120)
         assert not t.is_alive()
     assert checked == [None] * 10
+
+
+HOUR_MS = 3_600_000
+
+
+@pytest.fixture(scope="module")
+def hourly_root(tmp_path_factory):
+    """Twelve PT1H segments of uneven sizes — more units than the four
+    cores the packing tests plan for. Returns (root, rows by dir, the
+    pandas reference of every row)."""
+    import pandas as pd
+
+    root = str(tmp_path_factory.mktemp("hourly_segments"))
+    rows, frames = {}, []
+    for i in range(12):
+        n = 4 + (5 * i) % 13
+        t = pa.table(
+            {
+                "__time": pa.array(
+                    [BASE_MS + i * HOUR_MS + 1000 * j for j in range(n)],
+                    pa.timestamp("ms"),
+                ),
+                "site": pa.array([f"s{(i + j) % 3}" for j in range(n)]),
+                "v": pa.array([100 * i + j for j in range(n)], pa.int64()),
+            }
+        )
+        seg_dir = os.path.join(root, f"seg_{i:03d}")
+        write_segment(t, seg_dir)
+        rows[seg_dir] = n
+        frames.append(t.to_pandas())
+    return root, rows, pd.concat(frames, ignore_index=True)
+
+
+def _schema(root: str):
+    return datasource.DruidSegmentDataSource({"path": root}).schema()
+
+
+def test_packing_balances_units_over_cores(hourly_root, monkeypatch):
+    """12 segments on 4 cores: at most 4 tasks, holding exactly the
+    per-segment (or per-window) units, LPT-balanced by rows and in
+    planned order; a plan with no more units than cores is unchanged."""
+    root, rows, _ = hourly_root
+    schema = _schema(root)
+
+    def weight(u):
+        if u.row_range is not None:
+            return u.row_range[1] - u.row_range[0]
+        return rows[u.segment_dir]
+
+    def key(u):
+        return (u.segment_dir, u.row_range or ())
+
+    for extra in ({}, {"split_rows": "5"}):
+        reader = DruidSegmentReader(schema, {"path": root, **extra})
+        monkeypatch.setattr(datasource, "usable_cores", lambda: 1000)
+        per_unit = reader.partitions()
+        monkeypatch.setattr(datasource, "usable_cores", lambda: 4)
+        tasks = reader.partitions()
+
+        assert all(len(t.units) == 1 for t in per_unit)
+        assert len(per_unit) >= 12
+        assert len(tasks) <= 4
+        assert sorted(_units(tasks), key=key) == sorted(
+            _units(per_unit), key=key
+        )
+        loads = [sum(weight(u) for u in t.units) for t in tasks]
+        largest = max(weight(u) for u in _units(per_unit))
+        assert max(loads) <= min(loads) + largest
+        order = {key(u): i for i, u in enumerate(_units(per_unit))}
+        for t in tasks:
+            idx = [order[key(u)] for u in t.units]
+            assert idx == sorted(idx)
+
+    # three hourly segments survive the interval: one unit per task,
+    # exactly the unpacked plan
+    window = {
+        "path": root,
+        "time_lower_ms": str(BASE_MS + 4 * HOUR_MS),
+        "time_upper_ms": str(BASE_MS + 7 * HOUR_MS - 1),
+    }
+    reader = DruidSegmentReader(schema, window)
+    tasks = reader.partitions()
+    assert [len(t.units) for t in tasks] == [1, 1, 1]
+    assert _names(tasks) == ["seg_004", "seg_005", "seg_006"]
+    monkeypatch.setattr(datasource, "usable_cores", lambda: 1000)
+    assert reader.partitions() == tasks
+
+
+def test_packed_task_reads_each_unit_in_turn(tmp_path, monkeypatch):
+    """One packed task mixing an older segment that lacks a column with
+    a newer one, under a dim_eq filter: one batch per unit, equal to
+    reading each unit alone, with the missing column NULL-filled."""
+    old = pa.table(
+        {
+            "__time": pa.array([BASE_MS + i for i in range(4)],
+                               pa.timestamp("ms")),
+            "site": pa.array(["a", "b", "a", "b"]),
+        }
+    )
+    new = pa.table(
+        {
+            "__time": pa.array([BASE_MS + 100_000 + i for i in range(3)],
+                               pa.timestamp("ms")),
+            "site": pa.array(["a", "c", "c"]),
+            "country": pa.array(["se", "no", "se"]),
+        }
+    )
+    write_segment(old, str(tmp_path / "seg_000"))
+    write_segment(new, str(tmp_path / "seg_001"))
+    monkeypatch.setattr(datasource, "usable_cores", lambda: 1)
+
+    root = str(tmp_path)
+    reader = DruidSegmentReader(
+        _schema(root), {"path": root, "dim_eq": '{"site": "a"}'}
+    )
+    (task,) = reader.partitions()
+    assert _names([task]) == ["seg_000", "seg_001"]
+    got = list(reader.read(task))
+    alone = [
+        b for u in task.units for b in reader.read(datasource.ScanTask((u,)))
+    ]
+    assert len(got) == 2
+    assert all(g.equals(w) for g, w in zip(got, alone))
+    out = pa.Table.from_batches(got).to_pydict()
+    assert out["site"] == ["a", "a", "a"]
+    assert out["country"] == [None, None, "se"]
+
+
+def test_packed_scan_matches_reference_in_at_most_one_task_per_core(
+    registered, hourly_root
+):
+    """End to end: the 12-segment root scans to exactly the written
+    rows, and its scan stage runs no more tasks than usable cores."""
+    root, _, ref = hourly_root
+    sc = registered.sparkContext
+    group = "packed-scan-test"
+    sc.setJobGroup(group, "packed scan")
+    try:
+        got = (
+            registered.read.format("druidsegment")
+            .option("path", root)
+            .load()
+            .select(F.unix_millis("__time").alias("t"), "site", "v")
+            .collect()
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    want = zip(
+        ref["__time"].astype("datetime64[ms]").astype("int64"),
+        ref["site"],
+        ref["v"],
+    )
+    assert sorted(tuple(r) for r in got) == sorted(
+        (int(t), s, int(v)) for t, s, v in want
+    )
+
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+    ]
+    assert tasks and max(tasks) <= usable_cores()
