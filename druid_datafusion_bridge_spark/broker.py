@@ -232,11 +232,6 @@ class DruidBrokerShim(CoordinatorAPIMixin, OverlordAPIMixin):
         # sys.segments reports); maintained by _register_datasource_root
         self._unused: dict[str, frozenset[str]] = {}
         self._retention_epoch = 0
-        # segment dirs are immutable once written (compaction and
-        # ingestion create NEW dirs), so their on-disk size is cached
-        # forever per shim — /druid/v2/candidates over a 100k-segment
-        # datasource must not stat-walk every segment per request
-        self._size_cache: dict[str, int] = {}
         self._server: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
         # JDBC surface: Avatica JSON RPC at /druid/v2/sql/avatica
@@ -290,8 +285,7 @@ class DruidBrokerShim(CoordinatorAPIMixin, OverlordAPIMixin):
 
     def _refresh_sys_segments(self) -> None:
         sys_segments_frame(
-            self.spark, self._segment_roots, self._unused,
-            self._size_cache,
+            self.spark, self._segment_roots, self._unused
         ).createOrReplaceTempView("sys_segments")
 
     def _refresh_sys_tasks(self) -> None:
@@ -361,7 +355,8 @@ class DruidBrokerShim(CoordinatorAPIMixin, OverlordAPIMixin):
         (broker, coordinator, overlord, historical — each answers its
         documented API surface here), with the historical serving every
         visible-timeline segment. curr_size sums served segment bytes
-        (the same size cache sys.segments uses); max_size reports the
+        (the planning manifest's sizes, as in sys.segments); max_size
+        reports the
         deep-storage filesystem's capacity when known (the physical
         ceiling), else 0. The coordinator/overlord rows lead
         (is_leader=1) by construction — there is exactly one of each."""
@@ -974,14 +969,15 @@ class DruidBrokerShim(CoordinatorAPIMixin, OverlordAPIMixin):
         (api-reference.md query-server section): the segments a query
         over these intervals would touch, with their candidate
         servers — what Druid's router uses for segment-aware routing.
-        Served from the planning manifest (no decodes); retention-
-        unused segments are not candidates (they are not served).
-        This single-process engine reports one historical location."""
+        Served from the root's timeline (no decodes): only SERVED
+        segments are candidates, so retention-unused and overshadowed
+        ones never are. This single-process engine reports one
+        historical location."""
         import os
 
         from .cli import _format_millis as iso
         from .retention import interval_ms
-        from .sources.datasource import find_segment_dirs, load_plan_meta
+        from .sources.datasource import SERVED, segment_timeline
 
         # parse intervals FIRST: a malformed interval is the only
         # client error here and surfaces as 400 from the handler
@@ -995,48 +991,23 @@ class DruidBrokerShim(CoordinatorAPIMixin, OverlordAPIMixin):
         with self._lock:
             dropped = self._unused.get(ds) or frozenset()
         try:
-            dirs = find_segment_dirs(root)
+            timeline = segment_timeline(root, dropped)
         except ValueError:
             # root emptied (e.g. all segments killed) — nothing to
             # serve, which is an empty candidate list, not an error
             return []
-        metas = load_plan_meta(root, dirs)
-        from .sources.datasource import overshadowed_segments
-
-        # among USED segments only — unused-ing the newest version
-        # makes the older one a candidate again (same rule the scan
-        # path applies by excluding dropped dirs before overshadow)
-        shadowed = overshadowed_segments({
-            d: m for d, m in metas.items()
-            if os.path.basename(d) not in dropped
-        })
         out = []
-        for d in dirs:
-            base = os.path.basename(d)
-            if base in dropped or base in shadowed:
-                continue
-            m = metas.get(d)
-            if m is None:
-                continue
-            if windows and not any(
+        for s in timeline:
+            m = s.meta
+            if s.state != SERVED or (windows and not any(
                 m["start"] < hi and m["end"] > lo for lo, hi in windows
-            ):
+            )):
                 continue
-            size = self._size_cache.get(d)
-            if size is None:
-                size = 0
-                for b, _, files in os.walk(d):
-                    for fn in files:
-                        try:
-                            size += os.path.getsize(os.path.join(b, fn))
-                        except OSError:
-                            pass
-                self._size_cache[d] = size
             out.append({
                 "interval": f"{iso(m['start'])}/{iso(m['end'])}",
-                "version": base,
+                "version": os.path.basename(s.dir),
                 "partitionNumber": 0,
-                "size": size,
+                "size": m["size"],
                 "locations": [{
                     "name": "historical:local",
                     "host": "localhost",

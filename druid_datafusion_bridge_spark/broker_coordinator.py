@@ -429,8 +429,10 @@ class CoordinatorAPIMixin:
         bare form, the sorted "start/end" interval list for /intervals,
         used-segment ids (or ?full metadata objects, or one segment's
         object by id) for /segments — the console's datasource
-        drill-down calls. Served from the planning manifest plus one
-        stat-walk; no segment decodes."""
+        drill-down calls. Every form reads the root's timeline, so the
+        count, size and intervals describe exactly the used segments
+        /segments lists (Druid's legacy metadata API reports used
+        segments throughout); no segment decodes."""
         root = self._segment_roots.get(name)
         if root is None:
             return None
@@ -445,37 +447,28 @@ class CoordinatorAPIMixin:
             if full:
                 return segs
             return [s["identifier"] for s in segs]
-        import os
-
         from .cli import _format_millis as iso
-        from .sources.datasource import find_segment_dirs, load_plan_meta
+        from .sources.datasource import SERVED, segment_timeline
 
-        dirs = find_segment_dirs(root)
-        metas = load_plan_meta(root, dirs)
+        with self._lock:
+            dropped = self._unused.get(name) or frozenset()
+        used = [
+            s.meta for s in segment_timeline(root, dropped)
+            if s.state == SERVED
+        ]
         if sub.startswith("intervals"):
             return sorted(
-                {
-                    f"{iso(m['start'])}/{iso(m['end'])}"
-                    for m in metas.values()
-                },
+                {f"{iso(m['start'])}/{iso(m['end'])}" for m in used},
                 reverse=True,
             )
-        size = 0
-        for d in dirs:
-            for base, _, files in os.walk(d):
-                for fn in files:
-                    try:
-                        size += os.path.getsize(os.path.join(base, fn))
-                    except OSError:
-                        pass
-        starts = [m["start"] for m in metas.values()]
-        ends = [m["end"] for m in metas.values()]
+        starts = [m["start"] for m in used]
+        ends = [m["end"] for m in used]
         return {
             "name": name,
             "properties": {
                 "segments": {
-                    "count": len(dirs),
-                    "size": size,
+                    "count": len(used),
+                    "size": sum(m["size"] for m in used),
                     "minTime": iso(min(starts)) if starts else None,
                     "maxTime": iso(max(ends)) if ends else None,
                 }
@@ -493,7 +486,7 @@ class CoordinatorAPIMixin:
         import datetime
         import shutil
 
-        from .sources.datasource import find_segment_dirs, load_plan_meta
+        from .sources.datasource import find_segment_dirs, segment_timeline
 
         root = self._segment_roots.get(ds)
         if root is None:
@@ -507,11 +500,9 @@ class CoordinatorAPIMixin:
 
         lo_s, hi_s = interval.split("/")
         lo, hi = ms(lo_s), ms(hi_s)
-        dirs = find_segment_dirs(root)
-        metas = load_plan_meta(root, dirs)
         killed = [
-            d for d in dirs
-            if lo <= metas[d]["start"] and metas[d]["end"] <= hi
+            s.dir for s in segment_timeline(root)
+            if lo <= s.meta["start"] and s.meta["end"] <= hi
         ]
         for d in killed:
             shutil.rmtree(d, ignore_errors=True)
@@ -648,19 +639,17 @@ class CoordinatorAPIMixin:
         import os
 
         from .retention import interval_ms
-        from .sources.datasource import find_segment_dirs, load_plan_meta
+        from .sources.datasource import segment_timeline
 
         root = self._segment_roots.get(ds)
         if root is None:
             raise ValueError(f"unknown datasource {ds!r}")
         if "interval" in body:
             lo, hi = interval_ms(body["interval"])
-            dirs = find_segment_dirs(root)
-            metas = load_plan_meta(root, dirs)
             targets = {
-                os.path.basename(d)
-                for d in dirs
-                if lo <= metas[d]["start"] and metas[d]["end"] <= hi
+                os.path.basename(s.dir)
+                for s in segment_timeline(root)
+                if lo <= s.meta["start"] and s.meta["end"] <= hi
             }
         elif "segmentIds" in body:
             targets = {str(s) for s in body["segmentIds"]}
@@ -710,11 +699,7 @@ class CoordinatorAPIMixin:
         import os
 
         from .cli import _format_millis as iso
-        from .sources.datasource import (
-            find_segment_dirs,
-            load_plan_meta,
-            overshadowed_segments,
-        )
+        from .sources.datasource import OVERSHADOWED, SERVED, segment_timeline
 
         with self._lock:
             roots = dict(self._segment_roots)
@@ -724,46 +709,31 @@ class CoordinatorAPIMixin:
             if datasources and ds not in datasources:
                 continue
             try:
-                dirs = find_segment_dirs(roots[ds])
+                timeline = segment_timeline(
+                    roots[ds], unused.get(ds) or frozenset()
+                )
             except ValueError:
                 continue  # emptied root: nothing used
-            meta = load_plan_meta(roots[ds], dirs)
-            dropped = unused.get(ds) or frozenset()
-            shadowed = overshadowed_segments({
-                d: m for d, m in meta.items()
-                if os.path.basename(d) not in dropped
-            })
-            for d in sorted(dirs):
-                m = meta.get(d)
-                base = os.path.basename(d)
-                if m is None or base in dropped:
+            for s in timeline:
+                listed = s.state == SERVED or (
+                    include_overshadowed and s.state == OVERSHADOWED
+                )
+                if not listed:
                     continue
-                is_sh = base in shadowed
-                if is_sh and not include_overshadowed:
-                    continue
-                size = self._size_cache.get(d)
-                if size is None:
-                    size = 0
-                    for b, _, files in os.walk(d):
-                        for fn in files:
-                            try:
-                                size += os.path.getsize(
-                                    os.path.join(b, fn)
-                                )
-                            except OSError:
-                                pass
-                    self._size_cache[d] = size
+                m = s.meta
                 start, end = iso(m["start"]), iso(m["end"])
                 row = {
-                    "identifier": f"{ds}_{start}_{end}_{base}",
+                    "identifier": (
+                        f"{ds}_{start}_{end}_{os.path.basename(s.dir)}"
+                    ),
                     "dataSource": ds,
                     "interval": f"{start}/{end}",
-                    "size": size,
+                    "size": m["size"],
                     "numRows": int(m["rows"]),
                     "binaryVersion": 9,
                 }
                 if include_overshadowed:
-                    row["overshadowed"] = is_sh
+                    row["overshadowed"] = s.state == OVERSHADOWED
                 out.append(row)
         return out
 

@@ -60,75 +60,43 @@ def sys_segments_frame(
     spark: SparkSession,
     segment_roots: dict[str, str],
     unused: dict[str, frozenset[str]] | None = None,
-    size_cache: dict[str, int] | None = None,
 ) -> DataFrame:
     """Druid's ``sys.segments`` metadata table over segment roots.
 
-    Built from each root's planning manifest (``load_plan_meta`` — one
-    file read per root on the warm path; no segment DECODE ever
-    happens, though the ``size`` column costs one stat-walk per segment
-    dir at registration time — metadata the manifest does not carry).
-    Served columns are the subset of Druid's sys.segments
-    (sql-metadata-tables.md) this architecture has truthful values
-    for: all segments here are published and historical. ``unused``
-    maps datasource -> segment-dir basenames dropped by retention
-    rules or markUnused: those stay published (kill is the permanent
-    delete) but report ``is_available = 0``, like real Druid's
-    unserved segments.
+    Built from each root's timeline (``segment_timeline`` — one
+    manifest read per root on the warm path, no segment decode; sizes
+    are the manifest's). Served columns are the subset of Druid's
+    sys.segments (sql-metadata-tables.md) this architecture has
+    truthful values for: all segments here are published and
+    historical. ``unused`` maps datasource -> segment-dir basenames
+    dropped by retention rules or markUnused: those stay published
+    (kill is the permanent delete) but report ``is_available = 0``,
+    like real Druid's unserved segments; overshadowing is worked out
+    among the used segments, as for every other listing surface.
     """
     import os
 
     from .cli import _format_millis as iso
     from .sources.datasource import (
-        find_segment_dirs,
-        load_plan_meta,
-        overshadowed_segments,
+        OVERSHADOWED,
+        SERVED,
+        segment_timeline,
         segment_version_tag,
     )
 
     rows = []
     for ds, root in segment_roots.items():
-        seg_dirs = find_segment_dirs(root)
-        meta = load_plan_meta(root, seg_dirs)
         dropped = (unused or {}).get(ds) or frozenset()
-        # overshadow is computed among USED segments only (Druid's
-        # timeline considers used segments): marking the newest
-        # version unused makes the older one visible again, and the
-        # scan path (_served_dirs, which excludes dropped dirs first)
-        # must agree with what this view reports
-        shadowed = overshadowed_segments({
-            d: m for d, m in meta.items()
-            if os.path.basename(d) not in dropped
-        })
-        for seg_dir in seg_dirs:
-            m = meta.get(seg_dir)
-            if m is None:
-                continue
-            # segment dirs are immutable once written, so sizes cache
-            # forever — without this, every sys.segments rebuild
-            # stat-walks every file of every segment
-            size = (size_cache or {}).get(seg_dir)
-            if size is None:
-                size = 0
-                for base, _, files in os.walk(seg_dir):
-                    for fn in files:
-                        try:
-                            size += os.path.getsize(
-                                os.path.join(base, fn)
-                            )
-                        except OSError:
-                            pass
-                if size_cache is not None:
-                    size_cache[seg_dir] = size
+        for s in segment_timeline(root, dropped):
+            m = s.meta
             start, end = iso(m["start"]), iso(m["end"])
-            base_name = os.path.basename(seg_dir)
-            is_shadowed = base_name in shadowed
-            available = 0 if (base_name in dropped or is_shadowed) else 1
+            base_name = os.path.basename(s.dir)
+            available = 1 if s.state == SERVED else 0
             rows.append((
                 f"{ds}_{start}_{end}_{base_name}",
-                ds, start, end, size, int(m["rows"]), 1,
+                ds, start, end, m["size"], int(m["rows"]), 1,
                 available,
-                0, 1 if is_shadowed else 0,
+                0, 1 if s.state == OVERSHADOWED else 0,
                 # console-parity columns (sql-metadata-tables.md),
                 # truthful for this single-historical engine: version
                 # is the writer-name's version tag (dir basename for

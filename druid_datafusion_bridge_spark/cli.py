@@ -99,7 +99,7 @@ def cmd_scan(
     """Druid Scan query over a segment ROOT, no Spark and no SQL
     engine: the first (last) ``limit`` rows by __time across every
     segment. Plans the ordered-limit segment prefix from the root's
-    planning manifest (load_plan_meta — one file read when warm), then
+    timeline (segment_timeline — one manifest read when warm), then
     per planned segment finds its top-``limit`` rows by decoding ONLY
     the __time column (argpartition, no full sort) and slice-decodes
     just those rows of the projected columns; candidates merge across
@@ -111,28 +111,25 @@ def cmd_scan(
     import pyarrow as pa
 
     from .sources.datasource import (
-        load_plan_meta,
+        SERVED,
         plan_ordered_limit_prefix,
-        served_segment_dirs,
+        segment_timeline,
     )
     from .sources.segment import TIME_COLUMN
 
     if limit <= 0:
         raise SystemExit("--limit must be a positive row count")
     desc = order == "desc"
-    # served dirs (overshadow-aware): the CLI scan is a QUERY surface
-    # and must agree with the engine on which version of an interval
-    # is visible
-    dirs = served_segment_dirs(path)
-    metas = load_plan_meta(path, dirs)
-    # same prefix + straggler plan the Spark DataSource uses, so the
-    # CLI and the engine cannot disagree on which segments a top-k
-    # scan reads
+    # served segments only (overshadow-aware): the CLI scan is a QUERY
+    # surface and must agree with the engine on which version of an
+    # interval is visible. Same prefix + straggler plan the Spark
+    # DataSource uses, so the CLI and the engine cannot disagree on
+    # which segments a top-k scan reads
     taken = plan_ordered_limit_prefix(
         [
-            (metas[d]["start"], metas[d]["end"], metas[d]["rows"], d)
-            for d in dirs
-            if metas[d]["rows"]
+            (s.meta["start"], s.meta["end"], s.meta["rows"], s.dir)
+            for s in segment_timeline(path)
+            if s.state == SERVED and s.meta["rows"]
         ],
         limit,
         desc,

@@ -186,25 +186,37 @@ def search_dimension(
     """Druid Search query over real segment directories: matching
     dimension VALUES with their row counts — the query type that never
     touches a value chunk. Topology mirrors Druid's
-    historical-fanout + broker-merge: one task per segment evaluates
-    the spec against the sorted dictionary and sums bitmap
-    CARDINALITIES (search_value_counts — O(dictionary + matching
-    bitmaps) per segment, independent of row count), and the only
-    exchange is the final groupBy over (value, n) pairs, bounded by
-    matching-cardinality × segments, not rows. ``kind``/``arg`` name a
-    dictionary-predicate spec (regex/contains/icontains/endswith/like),
-    evaluated by the Arrow kernels in DruidSegment.matching_value_ids.
+    historical-fanout + broker-merge: the root's served segments are
+    LPT-packed by rows into at most one task per usable core (the scan
+    planner's pack_units — each Python task pays a fixed start-up), and
+    each task evaluates the spec per segment against the sorted
+    dictionary and sums bitmap CARDINALITIES (search_value_counts —
+    O(dictionary + matching bitmaps) per segment, independent of row
+    count). The only exchange is the final groupBy over (value, n)
+    pairs, bounded by matching-cardinality × segments, not rows.
+    ``kind``/``arg`` name a dictionary-predicate spec
+    (regex/contains/icontains/endswith/like), evaluated by the Arrow
+    kernels in DruidSegment.matching_value_ids.
 
     Requires an indexed string dimension (every Druid dimension has
     one); a segment without the index raises rather than silently
     scanning — search is defined as an index-plane query."""
-    from ..sources.datasource import served_segment_dirs
+    from ..sources.datasource import (
+        SERVED,
+        pack_units,
+        segment_timeline,
+        usable_cores,
+    )
 
-    # served dirs (overshadow-aware): a search is a query, so only one
-    # version of each interval may count values
-    dirs = served_segment_dirs(root)
-    if not dirs:
-        raise ValueError(f"no segments under {root!r}")
+    # served segments only (overshadow-aware): a search is a query, so
+    # only one version of each interval may count values
+    served = [s for s in segment_timeline(root) if s.state == SERVED]
+    groups = [
+        [served[i].dir for i in group]
+        for group in pack_units(
+            [s.meta["rows"] for s in served], usable_cores()
+        )
+    ]
 
     def scan(batches):
         import pyarrow as pa
@@ -214,30 +226,27 @@ def search_dimension(
         for b in batches:
             vals: list = []
             counts: list = []
-            for seg_dir in b.column(0).to_pylist():
-                seg = DruidSegment(seg_dir)
-                try:
-                    pairs = seg.search_value_counts(column, (kind, arg))
-                finally:
-                    seg.close()
-                if pairs is None:
-                    raise ValueError(
-                        f"search_dimension: {column!r} has no inverted "
-                        f"index in {seg_dir!r}"
-                    )
-                for v, c in pairs:
-                    vals.append(v)
-                    counts.append(c)
+            for gid in b.column(0).to_pylist():
+                for seg_dir in groups[gid]:
+                    seg = DruidSegment(seg_dir)
+                    try:
+                        pairs = seg.search_value_counts(column, (kind, arg))
+                    finally:
+                        seg.close()
+                    if pairs is None:
+                        raise ValueError(
+                            f"search_dimension: {column!r} has no inverted "
+                            f"index in {seg_dir!r}"
+                        )
+                    for v, c in pairs:
+                        vals.append(v)
+                        counts.append(c)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(vals, pa.string()), pa.array(counts, pa.int64())],
                 names=["value", "n"],
             )
 
-    per_seg = (
-        spark.createDataFrame([(d,) for d in sorted(dirs)], "seg_dir string")
-        # one task per segment, Druid's scan granularity (capped so a
-        # 100k-segment table doesn't schedule 100k single-row tasks)
-        .repartition(min(len(dirs), 2048))
-        .mapInArrow(scan, "value string, n bigint")
-    )
-    return per_seg.groupBy("value").agg(F.sum("n").alias("n"))
+    per_group = spark.range(
+        len(groups), numPartitions=len(groups)
+    ).mapInArrow(scan, "value string, n bigint")
+    return per_group.groupBy("value").agg(F.sum("n").alias("n"))

@@ -51,6 +51,7 @@ from __future__ import annotations
 import heapq
 import os
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 
@@ -261,47 +262,79 @@ def overshadowed_segments(metas: dict[str, dict]) -> set[str]:
     Takes a root's planning metadata (``load_plan_meta`` output) and
     returns the segment-dir BASENAMES that must not serve. Pure
     metadata plane — one linear pass, no segment opens; at 100k
-    segments this is a dict group-by in the driver."""
-    groups: dict[tuple[int, int], list[tuple[tuple, str]]] = {}
+    segments this is a dict group-by in the driver. Called only by
+    segment_timeline, which every listing surface reads."""
+    groups: dict[tuple[int, int], list[str]] = {}
     for seg_dir, m in metas.items():
-        name = os.path.basename(seg_dir)
         groups.setdefault((m["start"], m["end"]), []).append(
-            (_segment_version_key(name), name)
+            os.path.basename(seg_dir)
         )
     out: set[str] = set()
-    for members in groups.values():
-        versions = {vk for vk, _ in members}
-        if len(versions) <= 1:
-            continue
-        newest = max(versions)
-        out.update(n for vk, n in members if vk != newest)
+    for names in groups.values():
+        if len(names) < 2:
+            continue  # a lone segment always serves
+        keys = {n: _segment_version_key(n) for n in names}
+        newest = max(keys.values())
+        out.update(n for n, vk in keys.items() if vk != newest)
     return out
+
+
+# Timeline states of a segment dir (segment_timeline).
+SERVED = "served"
+OVERSHADOWED = "overshadowed"
+UNUSED = "unused"
+
+
+class TimelineSegment(NamedTuple):
+    """One segment dir of a root's timeline."""
+
+    dir: str
+    meta: dict  # the segment's load_plan_meta entry
+    state: str  # SERVED, OVERSHADOWED or UNUSED
+
+
+def segment_timeline(
+    root: str, unused: frozenset[str] | set[str] = frozenset()
+) -> list[TimelineSegment]:
+    """Druid's used-segment timeline of a root: every segment dir in
+    discovery order with its planning-manifest entry and its state.
+    ``unused`` names the retention-dropped / markUnused basenames;
+    overshadowing is worked out among the remaining (used) segments
+    only, so unusing the newest version makes the older one serve
+    again. Discovers the root once and reads its whole manifest once.
+
+    The one place the timeline rule lives: the scan planner, the CLI
+    scan/search, the index-plane search, /druid/v2/candidates,
+    sys.segments / sys.servers and the coordinator metadata and
+    datasource endpoints all list segments through it, so they can
+    never disagree on which segments serve. Raises ValueError (from
+    find_segment_dirs) when the root holds no segments."""
+    dirs = find_segment_dirs(root)
+    metas = load_plan_meta(root, dirs)
+    shadowed = overshadowed_segments({
+        d: m for d, m in metas.items()
+        if os.path.basename(d) not in unused
+    })
+
+    def state(name: str) -> str:
+        if name in unused:
+            return UNUSED
+        return OVERSHADOWED if name in shadowed else SERVED
+
+    return [
+        TimelineSegment(d, metas[d], state(os.path.basename(d)))
+        for d in dirs
+    ]
 
 
 def served_segment_dirs(
     root: str, exclude: frozenset[str] | set[str] = frozenset()
 ) -> list[str]:
-    """The segment dirs a QUERY may read: discovery minus ``exclude``
-    (retention-unused basenames) minus version-overshadowed dirs.
-    Shared by the Spark DataSource planner, the no-Spark CLI scan/
-    search paths, and the index-plane search — every serving surface
-    applies the same timeline rule or they disagree on row counts.
-    Single-version roots (one distinct version tag among the names)
-    skip the manifest read entirely — a zero-IO fast path."""
-    dirs = find_segment_dirs(root)
-    if exclude:
-        dirs = [
-            d for d in dirs if os.path.basename(d) not in exclude
-        ]
-    versions = {_segment_version_key(os.path.basename(d)) for d in dirs}
-    if len(versions) > 1:
-        shadowed = overshadowed_segments(load_plan_meta(root, dirs))
-        if shadowed:
-            dirs = [
-                d for d in dirs
-                if os.path.basename(d) not in shadowed
-            ]
-    return dirs
+    """The segment dirs a QUERY may read: the SERVED part of
+    segment_timeline, with ``exclude`` as the unused basenames."""
+    return [
+        s.dir for s in segment_timeline(root, exclude) if s.state == SERVED
+    ]
 
 # Driver-side value-pruning budget: above this many segments, inverted-
 # index emptiness proofs move wholly to the executors (see
@@ -328,13 +361,24 @@ def load_plan_meta(root: str, seg_dirs: list[str]) -> dict[str, dict]:
     refresh rewritten atomically. Read-only roots degrade gracefully:
     the cache write is best-effort, correctness never depends on it.
 
-    Returns {segment_dir -> {"start", "end", "rows", "stats", "cols"}}
-    where stats is {col -> {"min", "max"}} (segment-level only — block
-    zone maps stay in the segment, they are read-time state) and cols
-    is the segment's ordered [[name, arrow-type-key], ...] — r12: the
-    union-schema merge (DruidSegmentDataSource.schema) plans from this
-    too, so relation CREATION stops being O(N) segment opens at
-    catalog scale (manifest v2; v1 caches refresh once)."""
+    ``seg_dirs`` must be the root's WHOLE discovery list
+    (``find_segment_dirs(root)``), never a subset: the manifest is
+    rewritten to exactly these entries, so planning over a subset would
+    drop the others' entries and every later whole-root planning would
+    re-open those segments. Callers filter the result (segment_timeline
+    does this for served/overshadowed/unused).
+
+    Returns {segment_dir -> {"start", "end", "rows", "size", "stats",
+    "cols"}} where size is the segment dir's on-disk bytes, stats is
+    {col -> {"min", "max"}} (segment-level only — block zone maps stay
+    in the segment, they are read-time state) and cols is the
+    segment's ordered [[name, arrow-type-key], ...] — the union-schema
+    merge (DruidSegmentDataSource.schema) plans from this too, so
+    relation CREATION stops being O(N) segment opens at catalog scale.
+    Every field of an entry is rebuilt together when the meta.smoosh
+    identity changes, so a same-named rewrite (e.g. compaction reusing
+    a bucket's name) never serves a stale size (manifest v3; older
+    caches refresh once)."""
     import json as _json
 
     cache_path = os.path.join(root, PLANMETA_NAME)
@@ -342,7 +386,7 @@ def load_plan_meta(root: str, seg_dirs: list[str]) -> dict[str, dict]:
     try:
         with open(cache_path) as f:
             raw = _json.load(f)
-        if isinstance(raw, dict) and raw.get("v") == 2:
+        if isinstance(raw, dict) and raw.get("v") == 3:
             cached = raw.get("segments", {})
     except (OSError, ValueError):
         cached = {}
@@ -375,6 +419,14 @@ def load_plan_meta(root: str, seg_dirs: list[str]) -> dict[str, dict]:
                     "start": seg.metadata.interval_start_ms,
                     "end": seg.metadata.interval_end_ms,
                     "rows": seg.num_rows_meta(),
+                    "size": sum(
+                        os.path.getsize(os.path.join(base, fn))
+                        for base, _, files in os.walk(seg_dir)
+                        for fn in files
+                        # a root that IS one segment dir keeps its
+                        # manifest there; it is not segment bytes
+                        if fn != PLANMETA_NAME
+                    ),
                     "stats": {
                         c: {"min": s["min"], "max": s["max"]}
                         for c, s in seg.column_stats().items()
@@ -391,7 +443,7 @@ def load_plan_meta(root: str, seg_dirs: list[str]) -> dict[str, dict]:
         tmp = f"{cache_path}.tmp.{os.getpid()}"
         try:
             with open(tmp, "w") as f:
-                _json.dump({"v": 2, "segments": fresh}, f)
+                _json.dump({"v": 3, "segments": fresh}, f)
             os.replace(tmp, cache_path)
         except OSError:  # read-only root: plan without the cache
             try:
@@ -484,30 +536,26 @@ def usable_cores() -> int:
     return len(os.sched_getaffinity(0))
 
 
-def pack_units(
-    units: list[SegmentPartition], weights: list[int], n_tasks: int
-) -> list[ScanTask]:
-    """Group ``units`` into at most ``n_tasks`` ScanTasks balanced by
+def pack_units(weights: list[int], n_tasks: int) -> list[list[int]]:
+    """Group unit indices into at most ``n_tasks`` groups balanced by
     ``weights`` (rows): largest unit first, each to the least-loaded
-    task (LPT; ties go to the task with fewer units, so zero-weight
-    units still spread). Units keep their planned order within a task.
-    With no more units than tasks every unit is its own task.
+    group (LPT; ties go to the group with fewer units, so zero-weight
+    units still spread). Indices keep their planned order within a
+    group. With no more units than groups every unit is its own group.
 
     Packing exists because each Spark Python task pays a fixed worker
     start-up that dwarfs reading a small segment; one task per core
-    still keeps every core busy."""
-    if len(units) <= n_tasks:
-        return [ScanTask((u,)) for u in units]
+    still keeps every core busy. Shared by the scan planner (one
+    ScanTask per group) and search_dimension."""
+    if len(weights) <= n_tasks:
+        return [[i] for i in range(len(weights))]
     heap = [(0, 0, b) for b in range(n_tasks)]
     members: list[list[int]] = [[] for _ in range(n_tasks)]
-    for i in sorted(range(len(units)), key=lambda i: -weights[i]):
+    for i in sorted(range(len(weights)), key=lambda i: -weights[i]):
         load, count, b = heapq.heappop(heap)
         members[b].append(i)
         heapq.heappush(heap, (load + weights[i], count + 1, b))
-    return [
-        ScanTask(tuple(units[i] for i in sorted(m)))
-        for m in sorted(members, key=min)
-    ]
+    return [sorted(m) for m in sorted(members, key=min)]
 
 
 class DruidSegmentDataSource(DataSource):
@@ -676,13 +724,13 @@ class DruidSegmentReader(DataSourceReader):
         eq, bound, num = self.opt_eq, self.opt_bound, self.opt_num
         preds = tuple(self.opt_pred)
         # planning metadata (interval / row count / column min-max)
-        # comes from the root's cached manifest — one file read instead
-        # of one segment open per dir (see load_plan_meta). Loaded for
-        # the whole root like schema(): a manifest rewritten for the
-        # served subset would drop the excluded segments' entries.
-        all_dirs = find_segment_dirs(self.path)
-        metas = load_plan_meta(self.path, all_dirs)
-        dirs = self._served_dirs()
+        # comes from the root's timeline — one manifest read instead of
+        # one segment open per dir. Only SERVED segments get units, so
+        # a retention-unused (exclude_segments) or version-overshadowed
+        # segment can never contribute rows through any planning path.
+        timeline = segment_timeline(self.path, self.opt_exclude)
+        metas = {s.dir: s.meta for s in timeline}
+        dirs = [s.dir for s in timeline if s.state == SERVED]
         if (
             self.opt_order_limit is not None
             and not eq
@@ -696,22 +744,19 @@ class DruidSegmentReader(DataSourceReader):
                 dirs, metas, lower, upper, eq, bound, preds, num
             )
         if not units:
-            return [ScanTask((SegmentPartition(all_dirs[0], empty=True),))]
+            return [
+                ScanTask((SegmentPartition(timeline[0].dir, empty=True),))
+            ]
         weights = [
             u.row_range[1] - u.row_range[0]
             if u.row_range is not None
             else metas[u.segment_dir]["rows"]
             for u in units
         ]
-        return pack_units(units, weights, usable_cores())
-
-    def _served_dirs(self) -> list[str]:
-        """Segment dirs minus retention-dropped ones (exclude_segments)
-        and version-OVERSHADOWED ones — every partition planner starts
-        from this list so an unused or overshadowed segment can never
-        contribute rows through any planning path (shared rule:
-        served_segment_dirs)."""
-        return served_segment_dirs(self.path, self.opt_exclude)
+        return [
+            ScanTask(tuple(units[i] for i in group))
+            for group in pack_units(weights, usable_cores())
+        ]
 
     def _ordered_limit_partitions(
         self, dirs: list[str], metas: dict, lower=None, upper=None

@@ -2413,3 +2413,104 @@ def test_sql_bloom_and_ipv6_names(shim):
                  "IPV6_MATCH('::1', '::1/128') AS c, "
                  "IPV6_MATCH('junk', '::/0') AS d"})
     assert rows == [{"a": True, "b": False, "c": True, "d": False}]
+
+
+def _dir_bytes(seg_dir) -> int:
+    """On-disk bytes of a segment dir."""
+    import os
+
+    return sum(
+        os.path.getsize(os.path.join(seg_dir, fn))
+        for fn in os.listdir(seg_dir)
+    )
+
+
+def _day_segment(root, day: int, vals, version: str = "") -> str:
+    """Write one segment of ``vals`` on 2024-01-(1 + day) under the
+    writer's ``segment_{bucket}_{shard}[_{version}]`` name."""
+    import pyarrow as pa
+
+    from druid_datafusion_bridge_spark.sources import write_segment
+
+    start = 1704067200000 + day * 86_400_000
+    name = f"segment_{start}_0000" + (f"_{version}" if version else "")
+    write_segment(
+        pa.table({
+            "__time": pa.array(
+                [start + i for i in range(len(vals))], pa.timestamp("ms")
+            ),
+            "v": pa.array(vals, pa.int64()),
+        }),
+        str(root / name),
+    )
+    return name
+
+
+def test_segment_sizes_follow_same_name_compaction_rewrite(spark, tmp_path):
+    """A P1D -> P1M auto-compaction writes the month segment under the
+    first day's name (segment_1704067200000_0000). The segment size is
+    a planning-manifest field rebuilt with the entry, so sys.segments,
+    /metadata/segments and /datasources/{ds} all report the rewritten
+    segment's on-disk bytes, not the small day-1 segment's."""
+    deep = tmp_path / "deep"
+    root = deep / "sz"
+    root.mkdir(parents=True)
+    _day_segment(root, 0, [1])  # small day 1
+    for day in range(1, 4):
+        _day_segment(root, day, list(range(day * 500, day * 500 + 400)))
+    s = DruidBrokerShim(
+        spark, {}, segment_roots={"sz": str(root)}, deep_storage=str(deep)
+    )
+    port = s.start()
+    base = f"http://127.0.0.1:{port}"
+    meta_url = (
+        base + "/druid/coordinator/v1/metadata/segments?datasources=sz"
+    )
+    sql = {"query": "SELECT size FROM sys.segments WHERE datasource = 'sz'"}
+    try:
+        # every size surface has answered once before the rewrite
+        assert len(_post(base + "/druid/v2/sql", sql)) == 4
+        assert len(_get(meta_url)) == 4
+        _post(base + "/druid/coordinator/v1/config/compaction", {
+            "dataSource": "sz", "segmentGranularity": "month"})
+        assert s.run_auto_compaction() == {"sz": 1}
+        on_disk = _dir_bytes(root / "segment_1704067200000_0000")
+        assert _post(base + "/druid/v2/sql", sql) == [{"size": on_disk}]
+        assert [m["size"] for m in _get(meta_url)] == [on_disk]
+        summary = _get(base + "/druid/coordinator/v1/datasources/sz")
+        assert summary["properties"]["segments"]["size"] == on_disk
+    finally:
+        s.stop()
+
+
+def test_coordinator_datasource_summary_counts_used_segments(
+    spark, tmp_path
+):
+    """The bare /datasources/{ds} form and /intervals read the same
+    timeline as /segments: an overshadowed version and a markUnused
+    segment are counted, sized and listed by none of them."""
+    deep = tmp_path / "deep"
+    root = deep / "cs"
+    root.mkdir(parents=True)
+    _day_segment(root, 0, [1, 2], "b0")
+    _day_segment(root, 0, [10, 20], "b1")  # overshadows day 1's b0
+    _day_segment(root, 1, [3])
+    unused = _day_segment(root, 2, [4])
+    s = DruidBrokerShim(
+        spark, {}, segment_roots={"cs": str(root)}, deep_storage=str(deep)
+    )
+    port = s.start()
+    coord = f"http://127.0.0.1:{port}/druid/coordinator/v1/datasources/cs"
+    try:
+        _post(coord + "/markUnused", {"segmentIds": [unused]})
+        full = _get(coord + "/segments?full")
+        assert len(full) == 2
+        seg = _get(coord)["properties"]["segments"]
+        assert seg["count"] == len(_get(coord + "/segments")) == 2
+        assert seg["size"] == sum(f["size"] for f in full)
+        assert _get(coord + "/intervals") == sorted(
+            (f["interval"] for f in full), reverse=True
+        )
+        assert seg["maxTime"] == "2024-01-02T00:00:00.001Z"
+    finally:
+        s.stop()

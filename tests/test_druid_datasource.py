@@ -37,6 +37,14 @@ def _nation_with_time() -> pa.Table:
     return t.append_column("__time", ms)
 
 
+def _dir_bytes(seg_dir: str) -> int:
+    """On-disk bytes of a segment dir."""
+    return sum(
+        os.path.getsize(os.path.join(seg_dir, fn))
+        for fn in os.listdir(seg_dir)
+    )
+
+
 def _units(parts) -> list:
     """The planned units of packed scan tasks, task by task."""
     return [u for task in parts for u in task.units]
@@ -967,6 +975,56 @@ def test_like_filter_and_search_query(registered, tmp_path):
     assert {(r.value, r.n) for r in rows} == {("red", 3), ("blue", 2)}
 
 
+def test_search_packs_segments_into_at_most_one_task_per_core(
+    registered, tmp_path, monkeypatch
+):
+    """search_dimension plans through the root's timeline and the scan
+    planner's packer: with more served segments than cores, the search
+    stage runs no more tasks than usable cores, and the merged counts
+    equal the per-segment search of test_like_filter_and_search_query
+    (same six rows, here one segment each)."""
+    from druid_datafusion_bridge_spark.model.druid_model import search_dimension
+
+    monkeypatch.setattr(datasource, "usable_cores", lambda: 2)
+    sites = ["app", "apple", "apricot", "banana", "berry", "app"]
+    tags = [["red", "blue"], ["red"], [], None, ["blue"], ["red"]]
+    for i in range(len(sites)):
+        write_segment(
+            pa.table({
+                "__time": pa.array([1704067200000 + i], pa.timestamp("ms")),
+                "site": pa.array([sites[i]]),
+                "tags": pa.array([tags[i]], pa.list_(pa.string())),
+            }),
+            str(tmp_path / f"seg_{i:03d}"),
+        )
+
+    sc = registered.sparkContext
+    group = "packed-search-test"
+    sc.setJobGroup(group, "packed search")
+    try:
+        rows = search_dimension(
+            registered, str(tmp_path), "site", "like", "%p%"
+        ).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert {(r.value, r.n) for r in rows} == {
+        ("app", 2), ("apple", 1), ("apricot", 1)
+    }
+    tracker = sc.statusTracker()
+    stages = sorted(
+        stage
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+    )
+    # the first stage is the per-segment search (the second merges)
+    assert tracker.getStageInfo(stages[0]).numTasks == 2
+
+    rows = search_dimension(
+        registered, str(tmp_path), "tags", "regex", "^(red|blue)$"
+    ).collect()
+    assert {(r.value, r.n) for r in rows} == {("red", 3), ("blue", 2)}
+
+
 def test_split_rows_partitions_within_segment(registered, tmp_path):
     """split_rows: a big segment fans out into [start, stop) windows —
     partition count, lossless union, and composition with index row
@@ -1150,11 +1208,13 @@ def test_plan_meta_cache_amortizes_segment_opens(registered, tmp_path, monkeypat
     assert again == metas
 
     # rewrite seg_b with more rows: only IT re-opens, entry refreshes
+    old_size = metas[dirs[1]]["size"]
     seg(100, "seg_b", n=7)
     opens.clear()
     metas = load_plan_meta(str(tmp_path), dirs)
     assert opens == ["seg_b"]
     assert metas[dirs[1]]["rows"] == 7
+    assert old_size != metas[dirs[1]]["size"] == _dir_bytes(dirs[1])
 
     # remove a segment: cache reconciles without opening the survivor
     import shutil
@@ -1188,6 +1248,78 @@ def test_plan_meta_cache_amortizes_segment_opens(registered, tmp_path, monkeypat
     )
     assert df2.schema.fieldNames() == ["__time", "v"]
     assert opens == []
+
+
+def test_partial_planning_keeps_whole_root_manifest(
+    registered, tmp_path, monkeypatch, capsys
+):
+    """The scan planner with exclude_segments and the CLI scan both
+    plan a multi-version root from its whole timeline: a second pass
+    opens no segment in the driver beyond the ones the CLI decodes,
+    and _planmeta.json keeps an entry for every segment dir — an
+    excluded or overshadowed segment's entry is never dropped, which
+    would re-open it on every later planning pass."""
+    import json as _json
+
+    from druid_datafusion_bridge_spark.cli import cmd_scan
+    from druid_datafusion_bridge_spark.sources import segment as segmod
+    from druid_datafusion_bridge_spark.sources.datasource import PLANMETA_NAME
+
+    day = 86_400_000
+
+    def seg(name, lo, vals):
+        write_segment(
+            pa.table({
+                "__time": pa.array(
+                    [1704067200000 + lo + i for i in range(len(vals))],
+                    pa.timestamp("ms"),
+                ),
+                "v": pa.array(vals),
+            }),
+            str(tmp_path / name),
+        )
+
+    old = "segment_1704067200000_0000_b0"
+    new = "segment_1704067200000_0000_b1"  # overshadows `old`
+    other = "segment_1704153600000_0000_b0"
+    seg(old, 0, [1.0, 2.0])
+    seg(new, 0, [10.0, 20.0])
+    seg(other, day, [3.0])
+    root = str(tmp_path)
+
+    def manifest() -> list[str]:
+        with open(tmp_path / PLANMETA_NAME) as f:
+            return sorted(_json.load(f)["segments"])
+
+    opens = []
+    orig_init = segmod.DruidSegment.__init__
+
+    def counting_init(self, path, *a, **k):
+        opens.append(os.path.basename(path))
+        return orig_init(self, path, *a, **k)
+
+    schema = registered.read.format("druidsegment").option(
+        "path", root
+    ).load().schema
+    monkeypatch.setattr(segmod.DruidSegment, "__init__", counting_init)
+
+    reader = DruidSegmentReader(
+        schema, {"path": root, "exclude_segments": _json.dumps([other])}
+    )
+    for _ in range(2):
+        opens.clear()
+        assert _names(reader.partitions()) == [new]
+        assert manifest() == sorted([old, new, other])
+    assert opens == []  # second pass: planned from the manifest alone
+
+    for _ in range(2):
+        opens.clear()
+        cmd_scan(root, None, 10, "asc", "json")
+        rows = capsys.readouterr().out.strip().splitlines()
+        assert sorted(_json.loads(r)["v"] for r in rows) == [3.0, 10.0, 20.0]
+        assert manifest() == sorted([old, new, other])
+    # second pass opens only the served segments it decodes
+    assert sorted(opens) == sorted([new, other])
 
 
 def test_stale_plan_manifest_never_prunes_wrong(registered, tmp_path):
