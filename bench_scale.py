@@ -235,6 +235,11 @@ def main() -> None:
         t0 = time.perf_counter()
         write_druid_segments(ev_seg, seg_root, granularity="P1D").collect()
         timings["segment_write"] = round(time.perf_counter() - t0, 3)
+        # The 3-hour event stream lands in ONE P1D segment; the planner
+        # cuts it into up to one row window per core
+        # (DruidSegmentReader.partitions), so this rollup times the
+        # intra-segment parallelism the reference (one partition per
+        # table, execution_plan.rs:42) leaves on the table.
         t0 = time.perf_counter()
         (
             spark.read.format("druidsegment")
@@ -247,26 +252,6 @@ def main() -> None:
             .save()
         )
         timings["segment_scan_rollup"] = round(time.perf_counter() - t0, 3)
-        # Same rollup with split_rows: the 3-hour event stream lands in
-        # ONE P1D segment, so the scan above runs on 1 of 32 cores —
-        # exactly the big-segment shape split scans exist for. 32k-row
-        # windows fan the segment into ~31 partitions; the delta is the
-        # intra-segment parallelism the reference (one partition per
-        # table, execution_plan.rs:42) and Druid (one segment per
-        # processing thread) both leave on the table.
-        t0 = time.perf_counter()
-        (
-            spark.read.format("druidsegment")
-            .option("path", seg_root)
-            .option("split_rows", "32768")
-            .load()
-            .groupBy("event_type")
-            .agg(F.count("*"), F.sum("value"))
-            .write.mode("overwrite")
-            .format("noop")
-            .save()
-        )
-        timings["segment_scan_rollup_split"] = round(time.perf_counter() - t0, 3)
 
         # Planning-metadata amortization at catalog scale: a PT1M
         # granularity re-bucket of the same stream yields ~100 segments;

@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 from .. import query  # noqa: F401  (re-export for submodules)
 
 BASE_MS = 1_700_000_000_000
-_REGISTERED_KEY = "_ddbs_druidsegment_registered"
 
 
 def _complete_marker(root: str) -> str:
@@ -91,15 +90,12 @@ def _segment_root(sf_dir: str, name: str = "nation") -> str:
 
 
 def _ensure_registered(spark: SparkSession) -> None:
-    """Register the druidsegment DataSource once per session (guarded by
-    a session attribute so repeated query calls skip the package
-    re-ship). One definition for the six segment-backed query families
-    — the registration protocol changes in ONE place."""
+    """Register the druidsegment DataSource (once per session —
+    register_druid_datasource guards itself). One definition for the
+    six segment-backed query families."""
     from ...sources import register_druid_datasource
 
-    if not getattr(spark, _REGISTERED_KEY, False):
-        register_druid_datasource(spark)
-        setattr(spark, _REGISTERED_KEY, True)
+    register_druid_datasource(spark)
 
 
 def _ensure_segments(spark: SparkSession, sf_dir: str) -> str:

@@ -41,8 +41,8 @@ def s1l_druid_segment_regex_filter(spark: SparkSession, sf_dir: str) -> DataFram
     evaluated ONCE PER DISTINCT VALUE against each segment's sorted
     dictionary — O(cardinality), never O(rows) — and the surviving
     ids' row bitmaps union into the row selection that slices value
-    decode to matching blocks (zero-match segments are pruned at
-    planning, matched ones skip non-candidate block decompression).
+    decode to matching blocks (zero-match segments read as an empty
+    batch, matched ones skip non-candidate block decompression).
     Completes the filter-family ladder s1d (=), s1f (IN), s1i (bound),
     s1k (prefix) with the predicate form the sorted dictionary canNOT
     bisect; the reference parses these dictionaries (string.rs:27-44)
@@ -181,21 +181,14 @@ def dm_search_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s1o_druid_segment_split_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split scan: split_rows=5 fans the two nation segments into ~6
-    row windows (planning reads the row count from the manifest),
-    packed into at most one partition per usable core, each window
-    decoding just its own blocks — scan parallelism beyond segment
-    count, which Druid itself (one segment per processing thread) and
-    the reference (ONE partition for the whole table,
-    execution_plan.rs:42) both lack. The oracle proves
-    the windows tile the table exactly: no row lost, none duplicated."""
+    """Row-window planning on a small root: the planner cuts a segment
+    into row windows only when it holds at least twice
+    max(ceil(planned rows / cores), MIN_WINDOW_ROWS) rows, so the two
+    nation segments (25 rows) plan as one unit each, never split. The
+    oracle proves the scan tiles the table exactly: no row lost, none
+    duplicated."""
     root = _ensure_segments(spark, sf_dir)
-    df = (
-        spark.read.format("druidsegment")
-        .option("path", root)
-        .option("split_rows", "5")
-        .load()
-    )
+    df = spark.read.format("druidsegment").option("path", root).load()
     return (
         df.groupBy("n_regionkey")
         .agg(F.count("*").alias("n"), F.sum("n_nationkey").alias("sum_key"))

@@ -353,8 +353,9 @@ def s1i_druid_segment_dim_bound_filter(spark: SparkSession, sf_dir: str) -> Data
     bitmaps — Druid's BoundFilter, the range sibling of s1d/s1f's
     selector/IN path, on index structures the reference parses but
     never applies (bitmap.rs:16-40). Strictness is exact in the index
-    (no loose hull); a segment whose dictionary has no id in range is
-    pruned planner-side. Spark re-applies the predicate row-level, so
+    (no loose hull); a segment whose dictionary has no id in range
+    reads as an empty batch without a value decode. Spark re-applies
+    the predicate row-level, so
     the index stays acceleration-only."""
     root = _ensure_segments(spark, sf_dir)
     df = (

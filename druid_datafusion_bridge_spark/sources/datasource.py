@@ -13,13 +13,14 @@ with three upgrades over the reference's scan:
 
 - scan tasks sized to the cores, not to the table: the planner builds
   one unit per served segment (the reference advertises exactly one
-  partition for the whole table, execution_plan.rs:42), `split_rows`
-  fans a big segment out into row-window units on top (sliced decode
-  keeps each window O(its blocks)), and the units are then packed into
-  at most one InputPartition per usable core. Every Python task pays a
-  fixed worker start-up (~250 ms on Spark 4.1 / Python 3.11, mostly
-  re-reading the directories of the zips on the worker path), so a
-  root of N small segments costs that once per core instead of N times;
+  partition for the whole table, execution_plan.rs:42), cuts a segment
+  holding at least twice the per-core share of the planned rows into
+  equal row windows (sliced decode keeps each window O(its blocks)),
+  and packs the units into at most one InputPartition per usable core.
+  Every Python task pays a fixed worker start-up (~250 ms on Spark 4.1
+  / Python 3.11, mostly re-reading the directories of the zips on the
+  worker path), so a root of N small segments costs that once per core
+  instead of N times;
 - projection honored at decode time via the `columns` option (the Python
   DataSource API does not push projections, so it's an explicit option —
   SURVEY.md §4.1);
@@ -35,19 +36,23 @@ intervals, dim equality/IN (bitmap union), lexicographic bounds +
 prefixes (sorted-dictionary bisect), numeric ranges (segment min/max +
 per-block zone maps), and dictionary predicates regex/contains/
 icontains/endswith/like (one pass over the value dictionary — Druid's
-RegexDimFilter / search / LikeDimFilter evaluation model).
+RegexDimFilter / search / LikeDimFilter evaluation model). The
+dimension filters are proven empty or turned into row sets on the
+executor, inside read(), against each segment's own index — never at
+planning.
 
 Scale posture: partitions() plans from the root's planning manifest
-(one _planmeta.json read; a segment whose entry is stale costs its
-meta.smoosh + index.drd + column JSON headers, a few KB); column bytes
-are decoded on executors inside read(), which yields Arrow
-RecordBatches (zero row objects), one per unit. For 100 TB = ~100k
-segments this planning cost is a metadata listing, and decode
-parallelism is core-count wide.
+and the core count alone (one _planmeta.json read; a segment whose
+entry is stale costs its meta.smoosh + index.drd + column JSON
+headers, a few KB); column bytes are decoded on executors inside
+read(), which yields Arrow RecordBatches (zero row objects), one per
+unit. For 100 TB = ~100k segments this planning cost is a metadata
+listing, and decode parallelism is core-count wide.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import heapq
 import os
 from dataclasses import dataclass
@@ -127,14 +132,19 @@ def ship_package(spark) -> None:
 
 
 def register_druid_datasource(spark) -> None:
-    """Register the 'druidsegment' format (ships the package first).
+    """Register the 'druidsegment' format (ships the package first),
+    once per session: a session that already has it keeps its
+    registration, so callers may call this on every (re)registration
+    of a root without Spark replacing the data source each time.
 
     Pruning is OPTION-driven (`time_lower_ms`/`time_upper_ms` for
     interval pruning, `dim_eq` JSON for bitmap-index equality, ...) —
     options are part of the relation identity, so Spark's plan caching
     keys them correctly and registering touches no session config."""
     ship_package(spark)
-    spark.dataSource.register(DruidSegmentDataSource)
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(DruidSegmentDataSource.name()):
+        spark.dataSource.register(DruidSegmentDataSource)
 
 
 _SPARK_TYPES = {
@@ -336,19 +346,12 @@ def served_segment_dirs(
         s.dir for s in segment_timeline(root, exclude) if s.state == SERVED
     ]
 
-# Driver-side value-pruning budget: above this many segments, inverted-
-# index emptiness proofs move wholly to the executors (see
-# _filtered_partitions), where an empty segment costs one no-op unit
-# inside a packed task. 64 keeps small/medium roots snappy while a
-# catalog-scale root never serializes 100k index opens in the driver.
-VALUE_PRUNE_MAX_SEGMENTS = 64
-
 
 def load_plan_meta(root: str, seg_dirs: list[str]) -> dict[str, dict]:
     """Per-segment planning metadata, amortized to ONE file read.
 
     Every planning decision (interval pruning, metric min/max pruning,
-    split sizing, ordered-limit prefixes) needs only (interval, row
+    row windows, ordered-limit prefixes) needs only (interval, row
     count, column min/max) per segment — but reading them from the
     segments means O(N) directory opens in the driver per query, the
     broker-without-a-metadata-store anti-pattern (Druid brokers plan
@@ -516,8 +519,9 @@ class SegmentPartition:
     # dictionary predicates (regex/contains/…) answered by one
     # dictionary pass + bitmap union at read time: (col, kind, arg)
     pred_filters: tuple = ()
-    # [start, stop) row window for split scans (several units per big
-    # segment); None = the whole segment
+    # [start, stop) row window when the planner cut a big segment into
+    # several units (DruidSegmentReader.partitions); None = the whole
+    # segment
     row_range: tuple | None = None
 
 
@@ -527,6 +531,16 @@ class ScanTask(InputPartition):
     order, one Arrow batch each."""
 
     units: tuple[SegmentPartition, ...]
+
+
+# Smallest row window the planner cuts a segment into. Measured on a
+# 4-core host (single-segment rollup over 4 columns, noop sink, 6
+# interleaved process pairs, medians): one window per core lost at 125k
+# rows (0.99 -> 1.07 s) and 3 windows of 83k rows still lost at 250k
+# (1.05 -> 1.10 s), while 4 windows won at 1M rows (1.29 -> 1.18 s) and
+# 4M rows (2.30 -> 1.64 s). So no window is smaller than 131,072 rows
+# and only a segment of 2 * MIN_WINDOW_ROWS rows or more is ever cut.
+MIN_WINDOW_ROWS = 1 << 17
 
 
 def usable_cores() -> int:
@@ -641,16 +655,6 @@ class DruidSegmentReader(DataSourceReader):
         self.opt_num: dict[str, tuple] = {
             c: (b[0], b[1]) for c, b in raw_num.items()
         }
-        # lexicographic dimension bounds (Druid BoundFilter): col ->
-        # [lower, upper, lower_strict, upper_strict]; answered by the
-        # sorted dictionary + inverted index (segment skipped when the
-        # bound matches nothing, rows index-selected otherwise)
-        # split scans: target rows per partition. A segment with more
-        # rows fans out into ceil(n/split) [start, stop) windows, each
-        # its own InputPartition — scan parallelism beyond segment
-        # count (Druid itself processes one segment per thread; a
-        # 4-big-segment table on 32 cores leaves 28 idle without this).
-        # Sliced decode keeps each window O(its blocks).
         # retention: segment-dir basenames this relation must NOT serve
         # (coordinator drop rules / markUnused — retention.py). Planning
         # drops them before any metadata read; unlike the acceleration
@@ -661,11 +665,6 @@ class DruidSegmentReader(DataSourceReader):
             if options.get("exclude_segments")
             else frozenset()
         )
-        self.opt_split = (
-            int(options.get("split_rows")) if options.get("split_rows") else None
-        )
-        if self.opt_split is not None and self.opt_split <= 0:
-            raise ValueError("split_rows must be a positive row count")
         # time-ordered limit (Druid Scan "order": asc/desc + "limit"):
         # plan only the earliest (latest) segments whose HEADER row
         # counts cover k rows, plus any interval-overlapping stragglers
@@ -674,8 +673,7 @@ class DruidSegmentReader(DataSourceReader):
         # every one of their rows sorts strictly after k already-taken
         # rows; Spark's own orderBy+limit on top does the exact cut.
         # Engages only when no other filter option is set (a
-        # row-dropping filter would invalidate the header-count cover);
-        # takes precedence over split_rows.
+        # row-dropping filter would invalidate the header-count cover).
         self.opt_order_limit = (
             int(options.get("order_limit")) if options.get("order_limit") else None
         )
@@ -684,6 +682,10 @@ class DruidSegmentReader(DataSourceReader):
         self.opt_order_desc = (
             str(options.get("order_desc", "false")).lower() == "true"
         )
+        # lexicographic dimension bounds (Druid BoundFilter): col ->
+        # [lower, upper, lower_strict, upper_strict]; answered by the
+        # sorted dictionary + inverted index at read time (a unit whose
+        # bound matches nothing yields an empty batch)
         raw_bound = (
             _json.loads(options.get("dim_bound")) if options.get("dim_bound") else {}
         )
@@ -717,9 +719,23 @@ class DruidSegmentReader(DataSourceReader):
             self.opt_pred += [(c, kind, a) for c, a in raw.items()]
 
     def partitions(self) -> list[ScanTask]:
-        """Plan one unit per served segment (or split_rows window) with
-        its filters, then pack the units into at most one ScanTask per
-        usable core, balanced by rows (pack_units)."""
+        """Plan one unit per served segment with its filters, cut big
+        segments into row windows, then pack the units into at most one
+        ScanTask per usable core, balanced by rows (pack_units).
+
+        A pure function of the root's planning manifest, the options
+        and usable_cores(): no segment is opened on a warm manifest.
+        Dimension filters travel with the units and are answered by
+        each segment's index in read().
+
+        Windows: with ``cap = max(planned rows // cores,
+        MIN_WINDOW_ROWS)``, a unit of ``rows`` rows becomes
+        ``rows // cap`` equal [start, stop) windows when that is at
+        least 2, so no window holds fewer than ``cap`` rows and a
+        segment under ``2 * cap`` rows stays whole. The floor gives a
+        lone segment of ``cores * MIN_WINDOW_ROWS`` rows or more exactly
+        one window per core (a ceiling would leave a core idle whenever
+        the rows do not divide)."""
         lower, upper = self.opt_lower_ms, self.opt_upper_ms
         eq, bound, num = self.opt_eq, self.opt_bound, self.opt_num
         preds = tuple(self.opt_pred)
@@ -747,15 +763,26 @@ class DruidSegmentReader(DataSourceReader):
             return [
                 ScanTask((SegmentPartition(timeline[0].dir, empty=True),))
             ]
-        weights = [
-            u.row_range[1] - u.row_range[0]
-            if u.row_range is not None
-            else metas[u.segment_dir]["rows"]
-            for u in units
-        ]
+        cores = usable_cores()
+        rows = [metas[u.segment_dir]["rows"] for u in units]
+        cap = max(sum(rows) // cores, MIN_WINDOW_ROWS)
+        windows: list[SegmentPartition] = []
+        weights: list[int] = []
+        for unit, n in zip(units, rows):
+            k = n // cap
+            if k < 2:
+                windows.append(unit)
+                weights.append(n)
+                continue
+            cuts = [n * i // k for i in range(k + 1)]
+            for start, stop in zip(cuts, cuts[1:]):
+                windows.append(
+                    dataclasses.replace(unit, row_range=(start, stop))
+                )
+                weights.append(stop - start)
         return [
-            ScanTask(tuple(units[i] for i in group))
-            for group in pack_units(weights, usable_cores())
+            ScanTask(tuple(windows[i] for i in group))
+            for group in pack_units(weights, cores)
         ]
 
     def _ordered_limit_partitions(
@@ -811,20 +838,27 @@ class DruidSegmentReader(DataSourceReader):
         preds: tuple,
         num: dict,
     ) -> list[SegmentPartition]:
+        """One unit per served segment that survives the manifest-served
+        interval and numeric min/max checks, carrying every filter for
+        read() to answer from the segment's index and zone maps."""
+        filters = dict(
+            eq_filters=tuple(eq.items()),
+            bound_filters=tuple(
+                (c, lo, hi, ls, us) for c, (lo, hi, ls, us) in bound.items()
+            ),
+            pred_filters=preds,
+            num_filters=tuple((c, lo, hi) for c, (lo, hi) in num.items())
+            + (
+                # __time zone maps: the interval that prunes whole
+                # segments below also skips blocks WITHIN the survivors
+                # ([lower, upper] loose bounds — superset rows, Spark
+                # re-applies the filter)
+                ((TIME_COLUMN, lower, upper),)
+                if (lower is not None or upper is not None)
+                else ()
+            ),
+        )
         parts: list[SegmentPartition] = []
-        # driver-side value pruning (inverted-index emptiness proofs)
-        # opens each surviving segment and, for dictionary predicates,
-        # decodes its dictionary — unlike interval/min-max pruning it
-        # cannot be served from the manifest (emptiness depends on the
-        # filter). Worth it while the per-query win (a skipped segment
-        # open) exceeds the planning cost; past this many segments skip
-        # it and let executors do the same index check inside read(),
-        # where it parallelizes — correctness is identical either way
-        # (read() re-derives the row set; an empty segment just costs a
-        # no-op unit inside a packed task).
-        value_prune = (eq or bound or preds) and len(
-            dirs
-        ) <= VALUE_PRUNE_MAX_SEGMENTS
         for seg_dir in dirs:
             if lower is not None or upper is not None or num:
                 meta = metas[seg_dir]
@@ -843,90 +877,18 @@ class DruidSegmentReader(DataSourceReader):
                     for c, (lo, hi) in num.items()
                 ):
                     continue
-            if value_prune and self._value_pruned(seg_dir, eq, bound, preds):
-                continue
-            # split scans: fan one big segment out into row windows
-            ranges: list = [None]
-            if self.opt_split is not None:
-                n_rows = metas[seg_dir]["rows"]
-                if n_rows > self.opt_split:
-                    ranges = [
-                        (s, min(n_rows, s + self.opt_split))
-                        for s in range(0, n_rows, self.opt_split)
-                    ]
-            for rng in ranges:
-                parts.append(
-                    SegmentPartition(
-                        seg_dir,
-                        eq_filters=tuple(eq.items()),
-                        bound_filters=tuple(
-                            (c, lo, hi, ls, us)
-                            for c, (lo, hi, ls, us) in bound.items()
-                        ),
-                        pred_filters=preds,
-                        num_filters=tuple(
-                            (c, lo, hi) for c, (lo, hi) in num.items()
-                        )
-                        + (
-                            # __time zone maps: the interval that pruned
-                            # whole segments above also skips blocks WITHIN
-                            # the survivors ([lower, upper] loose bounds —
-                            # superset rows, Spark re-applies the filter)
-                            ((TIME_COLUMN, lower, upper),)
-                            if (lower is not None or upper is not None)
-                            else ()
-                        ),
-                        row_range=rng,
-                    )
-                )
+            parts.append(SegmentPartition(seg_dir, **filters))
         return parts
-
-    def _value_pruned(
-        self,
-        seg_dir: str,
-        eq: dict[str, str],
-        bound: dict[str, tuple] | None = None,
-        preds: tuple = (),
-    ) -> bool:
-        """Planner-side value pruning: a segment whose inverted index
-        proves a conjunctive dim equality (or lexicographic bound)
-        matches NOTHING never gets a task at all. The pass touches only
-        dictionary + bitmap bytes, never value columns, but unlike the
-        manifest-served interval/min-max checks it opens each surviving
-        segment (and bulk-decodes its dictionary for predicate kinds),
-        so _filtered_partitions gates it behind
-        VALUE_PRUNE_MAX_SEGMENTS."""
-        seg = DruidSegment(seg_dir)
-        try:
-            for col, values in eq.items():
-                rows = seg.bitmap_rows_for_any(col, values)
-                if rows is not None and len(rows) == 0:
-                    return True
-            for col, (lo, hi, ls, us) in (bound or {}).items():
-                # emptiness needs only the dictionary-id window (every
-                # dictionary id owns >=1 row in a freshly-built segment;
-                # a stale empty-blob id merely keeps the segment — sound,
-                # pruning is acceleration-only)
-                rng = seg.bound_id_range(col, lo, hi, ls, us)
-                if rng is not None and rng[0] >= rng[1]:
-                    return True
-            for col, kind, arg in preds:
-                # one dictionary pass proves no value matches — the
-                # segment never gets a task (same metadata-only cost
-                # class as the bound check: dictionary bytes, no value
-                # column decode)
-                ids = seg.matching_value_ids(col, (kind, arg))
-                if ids is not None and len(ids) == 0:
-                    return True
-            return False
-        finally:
-            seg.close()
 
     def read(self, partition: ScanTask):
         """One Arrow batch per unit, in planned order. Each unit opens
         and closes its own segment, and its arrays are dropped before
         the next unit decodes, so a task's memory stays bounded by one
-        segment (or window) however many units it packs."""
+        segment (or window) however many units it packs.
+
+        The dimension filters are answered here, from the segment's
+        index: a unit they prove empty yields one empty typed batch
+        without decoding any value column."""
         for unit in partition.units:
             yield from self._read_unit(unit)
 
@@ -942,7 +904,7 @@ class DruidSegmentReader(DataSourceReader):
             rows = np.empty(0, np.uint32) if partition.empty else None
             if not partition.empty:
                 if partition.row_range is not None:
-                    # split scan: this partition owns [start, stop);
+                    # a row window: this unit owns [start, stop);
                     # index/zone-map selections intersect into it below
                     rows = np.arange(
                         partition.row_range[0],

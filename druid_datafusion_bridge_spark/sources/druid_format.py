@@ -453,7 +453,7 @@ def write_generic_indexed(elements: list[bytes | None], sorted_flag: bool = True
 
 def _check_rows(rows, total: int, what: str) -> np.ndarray:
     """Validate a sliced-decode row-id selection: sorted ascending (the
-    contract every caller documents — bitmap/index row sets and split
+    contract every caller documents — bitmap/index row sets and row
     windows are built sorted) and inside [0, total). Checked up front
     so a bad selection fails as DruidFormatError, not as a misleading
     downstream index/unpack error (endpoint-only checks let an unsorted
@@ -588,10 +588,13 @@ def _read_compressed_blocks(
         rows = _check_rows(rows, total_size, "Sliced decode")
         out = np.empty(len(rows), dtype=out_dtype)
         blk_ids = rows // size_per if size_per else rows
-        for b in np.unique(blk_ids):
-            vals = _block_values(int(b))
-            sel = blk_ids == b
-            out[sel] = vals[rows[sel] - int(b) * size_per]
+        # rows are sorted, so each block's rows form one contiguous run:
+        # slice the runs (masking every row once per block would cost
+        # O(rows * blocks) on a wide row window)
+        ublk, starts = np.unique(blk_ids, return_index=True)
+        for b, s, e in zip(ublk, starts, [*starts[1:], len(rows)]):
+            b = int(b)
+            out[s:e] = _block_values(b)[rows[s:e] - b * size_per]
         return out
 
     chunks = [_block_values(b) for b in range(len(blocks))]

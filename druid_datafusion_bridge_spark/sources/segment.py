@@ -74,7 +74,8 @@ class DruidSegment:
 
     def num_rows_meta(self) -> int:
         """Row count from the __time column HEADER alone — planning
-        cost (no block decode), what split-scan partitioning consults."""
+        cost (no block decode); load_plan_meta records it as the
+        manifest's ``rows``, which sizes row windows and pack weights."""
         data = self.smoosh.map_file(TIME_COLUMN)
         _, payload = fmt.parse_column_header(data)
         return fmt.compressed_num_elements(data, payload)
@@ -128,33 +129,27 @@ class DruidSegment:
         from the roaring inverted index WITHOUT decoding the value
         column. Returns None when the column has no index (caller falls
         back to a scan); an empty array when the value simply never
-        occurs in this segment — which also lets a planner skip the
-        segment outright (value-level pruning, beyond the reference's
-        never-applied bitmap parsing).
+        occurs in this segment — which lets the scan emit an empty
+        batch without decoding any value column (value-level pruning,
+        beyond the reference's never-applied bitmap parsing).
 
         Works for multi-value dimensions too — there "equals" means
         "contains" (Druid's MVD selector semantics: a value filter
         matches a row when ANY of its values matches), and the index
         layout is identical (one blob of row ids per dictionary id,
         appended after the flat-ids section —
-        locate_string_bitmap_index walks past the extra offsets)."""
-        if name not in self.metadata.columns:
+        locate_string_bitmap_index walks past the extra offsets).
+        Header and section parsing come from the memoized
+        _string_index, so an IN-list parses the column once."""
+        idx = self._string_index(name)
+        if idx is None:
             return None
-        desc = self._descriptors[name]
-        if desc["valueType"].upper() != "STRING":
-            return None
-        data = self.smoosh.map_file(name)
-        _, payload = fmt.parse_column_header(data)
-        bm = fmt.locate_string_bitmap_index(data, payload)
-        if bm is None:
-            return None
-        gi = fmt.GenericIndexedV1(data, payload + 5)
+        gi, bm = idx
         dict_id = self._dict_id_of(gi, value)
         if dict_id is None:
             return np.empty(0, np.uint32)
         # decode exactly ONE blob — eager-decoding the whole index made
-        # each lookup O(dictionary size), which at planning time ran on
-        # the driver once per segment per filtered value
+        # each lookup O(dictionary size) per filtered value
         return fmt.read_string_bitmap_blob(bm, dict_id)
 
     @staticmethod
@@ -192,8 +187,8 @@ class DruidSegment:
         the column has no index; an empty array when no value occurs —
         including the degenerate empty ``values`` (a contradictory
         conjunction upstream), which matches no rows by definition.
-        Small IN lists re-walk the index per value; a long list would
-        batch the dictionary lookups in one pass."""
+        Each value costs one dictionary search and one bitmap blob;
+        the column header is parsed once (_string_index)."""
         out: np.ndarray | None = None
         for v in values:
             r = self.bitmap_rows_for(name, v)
@@ -208,9 +203,8 @@ class DruidSegment:
     BOUND_MAX_IDS = 4096
 
     def _string_index(self, name: str):
-        """(GenericIndexed dictionary, bitmap-index section, header
-        payload offset, mmapped bytes) for a STRING column that carries
-        an inverted index — None otherwise. The shared entry point of
+        """(GenericIndexed dictionary, bitmap-index section) for a
+        STRING column that carries an inverted index — None otherwise. The shared entry point of
         every dictionary-side acceleration path; memoized per instance
         (a Search query or multi-predicate filter would otherwise
         re-parse the same column header and re-walk its section sizes
@@ -347,8 +341,7 @@ class DruidSegment:
         value decode at all. NULL (slot 0 when present) never matches.
         None when the column has no usable index (missing, non-string,
         or unsorted dictionary). An empty window proves the segment
-        matches nothing — what planner-side pruning needs, at pure
-        metadata cost. Header/section parsing comes from the memoized
+        matches nothing, at pure metadata cost. Header/section parsing comes from the memoized
         _string_index (a bound+predicate conjunction, or several bounds
         on one column, parses the column once); each bisect probe reads
         one dictionary value — from the _dict_array cache when another

@@ -2514,3 +2514,31 @@ def test_coordinator_datasource_summary_counts_used_segments(
         assert seg["maxTime"] == "2024-01-02T00:00:00.001Z"
     finally:
         s.stop()
+
+
+def test_datasource_root_registers_druidsegment_once_per_session(
+    spark, tmp_path, monkeypatch
+):
+    """Re-registering a segment root (every ingest, kill, rule or mark
+    change) registers the druidsegment DataSource with the session at
+    most once, so Spark never replaces it; a new session registers its
+    own."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    root = tmp_path / "reg"
+    root.mkdir()
+    _day_segment(root, 0, [1, 2])
+    calls = []
+    real = DataSourceRegistration.register
+
+    def counting(self, source):
+        calls.append(source.name())
+        return real(self, source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting)
+    child = spark.newSession()
+    s = DruidBrokerShim(child, {}, segment_roots={"reg": str(root)})
+    s._register_datasource_root("reg")
+    s._register_datasource_root("reg")
+    assert calls == ["druidsegment"]
+    assert child.sql("SELECT SUM(v) AS v FROM reg").first().v == 3

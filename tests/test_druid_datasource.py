@@ -7,6 +7,7 @@ projection, per-segment partitioning, and interval pruning.
 from __future__ import annotations
 
 import os
+from unittest import mock
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -53,6 +54,39 @@ def _units(parts) -> list:
 def _names(parts) -> list[str]:
     """Segment-dir basenames of the planned units."""
     return [os.path.basename(u.segment_dir) for u in _units(parts)]
+
+
+def _read_tasks(reader) -> tuple[dict, list[str]]:
+    """Plan, then read every task in this process the way an executor
+    does. Returns ({segment basename: [one batch per unit]}, basenames
+    whose value columns were decoded — a DruidSegment.read_batch spy)."""
+    from druid_datafusion_bridge_spark.sources.segment import DruidSegment
+
+    decoded: list[str] = []
+    real = DruidSegment.read_batch
+
+    def spy(self, *a, **k):
+        decoded.append(os.path.basename(self.path))
+        return real(self, *a, **k)
+
+    batches: dict[str, list] = {}
+    with mock.patch.object(DruidSegment, "read_batch", spy):
+        for task in reader.partitions():
+            for unit, batch in zip(task.units, reader.read(task), strict=True):
+                name = os.path.basename(unit.segment_dir)
+                batches.setdefault(name, []).append(batch)
+    return batches, decoded
+
+
+def _assert_index_empty(batches: dict, decoded: list, name: str) -> None:
+    """The segment's index proved the filter empty on the executor: its
+    one unit yielded one empty batch and never decoded a value column."""
+    assert [b.num_rows for b in batches[name]] == [0]
+    assert name not in decoded
+
+
+def _values(batches: dict, name: str, col: str) -> list:
+    return [x for b in batches[name] for x in b.to_pydict()[col]]
 
 
 @pytest.fixture(scope="module")
@@ -214,10 +248,11 @@ def test_bitmap_index_accelerated_dim_filter(registered, tmp_path):
 
 
 def test_value_pruning_skips_whole_segments(registered, tmp_path):
-    """Planner-side value pruning: with two segments holding disjoint
-    dim values, an equality on one value must plan exactly ONE input
-    partition (the other segment is proven empty by its inverted index
-    and never gets a task)."""
+    """Value pruning on the executor: with two segments holding
+    disjoint dim values, an equality on one value reads only that
+    segment's rows; the other segment's inverted index proves it empty
+    where it is read, so its unit yields one empty batch without
+    decoding any value column."""
     import pyarrow as pa
     from druid_datafusion_bridge_spark.sources.datasource import (
         DruidSegmentReader,
@@ -249,13 +284,13 @@ def test_value_pruning_skips_whole_segments(registered, tmp_path):
     assert got.count() == 10
     assert {r["site"] for r in got.collect()} == {"beta"}
 
-    # assert the partition count directly on the reader
+    # read every planned task on the reader directly
     reader = DruidSegmentReader(
         df.schema, {"path": str(tmp_path), "dim_eq": '{"site": "beta"}'}
     )
-    parts = reader.partitions()
-    units = _units(parts)
-    assert len(units) == 1 and units[0].segment_dir.endswith("seg_001")
+    batches, decoded = _read_tasks(reader)
+    assert _values(batches, "seg_001", "site") == ["beta"] * 10
+    _assert_index_empty(batches, decoded, "seg_000")
 
 
 def test_schema_evolution_across_segments(registered, tmp_path):
@@ -360,7 +395,7 @@ def test_bitmap_index_multi_value_dimension(registered, tmp_path):
     value lists every row CONTAINING it (Druid's MVD selector
     semantics), a row repeating a value appears once, empty/null rows
     never match, IN-lists union across values, and the dim_eq option
-    drives planner-side value pruning + executor row selection on the
+    drives executor-side value pruning + row selection on the
     list<string> column end-to-end."""
     import pyarrow as pa
 
@@ -419,7 +454,7 @@ def test_bitmap_index_multi_value_dimension(registered, tmp_path):
     assert sorted(r["v"] for r in got) == [
         float(i) for i in range(n) if i % 5 in (2, 3, 4)
     ]
-    # absent value => planner prunes the segment to zero rows
+    # absent value => the index proves the segment empty at read time
     assert (
         load(dim_eq='{"tags": "magenta"}')
         .filter(F.array_contains("tags", "magenta"))
@@ -553,8 +588,9 @@ def test_numeric_range_pruning_is_metadata_only(registered, tmp_path, monkeypatc
 def test_dim_bound_filter_index_and_pruning(registered, tmp_path):
     """Lexicographic BoundFilter (s1i): the sorted dictionary's binary
     search must honor strict/inclusive bounds exactly, a segment whose
-    dictionary has no value in range must be pruned planner-side, and
-    the end-to-end query must select the right rows."""
+    dictionary has no value in range must read as one empty batch
+    without a value decode, and the end-to-end query must select the
+    right rows."""
     from druid_datafusion_bridge_spark.sources.segment import DruidSegment
 
     def seg(values, offset):
@@ -586,14 +622,17 @@ def test_dim_bound_filter_index_and_pruning(registered, tmp_path):
     finally:
         s.close()
 
-    # option-driven: bound ["m", null] proves seg_000 empty -> pruned
+    # option-driven: bound ["m", null] proves seg_000 empty on read
     reader = DruidSegmentReader(
         registered.read.format("druidsegment")
         .option("path", str(tmp_path)).load().schema,
         {"path": str(tmp_path), "dim_bound": '{"site": ["m", null, false, false]}'},
     )
-    parts = reader.partitions()
-    assert _names(parts) == ["seg_001"]
+    batches, decoded = _read_tasks(reader)
+    assert _values(batches, "seg_001", "site") == [
+        "mike", "november", "oscar", "zulu"
+    ]
+    _assert_index_empty(batches, decoded, "seg_000")
 
     # site > 'delta' AND site <= 'oscar': strict lower, inclusive upper
     df = (
@@ -605,8 +644,9 @@ def test_dim_bound_filter_index_and_pruning(registered, tmp_path):
         {"path": str(tmp_path),
          "dim_bound": '{"site": ["delta", "oscar", true, false]}'},
     )
-    parts2 = r2.partitions()
-    assert _names(parts2) == ["seg_001"]
+    batches, decoded = _read_tasks(r2)
+    assert _values(batches, "seg_001", "site") == ["mike", "november", "oscar"]
+    _assert_index_empty(batches, decoded, "seg_000")
 
     # end-to-end rows through the DataSource + re-applied filter
     got = (
@@ -772,7 +812,8 @@ def test_numeric_in_list_hull_feeds_zone_maps(registered, tmp_path):
 def test_prefix_filter_and_is_null_pushdown(registered, tmp_path):
     """PrefixFilter (s1k): startswith(p) must reduce to the dictionary
     bound [p, next_prefix(p)) — correct rows selected, non-overlapping
-    segments pruned — and a dim_eq null must hit the null bitmap."""
+    segments read as one empty batch without a value decode — and a
+    dim_eq null must hit the null bitmap."""
     from druid_datafusion_bridge_spark.sources.datasource import _next_prefix
 
     assert _next_prefix("ab") == "ac"
@@ -804,40 +845,39 @@ def test_prefix_filter_and_is_null_pushdown(registered, tmp_path):
     got = df.filter(F.col("site").startswith("ap")).select("site").collect()
     assert sorted(r.site for r in got) == ["app", "apple", "apricot"]
 
-    # option path prunes the non-overlapping segment planner-side
+    # the option path proves the non-overlapping segment empty on read
     reader = DruidSegmentReader(
         df.schema, {"path": str(tmp_path), "dim_prefix": '{"site": "ba"}'}
     )
-    parts = reader.partitions()
-    assert _names(parts) == ["seg_001"]
+    batches, decoded = _read_tasks(reader)
+    assert _values(batches, "seg_001", "site") == ["banana"]
+    _assert_index_empty(batches, decoded, "seg_000")
 
-    # the matching prefix plans only seg_000 and selects its rows
+    # the matching prefix selects seg_000's rows only
     r2 = DruidSegmentReader(
         df.schema, {"path": str(tmp_path), "dim_prefix": '{"site": "ap"}'}
     )
-    parts2 = r2.partitions()
-    assert _names(parts2) == ["seg_000"]
-    sites = sorted(
-        s for b in r2.read(parts2[0]) for s in b.column(1).to_pylist()
-    )
-    assert sites == ["app", "apple", "apricot"]
+    batches, decoded = _read_tasks(r2)
+    assert sorted(_values(batches, "seg_000", "site")) == [
+        "app", "apple", "apricot"
+    ]
+    _assert_index_empty(batches, decoded, "seg_001")
 
     # null equality -> null-slot bitmap: only the null row of seg_000
     r3 = DruidSegmentReader(
         df.schema, {"path": str(tmp_path), "dim_eq": '{"site": [null]}'}
     )
-    parts3 = r3.partitions()
-    assert _names(parts3) == ["seg_000"]
-    rows = [s for b in r3.read(parts3[0]) for s in b.column(1).to_pylist()]
-    assert rows == [None]
+    batches, decoded = _read_tasks(r3)
+    assert _values(batches, "seg_000", "site") == [None]
+    _assert_index_empty(batches, decoded, "seg_001")
 
 
 def test_dictionary_predicate_filters(registered, tmp_path):
     """Regex / contains / icontains (s1l, s1m): evaluated once per
     DISTINCT dictionary value, answered via bitmap union — correct
-    rows selected, zero-match segments pruned planner-side, NULL never
-    matching, and dim_contains + dim_endswith conjoined on the same
-    column."""
+    rows selected, zero-match segments read as one empty batch without
+    a value decode, NULL never matching, and dim_contains +
+    dim_endswith conjoined on the same column."""
     from druid_datafusion_bridge_spark.sources.segment import DruidSegment
 
     def seg(values, offset):
@@ -897,24 +937,22 @@ def test_dictionary_predicate_filters(registered, tmp_path):
     got = df_e.filter(F.col("site").endswith("e")).select("site").collect()
     assert sorted(r.site for r in got) == ["apple"]
 
-    # planner-side pruning: a predicate no dictionary value of seg_000
-    # satisfies drops that segment without a task
+    # executor-side pruning: a predicate no dictionary value of seg_000
+    # satisfies reads that segment as one empty batch, no value decode
     reader = DruidSegmentReader(
         df.schema, {"path": str(tmp_path), "dim_contains": '{"site": "err"}'}
     )
-    parts = reader.partitions()
-    assert _names(parts) == ["seg_001"]
-    vals = [x for b in reader.read(parts[0]) for x in b.column(1).to_pylist()]
-    assert vals == ["berry"]
+    batches, decoded = _read_tasks(reader)
+    assert _values(batches, "seg_001", "site") == ["berry"]
+    _assert_index_empty(batches, decoded, "seg_000")
 
     # case-insensitive contains via option
     r_i = DruidSegmentReader(
         df.schema, {"path": str(tmp_path), "dim_icontains": '{"site": "RICOT"}'}
     )
-    parts_i = r_i.partitions()
-    assert _names(parts_i) == ["seg_000"]
-    vals = [x for b in r_i.read(parts_i[0]) for x in b.column(1).to_pylist()]
-    assert vals == ["apricot"]
+    batches, decoded = _read_tasks(r_i)
+    assert _values(batches, "seg_000", "site") == ["apricot"]
+    _assert_index_empty(batches, decoded, "seg_001")
 
     # contains 'an' AND endswith 'a': conjunctive, only banana
     r2 = DruidSegmentReader(
@@ -922,10 +960,9 @@ def test_dictionary_predicate_filters(registered, tmp_path):
         {"path": str(tmp_path), "dim_contains": '{"site": "an"}',
          "dim_endswith": '{"site": "a"}'},
     )
-    parts2 = r2.partitions()
-    assert _names(parts2) == ["seg_001"]
-    vals = [x for b in r2.read(parts2[0]) for x in b.column(1).to_pylist()]
-    assert vals == ["banana"]
+    batches, decoded = _read_tasks(r2)
+    assert _values(batches, "seg_001", "site") == ["banana"]
+    _assert_index_empty(batches, decoded, "seg_000")
 
 
 def test_like_filter_and_search_query(registered, tmp_path):
@@ -1025,61 +1062,87 @@ def test_search_packs_segments_into_at_most_one_task_per_core(
     assert {(r.value, r.n) for r in rows} == {("red", 3), ("blue", 2)}
 
 
-def test_split_rows_partitions_within_segment(registered, tmp_path):
-    """split_rows: a big segment fans out into [start, stop) windows —
-    partition count, lossless union, and composition with index row
-    selection."""
-    from druid_datafusion_bridge_spark.sources.datasource import (
-        DruidSegmentReader,
-    )
+def test_big_segments_scan_in_derived_row_windows(
+    registered, tmp_path, monkeypatch
+):
+    """Row windows derived from the manifest and the core count: with
+    cap = max(planned rows // cores, MIN_WINDOW_ROWS), a segment of n
+    rows becomes n // cap equal windows when that is >= 2. The windows
+    tile each big segment exactly, none is smaller than cap, a segment
+    under 2 * cap stays whole, and a dim_eq filter inside the windows
+    still selects exactly the matching rows."""
+    sites = ["a", "b", "a", "c", "a"] * 4 + ["b", "a", "c"]  # 23 rows
 
-    def seg(values, offset):
-        return pa.table(
-            {
-                "__time": pa.array(
-                    [1704067200000 + offset + i for i in range(len(values))],
-                    pa.timestamp("ms"),
-                ),
-                "site": pa.array(values),
-            }
+    def seg(values, offset, name):
+        write_segment(
+            pa.table(
+                {
+                    "__time": pa.array(
+                        [1704067200000 + offset + i for i in range(len(values))],
+                        pa.timestamp("ms"),
+                    ),
+                    "site": pa.array(values),
+                }
+            ),
+            str(tmp_path / name),
         )
 
-    write_segment(seg(["a", "b", "a", "c", "a"], 0), str(tmp_path / "seg_000"))
-    write_segment(seg(["b", "a"], 10_000), str(tmp_path / "seg_001"))
+    seg(sites, 0, "seg_000")
+    seg(["b", "a", "c", "a", "b", "a", "c"], 10_000, "seg_001")
+    seg(["a", "b", "a"], 20_000, "seg_002")
+    rows = {"seg_000": 23, "seg_001": 7, "seg_002": 3}
+    values = {
+        "seg_000": sites,
+        "seg_001": ["b", "a", "c", "a", "b", "a", "c"],
+        "seg_002": ["a", "b", "a"],
+    }
+    root = str(tmp_path)
+    schema = _schema(root)
+    monkeypatch.setattr(datasource, "MIN_WINDOW_ROWS", 4)
 
-    df = (
-        registered.read.format("druidsegment")
-        .option("path", str(tmp_path))
-        .option("split_rows", "2")
-        .load()
-    )
-    reader = DruidSegmentReader(
-        df.schema, {"path": str(tmp_path), "split_rows": "2"}
-    )
-    parts = reader.partitions()
-    # 5 rows -> windows [0,2),[2,4),[4,5); 2 rows -> unsplit
-    assert sorted(
-        (os.path.basename(u.segment_dir), u.row_range) for u in _units(parts)
-    ) == [
-        ("seg_000", (0, 2)),
-        ("seg_000", (2, 4)),
-        ("seg_000", (4, 5)),
-        ("seg_001", None),
-    ]
-    assert sorted(r.site for r in df.collect()) == sorted(
-        ["a", "b", "a", "c", "a", "b", "a"]
-    )
-    # composes with bitmap row selection: equality filter inside the
-    # split windows still selects exactly the matching rows
-    df_f = (
-        registered.read.format("druidsegment")
-        .option("path", str(tmp_path))
-        .option("split_rows", "2")
-        .option("dim_eq", '{"site": "a"}')
-        .load()
-    )
-    got = df_f.filter(F.col("site") == "a").select("site").collect()
-    assert [r.site for r in got] == ["a", "a", "a", "a"]
+    # 4 cores: cap = 33 // 4 = 8 -> seg_000 in 2 windows;
+    # 16 cores: MIN_WINDOW_ROWS binds, cap = 4 -> 5 windows
+    for cores, cap in ((4, 8), (16, 4)):
+        monkeypatch.setattr(datasource, "usable_cores", lambda: cores)
+        reader = DruidSegmentReader(schema, {"path": root})
+        units = _units(reader.partitions())
+        by_seg: dict[str, list] = {}
+        for u in units:
+            by_seg.setdefault(os.path.basename(u.segment_dir), []).append(
+                u.row_range
+            )
+        for name, n in rows.items():
+            windows = by_seg[name]
+            if n < 2 * cap:
+                assert windows == [None]
+                continue
+            assert len(windows) == n // cap
+            assert [w[0] for w in windows] == [0] + [w[1] for w in windows[:-1]]
+            assert windows[-1][1] == n
+            assert all(stop - start >= cap for start, stop in windows)
+        assert len(by_seg["seg_000"]) == 23 // cap
+
+        # lossless: the windows read back every row exactly once
+        batches, _ = _read_tasks(reader)
+        assert {n: sorted(_values(batches, n, "site")) for n in rows} == {
+            n: sorted(vals) for n, vals in values.items()
+        }
+        times = [t for b in batches["seg_000"] for t in b.to_pydict()["__time"]]
+        assert len(times) == 23 == len(set(times))
+
+        # the index selection intersects into each window
+        r_eq = DruidSegmentReader(
+            schema, {"path": root, "dim_eq": '{"site": "a"}'}
+        )
+        batches, _ = _read_tasks(r_eq)
+        assert len(batches["seg_000"]) == 23 // cap
+        assert {n: _values(batches, n, "site") for n in rows} == {
+            n: ["a"] * vals.count("a") for n, vals in values.items()
+        }
+        times = [
+            t for b in batches["seg_000"] for t in b.to_pydict()["__time"]
+        ]
+        assert len(times) == sites.count("a") == len(set(times))
 
 
 def test_order_limit_plans_segment_prefix(registered, tmp_path):
@@ -1248,6 +1311,47 @@ def test_plan_meta_cache_amortizes_segment_opens(registered, tmp_path, monkeypat
     )
     assert df2.schema.fieldNames() == ["__time", "v"]
     assert opens == []
+
+
+def test_dim_filter_planning_opens_no_segment(tmp_path, monkeypatch):
+    """On a warm manifest partitions() opens zero segments for every
+    dimension filter family: emptiness proofs run on the executor, in
+    read(), against each segment's index — never at planning."""
+    from druid_datafusion_bridge_spark.sources import segment as segmod
+
+    for i, values in enumerate((["app", "apple"], ["banana", "berry"])):
+        write_segment(
+            pa.table(
+                {
+                    "__time": pa.array(
+                        [BASE_MS + 10_000 * i + j for j in range(2)],
+                        pa.timestamp("ms"),
+                    ),
+                    "site": pa.array(values),
+                }
+            ),
+            str(tmp_path / f"seg_{i:03d}"),
+        )
+    root = str(tmp_path)
+    schema = _schema(root)  # cold: writes the manifest
+
+    opens = []
+    orig_init = segmod.DruidSegment.__init__
+
+    def counting_init(self, path, *a, **k):
+        opens.append(os.path.basename(path))
+        return orig_init(self, path, *a, **k)
+
+    monkeypatch.setattr(segmod.DruidSegment, "__init__", counting_init)
+    for opt, arg in (
+        ("dim_eq", '{"site": "berry"}'),
+        ("dim_bound", '{"site": ["b", null, false, false]}'),
+        ("dim_prefix", '{"site": "ba"}'),
+        ("dim_contains", '{"site": "err"}'),
+    ):
+        reader = DruidSegmentReader(schema, {"path": root, opt: arg})
+        assert _names(reader.partitions()) == ["seg_000", "seg_001"], opt
+        assert opens == [], opt
 
 
 def test_partial_planning_keeps_whole_root_manifest(
@@ -1533,8 +1637,10 @@ def _schema(root: str):
 
 def test_packing_balances_units_over_cores(hourly_root, monkeypatch):
     """12 segments on 4 cores: at most 4 tasks, holding exactly the
-    per-segment (or per-window) units, LPT-balanced by rows and in
-    planned order; a plan with no more units than cores is unchanged."""
+    per-segment units, LPT-balanced by rows and in planned order; the
+    same on 15 cores once the three biggest segments are cut into row
+    windows (MIN_WINDOW_ROWS lowered); a plan with no more units than
+    cores is unchanged."""
     root, rows, _ = hourly_root
     schema = _schema(root)
 
@@ -1546,16 +1652,26 @@ def test_packing_balances_units_over_cores(hourly_root, monkeypatch):
     def key(u):
         return (u.segment_dir, u.row_range or ())
 
-    for extra in ({}, {"split_rows": "5"}):
-        reader = DruidSegmentReader(schema, {"path": root, **extra})
-        monkeypatch.setattr(datasource, "usable_cores", lambda: 1000)
-        per_unit = reader.partitions()
-        monkeypatch.setattr(datasource, "usable_cores", lambda: 4)
+    def unpacked(weights, n_tasks):
+        return [[i] for i in range(len(weights))]
+
+    # 118 rows: 4 cores -> cap 29, nothing cut; 15 cores -> cap 7, the
+    # 14-, 15- and 16-row segments each become 2 windows
+    default_min = datasource.MIN_WINDOW_ROWS
+    for cores, min_window, n_units in ((4, default_min, 12), (15, 5, 15)):
+        monkeypatch.setattr(datasource, "usable_cores", lambda: cores)
+        monkeypatch.setattr(datasource, "MIN_WINDOW_ROWS", min_window)
+        reader = DruidSegmentReader(schema, {"path": root})
+        with mock.patch.object(datasource, "pack_units", unpacked):
+            per_unit = reader.partitions()
         tasks = reader.partitions()
 
         assert all(len(t.units) == 1 for t in per_unit)
-        assert len(per_unit) >= 12
-        assert len(tasks) <= 4
+        assert len(per_unit) == n_units
+        assert sum(u.row_range is not None for u in _units(per_unit)) == (
+            2 * (n_units - 12)
+        )
+        assert len(tasks) <= cores
         assert sorted(_units(tasks), key=key) == sorted(
             _units(per_unit), key=key
         )
@@ -1569,6 +1685,8 @@ def test_packing_balances_units_over_cores(hourly_root, monkeypatch):
 
     # three hourly segments survive the interval: one unit per task,
     # exactly the unpacked plan
+    monkeypatch.setattr(datasource, "usable_cores", lambda: 4)
+    monkeypatch.setattr(datasource, "MIN_WINDOW_ROWS", default_min)
     window = {
         "path": root,
         "time_lower_ms": str(BASE_MS + 4 * HOUR_MS),

@@ -729,10 +729,12 @@ def test_segment_filter_pruning_never_loses_rows(data):
     re-applies them), drawn only from the true table. This is the
     acceleration-only contract the options document."""
     import tempfile
+    from unittest import mock
 
     import numpy as np
     import pyarrow as pa
 
+    from druid_datafusion_bridge_spark.sources import datasource
     from druid_datafusion_bridge_spark.sources.datasource import (
         DruidSegmentReader,
     )
@@ -819,9 +821,14 @@ def test_segment_filter_pruning_never_loses_rows(data):
         )
         options[opt] = _json.dumps({"site": needle})
         mask &= np.array([match(s) for s in sites])
-    if data.draw(st.booleans()):  # split scan (mask unchanged: pure
-        # repartitioning — union over windows must equal the unsplit read)
-        options["split_rows"] = str(data.draw(st.integers(1, n + 5)))
+    # row windows (mask unchanged: pure repartitioning — the union over
+    # windows must equal the unwindowed read): a small MIN_WINDOW_ROWS
+    # and core count let the planner cut these tiny segments
+    min_window = datasource.MIN_WINDOW_ROWS
+    cores = datasource.usable_cores()
+    if data.draw(st.booleans()):
+        min_window = data.draw(st.integers(1, n + 5))
+        cores = data.draw(st.integers(1, 8))
     if data.draw(st.booleans()):  # time interval
         lo_i = data.draw(st.integers(0, n))
         hi_i = data.draw(st.integers(0, n))
@@ -854,7 +861,11 @@ def test_segment_filter_pruning_never_loses_rows(data):
         ]
     )
     reader = DruidSegmentReader(schema, options)
-    batches = [b for p in reader.partitions() for b in reader.read(p)]
+    with mock.patch.object(
+        datasource, "MIN_WINDOW_ROWS", min_window
+    ), mock.patch.object(datasource, "usable_cores", lambda: cores):
+        tasks = reader.partitions()
+    batches = [b for p in tasks for b in reader.read(p)]
     emitted_v = [x for b in batches for x in b.column(1).to_pylist()]
     emitted_times = {
         x for b in batches for x in b.column(0).cast(pa.int64()).to_pylist()
