@@ -188,8 +188,9 @@ def search_dimension(
     touches a value chunk. Topology mirrors Druid's
     historical-fanout + broker-merge: the root's served segments are
     LPT-packed by rows into at most one task per usable core (the scan
-    planner's pack_units — each Python task pays a fixed start-up), and
-    each task evaluates the spec per segment against the sorted
+    planner's pack_units — each Python task pays a fixed start-up, kept
+    small by ending each task with drop_spark_zip_finders), and each
+    task evaluates the spec per segment against the sorted
     dictionary and sums bitmap CARDINALITIES (search_value_counts —
     O(dictionary + matching bitmaps) per segment, independent of row
     count). The only exchange is the final groupBy over (value, n)
@@ -221,30 +222,34 @@ def search_dimension(
     def scan(batches):
         import pyarrow as pa
 
+        from ..sources.datasource import drop_spark_zip_finders
         from ..sources.segment import DruidSegment
 
-        for b in batches:
-            vals: list = []
-            counts: list = []
-            for gid in b.column(0).to_pylist():
-                for seg_dir in groups[gid]:
-                    seg = DruidSegment(seg_dir)
-                    try:
-                        pairs = seg.search_value_counts(column, (kind, arg))
-                    finally:
-                        seg.close()
-                    if pairs is None:
-                        raise ValueError(
-                            f"search_dimension: {column!r} has no inverted "
-                            f"index in {seg_dir!r}"
-                        )
-                    for v, c in pairs:
-                        vals.append(v)
-                        counts.append(c)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(vals, pa.string()), pa.array(counts, pa.int64())],
-                names=["value", "n"],
-            )
+        try:
+            for b in batches:
+                vals: list = []
+                counts: list = []
+                for gid in b.column(0).to_pylist():
+                    for seg_dir in groups[gid]:
+                        seg = DruidSegment(seg_dir)
+                        try:
+                            pairs = seg.search_value_counts(column, (kind, arg))
+                        finally:
+                            seg.close()
+                        if pairs is None:
+                            raise ValueError(
+                                f"search_dimension: {column!r} has no inverted "
+                                f"index in {seg_dir!r}"
+                            )
+                        for v, c in pairs:
+                            vals.append(v)
+                            counts.append(c)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(vals, pa.string()), pa.array(counts, pa.int64())],
+                    names=["value", "n"],
+                )
+        finally:
+            drop_spark_zip_finders()
 
     per_group = spark.range(
         len(groups), numPartitions=len(groups)

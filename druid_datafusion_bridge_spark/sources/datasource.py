@@ -17,10 +17,12 @@ with three upgrades over the reference's scan:
   holding at least twice the per-core share of the planned rows into
   equal row windows (sliced decode keeps each window O(its blocks)),
   and packs the units into at most one InputPartition per usable core.
-  Every Python task pays a fixed worker start-up (~250 ms on Spark 4.1
-  / Python 3.11, mostly re-reading the directories of the zips on the
-  worker path), so a root of N small segments costs that once per core
-  instead of N times;
+  A Python task still pays a fixed start-up, so a root of N small
+  segments pays it once per core instead of N times. read() keeps that
+  start-up small: it ends by dropping the worker's cached finders for
+  the Spark install's zips (drop_spark_zip_finders), which every task's
+  importlib.invalidate_caches() would otherwise re-read (~200 ms per
+  task on Spark 4.1 / Python 3.11);
 - projection honored at decode time via the `columns` option (the Python
   DataSource API does not push projections, so it's an explicit option —
   SURVEY.md §4.1);
@@ -129,6 +131,57 @@ def ship_package(spark) -> None:
             os.unlink(tmp_path)
     sc.addPyFile(zip_path)
     sc._ddbs_pkg_shipped = True
+
+
+def drop_spark_zip_finders() -> None:
+    """Worker-side: forget the cached import finders of the Spark
+    install's own archives (``$SPARK_HOME/python/lib/*.zip`` and
+    ``$SPARK_HOME/jars/*.jar``) so the next Python task on this reused
+    worker starts cheaply.
+
+    Every task starts with ``importlib.invalidate_caches()``
+    (``pyspark.worker_util.setup_spark_files``), and on Python 3.11
+    that makes each cached ``zipimporter`` re-read its archive's whole
+    directory: a worker holds ~16 of them (one per sub-package path of
+    pyspark.zip, py4j and the spark-core jar), ~200 ms of CPU per task.
+    A dropped finder is rebuilt by the next import that needs it, from
+    the directory ``zipimport._zip_directory_cache`` already holds,
+    without re-reading the archive — sound only because the install
+    cannot change while the worker lives. So
+    an ``addPyFile`` archive under ``SparkFiles.getRootDirectory()``
+    (the package zip of ship_package) always keeps its finders. No-op
+    in the driver, with no Spark install to name, or with no such
+    finder cached. Called in a ``finally`` of the package's Python task
+    bodies, so an iterator a LIMIT stops early still runs it."""
+    import sys
+    import zipimport
+
+    from pyspark.core.files import SparkFiles
+
+    if not SparkFiles._is_running_on_worker:
+        return
+    home = os.environ.get("SPARK_HOME")
+    if not home:
+        # no SPARK_HOME: the install pyspark itself was imported from
+        # (<home>/python/lib/pyspark.zip), if it came from an archive
+        import pyspark
+
+        loader = getattr(pyspark.__spec__, "loader", None)
+        if not isinstance(loader, zipimport.zipimporter):
+            return
+        home = os.path.dirname(os.path.dirname(os.path.dirname(loader.archive)))
+    home = os.path.realpath(home)
+    frozen = (
+        os.path.join(home, "python", "lib", ""),
+        os.path.join(home, "jars", ""),
+    )
+    shipped = os.path.join(os.path.realpath(SparkFiles.getRootDirectory()), "")
+    for key, finder in list(sys.path_importer_cache.items()):
+        if not isinstance(finder, zipimport.zipimporter):
+            continue
+        archive = os.path.realpath(finder.archive)
+        if archive.startswith(frozen) and not archive.startswith(shipped):
+            del sys.path_importer_cache[key]
 
 
 def register_druid_datasource(spark) -> None:
@@ -540,6 +593,11 @@ class ScanTask(InputPartition):
 # (1.05 -> 1.10 s), while 4 windows won at 1M rows (1.29 -> 1.18 s) and
 # 4M rows (2.30 -> 1.64 s). So no window is smaller than 131,072 rows
 # and only a segment of 2 * MIN_WINDOW_ROWS rows or more is ever cut.
+# Re-measured once drop_spark_zip_finders made task start-up cheap
+# (bench_scale.py's segment_scan_rollup, 6 interleaved pairs): 1 << 16
+# cut one more window and was faster in only 4/6 pairs at 250k rows
+# (0.314 -> 0.321 s) and 1/6 at 500k rows (0.354 -> 0.341 s), so the
+# constant stays.
 MIN_WINDOW_ROWS = 1 << 17
 
 
@@ -558,9 +616,11 @@ def pack_units(weights: list[int], n_tasks: int) -> list[list[int]]:
     group. With no more units than groups every unit is its own group.
 
     Packing exists because each Spark Python task pays a fixed worker
-    start-up that dwarfs reading a small segment; one task per core
-    still keeps every core busy. Shared by the scan planner (one
-    ScanTask per group) and search_dimension."""
+    start-up that still outweighs reading a small segment, even with
+    drop_spark_zip_finders keeping it small (a pass-through stage of
+    83 one-row tasks takes ~1.2 s on 4 cores, of 4 tasks ~0.1 s); one
+    task per core still keeps every core busy. Shared by the scan planner (one ScanTask per
+    group) and search_dimension."""
     if len(weights) <= n_tasks:
         return [[i] for i in range(len(weights))]
     heap = [(0, 0, b) for b in range(n_tasks)]
@@ -570,6 +630,16 @@ def pack_units(weights: list[int], n_tasks: int) -> list[list[int]]:
         members[b].append(i)
         heapq.heappush(heap, (load + weights[i], count + 1, b))
     return [sorted(m) for m in sorted(members, key=min)]
+
+
+def _intersect_rows(rows, r: np.ndarray):
+    """Narrow the row selection ``rows`` (None = every row, a ``range``
+    row window, or sorted row ids) by the sorted row-id set ``r``."""
+    if rows is None:
+        return r
+    if isinstance(rows, range):
+        return r[(r >= rows.start) & (r < rows.stop)]
+    return np.intersect1d(rows, r)
 
 
 class DruidSegmentDataSource(DataSource):
@@ -889,8 +959,11 @@ class DruidSegmentReader(DataSourceReader):
         The dimension filters are answered here, from the segment's
         index: a unit they prove empty yields one empty typed batch
         without decoding any value column."""
-        for unit in partition.units:
-            yield from self._read_unit(unit)
+        try:
+            for unit in partition.units:
+                yield from self._read_unit(unit)
+        finally:
+            drop_spark_zip_finders()
 
     def _read_unit(self, partition: SegmentPartition):
         seg = DruidSegment(partition.segment_dir)
@@ -904,18 +977,15 @@ class DruidSegmentReader(DataSourceReader):
             rows = np.empty(0, np.uint32) if partition.empty else None
             if not partition.empty:
                 if partition.row_range is not None:
-                    # a row window: this unit owns [start, stop);
-                    # index/zone-map selections intersect into it below
-                    rows = np.arange(
-                        partition.row_range[0],
-                        partition.row_range[1],
-                        dtype=np.uint32,
-                    )
+                    # a row window: this unit owns [start, stop), decoded
+                    # as a contiguous block run; index/zone-map
+                    # selections intersect into it below
+                    rows = range(*partition.row_range)
                 for col, values in partition.eq_filters:
                     r = seg.bitmap_rows_for_any(col, values)
                     if r is None:
                         continue
-                    rows = r if rows is None else np.intersect1d(rows, r)
+                    rows = _intersect_rows(rows, r)
                     if len(rows) == 0:
                         break
                 for col, lo, hi, ls, us in partition.bound_filters:
@@ -924,14 +994,14 @@ class DruidSegmentReader(DataSourceReader):
                     r = seg.bitmap_rows_for_bound(col, lo, hi, ls, us)
                     if r is None:
                         continue
-                    rows = r if rows is None else np.intersect1d(rows, r)
+                    rows = _intersect_rows(rows, r)
                 for col, kind, arg in partition.pred_filters:
                     if rows is not None and len(rows) == 0:
                         break
                     r = seg.bitmap_rows_for_predicate(col, (kind, arg))
                     if r is None:
                         continue
-                    rows = r if rows is None else np.intersect1d(rows, r)
+                    rows = _intersect_rows(rows, r)
                 # numeric zone maps: restrict to candidate blocks (a
                 # superset of matching rows — the re-applied filter
                 # finishes the job); composes with the bitmap row sets
@@ -941,7 +1011,7 @@ class DruidSegmentReader(DataSourceReader):
                     r = seg.block_candidate_rows(col, lo, hi)
                     if r is None:
                         continue
-                    rows = r if rows is None else np.intersect1d(rows, r)
+                    rows = _intersect_rows(rows, r)
             import pyarrow as pa_mod
 
             if rows is not None and len(rows) == 0:

@@ -451,13 +451,20 @@ def write_generic_indexed(elements: list[bytes | None], sorted_flag: bool = True
 # ---------------------------------------------------------------------------
 
 
-def _check_rows(rows, total: int, what: str) -> np.ndarray:
+def _check_rows(rows, total: int, what: str) -> np.ndarray | range:
     """Validate a sliced-decode row-id selection: sorted ascending (the
     contract every caller documents — bitmap/index row sets and row
     windows are built sorted) and inside [0, total). Checked up front
     so a bad selection fails as DruidFormatError, not as a misleading
     downstream index/unpack error (endpoint-only checks let an unsorted
-    or mid-array-negative selection through)."""
+    or mid-array-negative selection through). A ``range`` is a
+    contiguous row window [start, stop) and stays one."""
+    if isinstance(rows, range):
+        if rows and (rows.step != 1 or rows.start < 0 or rows.stop > total):
+            raise DruidFormatError(
+                f"{what}: row window {rows} is not contiguous inside 0..{total}"
+            )
+        return rows
     rows = np.asarray(rows, np.int64)
     if rows.size:
         if rows.size > 1 and np.any(np.diff(rows) < 0):
@@ -481,6 +488,10 @@ def read_vsize_ints(data, base: int = 0, rows=None) -> np.ndarray:
         # fixed-width + uncompressed => pure positional gather, no
         # full decode (the v0 analog of the blockwise sliced path)
         rows = _check_rows(rows, buffer_size // num_bytes, "VSizeColumnarInts")
+        if isinstance(rows, range):
+            return _unpack_be_uints(
+                buf[rows.start * num_bytes : rows.stop * num_bytes], num_bytes
+            )
         idx = (rows[:, None] * num_bytes + np.arange(num_bytes)).ravel()
         gathered = np.frombuffer(buf, np.uint8)[idx].tobytes()
         return _unpack_be_uints(gathered, num_bytes)
@@ -550,7 +561,9 @@ def _read_compressed_blocks(
     ``rows`` order. This is what makes an index-selected read cheap —
     a bitmap that keeps 0.1% of a segment's rows should not pay the
     whole column's decompression (blocks are fixed ``size_per`` values,
-    so block membership is pure integer division)."""
+    so block membership is pure integer division). A ``range`` row
+    window decompresses only the blocks covering [start, stop) and
+    slices their concatenation — no per-row index is built."""
     version = data[base]
     (total_size,) = _I32.unpack_from(data, base + 1)
     (size_per,) = _I32.unpack_from(data, base + 5)
@@ -586,6 +599,15 @@ def _read_compressed_blocks(
 
     if rows is not None:
         rows = _check_rows(rows, total_size, "Sliced decode")
+        if isinstance(rows, range):
+            if not rows:
+                return np.empty(0, dtype=out_dtype)
+            first, last = rows.start // size_per, (rows.stop - 1) // size_per
+            run = np.concatenate(
+                [_block_values(b) for b in range(first, last + 1)]
+            )
+            off = first * size_per
+            return run[rows.start - off : rows.stop - off]
         out = np.empty(len(rows), dtype=out_dtype)
         blk_ids = rows // size_per if size_per else rows
         # rows are sorted, so each block's rows form one contiguous run:

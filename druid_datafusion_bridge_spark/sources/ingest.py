@@ -75,41 +75,47 @@ def write_druid_segments(
         import pyarrow as pa
         import pyarrow.compute as pc
 
+        from druid_datafusion_bridge_spark.sources.datasource import (
+            drop_spark_zip_finders,
+        )
         from druid_datafusion_bridge_spark.sources.segment import write_segment
 
-        bucket_ms = key[0].cast(pa.timestamp("ms")).cast(pa.int64()).as_py()
-        shard = int(key[1].as_py())
-        # rows sort by __time then the caller's cluster keys (Druid's
-        # CLUSTERED BY: segment-local row order for locality/rollup)
-        order = [(TIME_COLUMN, "ascending")] + [
-            (c, "ascending") for c in (sort_by or [])
-        ]
-        table = table.drop_columns(["__bucket", "__shard"]).sort_by(order)
-        t_idx = table.column_names.index(TIME_COLUMN)
-        table = table.set_column(
-            t_idx,
-            TIME_COLUMN,
-            # safe=False: sub-millisecond input truncates (Druid stores
-            # epoch millis — reference src/column/time.rs:10-14)
-            table.column(TIME_COLUMN).cast(pa.timestamp("ms"), safe=False),
-        )
-        name = f"segment_{bucket_ms}_{shard:04d}" + (f"_{version}" if version else "")
-        seg_dir = os.path.join(path, name)
-        write_segment(table, seg_dir, dimensions=dimensions)
+        try:
+            bucket_ms = key[0].cast(pa.timestamp("ms")).cast(pa.int64()).as_py()
+            shard = int(key[1].as_py())
+            # rows sort by __time then the caller's cluster keys (Druid's
+            # CLUSTERED BY: segment-local row order for locality/rollup)
+            order = [(TIME_COLUMN, "ascending")] + [
+                (c, "ascending") for c in (sort_by or [])
+            ]
+            table = table.drop_columns(["__bucket", "__shard"]).sort_by(order)
+            t_idx = table.column_names.index(TIME_COLUMN)
+            table = table.set_column(
+                t_idx,
+                TIME_COLUMN,
+                # safe=False: sub-millisecond input truncates (Druid stores
+                # epoch millis — reference src/column/time.rs:10-14)
+                table.column(TIME_COLUMN).cast(pa.timestamp("ms"), safe=False),
+            )
+            name = f"segment_{bucket_ms}_{shard:04d}" + (f"_{version}" if version else "")
+            seg_dir = os.path.join(path, name)
+            write_segment(table, seg_dir, dimensions=dimensions)
 
-        if table.num_rows:
-            mm = pc.min_max(table.column(TIME_COLUMN).cast(pa.int64())).as_py()
-            lo, hi = mm["min"], mm["max"]
-        else:
-            lo = hi = 0
-        return pa.table(
-            {
-                "segment_dir": pa.array([seg_dir], pa.string()),
-                "interval_start_ms": pa.array([lo], pa.int64()),
-                "interval_end_ms": pa.array([hi + 1], pa.int64()),
-                "num_rows": pa.array([table.num_rows], pa.int64()),
-            }
-        )
+            if table.num_rows:
+                mm = pc.min_max(table.column(TIME_COLUMN).cast(pa.int64())).as_py()
+                lo, hi = mm["min"], mm["max"]
+            else:
+                lo = hi = 0
+            return pa.table(
+                {
+                    "segment_dir": pa.array([seg_dir], pa.string()),
+                    "interval_start_ms": pa.array([lo], pa.int64()),
+                    "interval_end_ms": pa.array([hi + 1], pa.int64()),
+                    "num_rows": pa.array([table.num_rows], pa.int64()),
+                }
+            )
+        finally:
+            drop_spark_zip_finders()
 
     bucketed = df.select(
         *data_cols,

@@ -80,14 +80,18 @@ class DruidSegment:
         _, payload = fmt.parse_column_header(data)
         return fmt.compressed_num_elements(data, payload)
 
-    def read_column(self, name: str, rows: np.ndarray | None = None) -> pa.Array:
+    def read_column(
+        self, name: str, rows: np.ndarray | range | None = None
+    ) -> pa.Array:
         """Decode one column; ``rows`` (sorted ascending row ids, e.g.
         from the inverted index) switches every fixed-width layout to
         SLICED decode — only the compressed blocks holding selected
         rows decompress, so an index-selected read costs O(selected
-        blocks), not O(segment). Multi-value strings are the one
-        variable-width layout: their offsets+flat-ids decode fully and
-        the row set applies as a take afterwards."""
+        blocks), not O(segment). A ``range`` is a contiguous row window:
+        the blocks covering it decompress and are sliced, with no
+        per-row index. Multi-value strings are the one variable-width
+        layout: their offsets+flat-ids decode fully and the row set
+        applies as a take (a window as a slice) afterwards."""
         data = self.smoosh.map_file(name)
         desc, payload = fmt.parse_column_header(data)
         vt = desc["valueType"].upper()
@@ -101,7 +105,9 @@ class DruidSegment:
             ).cast(pa.string())
             all_offsets = np.concatenate([[0], offsets]).astype(np.int32)
             arr = pa.ListArray.from_arrays(pa.array(all_offsets), values)
-            if rows is not None:
+            if isinstance(rows, range):
+                arr = arr.slice(rows.start, len(rows))
+            elif rows is not None:
                 arr = arr.take(pa.array(np.asarray(rows, np.int64)))
             return arr
         if vt == "STRING":
@@ -404,7 +410,7 @@ class DruidSegment:
     def read_batch(
         self,
         columns: list[str] | None = None,
-        rows: np.ndarray | None = None,
+        rows: np.ndarray | range | None = None,
     ) -> pa.RecordBatch:
         """Projected decode — only named columns touch IO
         (the reference's sole optimization, table_provider.rs:63,70).

@@ -1775,3 +1775,181 @@ def test_packed_scan_matches_reference_in_at_most_one_task_per_core(
         for stage in tracker.getJobInfo(job).stageIds
     ]
     assert tasks and max(tasks) <= usable_cores()
+
+
+def test_row_windows_decode_as_slices_of_the_whole_segment(tmp_path, monkeypatch):
+    """A row window decodes to exactly rows [start, stop) of the
+    whole-segment decode, for long, double, string and multi-value
+    columns, across block boundaries (blocks of 7 values, ids in blocks
+    of 5), and a dim_eq row set inside a window keeps exactly the
+    window's matching rows (one empty batch when it has none)."""
+    from druid_datafusion_bridge_spark.sources import druid_format as fmt
+    from druid_datafusion_bridge_spark.sources import segment as segment_mod
+
+    real_ints = fmt.write_compressed_ints
+    monkeypatch.setattr(segment_mod, "_LONG_SIZE_PER", 7)
+    monkeypatch.setattr(segment_mod, "_DOUBLE_SIZE_PER", 7)
+    monkeypatch.setattr(
+        fmt,
+        "write_compressed_ints",
+        lambda values, num_bytes=None, size_per=0, strategy=fmt.LZ4: real_ints(
+            values, num_bytes, 5, strategy
+        ),
+    )
+    n = 61
+    sites = ["a", "b", "c", "a", "d"]
+    tags = [["x"], [], None, ["y", "x"], ["z"], ["x", "x", "w"]]
+    write_segment(
+        pa.table(
+            {
+                "__time": pa.array(
+                    [BASE_MS + i for i in range(n)], pa.timestamp("ms")
+                ),
+                "site": pa.array([sites[i % 5] for i in range(n)]),
+                "tags": pa.array(
+                    [tags[i % 6] for i in range(n)], pa.list_(pa.string())
+                ),
+                "count": pa.array([i * 3 - 40 for i in range(n)], pa.int64()),
+                "price": pa.array([i / 7 for i in range(n)], pa.float64()),
+            }
+        ),
+        str(tmp_path / "seg_000"),
+    )
+    seg_dir = str(tmp_path / "seg_000")
+    root = str(tmp_path)
+    reader = DruidSegmentReader(_schema(root), {"path": root})
+
+    def read(**unit) -> dict:
+        task = datasource.ScanTask((datasource.SegmentPartition(seg_dir, **unit),))
+        return pa.Table.from_batches(list(reader.read(task))).to_pydict()
+
+    whole = read()
+    assert len(whole["count"]) == n
+    # the blocks really are 7 values: rows 6..7 span blocks 0 and 1
+    calls = []
+    real_decompress = fmt.decompress_block
+    monkeypatch.setattr(
+        fmt, "decompress_block", lambda *a: calls.append(a) or real_decompress(*a)
+    )
+    seg = segment_mod.DruidSegment(seg_dir)
+    assert seg.read_column("count", rows=range(6, 8)).to_pylist() == [-22, -19]
+    seg.close()
+    assert len(calls) == 2
+    eq = (("site", ("a", "d")),)
+    for start, stop in ((0, n), (0, 7), (6, 8), (7, 14), (20, 21), (13, 50),
+                        (1, 3), (55, n)):
+        got = read(row_range=(start, stop))
+        assert got == {c: v[start:stop] for c, v in whole.items()}, (start, stop)
+        keep = [i for i in range(start, stop) if whole["site"][i] in ("a", "d")]
+        got = read(row_range=(start, stop), eq_filters=eq)
+        assert got == {c: [v[i] for i in keep] for c, v in whole.items()}, (
+            start,
+            stop,
+        )
+
+
+def test_drop_spark_zip_finders_drops_only_install_archives(tmp_path, monkeypatch):
+    """On a worker the helper forgets the cached zipimporters of archives
+    under $SPARK_HOME/python/lib and nothing else: an addPyFile archive
+    under the SparkFiles root keeps its finders, and a module not yet
+    imported from a dropped archive still imports. In the driver, or
+    with no Spark install to name, it does nothing."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from pyspark.core.files import SparkFiles
+
+    from druid_datafusion_bridge_spark.sources.datasource import (
+        drop_spark_zip_finders,
+    )
+
+    home = tmp_path / "spark"
+    lib = home / "python" / "lib"
+    lib.mkdir(parents=True)
+    files = tmp_path / "userFiles"
+    files.mkdir()
+    install_zip = str(lib / "ddbs_fake_install.zip")
+    shipped_zip = str(files / "ddbs_fake_shipped.zip")
+    for path in (install_zip, shipped_zip):
+        pkg = os.path.basename(path)[:-4]
+        with zipfile.ZipFile(path, "w") as zf:
+            zf.writestr(f"{pkg}/__init__.py", "")
+            zf.writestr(f"{pkg}/sub/__init__.py", "X = 1\n")
+            zf.writestr(f"{pkg}/later.py", "Y = 2\n")
+
+    def zip_finders(archive=None) -> dict:
+        return {
+            k: v
+            for k, v in sys.path_importer_cache.items()
+            if isinstance(v, zipimport.zipimporter)
+            and (archive is None or v.archive == archive)
+        }
+
+    monkeypatch.syspath_prepend(install_zip)
+    monkeypatch.syspath_prepend(shipped_zip)
+    try:
+        importlib.import_module("ddbs_fake_install.sub")
+        importlib.import_module("ddbs_fake_shipped.sub")
+        assert zip_finders(install_zip) and zip_finders(shipped_zip)
+        others = {
+            k: v for k, v in sys.path_importer_cache.items()
+            if k not in zip_finders(install_zip)
+        }
+
+        monkeypatch.setenv("SPARK_HOME", str(home))
+        drop_spark_zip_finders()  # driver: a no-op
+        assert zip_finders(install_zip)
+
+        monkeypatch.setattr(SparkFiles, "_is_running_on_worker", True)
+        monkeypatch.setattr(SparkFiles, "_root_directory", str(files))
+        monkeypatch.delenv("SPARK_HOME")
+        drop_spark_zip_finders()  # no SPARK_HOME, pyspark not from a zip here
+        assert zip_finders(install_zip)
+
+        monkeypatch.setenv("SPARK_HOME", str(home))
+        drop_spark_zip_finders()
+        assert zip_finders(install_zip) == {}
+        assert all(sys.path_importer_cache.get(k) is v for k, v in others.items())
+        drop_spark_zip_finders()  # nothing left to drop: a no-op
+        assert importlib.import_module("ddbs_fake_install.later").Y == 2
+    finally:
+        for name in [m for m in sys.modules if m.startswith("ddbs_fake_")]:
+            del sys.modules[name]
+        for key in [k for k in sys.path_importer_cache if k.startswith(str(tmp_path))]:
+            del sys.path_importer_cache[key]
+
+
+def test_scan_task_leaves_no_spark_install_zip_finders(tmp_path):
+    """A reused worker keeps no zipimporter of the Spark install after a
+    druidsegment scan task, so the next task's
+    importlib.invalidate_caches() re-reads no Spark archive. Runs in a
+    local[1] child process so one worker serves every task."""
+    import subprocess
+    import sys
+
+    if not os.environ.get("SPARK_HOME"):
+        pytest.skip("SPARK_HOME is unset: no Spark install to count finders in")
+    write_segment(
+        pa.table(
+            {
+                "__time": pa.array([BASE_MS + i for i in range(5)], pa.timestamp("ms")),
+                "site": pa.array(["a", "b", "a", "c", "a"]),
+            }
+        ),
+        str(tmp_path / "seg_000"),
+    )
+    child = os.path.join(os.path.dirname(os.path.abspath(__file__)), "zip_finder_child.py")
+    out = subprocess.run(
+        [sys.executable, child, str(tmp_path)],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    line = [ln for ln in out.stdout.splitlines() if ln.startswith("FINDERS ")][-1]
+    before, after_scan, second = map(int, line.split()[1:])
+    if before == 0:
+        pytest.skip("workers here cache no Spark-install zipimporter")
+    assert (after_scan, second) == (0, 0), line

@@ -732,6 +732,58 @@ def test_sliced_decode_decompresses_only_needed_blocks(monkeypatch):
     assert len(calls) == 2
 
 
+def test_row_window_decode_slices_only_covering_blocks(monkeypatch):
+    """A ``range`` row window equals full_decode[start:stop] for every
+    layout, and decompresses only the blocks covering it: no per-row
+    index is built. Non-contiguous or out-of-range windows fail
+    loudly."""
+    rng = np.random.default_rng(11)
+    longs = rng.integers(-(2**40), 2**40, 1000, dtype=np.int64)
+    dbls = rng.normal(size=1000)
+    flts = rng.normal(size=1000).astype(np.float32)
+    ints = rng.integers(0, 1 << 20, 1000).astype(np.uint32)
+    cols = [
+        (fmt.write_compressed_longs(longs, size_per=64), fmt.read_compressed_longs,
+         longs),
+        (fmt.write_compressed_doubles(dbls, size_per=64),
+         fmt.read_compressed_doubles, dbls),
+        (fmt.write_compressed_floats(flts, size_per=64),
+         fmt.read_compressed_floats, flts),
+        (fmt.write_compressed_ints(ints, size_per=64), fmt.read_compressed_ints,
+         ints),
+        (fmt.write_vsize_ints(ints, 3), fmt.read_vsize_ints, ints),
+    ]
+    windows = [
+        (0, 1000), (0, 64), (63, 65), (64, 128), (100, 101), (130, 900),
+        (999, 1000), (5, 5),
+    ]
+    for data, read, want in cols:
+        for start, stop in windows:
+            got = read(data, rows=range(start, stop))
+            assert np.array_equal(got, want[start:stop]), (read, start, stop)
+    blobs = [bytes([i % 251]) * (i % 7 + 1) for i in range(100)]
+    data = fmt.write_complex_column(blobs)
+    assert fmt.read_complex_column(data, rows=range(40, 45)) == blobs[40:45]
+
+    calls = []
+    real = fmt.decompress_block
+
+    def counting(strategy, block, out_size):
+        calls.append(out_size)
+        return real(strategy, block, out_size)
+
+    monkeypatch.setattr(fmt, "decompress_block", counting)
+    data = fmt.write_compressed_longs(longs, size_per=64)
+    # rows 100..299 sit in blocks 1..4
+    assert fmt.read_compressed_longs(data, rows=range(100, 300)).tolist() == (
+        longs[100:300].tolist()
+    )
+    assert len(calls) == 4
+    for bad in (range(0, 10, 2), range(-1, 5), range(990, 1001)):
+        with pytest.raises(fmt.DruidFormatError):
+            fmt.read_compressed_longs(data, rows=bad)
+
+
 def test_segment_read_batch_rows_slices_all_column_types(tmp_path):
     """End-to-end: a segment's read_batch(rows=...) must equal the full
     batch take()n to the same rows for string/long/double/float/time."""

@@ -728,6 +728,7 @@ def test_segment_filter_pruning_never_loses_rows(data):
     be a SUPERSET of the rows matching the exact predicates (Spark
     re-applies them), drawn only from the true table. This is the
     acceleration-only contract the options document."""
+    import shutil
     import tempfile
     from unittest import mock
 
@@ -765,125 +766,128 @@ def test_segment_filter_pruning_never_loses_rows(data):
         }
     )
     root = tempfile.mkdtemp(prefix="ddbs_fuzz_seg_")
-    n_segs = data.draw(st.integers(1, 3))
-    cuts = sorted(
-        data.draw(
-            st.lists(st.integers(0, n), min_size=n_segs - 1, max_size=n_segs - 1)
-        )
-    ) + [n]
-    lo_row = 0
-    for i, hi_row in enumerate(cuts):
-        if hi_row > lo_row:
-            write_segment(t.slice(lo_row, hi_row - lo_row),
-                          f"{root}/seg_{i:03d}")
-        lo_row = hi_row
-
-    import json as _json
-
-    options: dict = {"path": root}
-    mask = np.ones(n, bool)
-    varr = np.array(v)
-    if data.draw(st.booleans()):  # numeric window on v
-        lo = data.draw(st.one_of(st.none(), st.integers(-60, 60)))
-        hi = data.draw(st.one_of(st.none(), st.integers(-60, 60)))
-        options["num_range"] = _json.dumps({"v": [lo, hi]})
-        if lo is not None:
-            mask &= varr >= lo
-        if hi is not None:
-            mask &= varr <= hi
-    if data.draw(st.booleans()):  # dim equality on site
-        val = data.draw(st.sampled_from(["a", "b", "c", "dd", "e", "zz"]))
-        options["dim_eq"] = _json.dumps({"site": val})
-        mask &= np.array([s == val for s in sites])
-    if data.draw(st.booleans()):  # lexicographic bound on site
-        blo = data.draw(st.one_of(st.none(), st.sampled_from(["a", "b", "c", "d"])))
-        bhi = data.draw(st.one_of(st.none(), st.sampled_from(["b", "c", "d", "z"])))
-        ls = data.draw(st.booleans())
-        us = data.draw(st.booleans())
-        options["dim_bound"] = _json.dumps({"site": [blo, bhi, ls, us]})
-        for i, s in enumerate(sites):
-            if blo is not None and (s < blo or (ls and s == blo)):
-                mask[i] = False
-            if bhi is not None and (s > bhi or (us and s == bhi)):
-                mask[i] = False
-    if data.draw(st.booleans()):  # dictionary predicate on site
-        opt, needle, match = data.draw(
-            st.sampled_from(
-                [
-                    ("dim_regex", "^[abd]", lambda s: s[0] in "abd"),
-                    ("dim_regex", "d", lambda s: "d" in s),
-                    ("dim_regex", "q", lambda s: False),
-                    ("dim_contains", "d", lambda s: "d" in s),
-                    ("dim_contains", "zz", lambda s: False),
-                    ("dim_icontains", "D", lambda s: "d" in s),
-                ]
+    try:
+        n_segs = data.draw(st.integers(1, 3))
+        cuts = sorted(
+            data.draw(
+                st.lists(st.integers(0, n), min_size=n_segs - 1, max_size=n_segs - 1)
             )
-        )
-        options[opt] = _json.dumps({"site": needle})
-        mask &= np.array([match(s) for s in sites])
-    # row windows (mask unchanged: pure repartitioning — the union over
-    # windows must equal the unwindowed read): a small MIN_WINDOW_ROWS
-    # and core count let the planner cut these tiny segments
-    min_window = datasource.MIN_WINDOW_ROWS
-    cores = datasource.usable_cores()
-    if data.draw(st.booleans()):
-        min_window = data.draw(st.integers(1, n + 5))
-        cores = data.draw(st.integers(1, 8))
-    if data.draw(st.booleans()):  # time interval
-        lo_i = data.draw(st.integers(0, n))
-        hi_i = data.draw(st.integers(0, n))
-        options["time_lower_ms"] = str(base + 1000 * lo_i)
-        options["time_upper_ms"] = str(base + 1000 * hi_i)
-        idx = np.arange(n)
-        mask &= (idx >= lo_i) & (idx <= hi_i)
-    # ordered-limit planning engages on scans with no VALUE filters (a
-    # row-dropping dim/metric filter invalidates the header-count
-    # cover) and composes with the time interval; contract: emitted
-    # rows are a SUPERSET of the k earliest (latest) in-interval rows
-    order_k = None
-    order_desc = False
-    if set(options) <= {
-        "path",
-        "time_lower_ms",
-        "time_upper_ms",
-    } and data.draw(st.booleans()):
-        order_k = data.draw(st.integers(1, n + 3))
-        options["order_limit"] = str(order_k)
-        order_desc = data.draw(st.booleans())
-        if order_desc:
-            options["order_desc"] = "true"
+        ) + [n]
+        lo_row = 0
+        for i, hi_row in enumerate(cuts):
+            if hi_row > lo_row:
+                write_segment(t.slice(lo_row, hi_row - lo_row),
+                              f"{root}/seg_{i:03d}")
+            lo_row = hi_row
 
-    schema = StructType(
-        [
-            StructField("__time", TimestampType()),
-            StructField("v", LongType()),
-            StructField("site", StringType()),
-        ]
-    )
-    reader = DruidSegmentReader(schema, options)
-    with mock.patch.object(
-        datasource, "MIN_WINDOW_ROWS", min_window
-    ), mock.patch.object(datasource, "usable_cores", lambda: cores):
-        tasks = reader.partitions()
-    batches = [b for p in tasks for b in reader.read(p)]
-    emitted_v = [x for b in batches for x in b.column(1).to_pylist()]
-    emitted_times = {
-        x for b in batches for x in b.column(0).cast(pa.int64()).to_pylist()
-    }
-    # microsecond timestamps out of the reader
-    expected_times = {(base + 1000 * i) * 1000 for i in np.flatnonzero(mask)}
-    all_times = {(base + 1000 * i) * 1000 for i in range(n)}
-    if order_k is not None:
-        sel_idx = np.flatnonzero(mask)  # in-interval rows, time order
-        sel = sel_idx[-order_k:] if order_desc else sel_idx[:order_k]
-        topk = {(base + 1000 * int(i)) * 1000 for i in sel}
-        assert topk <= emitted_times, "ordered-limit lost top-k rows"
-    else:
-        assert (
-            expected_times <= emitted_times
-        ), "acceleration lost matching rows"
-    assert emitted_times <= all_times, "reader invented rows"
-    assert len(emitted_v) == len(emitted_times)
+        import json as _json
+
+        options: dict = {"path": root}
+        mask = np.ones(n, bool)
+        varr = np.array(v)
+        if data.draw(st.booleans()):  # numeric window on v
+            lo = data.draw(st.one_of(st.none(), st.integers(-60, 60)))
+            hi = data.draw(st.one_of(st.none(), st.integers(-60, 60)))
+            options["num_range"] = _json.dumps({"v": [lo, hi]})
+            if lo is not None:
+                mask &= varr >= lo
+            if hi is not None:
+                mask &= varr <= hi
+        if data.draw(st.booleans()):  # dim equality on site
+            val = data.draw(st.sampled_from(["a", "b", "c", "dd", "e", "zz"]))
+            options["dim_eq"] = _json.dumps({"site": val})
+            mask &= np.array([s == val for s in sites])
+        if data.draw(st.booleans()):  # lexicographic bound on site
+            blo = data.draw(st.one_of(st.none(), st.sampled_from(["a", "b", "c", "d"])))
+            bhi = data.draw(st.one_of(st.none(), st.sampled_from(["b", "c", "d", "z"])))
+            ls = data.draw(st.booleans())
+            us = data.draw(st.booleans())
+            options["dim_bound"] = _json.dumps({"site": [blo, bhi, ls, us]})
+            for i, s in enumerate(sites):
+                if blo is not None and (s < blo or (ls and s == blo)):
+                    mask[i] = False
+                if bhi is not None and (s > bhi or (us and s == bhi)):
+                    mask[i] = False
+        if data.draw(st.booleans()):  # dictionary predicate on site
+            opt, needle, match = data.draw(
+                st.sampled_from(
+                    [
+                        ("dim_regex", "^[abd]", lambda s: s[0] in "abd"),
+                        ("dim_regex", "d", lambda s: "d" in s),
+                        ("dim_regex", "q", lambda s: False),
+                        ("dim_contains", "d", lambda s: "d" in s),
+                        ("dim_contains", "zz", lambda s: False),
+                        ("dim_icontains", "D", lambda s: "d" in s),
+                    ]
+                )
+            )
+            options[opt] = _json.dumps({"site": needle})
+            mask &= np.array([match(s) for s in sites])
+        # row windows (mask unchanged: pure repartitioning — the union over
+        # windows must equal the unwindowed read): a small MIN_WINDOW_ROWS
+        # and core count let the planner cut these tiny segments
+        min_window = datasource.MIN_WINDOW_ROWS
+        cores = datasource.usable_cores()
+        if data.draw(st.booleans()):
+            min_window = data.draw(st.integers(1, n + 5))
+            cores = data.draw(st.integers(1, 8))
+        if data.draw(st.booleans()):  # time interval
+            lo_i = data.draw(st.integers(0, n))
+            hi_i = data.draw(st.integers(0, n))
+            options["time_lower_ms"] = str(base + 1000 * lo_i)
+            options["time_upper_ms"] = str(base + 1000 * hi_i)
+            idx = np.arange(n)
+            mask &= (idx >= lo_i) & (idx <= hi_i)
+        # ordered-limit planning engages on scans with no VALUE filters (a
+        # row-dropping dim/metric filter invalidates the header-count
+        # cover) and composes with the time interval; contract: emitted
+        # rows are a SUPERSET of the k earliest (latest) in-interval rows
+        order_k = None
+        order_desc = False
+        if set(options) <= {
+            "path",
+            "time_lower_ms",
+            "time_upper_ms",
+        } and data.draw(st.booleans()):
+            order_k = data.draw(st.integers(1, n + 3))
+            options["order_limit"] = str(order_k)
+            order_desc = data.draw(st.booleans())
+            if order_desc:
+                options["order_desc"] = "true"
+
+        schema = StructType(
+            [
+                StructField("__time", TimestampType()),
+                StructField("v", LongType()),
+                StructField("site", StringType()),
+            ]
+        )
+        reader = DruidSegmentReader(schema, options)
+        with mock.patch.object(
+            datasource, "MIN_WINDOW_ROWS", min_window
+        ), mock.patch.object(datasource, "usable_cores", lambda: cores):
+            tasks = reader.partitions()
+        batches = [b for p in tasks for b in reader.read(p)]
+        emitted_v = [x for b in batches for x in b.column(1).to_pylist()]
+        emitted_times = {
+            x for b in batches for x in b.column(0).cast(pa.int64()).to_pylist()
+        }
+        # microsecond timestamps out of the reader
+        expected_times = {(base + 1000 * i) * 1000 for i in np.flatnonzero(mask)}
+        all_times = {(base + 1000 * i) * 1000 for i in range(n)}
+        if order_k is not None:
+            sel_idx = np.flatnonzero(mask)  # in-interval rows, time order
+            sel = sel_idx[-order_k:] if order_desc else sel_idx[:order_k]
+            topk = {(base + 1000 * int(i)) * 1000 for i in sel}
+            assert topk <= emitted_times, "ordered-limit lost top-k rows"
+        else:
+            assert (
+                expected_times <= emitted_times
+            ), "acceleration lost matching rows"
+        assert emitted_times <= all_times, "reader invented rows"
+        assert len(emitted_v) == len(emitted_times)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 @given(data=st.data())
