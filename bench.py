@@ -48,7 +48,9 @@ from druid_datafusion_bridge_spark.sources.datasource import usable_cores
 # Representative, scale-sensitive subset: scan-agg, wide-agg, multi-join,
 # star join, filter-agg, time rollup, window, top-k per group, dedup LSH,
 # similarity top-k, text stats, 7-table broadcast star, window-over-agg,
-# Druid-SQL compat functions, two-phase TopN (the Arrow/mapInPandas path).
+# Druid-SQL compat functions, two-phase TopN (per-partition hash aggregate
+# plus a row_number window, then a global aggregate). None of these runs a
+# Python exec or a DataSource scan.
 HEADLINE = [
     "flagship_rollup",
     "q1_pricing_summary",

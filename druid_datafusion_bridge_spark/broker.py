@@ -83,6 +83,12 @@ engine without modification:
   whose segments moved under it (externally published segments are
   visible on the next request, like a real broker's view sync).
 
+Every query surface (native, ``/druid/v2/sql``, Avatica, async
+statements, MSQ SELECT tasks) takes one path: ``_serve`` (serve-fresh
+check, then the result cache), ``_run_sql`` (the one SQL executor) and
+``broker_util._collect_capped`` (the one ``max_rows`` gate). Per-query
+concerns such as request logging or segment pruning belong there.
+
 Deliberately a THIN shim: one process, synchronous handlers (Spark
 queries already parallelize internally; the ThreadingHTTPServer keeps
 slow queries from blocking health probes). It is the integration
@@ -113,12 +119,12 @@ from .broker_util import (
     _INFO_SCHEMA_RE,
     _QueryCancelled,
     _QueryTimeout,
-    _ResourceLimitExceeded,
     _ResultCache,
     _SQL_LITERAL_RE,
     _SYS_TABLE_RE,
     _VOLATILE_SQL_RE,
     _bind_params,
+    _collect_capped,
     _druid_types,
     _json_safe,
     _native_datasource_names,
@@ -126,7 +132,6 @@ from .broker_util import (
     _native_lookup_names,
     _native_registered_lookup_names,
     _rewrite_system_tables,
-    _rows_json,
     _segment_state_digest,
     _word_in_sql,
     sys_segments_frame,
@@ -237,7 +242,7 @@ class DruidBrokerShim(CoordinatorAPIMixin, OverlordAPIMixin):
         # JDBC surface: Avatica JSON RPC at /druid/v2/sql/avatica
         from .avatica import AvaticaEndpoint
 
-        self._avatica = AvaticaEndpoint(self._avatica_run_sql)
+        self._avatica = AvaticaEndpoint(self._serve_sql)
 
         from .functions import (
             register_druid_sql_functions,
@@ -476,102 +481,102 @@ class DruidBrokerShim(CoordinatorAPIMixin, OverlordAPIMixin):
             out[n] = d
         return out
 
-    def _datasource_digests(
-        self, names: list[str] | None, fresh: dict[str, str]
-    ) -> tuple | None:
-        """(name, digest) per referenced datasource, or None when any
-        referenced datasource is not a segment root (no invalidation
-        signal exists for plain registered DataFrames — don't cache)."""
-        if not names:
-            return None
-        uniq = list(dict.fromkeys(names))
-        if any(n not in fresh for n in uniq):
-            return None
-        # retention epoch rides in the key: a rule/markUnused flip
-        # changes served rows without moving any root digest
-        return tuple((n, fresh[n]) for n in uniq) + (
-            ("__retention_epoch__", str(self._retention_epoch)),
-        )
-
-    def _handle_native(self, body: dict) -> list[dict]:
-        ctx = body.get("context") or {}
+    def _serve(self, names: list[str] | None, compute,
+               ctx: dict | None = None, key: tuple | None = None):
+        """The one serve wrapper every query surface runs through:
+        the serve-fresh check for the referenced datasources (``names``
+        None = every root), then ``compute()`` behind Druid's broker
+        result cache (using-caching.md; context ``useCache`` /
+        ``populateCache``, default true). ``key`` is the caller's
+        cache-key material; Avatica, async statements and SELECT tasks
+        pass none. A result is cached only when every referenced
+        datasource is a segment root: plain registered DataFrames have
+        no invalidation signal, while a root's state digest in the key
+        makes ingest/compaction invalidate implicitly."""
+        fresh = self._ensure_fresh_roots(names)
+        ctx = ctx or {}
         use = bool(ctx.get("useCache", True))
         populate = bool(ctx.get("populateCache", True))
-        names = _native_datasource_names(body.get("dataSource"))
-        fresh = self._ensure_fresh_roots(names)
-        key = None
-        if (use or populate) and self._result_cache.max_entries:
-            digs = (
-                self._datasource_digests(names, fresh)
-                if names is not None else None
-            )
-            if digs is not None:
-                # lookup datasources AND registeredLookup extractionFns
-                # are broker state: their versions join the key so a
-                # config POST invalidates implicitly
-                lk = _native_lookup_names(
-                    body.get("dataSource")
-                ) + _native_registered_lookup_names(body)
-                if lk:
-                    digs = digs + tuple(
-                        (f"__lookup__:{n}",
-                         self._lookup_versions.get(n, "0"))
-                        for n in sorted(set(lk))
-                    )
-                # execution-only context keys stay OUT of the key;
-                # result-shaping ones (skipEmptyBuckets, grandTotal, ...)
-                # stay IN — two semantically different queries must
-                # never share a cache entry
-                ctx_key = {
-                    k: v
-                    for k, v in ctx.items()
-                    if k not in (
-                        "useCache", "populateCache", "timeout",
-                        "priority", "queryId",
-                    )
-                }
-                key = (
-                    "native",
-                    json.dumps(
-                        {
-                            **{
-                                k: v
-                                for k, v in body.items()
-                                if k != "context"
-                            },
-                            "context": ctx_key,
-                        },
-                        sort_keys=True,
-                    ),
-                    digs,
-                )
-        if key is not None and use:
+        uniq = list(dict.fromkeys(names or ()))
+        if not (
+            key and uniq and (use or populate)
+            and self._result_cache.max_entries
+            and all(n in fresh for n in uniq)
+        ):
+            return compute()
+        # the retention epoch rides in the key: a rule/markUnused flip
+        # changes served rows without moving any root digest
+        key += (
+            tuple((n, fresh[n]) for n in uniq), self._retention_epoch
+        )
+        if use:
             with self._lock:
                 cached = self._result_cache.get(key)
             if cached is not None:
                 return cached
-        df = native_query(
-            None, body, time_col=self.time_col, tables=self.tables,
-            lookups=self._lookups,
-        )
-        out = _native_envelope(body, _rows_json(df, self.max_rows))
-        if key is not None and populate:
+        out = compute()
+        if populate:
             with self._lock:
                 self._result_cache.put(key, out)
         return out
 
-    def _handle_sql(self, body: dict) -> tuple[bytes, str]:
-        """Result-level cache wrapper around :meth:`_render_sql`
-        (Druid's broker result cache, using-caching.md; context flags
-        ``useCache``/``populateCache``, default true). Cacheable iff
-        every referenced table is a segment root (the root-state digest
-        in the key makes ingest/compaction invalidate implicitly), the
-        query references no sys./INFORMATION_SCHEMA view, isn't
-        EXPLAIN, and contains no volatile function token."""
+    def _handle_native(self, body: dict) -> list[dict]:
         ctx = body.get("context") or {}
-        use = bool(ctx.get("useCache", True))
-        populate = bool(ctx.get("populateCache", True))
-        key = None
+        # lookup datasources AND registeredLookup extractionFns are
+        # broker state: their versions join the key so a config POST
+        # invalidates implicitly
+        lk = _native_lookup_names(
+            body.get("dataSource")
+        ) + _native_registered_lookup_names(body)
+        # execution-only context keys stay OUT of the key; result-
+        # shaping ones (skipEmptyBuckets, grandTotal, ...) stay IN —
+        # two semantically different queries must never share an entry
+        ctx_key = {
+            k: v
+            for k, v in ctx.items()
+            if k not in (
+                "useCache", "populateCache", "timeout", "priority",
+                "queryId",
+            )
+        }
+        key = (
+            "native",
+            json.dumps(
+                {
+                    **{k: v for k, v in body.items() if k != "context"},
+                    "context": ctx_key,
+                },
+                sort_keys=True,
+            ),
+            tuple(
+                (f"__lookup__:{n}", self._lookup_versions.get(n, "0"))
+                for n in sorted(set(lk))
+            ),
+        )
+
+        def compute() -> list[dict]:
+            df = native_query(
+                None, body, time_col=self.time_col, tables=self.tables,
+                lookups=self._lookups,
+            )
+            return _native_envelope(body, [
+                {
+                    k: _json_safe(v)
+                    for k, v in row.asDict(recursive=True).items()
+                }
+                for row in _collect_capped(df, self.max_rows)
+            ])
+
+        return self._serve(
+            _native_datasource_names(body.get("dataSource")), compute,
+            ctx, key,
+        )
+
+    def _handle_sql(self, body: dict) -> tuple[bytes, str]:
+        """POST /druid/v2/sql: :meth:`_run_sql` encoded by
+        :meth:`_render_sql`, served through :meth:`_serve`. Cacheable
+        iff the query references no sys./INFORMATION_SCHEMA view, isn't
+        EXPLAIN, and contains no volatile function token."""
         sql_text = body.get("query", "")
         if re.match(r"\s*(INSERT|REPLACE)\s+INTO\b", sql_text, re.I):
             # same split as real Druid: the interactive SQL endpoint
@@ -580,47 +585,82 @@ class DruidBrokerShim(CoordinatorAPIMixin, OverlordAPIMixin):
                 "INSERT/REPLACE statements must be submitted to "
                 "POST /druid/v2/sql/task"
             )
+        fmt = body.get("resultFormat", "object")
+        if fmt not in (
+            "object", "array", "objectLines", "arrayLines", "csv"
+        ):
+            raise ValueError(f"unsupported resultFormat {fmt!r}")
         stripped = _SQL_LITERAL_RE.sub(" ", sql_text)
-        names = [t for t in self.tables if _word_in_sql(t, sql_text)]
-        # a sys.* introspection must also see externally-published
-        # segments, so it refreshes every root
-        fresh = self._ensure_fresh_roots(
-            None if _SYS_TABLE_RE.search(stripped) else names
+        key = None
+        if not (
+            _EXPLAIN_RE.match(sql_text)
+            or _VOLATILE_SQL_RE.search(stripped)
+            or _SYS_TABLE_RE.search(stripped)
+            or _INFO_SCHEMA_RE.search(stripped)
+        ):
+            key = (
+                "sql",
+                sql_text,
+                fmt,
+                bool(body.get("header", False)),
+                bool(body.get("typesHeader", False)),
+                bool(body.get("sqlTypesHeader", False)),
+                json.dumps(body.get("parameters"), sort_keys=True),
+            )
+        return self._serve(
+            self._sql_datasources(sql_text),
+            lambda: self._render_sql(
+                body, *self._run_sql(body["query"], _bind_params(body))
+            ),
+            body.get("context"),
+            key,
         )
-        # also rebuilds sys.supervisors at read time, so SQL agrees
-        # with the /status endpoint when handoff-thread state flips
-        self._reclaim_meta_views(stripped)
-        if (use or populate) and self._result_cache.max_entries:
-            if not (
-                _EXPLAIN_RE.match(sql_text)
-                or _VOLATILE_SQL_RE.search(stripped)
-                or _SYS_TABLE_RE.search(stripped)
-                or _INFO_SCHEMA_RE.search(stripped)
-            ):
-                digs = self._datasource_digests(names, fresh)
-                if digs is not None:
-                    key = (
-                        "sql",
-                        sql_text,
-                        body.get("resultFormat", "object"),
-                        bool(body.get("header", False)),
-                        bool(body.get("typesHeader", False)),
-                        bool(body.get("sqlTypesHeader", False)),
-                        json.dumps(
-                            body.get("parameters"), sort_keys=True
-                        ),
-                        digs,
-                    )
-        if key is not None and use:
-            with self._lock:
-                cached = self._result_cache.get(key)
-            if cached is not None:
-                return cached
-        out = self._render_sql(body)
-        if key is not None and populate:
-            with self._lock:
-                self._result_cache.put(key, out)
-        return out
+
+    def _serve_sql(self, sql: str, args: list | None) -> tuple:
+        """(fields, rows) of a SQL query served uncached — the Avatica,
+        async-statement and SELECT-task surfaces."""
+        return self._serve(
+            self._sql_datasources(sql), lambda: self._run_sql(sql, args)
+        )
+
+    def _sql_datasources(self, sql: str) -> list[str] | None:
+        """The registered datasources a SQL text names; None (every
+        root) when it reads a sys.* view, which must also see
+        externally-published segments."""
+        if _SYS_TABLE_RE.search(_SQL_LITERAL_RE.sub(" ", sql)):
+            return None
+        return [t for t in self.tables if _word_in_sql(t, sql)]
+
+    def _run_sql(self, sql: str, args: list | None) -> tuple:
+        """The one SQL executor: returns (schema fields, rows) for every
+        SQL surface. Re-registers the metadata views the text reads
+        (which also rebuilds sys.supervisors at read time, so SQL agrees
+        with the /status endpoint), rewrites Druid's qualified names and
+        functions, and collects through the max_rows gate. ``EXPLAIN
+        PLAN FOR <query>`` answers Druid's plan-introspection row
+        (PLAN/RESOURCES/ATTRIBUTES) with the engine's physical plan."""
+        from pyspark.sql.types import StringType, StructField
+
+        self._reclaim_meta_views(_SQL_LITERAL_RE.sub(" ", sql))
+        sql = _rewrite_system_tables(sql)
+        m = _EXPLAIN_RE.match(sql)
+        df = self.spark.sql(sql[m.end():] if m else sql, args=args)
+        if m is None:
+            return df.schema.fields, _collect_capped(df, self.max_rows)
+        from .plans import formatted_plan
+
+        return (
+            [StructField(c, StringType())
+             for c in ("PLAN", "RESOURCES", "ATTRIBUTES")],
+            [(
+                formatted_plan(df),
+                json.dumps([
+                    {"name": t, "type": "DATASOURCE"}
+                    for t in sorted(self.tables) if _word_in_sql(t, sql)
+                ]),
+                json.dumps({"statementType": "SELECT"}),
+            )],
+        )
 
     def _reclaim_meta_views(self, stripped_sql: str) -> None:
         """The sys_* / information_schema_* temp views are
@@ -633,7 +673,7 @@ class DruidBrokerShim(CoordinatorAPIMixin, OverlordAPIMixin):
             with self._lock:
                 self._register_information_schema()
         # rebuild only the views the SQL references: sys.segments
-        # costs a per-root manifest read (size-cached), and a query
+        # costs a per-root manifest read, and a query
         # over sys.tasks must not pay it
         referenced = {
             m.lower() for m in _SYS_TABLE_RE.findall(stripped_sql)
@@ -659,26 +699,6 @@ class DruidBrokerShim(CoordinatorAPIMixin, OverlordAPIMixin):
                     self._refresh_sys_servers(inventory)
                 if "server_segments" in referenced:
                     self._refresh_sys_server_segments(inventory)
-
-    def _avatica_run_sql(self, sql: str, args: list | None) -> tuple:
-        """SQL execution for the Avatica endpoint: the same
-        serve-fresh, system-table-rewrite, and resource-limit
-        discipline as /druid/v2/sql, returning (schema fields,
-        collected rows) for the RPC layer to encode."""
-        stripped = _SQL_LITERAL_RE.sub(" ", sql)
-        names = [t for t in self.tables if _word_in_sql(t, sql)]
-        self._ensure_fresh_roots(
-            None if _SYS_TABLE_RE.search(stripped) else names
-        )
-        self._reclaim_meta_views(stripped)
-        df = self.spark.sql(_rewrite_system_tables(sql), args=args)
-        collected = df.limit(self.max_rows + 1).collect()
-        if len(collected) > self.max_rows:
-            raise _ResourceLimitExceeded(
-                f"result exceeds maxRows limit of {self.max_rows}; "
-                f"add a LIMIT or raise the broker's max_rows"
-            )
-        return df.schema.fields, collected
 
     def _lane_slot(self, body):
         """Context manager claiming a slot in the query's lane (from
@@ -709,8 +729,10 @@ class DruidBrokerShim(CoordinatorAPIMixin, OverlordAPIMixin):
 
         return slot()
 
-    def _render_sql(self, body: dict) -> tuple[bytes, str]:
-        """Run a SQL body; return (payload bytes, content type).
+    def _render_sql(
+        self, body: dict, fields: list, collected: list
+    ) -> tuple[bytes, str]:
+        """Encode a SQL result as (payload bytes, content type).
 
         Serves every documented resultFormat of Druid's SQL API
         (api-reference.md): object (default), array, objectLines,
@@ -718,49 +740,15 @@ class DruidBrokerShim(CoordinatorAPIMixin, OverlordAPIMixin):
         column-name row in the format's own shape, and
         ``typesHeader``/``sqlTypesHeader`` type rows. Line formats end
         with a blank line (Druid's completion marker) and csv quotes
-        per RFC 4180 with NULL as the empty field. ``EXPLAIN PLAN
-        FOR <query>`` answers Druid's plan-introspection shape
-        (PLAN/RESOURCES/ATTRIBUTES) with the engine's physical plan.
+        per RFC 4180 with NULL as the empty field.
         """
         fmt = body.get("resultFormat", "object")
-        if fmt not in (
-            "object", "array", "objectLines", "arrayLines", "csv"
-        ):
-            raise ValueError(f"unsupported resultFormat {fmt!r}")
-        args = _bind_params(body)
-        sql = _rewrite_system_tables(body["query"])
-        m = _EXPLAIN_RE.match(sql)
-        if m:
-            from .plans import formatted_plan
-
-            df = self.spark.sql(sql[m.end():], args=args)
-            cols = ["PLAN", "RESOURCES", "ATTRIBUTES"]
-            vals = [[
-                formatted_plan(df),
-                json.dumps([
-                    {"name": t, "type": "DATASOURCE"}
-                    for t in sorted(self.tables)
-                    if _word_in_sql(t, sql)
-                ]),
-                json.dumps({"statementType": "SELECT"}),
-            ]]
-            types = [("STRING", "VARCHAR")] * 3
-        else:
-            df = self.spark.sql(sql, args=args)
-            cols = df.columns
-            # positional materialization: duplicate output column names
-            # (SELECT a AS x, b AS x) must survive into the array-shaped
-            # formats; only JSON objects inherently collapse them
-            # collect max_rows+1: a result that exceeds the cap errors
-            # (Druid's resource-limit posture), never silently truncates
-            collected = df.limit(self.max_rows + 1).collect()
-            if len(collected) > self.max_rows:
-                raise _ResourceLimitExceeded(
-                    f"result exceeds maxRows limit of {self.max_rows}; "
-                    f"add a LIMIT or raise the broker's max_rows"
-                )
-            vals = [[_json_safe(v) for v in row] for row in collected]
-            types = [_druid_types(f.dataType) for f in df.schema.fields]
+        # positional materialization: duplicate output column names
+        # (SELECT a AS x, b AS x) must survive into the array-shaped
+        # formats; only JSON objects inherently collapse them
+        cols = [f.name for f in fields]
+        vals = [[_json_safe(v) for v in row] for row in collected]
+        types = [_druid_types(f.dataType) for f in fields]
         rows = [dict(zip(cols, r)) for r in vals]
         header = bool(body.get("header", False))
         want_t = header and bool(body.get("typesHeader", False))

@@ -1,8 +1,8 @@
 """Coordinator-API mixin for the broker shim: retention rules and the
 retention/auto-compaction duty loop, lookup-config management, segment
 metadata (mark used/unused, kill, drill-downs), and the coordinator
-datasource views. Pure move out of broker.py (r10) — every method runs
-on the DruidBrokerShim instance exactly as before."""
+datasource views. Every method runs on the DruidBrokerShim instance
+and reads its segment roots, rules and lookup state."""
 
 from __future__ import annotations
 
@@ -31,8 +31,7 @@ _DYNAMIC_CONFIG_DEFAULTS = {
 
 
 class CoordinatorAPIMixin:
-    """Coordinator-plane methods of :class:`DruidBrokerShim` (split out
-    of broker.py at 3.5k lines; behavior unchanged)."""
+    """Coordinator-plane methods of :class:`DruidBrokerShim`."""
 
     def _get_dynamic_config(self) -> dict:
         """GET /druid/coordinator/v1/config: defaults overlaid with any

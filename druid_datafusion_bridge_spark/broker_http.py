@@ -1,8 +1,9 @@
-"""HTTP request handler for the broker shim: route dispatch for the
-whole Druid service surface (broker /druid/v2 + SQL, coordinator,
-overlord, sys/INFORMATION_SCHEMA, status endpoints). Pure move out of
-broker.py (r10): `make_handler(shim)` is the former
-DruidBrokerShim._make_handler, unchanged."""
+"""HTTP request handler for the broker shim: ``make_handler(shim)``
+builds the request handler class that routes the whole Druid service
+surface (broker /druid/v2 + SQL, Avatica, coordinator, overlord,
+status endpoints) onto the shim's methods, applies query laning and
+``context.timeout``/cancellation, and maps the query-lifecycle
+exceptions onto Druid's HTTP error envelopes."""
 
 from __future__ import annotations
 

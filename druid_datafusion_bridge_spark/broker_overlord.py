@@ -1,8 +1,9 @@
 """Overlord-API mixin for the broker shim: task submission and
 lifecycle (index_parallel/kill/compact), the MSQ-style sql/task and
 sql/statements endpoints, EXTERN resolution, and streaming supervisor
-submission. Pure move out of broker.py (r10) — every method runs on
-the DruidBrokerShim instance exactly as before."""
+submission. Every method runs on the DruidBrokerShim instance; SELECT
+tasks and statements run their SQL through the broker's one query path
+(``_serve_sql``)."""
 
 from __future__ import annotations
 
@@ -24,8 +25,7 @@ from .broker_util import (
 
 
 class OverlordAPIMixin:
-    """Overlord-plane methods of :class:`DruidBrokerShim` (split out of
-    broker.py at 3.5k lines; behavior unchanged)."""
+    """Overlord-plane methods of :class:`DruidBrokerShim`."""
 
     def _handle_sql_ingest(self, body: dict) -> dict:
         """POST /druid/v2/sql/task — Druid's SQL-based (MSQ) ingestion
@@ -275,7 +275,7 @@ class OverlordAPIMixin:
         )
         t0 = time.monotonic()
         try:
-            fields, rows = self._avatica_run_sql(
+            fields, rows = self._serve_sql(
                 self._resolve_extern(sql), args
             )
             status = {
@@ -401,7 +401,7 @@ class OverlordAPIMixin:
                 # (sql-ingestion.md: EXTERN in SELECT runs on sql/task
                 # or sql/statements, never interactive /druid/v2/sql)
                 # — resolve TABLE(EXTERN(...)) here like sql/task does
-                fields, rows = self._avatica_run_sql(
+                fields, rows = self._serve_sql(
                     self._resolve_extern(sql), args
                 )
                 with self._lock:

@@ -1,9 +1,9 @@
 """Broker-shim shared utilities: SQL-text helpers, the Druid wire
-renderers (rows/envelopes/type names), sys.segments frame builder, the
-result cache, segment-state digests, native dataSource tree walkers,
-and the query-lifecycle exceptions. Pure functions/state holders split
-out of broker.py (r10) so the coordinator/overlord/HTTP handler modules
-can share them without importing the server class."""
+renderers (envelopes/type names), the ``max_rows`` gate, the
+sys.segments frame builder, the result cache, segment-state digests,
+native dataSource tree walkers, and the query-lifecycle exceptions —
+pure functions and state holders the coordinator/overlord/HTTP handler
+modules share without importing the server class."""
 
 from __future__ import annotations
 
@@ -263,23 +263,20 @@ def _json_safe(v: Any) -> Any:
     return str(v)
 
 
-def _rows_json(df: DataFrame, limit: int) -> list[dict[str, Any]]:
-    """Collect as JSON-safe row dicts. ``limit`` bounds the driver-side
-    collect — the broker is a serving endpoint, not an export path. A
-    result that EXCEEDS the limit raises (Druid's resource-limit
-    posture: all rows or an error, never a silently partial response)
-    — detected by collecting limit+1, so at most one extra row crosses
-    the driver boundary."""
+def _collect_capped(df: DataFrame, limit: int) -> list:
+    """The broker's one ``max_rows`` gate: collect ``df``'s rows, or
+    raise when there are more than ``limit`` (Druid's resource-limit
+    posture: all rows or an error, never a silently partial response
+    — the broker is a serving endpoint, not an export path). Collects
+    limit+1, so at most one extra row crosses the driver boundary.
+    Every query surface collects through here."""
     rows = df.limit(limit + 1).collect()
     if len(rows) > limit:
         raise _ResourceLimitExceeded(
             f"result exceeds maxRows limit of {limit}; add a LIMIT or "
             f"raise the broker's max_rows"
         )
-    return [
-        {k: _json_safe(v) for k, v in row.asDict(recursive=True).items()}
-        for row in rows
-    ]
+    return rows
 
 
 def _native_envelope(spec: dict, rows: list[dict]) -> list[dict]:
@@ -385,25 +382,26 @@ class _ResultCache:
 
 
 def _segment_state_digest(root: str) -> str | None:
-    """Identity of a segment root's current state: sorted (segment
-    name, meta.smoosh size, mtime_ns) — the same identity the planning
-    manifest uses, O(#segments) stats with zero segment opens. Any
-    rewrite, handoff, or compaction swap changes it."""
+    """Identity of a segment root's current state: a digest of every
+    segment's name and ``segment_identity`` — O(#segments) stats with
+    zero segment opens. Any rewrite, handoff, or compaction swap
+    changes it; None when a segment cannot be stat'ed."""
     import hashlib
     import os
 
-    from .sources.datasource import find_segment_dirs
+    from .sources.datasource import find_segment_dirs, segment_identity
 
     try:
-        parts = []
-        for seg_dir in find_segment_dirs(root):
-            st = os.stat(os.path.join(seg_dir, "meta.smoosh"))
-            parts.append(
-                f"{os.path.basename(seg_dir)}:{st.st_size}:{st.st_mtime_ns}"
-            )
+        idents = {
+            os.path.basename(d): segment_identity(d)
+            for d in find_segment_dirs(root)
+        }
     except OSError:
         return None
-    return hashlib.md5("|".join(sorted(parts)).encode()).hexdigest()
+    if None in idents.values():
+        return None
+    parts = sorted(f"{n}:{s}:{m}" for n, (s, m) in idents.items())
+    return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 
 def _native_datasource_names(ds: Any) -> list[str] | None:

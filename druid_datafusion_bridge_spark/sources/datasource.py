@@ -252,6 +252,19 @@ def find_segment_dirs(path: str) -> list[str]:
 PLANMETA_NAME = "_planmeta.json"
 
 
+def segment_identity(seg_dir: str) -> list | None:
+    """A segment's on-disk identity, ``[meta.smoosh size, mtime_ns]``
+    (every rewrite rewrites meta.smoosh), or None when it cannot be
+    stat'ed. The planning manifest validates its entries by it and the
+    broker's root-state digest is built from it, so the two can never
+    disagree on whether a segment changed."""
+    try:
+        st = os.stat(os.path.join(seg_dir, "meta.smoosh"))
+    except OSError:
+        return None
+    return [st.st_size, st.st_mtime_ns]
+
+
 def _segment_version_key(name: str) -> tuple:
     """Natural-order sort key for a segment's VERSION tag — the part
     of the writer's ``segment_{bucket}_{shard}[_{version}]`` name after
@@ -447,19 +460,12 @@ def load_plan_meta(root: str, seg_dirs: list[str]) -> dict[str, dict]:
     except (OSError, ValueError):
         cached = {}
 
-    def identity(seg_dir: str) -> list | None:
-        try:
-            st = os.stat(os.path.join(seg_dir, "meta.smoosh"))
-        except OSError:
-            return None
-        return [st.st_size, st.st_mtime_ns]
-
     out: dict[str, dict] = {}
     fresh: dict[str, dict] = {}
     dirty = False
     for seg_dir in seg_dirs:
         name = os.path.basename(seg_dir)
-        ident = identity(seg_dir)
+        ident = segment_identity(seg_dir)
         entry = cached.get(name)
         if entry is None or ident is None or entry.get("id") != ident:
             seg = DruidSegment(seg_dir)

@@ -549,6 +549,8 @@ def test_error_envelope(shim):
 def test_result_over_max_rows_errors_not_truncates(spark):
     """A result exceeding max_rows must raise Druid's Resource-limit
     error (HTTP 400), never return a silently partial response."""
+    import time
+
     df = spark.range(10).select(
         F.lit("2024-01-01 00:00:00").cast("timestamp").alias("__time"),
         F.col("id"),
@@ -570,6 +572,69 @@ def test_result_over_max_rows_errors_not_truncates(spark):
         rows = _post(base + "/druid/v2/sql", {
             "query": "SELECT id FROM t10 WHERE id < 5"})
         assert len(rows) == 5
+        # Avatica and async statements pass the same gate
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _post(base + "/druid/v2/sql/avatica", {
+                "request": "prepareAndExecute", "connectionId": "c",
+                "statementId": 1, "sql": "SELECT id FROM t10"})
+        assert "maxRows limit of 5" in json.loads(
+            ei.value.read())["errorMessage"]
+        sid = _post(base + "/druid/v2/sql/statements", {
+            "query": "SELECT id FROM t10"})["queryId"]
+        for _ in range(120):
+            st = _get(base + f"/druid/v2/sql/statements/{sid}")
+            if st["state"] != "RUNNING":
+                break
+            time.sleep(0.25)
+        assert st["state"] == "FAILED"
+        assert "maxRows limit of 5" in st["errorDetails"]["errorMessage"]
+    finally:
+        s.stop()
+
+
+def test_one_freshness_walk_per_root_per_request(spark, tmp_path,
+                                                  monkeypatch):
+    """Native and SQL queries each stat a referenced segment root's
+    state exactly once per request (perfbench's broker.freshness span
+    wraps this module global, so a doubled walk would show there)."""
+    from druid_datafusion_bridge_spark import broker
+    from druid_datafusion_bridge_spark.sources import (
+        register_druid_datasource,
+    )
+    from druid_datafusion_bridge_spark.sources.ingest import (
+        write_druid_segments,
+    )
+
+    root = str(tmp_path / "segs")
+    write_druid_segments(spark.createDataFrame(
+        [("2024-01-01 00:10:00", 5)], "ts string, v long",
+    ).select(F.col("ts").cast("timestamp").alias("__time"), "v"),
+        root, granularity="PT1H").collect()
+    register_druid_datasource(spark)
+    back = spark.read.format("druidsegment").option("path", root).load()
+    s = DruidBrokerShim(spark, {"ev": back}, segment_roots={"ev": root})
+    calls: list[str] = []
+    real = broker._segment_state_digest
+
+    def spy(r):
+        calls.append(r)
+        return real(r)
+
+    monkeypatch.setattr(broker, "_segment_state_digest", spy)
+    base = f"http://127.0.0.1:{s.start()}"
+    ctx = {"useCache": False}
+    try:
+        assert _post(base + "/druid/v2", {
+            "queryType": "timeseries", "dataSource": "ev",
+            "granularity": "all", "context": ctx,
+            "aggregations": [{"type": "longSum", "name": "t",
+                              "fieldName": "v"}],
+        })[0]["result"] == {"t": 5}
+        assert calls == [root]
+        assert _post(base + "/druid/v2/sql", {
+            "query": "SELECT SUM(v) AS t FROM ev", "context": ctx,
+        }) == [{"t": 5}]
+        assert calls == [root, root]
     finally:
         s.stop()
 
@@ -1573,6 +1638,25 @@ def test_avatica_jdbc_lifecycle(shim):
     assert miss["missingStatement"] is True
     assert _post(url, {"request": "closeConnection",
                        "connectionId": cid})["response"] == "closeConnection"
+
+
+def test_avatica_explain_plan_for(shim):
+    """EXPLAIN PLAN FOR over JDBC answers the same one-row PLAN /
+    RESOURCES / ATTRIBUTES result as /druid/v2/sql."""
+    out = _post(shim + "/druid/v2/sql/avatica", {
+        "request": "prepareAndExecute", "connectionId": "c",
+        "statementId": 1,
+        "sql": "EXPLAIN PLAN FOR SELECT channel, SUM(delta) AS t "
+               "FROM wikipedia GROUP BY 1",
+    })
+    rs = out["results"][0]
+    assert [c["columnName"] for c in rs["signature"]["columns"]] == [
+        "PLAN", "RESOURCES", "ATTRIBUTES"]
+    [(plan, resources, attributes)] = rs["firstFrame"]["rows"]
+    assert "HashAggregate" in plan
+    assert json.loads(resources) == [
+        {"name": "wikipedia", "type": "DATASOURCE"}]
+    assert json.loads(attributes)["statementType"] == "SELECT"
 
 
 def test_avatica_error_shape(shim):
