@@ -510,7 +510,7 @@ class CoordinatorAPIMixin:
         # force an O(N) segment re-open on the next planning pass
         try:
             remaining = find_segment_dirs(root)
-        except Exception:  # an emptied root raises, not []
+        except ValueError:  # an emptied root raises, not []
             remaining = []
         if remaining:
             self._register_datasource_root(ds)

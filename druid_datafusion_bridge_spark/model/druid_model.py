@@ -10,9 +10,9 @@ Reference semantics being re-expressed:
   per-metric aggregators (metadata.drd, tests/wikipedia_segment_test.rs:99-110).
 
 Spark mapping: `__time` => TimestampType column; dimension/metric split =>
-StructField metadata {"druid.role": ...}; interval => min/max stats (and
-directory partitioning when written); rollup => groupBy(granularity
-bucket + dims).agg(metric aggs).
+StructField metadata {"druid.role": ...}; interval => min/max stats;
+rollup => groupBy(granularity bucket + dims).agg(metric aggs). Segments
+are written by sources.ingest (write_druid_segments).
 """
 
 from __future__ import annotations
@@ -165,20 +165,6 @@ class DruidTable:
         bucket = granularity_trunc(TIME_COLUMN, granularity).alias(TIME_COLUMN)
         return self.df.groupBy(bucket, *[F.col(d) for d in dims]).agg(*agg_cols)
 
-    def write_segments(self, path: str, granularity: str = "P1D") -> None:
-        """Persist interval-partitioned (the Druid segment-directory
-        convention as parquet partitioning => partition pruning on
-        __time filters)."""
-        (
-            self.df.withColumn(
-                "__interval", F.date_format(granularity_trunc(TIME_COLUMN, granularity), "yyyy-MM-dd")
-            )
-            .repartition("__interval")
-            .write.mode("overwrite")
-            .partitionBy("__interval")
-            .parquet(path)
-        )
-
 
 def search_dimension(
     spark, root: str, column: str, kind: str, arg: str
@@ -197,7 +183,8 @@ def search_dimension(
     pairs, bounded by matching-cardinality × segments, not rows.
     ``kind``/``arg`` name a dictionary-predicate spec
     (regex/contains/icontains/endswith/like), evaluated by the Arrow
-    kernels in DruidSegment.matching_value_ids.
+    kernels of DruidSegment's dictionary-id step (the one
+    bitmap_rows_for_filter uses).
 
     Requires an indexed string dimension (every Druid dimension has
     one); a segment without the index raises rather than silently

@@ -50,7 +50,7 @@ Deliberate upgrades, documented:
   array (exact, mergeable) instead of an opaque serialized blob.
 - ``search`` evaluates over the scanned rows; Druid's index-only
   variant exists as the no-Spark CLI (cli.py search) and the
-  dictionary-index paths (sources/segment.py matching_value_ids).
+  dictionary-index path (sources/segment.py bitmap_rows_for_filter).
 
 Datasource forms (table / inline / query-as-subquery / union / join
 with prefixed right columns) resolve in `_resolve_datasource`;

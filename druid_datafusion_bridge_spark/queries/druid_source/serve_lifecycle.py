@@ -49,7 +49,7 @@ def s1l_druid_segment_regex_filter(spark: SparkSession, sf_dir: str) -> DataFram
     but applies no filter of any kind (bitmap.rs:16-40 dead code).
     Acceleration only: the rlike filter re-applies row-level, and the
     pattern stays in the RE2/Java-regex common subset
-    (DruidSegment.matching_value_ids evaluates it with Arrow's
+    (DruidSegment.bitmap_rows_for_filter evaluates it with Arrow's
     match_substring_regex kernel)."""
     root = _ensure_hll_segments(spark, sf_dir)
     df = (

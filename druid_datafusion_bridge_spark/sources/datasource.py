@@ -34,14 +34,16 @@ with three upgrades over the reference's scan:
   depends on the pruning.
 
 Filter families (all option-driven and acceleration-only): __time
-intervals, dim equality/IN (bitmap union), lexicographic bounds +
-prefixes (sorted-dictionary bisect), numeric ranges (segment min/max +
-per-block zone maps), and dictionary predicates regex/contains/
-icontains/endswith/like (one pass over the value dictionary — Druid's
-RegexDimFilter / search / LikeDimFilter evaluation model). The
-dimension filters are proven empty or turned into row sets on the
-executor, inside read(), against each segment's own index — never at
-planning.
+intervals, numeric ranges (segment min/max + per-block zone maps), and
+dimension filters. The eight ``dim_*`` options take one path, Druid's
+filter model: each becomes a (column, spec) pair — ``in`` for
+dim_eq, ``bound`` for dim_bound and dim_prefix, a ``(kind, arg)``
+predicate for dim_regex/contains/icontains/endswith/like — that picks
+dictionary ids (sorted-dictionary bisect, or one kernel pass over the
+dictionary) whose row bitmaps then union
+(DruidSegment.bitmap_rows_for_filter). The dimension filters are
+proven empty or turned into row sets on the executor, inside read(),
+against each segment's own index — never at planning.
 
 Scale posture: partitions() plans from the root's planning manifest
 and the core count alone (one _planmeta.json read; a segment whose
@@ -92,45 +94,85 @@ def _next_prefix(p: str) -> str | None:
     return p[:i] + chr(ord(p[i]) + 1)
 
 
+# Each dim_* reader option -> its bitmap_rows_for_filter spec, built
+# from one {col: value} entry. dim_eq takes a scalar (equality) or a
+# list (IN); dim_bound [lower, upper, lower_strict, upper_strict] is
+# Druid's BoundFilter; dim_prefix is the bound [p, _next_prefix(p)),
+# Druid's PrefixFilter; the rest are dictionary predicates (Druid's
+# RegexDimFilter / search / LikeDimFilter analogs).
+_DIM_FILTER_OPTIONS = {
+    "dim_eq": lambda v: ("in", tuple(v) if isinstance(v, list) else (v,)),
+    "dim_bound": lambda b: ("bound", b[0], b[1], bool(b[2]), bool(b[3])),
+    "dim_prefix": lambda p: ("bound", p, _next_prefix(p), False, True),
+    "dim_regex": lambda a: ("regex", a),
+    "dim_contains": lambda a: ("contains", a),
+    "dim_icontains": lambda a: ("icontains", a),
+    "dim_endswith": lambda a: ("endswith", a),
+    "dim_like": lambda a: ("like", a),
+}
+
+
 def ship_package(spark) -> None:
     """Make this package importable on Python workers (addPyFile of a
     package zip) — needed by anything pickled by reference into a
     worker: the DataSource class, applyInPandas ingestion closures. On a
     real cluster this is exactly how the package deploys (py-files)."""
-    import tempfile
-    import zipfile
-
     sc = spark.sparkContext
     if getattr(sc, "_ddbs_pkg_shipped", False):
         return
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), "druid_datafusion_bridge_spark_pkg.zip"
+    sc.addPyFile(
+        _package_zip(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     )
+    sc._ddbs_pkg_shipped = True
+
+
+def _package_zip(pkg_root: str) -> str:
+    """Path of a zip of ``pkg_root``'s .py files, named by a digest of
+    their relative paths and bytes: checkouts with different package
+    files get different zips, so one never rewrites the zip a live
+    SparkContext of another has added (Spark then fails the next task
+    with "exists and does not match contents"). An existing zip of that
+    digest is reused. Entries carry a fixed timestamp, so the same files
+    always zip to the same bytes."""
+    import hashlib
+    import tempfile
+    import zipfile
+
+    files = []
+    for dirpath, _dirnames, filenames in os.walk(pkg_root):
+        for fn in filenames:
+            if fn.endswith(".py"):
+                full = os.path.join(dirpath, fn)
+                rel = os.path.join(
+                    os.path.basename(pkg_root), os.path.relpath(full, pkg_root)
+                )
+                with open(full, "rb") as f:
+                    files.append((rel, f.read()))
+    files.sort()
+    digest = hashlib.sha256()
+    for rel, data in files:
+        digest.update(f"{rel}\0{len(data)}\0".encode())
+        digest.update(data)
+    zip_path = os.path.join(
+        tempfile.gettempdir(),
+        f"druid_datafusion_bridge_spark_pkg_{digest.hexdigest()[:16]}.zip",
+    )
+    if os.path.exists(zip_path):
+        return zip_path
     # Write under a private name in the same directory, then rename onto
-    # the shared path: a concurrent writer (another process or session)
+    # the digest path: a concurrent writer (another process or session)
     # can only ever expose a complete zip to addPyFile, never a
     # half-written one.
-    fd, tmp_path = tempfile.mkstemp(
-        suffix=".zip", dir=os.path.dirname(zip_path)
-    )
+    fd, tmp_path = tempfile.mkstemp(suffix=".zip", dir=os.path.dirname(zip_path))
     try:
         with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
-            for dirpath, _dirnames, filenames in os.walk(pkg_root):
-                for fn in filenames:
-                    if fn.endswith(".py"):
-                        full = os.path.join(dirpath, fn)
-                        rel = os.path.join(
-                            os.path.basename(pkg_root),
-                            os.path.relpath(full, pkg_root),
-                        )
-                        zf.write(full, rel)
+            for rel, data in files:
+                zf.writestr(zipfile.ZipInfo(rel, date_time=(1980, 1, 1, 0, 0, 0)), data)
         os.replace(tmp_path, zip_path)
     finally:
         if os.path.exists(tmp_path):  # only when the write failed
             os.unlink(tmp_path)
-    sc.addPyFile(zip_path)
-    sc._ddbs_pkg_shipped = True
+    return zip_path
 
 
 def drop_spark_zip_finders() -> None:
@@ -557,27 +599,24 @@ def plan_ordered_limit_prefix(
 @dataclass
 class SegmentPartition:
     """One unit of scan work: a served segment, or one row window of
-    it, with the filters its read applies. ScanTask packs units into
-    Spark partitions."""
+    it, with the filters its read applies: the dimension filters, each
+    one dictionary-id selection answered by a bitmap union, and the
+    numeric zone-map windows. ScanTask packs units into Spark
+    partitions."""
 
     segment_dir: str
     # sentinel: open the segment for its schema only, emit zero rows
     # (Spark's Python DataSource calls read(None) if partitions() is
     # empty, so full pruning still needs one no-op partition)
     empty: bool = False
-    # dim equalities the roaring index answers at read time:
-    # (col, accepted-value tuple) pairs
-    eq_filters: tuple = ()
-    # lexicographic bounds the index answers at read time:
-    # (col, lower, upper, lower_strict, upper_strict) tuples
-    bound_filters: tuple = ()
+    # dimension filters the roaring index answers at read time:
+    # (col, spec) pairs, spec a DruidSegment.bitmap_rows_for_filter
+    # spec — each picks dictionary ids, whose row bitmaps union
+    dim_filters: tuple = ()
     # numeric windows answered by per-block zone maps at read time:
     # (col, lo, hi) tuples — candidate-block row sets are SUPERSETS of
     # the matching rows (Spark re-applies the predicate)
     num_filters: tuple = ()
-    # dictionary predicates (regex/contains/…) answered by one
-    # dictionary pass + bitmap union at read time: (col, kind, arg)
-    pred_filters: tuple = ()
     # [start, stop) row window when the planner cut a big segment into
     # several units (DruidSegmentReader.partitions); None = the whole
     # segment
@@ -714,12 +753,14 @@ class DruidSegmentReader(DataSourceReader):
         )
         import json as _json
 
-        raw_eq = _json.loads(options.get("dim_eq")) if options.get("dim_eq") else {}
-        # value may be a scalar (equality) or a list (IN) — normalize
-        # to value tuples so the bitmap path is uniformly a union
-        self.opt_eq: dict[str, tuple] = {
-            c: tuple(v) if isinstance(v, list) else (v,) for c, v in raw_eq.items()
-        }
+        # dimension filters, conjunctive across options and columns:
+        # each {col: value} entry of a dim_* option becomes one (col,
+        # spec) pair, answered by the segment's index at read time
+        self.dim_filters: tuple[tuple[str, tuple], ...] = tuple(
+            (c, spec(v))
+            for opt, spec in _DIM_FILTER_OPTIONS.items()
+            for c, v in _json.loads(options.get(opt) or "{}").items()
+        )
         # numeric range pruning: col -> [lo, hi] inclusive (null = open
         # bound). Segments whose persisted column_stats range excludes
         # the window are skipped at planning; acceleration-only like
@@ -758,41 +799,6 @@ class DruidSegmentReader(DataSourceReader):
         self.opt_order_desc = (
             str(options.get("order_desc", "false")).lower() == "true"
         )
-        # lexicographic dimension bounds (Druid BoundFilter): col ->
-        # [lower, upper, lower_strict, upper_strict]; answered by the
-        # sorted dictionary + inverted index at read time (a unit whose
-        # bound matches nothing yields an empty batch)
-        raw_bound = (
-            _json.loads(options.get("dim_bound")) if options.get("dim_bound") else {}
-        )
-        self.opt_bound: dict[str, tuple] = {
-            c: (b[0], b[1], bool(b[2]), bool(b[3])) for c, b in raw_bound.items()
-        }
-        # dim_prefix is pure sugar: startswith(p) == the dictionary
-        # bound [p, _next_prefix(p)) — Druid's PrefixFilter
-        raw_prefix = (
-            _json.loads(options.get("dim_prefix")) if options.get("dim_prefix") else {}
-        )
-        for c, p in raw_prefix.items():
-            if c not in self.opt_bound:
-                self.opt_bound[c] = (p, _next_prefix(p), False, True)
-        # dictionary-predicate filters (Druid RegexDimFilter /
-        # search-contains analogs): evaluated once per distinct value
-        # against the segment's sorted dictionary, then the surviving
-        # ids' row bitmaps union — O(cardinality + selected blocks),
-        # never O(rows). Conjunctive across entries like every other
-        # filter family here; acceleration-only (callers keep their
-        # rlike/contains df.filter on top).
-        self.opt_pred: list[tuple[str, str, str]] = []
-        for opt, kind in (
-            ("dim_regex", "regex"),
-            ("dim_contains", "contains"),
-            ("dim_icontains", "icontains"),
-            ("dim_endswith", "endswith"),
-            ("dim_like", "like"),
-        ):
-            raw = _json.loads(options.get(opt)) if options.get(opt) else {}
-            self.opt_pred += [(c, kind, a) for c, a in raw.items()]
 
     def partitions(self) -> list[ScanTask]:
         """Plan one unit per served segment with its filters, cut big
@@ -813,8 +819,7 @@ class DruidSegmentReader(DataSourceReader):
         one window per core (a ceiling would leave a core idle whenever
         the rows do not divide)."""
         lower, upper = self.opt_lower_ms, self.opt_upper_ms
-        eq, bound, num = self.opt_eq, self.opt_bound, self.opt_num
-        preds = tuple(self.opt_pred)
+        num = self.opt_num
         # planning metadata (interval / row count / column min-max)
         # comes from the root's timeline — one manifest read instead of
         # one segment open per dir. Only SERVED segments get units, so
@@ -823,18 +828,10 @@ class DruidSegmentReader(DataSourceReader):
         timeline = segment_timeline(self.path, self.opt_exclude)
         metas = {s.dir: s.meta for s in timeline}
         dirs = [s.dir for s in timeline if s.state == SERVED]
-        if (
-            self.opt_order_limit is not None
-            and not eq
-            and not bound
-            and not preds
-            and not num
-        ):
+        if self.opt_order_limit is not None and not self.dim_filters and not num:
             units = self._ordered_limit_partitions(dirs, metas, lower, upper)
         else:
-            units = self._filtered_partitions(
-                dirs, metas, lower, upper, eq, bound, preds, num
-            )
+            units = self._filtered_partitions(dirs, metas, lower, upper, num)
         if not units:
             return [
                 ScanTask((SegmentPartition(timeline[0].dir, empty=True),))
@@ -909,20 +906,13 @@ class DruidSegmentReader(DataSourceReader):
         metas: dict,
         lower,
         upper,
-        eq: dict,
-        bound: dict,
-        preds: tuple,
         num: dict,
     ) -> list[SegmentPartition]:
         """One unit per served segment that survives the manifest-served
         interval and numeric min/max checks, carrying every filter for
         read() to answer from the segment's index and zone maps."""
         filters = dict(
-            eq_filters=tuple(eq.items()),
-            bound_filters=tuple(
-                (c, lo, hi, ls, us) for c, (lo, hi, ls, us) in bound.items()
-            ),
-            pred_filters=preds,
+            dim_filters=self.dim_filters,
             num_filters=tuple((c, lo, hi) for c, (lo, hi) in num.items())
             + (
                 # __time zone maps: the interval that prunes whole
@@ -974,12 +964,12 @@ class DruidSegmentReader(DataSourceReader):
     def _read_unit(self, partition: SegmentPartition):
         seg = DruidSegment(partition.segment_dir)
         try:
-            # roaring-index row selection for dim equalities: the
+            # roaring-index row selection for dimension filters: the
             # index answers "which rows" from the dictionary + bitmaps
             # alone, BEFORE any value column decodes; conjunctive
-            # predicates intersect their row sets. None => no index on
-            # that column => plain scan (Spark re-applies the filter
-            # either way).
+            # filters intersect their row sets. None => the index cannot
+            # answer => plain scan (Spark re-applies the filter either
+            # way).
             rows = np.empty(0, np.uint32) if partition.empty else None
             if not partition.empty:
                 if partition.row_range is not None:
@@ -987,24 +977,10 @@ class DruidSegmentReader(DataSourceReader):
                     # as a contiguous block run; index/zone-map
                     # selections intersect into it below
                     rows = range(*partition.row_range)
-                for col, values in partition.eq_filters:
-                    r = seg.bitmap_rows_for_any(col, values)
-                    if r is None:
-                        continue
-                    rows = _intersect_rows(rows, r)
-                    if len(rows) == 0:
-                        break
-                for col, lo, hi, ls, us in partition.bound_filters:
+                for col, spec in partition.dim_filters:
                     if rows is not None and len(rows) == 0:
                         break
-                    r = seg.bitmap_rows_for_bound(col, lo, hi, ls, us)
-                    if r is None:
-                        continue
-                    rows = _intersect_rows(rows, r)
-                for col, kind, arg in partition.pred_filters:
-                    if rows is not None and len(rows) == 0:
-                        break
-                    r = seg.bitmap_rows_for_predicate(col, (kind, arg))
+                    r = seg.bitmap_rows_for_filter(col, spec)
                     if r is None:
                         continue
                     rows = _intersect_rows(rows, r)

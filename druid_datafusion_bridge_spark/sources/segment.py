@@ -33,6 +33,17 @@ _VALUE_TYPE_TO_ARROW = {
     "COMPLEX": pa.binary(),
 }
 
+# Arrow compute kernel (function name, options) of each filter kind
+# DruidSegment._filter_ids answers with one pass over the dictionary
+_KERNELS = {
+    "in": ("is_in", {"skip_nulls": False}),
+    "regex": ("match_substring_regex", {}),
+    "contains": ("match_substring", {}),
+    "icontains": ("match_substring", {"ignore_case": True}),
+    "endswith": ("ends_with", {}),
+    "like": ("match_like", {}),
+}
+
 
 class DruidSegment:
     """An opened Druid v9 segment directory (read-only, immutable)."""
@@ -130,91 +141,113 @@ class DruidSegment:
             )
         raise fmt.DruidFormatError(f"Unsupported column type {vt} for {name}")
 
-    def bitmap_rows_for(self, name: str, value: str | None) -> np.ndarray | None:
-        """Row ids where dimension ``name`` equals ``value``, answered
-        from the roaring inverted index WITHOUT decoding the value
-        column. Returns None when the column has no index (caller falls
-        back to a scan); an empty array when the value simply never
-        occurs in this segment — which lets the scan emit an empty
-        batch without decoding any value column (value-level pruning,
-        beyond the reference's never-applied bitmap parsing).
+    # Filters selecting more dictionary ids than this fall back to a
+    # scan: unioning thousands of bitmap blobs costs more than decoding
+    # the column, and Spark re-applies the predicate anyway
+    # (acceleration-only).
+    BOUND_MAX_IDS = 4096
 
-        Works for multi-value dimensions too — there "equals" means
-        "contains" (Druid's MVD selector semantics: a value filter
-        matches a row when ANY of its values matches), and the index
-        layout is identical (one blob of row ids per dictionary id,
-        appended after the flat-ids section —
-        locate_string_bitmap_index walks past the extra offsets).
-        Header and section parsing come from the memoized
-        _string_index, so an IN-list parses the column once."""
+    def bitmap_rows_for_filter(self, name: str, spec: tuple) -> np.ndarray | None:
+        """Row ids of dimension ``name`` that the filter ``spec``
+        selects, answered from the roaring inverted index WITHOUT
+        decoding the value column — Druid's one filter model: pick
+        dictionary ids (_filter_ids), then union their row bitmaps.
+        ``spec`` is ``("in", values)``, ``("bound", lower, upper,
+        lower_strict, upper_strict)`` (lexicographic; None = open) or a
+        ``(kind, arg)`` predicate, kind one of regex / contains /
+        icontains / endswith / like.
+
+        None when the column has no index, the spec cannot use it (a
+        bound over an unsorted dictionary) or it selects more than
+        BOUND_MAX_IDS ids: the caller scans instead. An empty array
+        when no value matches — which lets the scan emit an empty batch
+        without decoding any value column. On multi-value dimensions
+        the same index gives Druid's MVD semantics: a row matches when
+        ANY of its values matches."""
+        ids = self._filter_ids(name, spec)
+        if ids is None or len(ids) > self.BOUND_MAX_IDS:
+            return None
+        _, bm = self._string_index(name)
+        blobs = [fmt.read_string_bitmap_blob(bm, int(i)) for i in ids]
+        if len(blobs) == 1:
+            return blobs[0]  # one blob is already sorted and distinct
+        return np.unique(np.concatenate([np.empty(0, np.uint32), *blobs]))
+
+    def bitmap_rows_for_any(self, name: str, values) -> np.ndarray | None:
+        """Row ids where dimension ``name`` equals ANY of ``values``:
+        the ``("in", values)`` case of bitmap_rows_for_filter. An empty
+        ``values`` (a contradictory conjunction upstream) matches no
+        rows."""
+        return self.bitmap_rows_for_filter(name, ("in", tuple(values)))
+
+    def _filter_ids(self, name: str, spec: tuple) -> np.ndarray | None:
+        """Sorted distinct dictionary ids of ``name`` that ``spec``
+        selects. A sorted dictionary (Druid's sorted/allowReverseLookup
+        flag: null at slot 0, then UTF-8 order — identical to Python
+        str order) answers ``in`` and ``bound`` by bisection, reading
+        only the probed values: equality is the inclusive bound
+        ``[v, v]`` and None is slot 0. Predicates, and ``in`` on an
+        unsorted dictionary, take ONE Arrow kernel pass over the
+        bulk-decoded dictionary — O(cardinality), never O(rows); the
+        per-value Python form was slower than a row scan at 100k
+        values. NULL never matches a predicate or a bound. Kernel
+        semantics: regex is RE2, like follows SQL %/_/backslash,
+        icontains is Unicode-aware case folding; all agree with the
+        residual Spark filter on the portable subset the option
+        contract documents. None when the column has no index, or for
+        a bound over an unsorted dictionary (no reverse lookup)."""
         idx = self._string_index(name)
         if idx is None:
             return None
-        gi, bm = idx
-        dict_id = self._dict_id_of(gi, value)
-        if dict_id is None:
-            return np.empty(0, np.uint32)
-        # decode exactly ONE blob — eager-decoding the whole index made
-        # each lookup O(dictionary size) per filtered value
-        return fmt.read_string_bitmap_blob(bm, dict_id)
-
-    @staticmethod
-    def _dict_id_of(gi: "fmt.GenericIndexedV1", value: str | None) -> int | None:
-        """Dictionary id of ``value``: binary search when the
-        GenericIndexed carries Druid's sorted/allowReverseLookup flag
-        (null sorts first, then UTF-8 order — identical to Python str
-        order), linear scan otherwise. None when absent."""
-        n = len(gi)
+        gi, _ = idx
+        kind, n = spec[0], len(gi)
         if n == 0:
-            return None
-        has_null = gi.get_str(0) is None
-        if value is None:
-            return 0 if has_null else None
-        if not (gi.flags & 0x01):  # unsorted: reverse lookup not allowed
-            for i in range(1 if has_null else 0, n):
-                if gi.get_str(i) == value:
-                    return i
-            return None
-        lo, hi = (1 if has_null else 0), n
-        while lo < hi:
-            mid = (lo + hi) // 2
-            s = gi.get_str(mid)
-            if s == value:
-                return mid
-            if s < value:
-                lo = mid + 1
-            else:
-                hi = mid
-        return None
+            return np.empty(0, np.int64)
+        if kind in ("in", "bound") and gi.flags & 0x01:
+            first = 1 if gi.get_str(0) is None else 0
 
-    def bitmap_rows_for_any(self, name: str, values) -> np.ndarray | None:
-        """Row ids where dimension ``name`` equals ANY of ``values``
-        (the IN-list form: union of the per-value bitmaps). None when
-        the column has no index; an empty array when no value occurs —
-        including the degenerate empty ``values`` (a contradictory
-        conjunction upstream), which matches no rows by definition.
-        Each value costs one dictionary search and one bitmap blob;
-        the column header is parsed once (_string_index)."""
-        out: np.ndarray | None = None
-        for v in values:
-            r = self.bitmap_rows_for(name, v)
-            if r is None:
-                return None
-            out = r if out is None else np.union1d(out, r)
-        return out if out is not None else np.empty(0, np.uint32)
+            def bisect(value: str, past_equal: bool) -> int:
+                # first id in [first, n) whose value is > value
+                # (past_equal) or >= value
+                lo, hi = first, n
+                while lo < hi:
+                    mid = (lo + hi) // 2
+                    s = gi.get_str(mid)
+                    if s < value or (past_equal and s == value):
+                        lo = mid + 1
+                    else:
+                        hi = mid
+                return lo
 
-    # Bounds spanning more ids than this fall back to a scan: unioning
-    # thousands of bitmap blobs costs more than decoding the column,
-    # and Spark re-applies the predicate anyway (acceleration-only).
-    BOUND_MAX_IDS = 4096
+            def window(lower, upper, lower_strict, upper_strict) -> np.ndarray:
+                lo = first if lower is None else bisect(lower, lower_strict)
+                hi = n if upper is None else bisect(upper, not upper_strict)
+                return np.arange(lo, max(lo, hi))
+
+            if kind == "bound":
+                return window(*spec[1:])
+            return np.unique(np.concatenate([np.empty(0, np.int64)] + [
+                np.arange(first) if v is None else window(v, v, False, False)
+                for v in spec[1]
+            ]))
+        if kind == "bound":
+            return None
+        import pyarrow.compute as pc
+
+        if kind not in _KERNELS:
+            raise ValueError(f"unknown dimension filter kind {kind!r}")
+        fn, kwargs = _KERNELS[kind]
+        arg = pa.array(spec[1], pa.string()) if kind == "in" else spec[1]
+        mask = getattr(pc, fn)(self._dict_array(name, gi), arg, **kwargs)
+        return np.flatnonzero(pc.fill_null(mask, False).to_numpy(zero_copy_only=False))
 
     def _string_index(self, name: str):
         """(GenericIndexed dictionary, bitmap-index section) for a
-        STRING column that carries an inverted index — None otherwise. The shared entry point of
-        every dictionary-side acceleration path; memoized per instance
-        (a Search query or multi-predicate filter would otherwise
-        re-parse the same column header and re-walk its section sizes
-        once per predicate per call)."""
+        STRING column that carries an inverted index — None otherwise.
+        The shared entry point of every dictionary-side path; memoized
+        per instance (a Search query or multi-filter read would
+        otherwise re-parse the same column header and re-walk its
+        section sizes once per filter)."""
         if name in self._string_indexes:
             return self._string_indexes[name]
         out = None
@@ -238,80 +271,16 @@ class DruidSegment:
             arr = self._dict_arrays[name] = gi.to_arrow_strings()
         return arr
 
-    def matching_value_ids(self, name: str, predicate) -> np.ndarray | None:
-        """Dictionary ids whose STRING value satisfies ``predicate`` —
-        ONE pass over the dictionary, O(cardinality) and never O(rows).
-        This is exactly how Druid answers predicate-style filters
-        (RegexDimFilter, search/contains specs): evaluate against the
-        value dictionary once, then union the surviving ids' row
-        bitmaps. NULL never matches a predicate. None when the column
-        has no usable index (caller falls back to a scan).
-
-        ``predicate`` is either a ``(kind, arg)`` spec — regex /
-        contains / icontains / endswith / like, evaluated by ONE Arrow
-        compute kernel over the bulk-decoded dictionary (C-side; the
-        per-value Python form made the dictionary pass slower than a
-        row scan at 100k values) — or a ``str -> bool`` callable as
-        the generic fallback. Kernel semantics note: regex is RE2,
-        like follows SQL %/_/backslash, icontains is Unicode-aware
-        case folding; all agree with the residual Spark filter on the
-        portable subset the option contract documents."""
-        idx = self._string_index(name)
-        if idx is None:
-            return None
-        gi, _ = idx
-        arr = self._dict_array(name, gi)
-        if isinstance(predicate, tuple):
-            import pyarrow.compute as pc
-
-            kind, arg = predicate
-            if kind == "regex":
-                mask = pc.match_substring_regex(arr, arg)
-            elif kind == "contains":
-                mask = pc.match_substring(arr, arg)
-            elif kind == "icontains":
-                mask = pc.match_substring(arr, arg, ignore_case=True)
-            elif kind == "endswith":
-                mask = pc.ends_with(arr, arg)
-            elif kind == "like":
-                mask = pc.match_like(arr, arg)
-            else:
-                raise ValueError(f"unknown predicate kind {kind!r}")
-            return np.flatnonzero(
-                pc.fill_null(mask, False).to_numpy(zero_copy_only=False)
-            ).astype(np.int64)
-        vals = arr.to_pylist()
-        return np.array(
-            [i for i, s in enumerate(vals) if s is not None and predicate(s)],
-            dtype=np.int64,
-        )
-
-    def bitmap_rows_for_ids(self, name: str, ids) -> np.ndarray | None:
-        """Union of the row bitmaps of the given dictionary ids. None
-        when the column has no index OR the id set exceeds
-        BOUND_MAX_IDS (unioning that many blobs costs more than
-        decoding the column — scan instead; acceleration-only, Spark
-        re-applies the predicate)."""
-        idx = self._string_index(name)
-        if idx is None or len(ids) > self.BOUND_MAX_IDS:
-            return None
-        _, bm = idx
-        out: np.ndarray | None = None
-        for dict_id in ids:
-            r = fmt.read_string_bitmap_blob(bm, int(dict_id))
-            out = r if out is None else np.union1d(out, r)
-        return out if out is not None else np.empty(0, np.uint32)
-
-    def search_value_counts(self, name: str, predicate) -> list | None:
+    def search_value_counts(self, name: str, spec: tuple) -> list | None:
         """Druid Search-query kernel, per segment: (matching value,
-        row count) pairs answered ENTIRELY index-side — one dictionary
-        pass picks the ids, each id's bitmap contributes its
-        CARDINALITY; value chunks are never decoded, so cost is
-        O(dictionary + matching bitmaps) regardless of row count. On
-        multi-value dimensions the count is rows CONTAINING the value
-        (Druid's search semantics). None when the column has no usable
-        index."""
-        ids = self.matching_value_ids(name, predicate)
+        row count) pairs answered ENTIRELY index-side — _filter_ids
+        picks the ids of ``spec`` (a bitmap_rows_for_filter spec), each
+        id's bitmap contributes its CARDINALITY; value chunks are never
+        decoded, so cost is O(dictionary + matching bitmaps) regardless
+        of row count. On multi-value dimensions the count is rows
+        CONTAINING the value (Druid's search semantics). None when the
+        column has no usable index."""
+        ids = self._filter_ids(name, spec)
         if ids is None:
             return None
         gi, bm = self._string_index(name)
@@ -320,92 +289,6 @@ class DruidSegment:
             (v, int(len(fmt.read_string_bitmap_blob(bm, int(i)))))
             for v, i in zip(vals, ids)
         ]
-
-    def bitmap_rows_for_predicate(self, name: str, predicate) -> np.ndarray | None:
-        """Row ids whose value satisfies ``predicate`` — the
-        dictionary-predicate path end-to-end: matching_value_ids (one
-        dictionary pass) then the surviving ids' bitmap union. On
-        multi-value dimensions this gives Druid's MVD semantics (a row
-        matches when ANY of its values matches). None when no usable
-        index or too many ids match (scan instead)."""
-        ids = self.matching_value_ids(name, predicate)
-        if ids is None:
-            return None
-        return self.bitmap_rows_for_ids(name, ids)
-
-    def bound_id_range(
-        self,
-        name: str,
-        lower: str | None,
-        upper: str | None,
-        lower_strict: bool = False,
-        upper_strict: bool = False,
-    ) -> tuple[int, int] | None:
-        """Contiguous dictionary-id window [lo_id, hi_id) whose values
-        satisfy ``lower (<|<=) value (<|<=) upper`` lexicographically —
-        two binary searches over the SORTED dictionary, no bitmap or
-        value decode at all. NULL (slot 0 when present) never matches.
-        None when the column has no usable index (missing, non-string,
-        or unsorted dictionary). An empty window proves the segment
-        matches nothing, at pure metadata cost. Header/section parsing comes from the memoized
-        _string_index (a bound+predicate conjunction, or several bounds
-        on one column, parses the column once); each bisect probe reads
-        one dictionary value — from the _dict_array cache when another
-        path already bulk-decoded it, else straight off the mmap."""
-        idx = self._string_index(name)
-        if idx is None:
-            return None
-        gi, _bm = idx
-        n = len(gi)
-        if n == 0:
-            return (0, 0)
-        if not (gi.flags & 0x01):
-            return None  # unsorted: no reverse lookup — scan instead
-        cached = self._dict_arrays.get(name)
-
-        def value_at(i: int):
-            return cached[i].as_py() if cached is not None else gi.get_str(i)
-
-        has_null = value_at(0) is None
-        first = 1 if has_null else 0
-
-        def bisect(value: str, take_greater: bool) -> int:
-            # first id in [first, n) whose value is > value (take_greater)
-            # or >= value; dictionary is null-first then UTF-8 ascending
-            lo, hi = first, n
-            while lo < hi:
-                mid = (lo + hi) // 2
-                s = value_at(mid)
-                if s < value or (take_greater and s == value):
-                    lo = mid + 1
-                else:
-                    hi = mid
-            return lo
-
-        lo_id = first if lower is None else bisect(lower, take_greater=lower_strict)
-        hi_id = n if upper is None else bisect(upper, take_greater=not upper_strict)
-        return (lo_id, max(lo_id, hi_id))
-
-    def bitmap_rows_for_bound(
-        self,
-        name: str,
-        lower: str | None,
-        upper: str | None,
-        lower_strict: bool = False,
-        upper_strict: bool = False,
-    ) -> np.ndarray | None:
-        """Row ids satisfying the lexicographic bound — Druid's
-        BoundFilter: the bound_id_range window's per-id row bitmaps
-        union. None when the column has no usable index OR the window
-        exceeds BOUND_MAX_IDS (wide bounds scan instead — see the class
-        constant). On multi-value dimensions the same index gives
-        Druid's MVD semantics: a row matches when ANY of its values
-        falls inside the bound."""
-        rng = self.bound_id_range(name, lower, upper, lower_strict, upper_strict)
-        if rng is None:
-            return None
-        lo_id, hi_id = rng
-        return self.bitmap_rows_for_ids(name, range(lo_id, hi_id))
 
     def read_batch(
         self,

@@ -1256,6 +1256,50 @@ def test_kill_task_and_coordinator_endpoints(spark, tmp_path):
         s.stop()
 
 
+def test_kill_task_fails_without_deregistering_on_listing_error(
+    spark, tmp_path, monkeypatch
+):
+    """A kill whose post-delete listing of the root fails with anything
+    but the no-segments ValueError reports FAILED and leaves the
+    datasource registered: only an emptied root deregisters."""
+    from druid_datafusion_bridge_spark.sources import datasource
+
+    s = DruidBrokerShim(spark, {}, deep_storage=str(tmp_path / "deep"))
+    port = s.start()
+    base = f"http://127.0.0.1:{port}"
+    try:
+        _post(base + "/druid/v2/sql/task", {
+            "query": "INSERT INTO keep SELECT * FROM VALUES "
+                     "(TIMESTAMP '2024-01-01 01:00:00', 1), "
+                     "(TIMESTAMP '2024-01-02 01:00:00', 2) "
+                     "AS t(__time, v) PARTITIONED BY DAY"})
+        real = datasource.find_segment_dirs
+
+        def denied(path):
+            dirs = real(path)
+            if len(dirs) < 2:  # the kill already deleted day 2
+                raise PermissionError(13, "Permission denied", path)
+            return dirs
+
+        with monkeypatch.context() as m:
+            m.setattr(datasource, "find_segment_dirs", denied)
+            out = _post(base + "/druid/indexer/v1/task", {
+                "type": "kill", "dataSource": "keep",
+                "interval": "2024-01-02T00:00:00Z/2024-01-03T00:00:00Z"})
+        with urllib.request.urlopen(
+            base + f"/druid/indexer/v1/task/{out['task']}/status"
+        ) as r:
+            st = json.loads(r.read())["status"]
+        assert st["status"] == "FAILED"
+        assert "Permission denied" in st["errorMsg"]
+        with urllib.request.urlopen(
+            base + "/druid/coordinator/v1/datasources"
+        ) as r:
+            assert json.loads(r.read()) == ["keep"]
+    finally:
+        s.stop()
+
+
 def test_lookup_management_api(spark):
     """The coordinator lookup-config family (lookups-api.md): list
     tiers and names, fetch a spec, POST a new/updated map lookup (the

@@ -209,10 +209,10 @@ def test_bitmap_index_accelerated_dim_filter(registered, tmp_path):
 
     # index answers without decoding the value column
     seg = DruidSegment(seg_dir)
-    rows = seg.bitmap_rows_for("color", "green")
+    rows = seg.bitmap_rows_for_filter("color", ("in", ("green",)))
     assert rows is not None and rows.tolist() == list(range(1, n, 3))
-    assert seg.bitmap_rows_for("color", "magenta").tolist() == []
-    assert seg.bitmap_rows_for("v", "x") is None  # not a string dim
+    assert seg.bitmap_rows_for_filter("color", ("in", ("magenta",))).tolist() == []
+    assert seg.bitmap_rows_for_filter("v", ("in", ("x",))) is None  # not a string dim
     seg.close()
 
     def load(**opts):
@@ -431,11 +431,12 @@ def test_bitmap_index_multi_value_dimension(registered, tmp_path):
 
     seg = DruidSegment(seg_dir)
     # contains-semantics, one entry per row even with in-row duplicates
-    assert seg.bitmap_rows_for("tags", "red").tolist() == list(range(2, n, 5))
-    assert seg.bitmap_rows_for("tags", "green").tolist() == sorted(
-        set(range(2, n, 5)) | set(range(4, n, 5))
-    )
-    assert seg.bitmap_rows_for("tags", "magenta").tolist() == []
+    def eq(value):
+        return seg.bitmap_rows_for_filter("tags", ("in", (value,))).tolist()
+
+    assert eq("red") == list(range(2, n, 5))
+    assert eq("green") == sorted(set(range(2, n, 5)) | set(range(4, n, 5)))
+    assert eq("magenta") == []
     rows = seg.bitmap_rows_for_any("tags", ("red", "blue"))
     assert rows.tolist() == sorted(
         set(range(2, n, 5)) | set(range(3, n, 5)) | set(range(4, n, 5))
@@ -466,6 +467,106 @@ def test_bitmap_index_multi_value_dimension(registered, tmp_path):
     plain = load()
     assert plain.count() == n
     assert plain.filter(F.size("tags") == 0).count() == 2 * n // 5
+
+
+def test_dimension_filter_specs_match_python_evaluation(tmp_path):
+    """Every bitmap_rows_for_filter spec selects exactly the rows a
+    plain Python evaluation over the decoded column selects: on a
+    single-value dimension with a NULL slot, and on a multi-value
+    dimension (a row matches when ANY of its values does; empty and
+    null rows match nothing). An IN-list with more than BOUND_MAX_IDS
+    values present falls back to a scan (None), like a wide bound."""
+    import re
+
+    from druid_datafusion_bridge_spark.sources.datasource import _next_prefix
+    from druid_datafusion_bridge_spark.sources.segment import DruidSegment
+
+    n = DruidSegment.BOUND_MAX_IDS + 1
+    words = ["alpha", "apple", "App", "bravo", "app_le", "delta", "zulu"]
+    tag_sets = [[], None, ["apple", "zulu"], ["bravo"], ["delta", "alpha"]]
+    write_segment(
+        pa.table(
+            {
+                "__time": pa.array(
+                    [BASE_MS + i for i in range(n)], pa.timestamp("ms")
+                ),
+                "site": pa.array(
+                    [None if i % 8 == 7 else words[i % 7] for i in range(n)]
+                ),
+                "tags": pa.array(
+                    [tag_sets[i % 5] for i in range(n)], pa.list_(pa.string())
+                ),
+                "wide": pa.array([f"w{i:05d}" for i in range(n)]),
+            }
+        ),
+        str(tmp_path / "seg"),
+    )
+
+    def like(pattern):
+        rx = "".join(
+            ".*" if c == "%" else "." if c == "_" else re.escape(c)
+            for c in pattern
+        )
+        return lambda s: re.fullmatch(rx, s, re.DOTALL) is not None
+
+    def bound(lo, hi, ls, us):
+        return lambda s: (
+            (lo is None or (s > lo if ls else s >= lo))
+            and (hi is None or (s < hi if us else s <= hi))
+        )
+
+    # (spec, its predicate over a non-NULL value)
+    cases = [
+        (("in", ("apple", "zulu", "absent")), lambda s: s in ("apple", "zulu")),
+        (("in", (None, "bravo")), lambda s: s == "bravo"),
+        (("in", ()), lambda s: False),
+        # inclusive, strict, open below, open above
+        *[
+            (("bound", *b), bound(*b))
+            for b in (
+                ("apple", "delta", False, False),
+                ("apple", "delta", True, True),
+                (None, "bravo", False, True),
+                ("b", None, True, False),
+            )
+        ],
+        # dim_prefix "ap"
+        (("bound", "ap", _next_prefix("ap"), False, True), lambda s: s.startswith("ap")),
+        (("regex", "^a.p"), lambda s: re.search("^a.p", s) is not None),
+        (("contains", "pp"), lambda s: "pp" in s),
+        (("icontains", "APP"), lambda s: "app" in s.lower()),
+        (("endswith", "a"), lambda s: s.endswith("a")),
+        (("like", "app_e"), like("app_e")),
+        (("like", "%l%"), like("%l%")),
+    ]
+
+    def matches(spec, pred, s):
+        # NULL matches only an IN-list that names it
+        return pred(s) if s is not None else spec[0] == "in" and None in spec[1]
+
+    seg = DruidSegment(str(tmp_path / "seg"))
+    try:
+        site = seg.read_column("site").to_pylist()
+        tags = seg.read_column("tags").to_pylist()
+        for spec, pred in cases:
+            want_site = [i for i, s in enumerate(site) if matches(spec, pred, s)]
+            want_tags = [
+                i for i, row in enumerate(tags)
+                if any(matches(spec, pred, s) for s in row or [])
+            ]
+            assert seg.bitmap_rows_for_filter("site", spec).tolist() == want_site, spec
+            assert seg.bitmap_rows_for_filter("tags", spec).tolist() == want_tags, spec
+        assert seg.bitmap_rows_for_filter("tags", ("in", (None,))).tolist() == []
+
+        wide = tuple(seg.read_column("wide").to_pylist())
+        cap = DruidSegment.BOUND_MAX_IDS
+        rows = seg.bitmap_rows_for_filter("wide", ("in", wide[:cap]))
+        assert rows.tolist() == list(range(cap))
+        assert seg.bitmap_rows_for_filter("wide", ("in", wide)) is None
+        everything = ("bound", None, None, False, False)
+        assert seg.bitmap_rows_for_filter("wide", everything) is None
+    finally:
+        seg.close()
 
 
 def test_segment_cache_invalidates_on_source_regeneration(spark, tmp_path):
@@ -612,13 +713,16 @@ def test_dim_bound_filter_index_and_pruning(registered, tmp_path):
     # operator-level strictness on the segment itself
     s = DruidSegment(str(tmp_path / "seg_000"))
     try:
-        rows = s.bitmap_rows_for_bound("site", "bravo", "delta", False, False)
+        def bound(*spec):
+            return s.bitmap_rows_for_filter("site", ("bound", *spec))
+
+        rows = bound("bravo", "delta", False, False)
         assert rows.tolist() == [1, 2, 3]  # inclusive both ends
-        rows = s.bitmap_rows_for_bound("site", "bravo", "delta", True, True)
+        rows = bound("bravo", "delta", True, True)
         assert rows.tolist() == [2]  # strict both ends
-        rows = s.bitmap_rows_for_bound("site", None, "alpha", False, False)
+        rows = bound(None, "alpha", False, False)
         assert rows.tolist() == [0]  # open lower; NULL never matches
-        assert len(s.bitmap_rows_for_bound("site", "zz", None, False, False)) == 0
+        assert len(bound("zz", None, False, False)) == 0
     finally:
         s.close()
 
@@ -897,20 +1001,19 @@ def test_dictionary_predicate_filters(registered, tmp_path):
                   str(tmp_path / "seg_001"))
 
     # segment-level: one dictionary pass yields matching ids; NULL slot
-    # (id 0 of seg_000) is never offered to the predicate
+    # (id 0 of seg_000) never matches a predicate
     s = DruidSegment(str(tmp_path / "seg_000"))
     try:
-        rows = s.bitmap_rows_for_predicate("site", lambda x: "pp" in x)
+        rows = s.bitmap_rows_for_filter("site", ("contains", "pp"))
         vals = s.read_column("site", rows=rows).to_pylist()
         assert sorted(vals) == ["app", "apple"]
-        assert list(s.matching_value_ids("site", lambda x: False)) == []
+        assert list(s.bitmap_rows_for_filter("site", ("contains", "zz"))) == []
 
         # LIKE kernel corners on the LIVE evaluation path (pc.match_like):
         # one-char wildcard, anchoring (no partial match), %-run
         def like_vals(pat):
-            ids = s.matching_value_ids("site", ("like", pat))
-            gi, _ = s._string_index("site")
-            return sorted(gi.get(int(i)).decode() for i in ids)
+            rows = s.bitmap_rows_for_filter("site", ("like", pat))
+            return sorted(s.read_column("site", rows=rows).to_pylist())
 
         assert like_vals("app") == ["app"]        # anchored: not apple
         assert like_vals("app_e") == ["apple"]    # _ is exactly one char
@@ -1600,6 +1703,44 @@ def test_ship_package_zip_is_atomic_under_concurrent_writers():
     assert checked == [None] * 10
 
 
+def test_package_zip_is_named_by_its_files(tmp_path, monkeypatch):
+    """The shipped zip's name is a digest of the package's .py paths
+    and bytes: trees with different bytes get different zips (so one
+    checkout never rewrites the zip another's live SparkContext added),
+    identical trees share one, and an existing zip is reused as is."""
+    import tempfile
+    import zipfile
+
+    from druid_datafusion_bridge_spark.sources.datasource import _package_zip
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.makedirs(tempfile.tempdir)
+
+    def tree(name: str, body: bytes) -> str:
+        pkg = tmp_path / name / "pkg"
+        (pkg / "sub").mkdir(parents=True)
+        (pkg / "__init__.py").write_bytes(b"")
+        (pkg / "sub" / "mod.py").write_bytes(body)
+        (pkg / "notes.txt").write_bytes(name.encode())  # not shipped
+        return str(pkg)
+
+    a = _package_zip(tree("a", b"X = 1\n"))
+    same = _package_zip(tree("same", b"X = 1\n"))
+    other = _package_zip(tree("other", b"X = 2\n"))
+    assert a == same
+    assert other != a
+    assert os.path.dirname(a) == tempfile.tempdir
+    with zipfile.ZipFile(a) as zf:
+        assert sorted(zf.namelist()) == ["pkg/__init__.py", "pkg/sub/mod.py"]
+        assert zf.read("pkg/sub/mod.py") == b"X = 1\n"
+    mtime = os.stat(a).st_mtime_ns
+    assert _package_zip(tree("again", b"X = 1\n")) == a
+    assert os.stat(a).st_mtime_ns == mtime  # reused, not rewritten
+    assert sorted(os.listdir(tempfile.tempdir)) == sorted(
+        os.path.basename(p) for p in (a, other)
+    )
+
+
 HOUR_MS = 3_600_000
 
 
@@ -1835,13 +1976,13 @@ def test_row_windows_decode_as_slices_of_the_whole_segment(tmp_path, monkeypatch
     assert seg.read_column("count", rows=range(6, 8)).to_pylist() == [-22, -19]
     seg.close()
     assert len(calls) == 2
-    eq = (("site", ("a", "d")),)
+    eq = (("site", ("in", ("a", "d"))),)
     for start, stop in ((0, n), (0, 7), (6, 8), (7, 14), (20, 21), (13, 50),
                         (1, 3), (55, n)):
         got = read(row_range=(start, stop))
         assert got == {c: v[start:stop] for c, v in whole.items()}, (start, stop)
         keep = [i for i in range(start, stop) if whole["site"][i] in ("a", "d")]
-        got = read(row_range=(start, stop), eq_filters=eq)
+        got = read(row_range=(start, stop), dim_filters=eq)
         assert got == {c: [v[i] for i in keep] for c, v in whole.items()}, (
             start,
             stop,

@@ -616,43 +616,70 @@ class TestRoaringBitmaps:
             fmt.write_string_column_v2(dictionary, ids)
         ) is None
 
-    def test_single_blob_lookup_and_dict_binary_search(self):
+    def test_single_blob_lookup_and_dict_binary_search(self, tmp_path, monkeypatch):
         """The lazy lookup path (locate + one-blob decode + dictionary
-        binary search) must agree with the eager index for every value,
-        including the null slot, absent values, and probes that sort
-        before/after the whole dictionary; the linear fallback must
-        kick in when the sorted/allowReverseLookup flag is off."""
-        import numpy as np
+        binary search, reached through the ``in`` filter) must agree
+        with the row ids of every value, including the null slot,
+        absent values, and probes that sort before/after the whole
+        dictionary; on an unsorted dictionary (sorted/allowReverseLookup
+        flag off) binary search is invalid and the dictionary pass must
+        still find every value."""
+        from druid_datafusion_bridge_spark.sources import segment as segment_mod
 
-        from druid_datafusion_bridge_spark.sources.segment import DruidSegment
+        def segment(path, values):
+            write_segment(
+                pa.table({
+                    "__time": pa.array(range(len(values)), pa.timestamp("ms")),
+                    "c": pa.array(values, pa.string()),
+                }),
+                path,
+            )
+            return DruidSegment(path)
+
+        def stored_dictionary(seg):
+            # (sorted flag, values); returns no view of the mmap, which
+            # close() needs released
+            gi, _ = seg._string_index("c")
+            return bool(gi.flags & 0x01), [gi.get_str(i) for i in range(len(gi))]
 
         dictionary = [None, "apple", "mango", "pear", "zebra"]
         ids = np.array([1, 4, 2, 0, 3, 1, 2, 2, 4, 0], np.int64)
-        col = fmt.write_string_column_v2(dictionary, ids, bitmap_index=True)
-        bm = fmt.locate_string_bitmap_index(col)
-        assert bm is not None
-        gi = fmt.GenericIndexedV1(col, 5)
-        assert gi.flags & 0x01  # writer stamps sorted/allowReverseLookup
-        lookup = DruidSegment._dict_id_of
-        for dict_id, value in enumerate(dictionary):
-            assert lookup(gi, value) == dict_id
-            assert fmt.read_string_bitmap_blob(bm, dict_id).tolist() == (
-                np.flatnonzero(ids == dict_id).tolist()
-            )
-        for absent in ("aaa", "banana", "zz", ""):
-            assert lookup(gi, absent) is None
-        # unsorted dictionary (flag off): binary search is invalid, the
-        # linear fallback must still find every value
+        seg = segment(str(tmp_path / "sorted"), [dictionary[i] for i in ids])
+        try:
+            # the writer stamps sorted/allowReverseLookup
+            assert stored_dictionary(seg) == (True, dictionary)
+            for dict_id, value in enumerate(dictionary):
+                assert seg.bitmap_rows_for_any("c", (value,)).tolist() == (
+                    np.flatnonzero(ids == dict_id).tolist()
+                )
+            for absent in ("aaa", "banana", "zz", ""):
+                assert seg.bitmap_rows_for_any("c", (absent,)).tolist() == []
+        finally:
+            seg.close()
+
+        # unsorted dictionary (flag off), written with a first-seen
+        # dictionary order and the sorted flag cleared
         unsorted = ["mango", "apple", "zebra"]
-        raw = bytearray([0x02]) + b"\x00\x00\x00\x00"
-        raw += fmt.write_generic_indexed(
-            [v.encode() for v in unsorted], sorted_flag=False
+        u_ids = np.array([0, 2, 1, 1, 0, 2], np.uint32)
+        real_write = fmt.write_generic_indexed
+        monkeypatch.setattr(
+            fmt, "write_generic_indexed",
+            lambda elements, sorted_flag=True: real_write(elements, sorted_flag=False),
         )
-        gi_u = fmt.GenericIndexedV1(bytes(raw), 5)
-        assert not (gi_u.flags & 0x01)
-        for i, v in enumerate(unsorted):
-            assert lookup(gi_u, v) == i
-        assert lookup(gi_u, "pear") is None
+        monkeypatch.setattr(
+            segment_mod, "_dictionary_encode", lambda col: (unsorted, u_ids)
+        )
+        seg = segment(str(tmp_path / "unsorted"), [unsorted[i] for i in u_ids])
+        monkeypatch.undo()
+        try:
+            assert stored_dictionary(seg) == (False, unsorted)
+            for i, v in enumerate(unsorted):
+                assert seg.bitmap_rows_for_any("c", (v,)).tolist() == (
+                    np.flatnonzero(u_ids == i).tolist()
+                )
+            assert seg.bitmap_rows_for_any("c", ("pear",)).tolist() == []
+        finally:
+            seg.close()
 
 
 @given(
