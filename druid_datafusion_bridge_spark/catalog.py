@@ -403,11 +403,3 @@ def table(
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """All tables as DataFrames."""
     return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for the spark.sql path)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -19,11 +19,11 @@ round-trip tests can verify the read side bit-exactly, mirroring the
 reference's build-then-parse unit-test style
 (generic_indexed.rs:258-299, vsize_ints.rs:118-131).
 
-No lz4 library ships in this container, so LZ4 *block* format (not
-frame) is implemented here: a full decompressor, and a valid
-literal-only compressor for the write side. ZSTD blocks (standard
-zstd frames, as zstd-jni writes them) go through Arrow's bundled
-zstd codec — both directions, real compression.
+LZ4 and ZSTD blocks, both directions, go through the codecs bundled
+with pyarrow: ``lz4_raw`` is the raw LZ4 *block* format (no frame) that
+lz4-java writes and the reference's lz4_flex reads, and ``zstd`` reads
+and writes the standard zstd frames zstd-jni produces. LZF (legacy v1
+columns) is decoded here in Python, since Arrow has no LZF codec.
 """
 
 from __future__ import annotations
@@ -35,6 +35,7 @@ import struct
 from dataclasses import dataclass, field
 
 import numpy as np
+import pyarrow as pa
 
 SEGMENT_VERSION_V9 = 9
 
@@ -55,80 +56,6 @@ GI_HEADER_SIZE = 10  # version(1) + flags(1) + total_bytes(4) + num_elements(4)
 
 class DruidFormatError(ValueError):
     pass
-
-
-# ---------------------------------------------------------------------------
-# LZ4 block codec (raw block format, no frame header)
-# ---------------------------------------------------------------------------
-
-
-def lz4_block_decompress(src: bytes, out_size: int) -> bytes:
-    """Decompress one raw LZ4 block to exactly out_size bytes."""
-    dst = bytearray()
-    i, n = 0, len(src)
-    while i < n and len(dst) < out_size:
-        token = src[i]
-        i += 1
-        lit_len = token >> 4
-        if lit_len == 15:
-            while True:
-                b = src[i]
-                i += 1
-                lit_len += b
-                if b != 255:
-                    break
-        dst += src[i : i + lit_len]
-        i += lit_len
-        if i >= n:
-            break  # final sequence carries literals only
-        offset = src[i] | (src[i + 1] << 8)
-        i += 2
-        if offset == 0:
-            raise DruidFormatError("LZ4: zero match offset")
-        match_len = (token & 0x0F) + 4
-        if (token & 0x0F) == 0x0F:
-            while True:
-                b = src[i]
-                i += 1
-                match_len += b
-                if b != 255:
-                    break
-        start = len(dst) - offset
-        if start < 0:
-            raise DruidFormatError("LZ4: match offset before block start")
-        if offset >= match_len:
-            dst += dst[start : start + match_len]
-        else:  # overlapping match (run-length style) — copy byte-wise
-            for j in range(match_len):
-                dst.append(dst[start + j])
-    if len(dst) != out_size:
-        raise DruidFormatError(
-            f"LZ4: decompressed {len(dst)} bytes, expected {out_size}"
-        )
-    return bytes(dst)
-
-
-def lz4_block_compress_literal(data: bytes) -> bytes:
-    """Encode data as a single literal-only LZ4 sequence (valid, ratio 1).
-
-    A block may end with a literals-only sequence, so one sequence with
-    no match part is a legal block — any LZ4 decoder (including
-    lz4_block_decompress above and the reference's lz4_flex,
-    compression/mod.rs:41) accepts it.
-    """
-    n = len(data)
-    out = bytearray()
-    if n < 15:
-        out.append(n << 4)
-    else:
-        out.append(0xF0)
-        rem = n - 15
-        while rem >= 255:
-            out.append(255)
-            rem -= 255
-        out.append(rem)
-    out += data
-    return bytes(out)
 
 
 def lzf_raw_decompress(src: bytes | memoryview) -> bytes:
@@ -203,9 +130,8 @@ def lzf_chunks_decompress(src: bytes | memoryview, out_size: int) -> bytes:
 
 
 def lzf_chunks_compress_literal(raw: bytes) -> bytes:
-    """Literal-only Ning LZF chunk stream (type-0 chunks) — same
-    trade as lz4_block_compress_literal: spec-valid output any LZF
-    decoder accepts, no match search."""
+    """Literal-only Ning LZF chunk stream (type-0 chunks): spec-valid
+    output any LZF decoder accepts, no match search."""
     out = bytearray()
     for pos in range(0, len(raw), _LZF_CHUNK_MAX):
         chunk = raw[pos : pos + _LZF_CHUNK_MAX]
@@ -218,53 +144,51 @@ def lzf_chunks_compress_literal(raw: bytes) -> bytes:
     return bytes(out)
 
 
-def _zstd_codec():
-    """Arrow's bundled zstd codec, or None if this build lacks it.
-    Druid's ZSTD strategy stores standard zstd frames per block
-    (zstd-jni `Zstd.compress`), which any frame decoder reads."""
-    try:
-        import pyarrow as pa
-
-        return pa.Codec("zstd")
-    except Exception:
-        return None
+# Strategies whose blocks Arrow's bundled codecs read and write.
+_ARROW_CODECS = {LZ4: pa.Codec("lz4_raw"), ZSTD: pa.Codec("zstd")}
 
 
 def decompress_block(strategy: int, compressed: bytes, out_size: int) -> bytes:
-    """Block decode by strategy id. The reference supports LZ4 +
-    uncompressed and ERRORS on LZF/ZSTD (compression/mod.rs:34-46);
-    LZF and ZSTD are implemented here beyond reference parity so
-    legacy-v1 (LZF) and modern production (ZSTD) Druid columns decode
-    too."""
-    if strategy == LZ4:
-        return lz4_block_decompress(compressed, out_size)
+    """Block decode by strategy id. LZ4 and ZSTD go through Arrow's
+    ``lz4_raw`` and ``zstd`` codecs, LZF through the Python decoder
+    above. The reference supports LZ4 + uncompressed and ERRORS on
+    LZF/ZSTD (compression/mod.rs:34-46); LZF and ZSTD decode here too,
+    so legacy-v1 (LZF) and modern production (ZSTD) columns read.
+
+    Arrow's ``Codec.decompress`` drops the decoded byte count, and an
+    LZ4 block that holds fewer than ``out_size`` bytes comes back
+    padded with uninitialised memory. A block holds at least
+    ``out_size`` bytes exactly when decoding it into ``out_size - 1``
+    bytes fails, so that second call is the size check; a block that
+    holds more fails the first call."""
+    codec = _ARROW_CODECS.get(strategy)
+    if codec is not None:
+        try:
+            out = codec.decompress(compressed, decompressed_size=out_size, asbytes=True)
+        except OSError as exc:
+            raise DruidFormatError(f"{codec.name}: corrupt block ({exc})") from exc
+        if out_size:
+            try:
+                codec.decompress(compressed, decompressed_size=out_size - 1)
+            except OSError:
+                return out
+            raise DruidFormatError(
+                f"{codec.name}: block holds fewer than the expected {out_size} bytes"
+            )
+        return out
     if strategy == LZF:
         return lzf_chunks_decompress(compressed, out_size)
-    if strategy == ZSTD:
-        codec = _zstd_codec()
-        if codec is None:
-            raise DruidFormatError("ZSTD block but no zstd codec available")
-        try:
-            out = codec.decompress(bytes(compressed), decompressed_size=out_size)
-        except Exception as exc:
-            raise DruidFormatError(f"ZSTD: corrupt block ({exc})") from exc
-        return out.to_pybytes() if hasattr(out, "to_pybytes") else bytes(out)
     if strategy in (UNCOMPRESSED, NONE):
         return bytes(compressed)
     raise DruidFormatError(f"Unsupported compression strategy {strategy:#x}")
 
 
 def compress_block(strategy: int, raw: bytes) -> bytes:
-    if strategy == LZ4:
-        return lz4_block_compress_literal(raw)
+    codec = _ARROW_CODECS.get(strategy)
+    if codec is not None:
+        return codec.compress(raw, asbytes=True)
     if strategy == LZF:
         return lzf_chunks_compress_literal(raw)
-    if strategy == ZSTD:
-        codec = _zstd_codec()
-        if codec is None:
-            raise DruidFormatError("ZSTD write but no zstd codec available")
-        out = codec.compress(bytes(raw))
-        return out.to_pybytes() if hasattr(out, "to_pybytes") else bytes(out)
     if strategy in (UNCOMPRESSED, NONE):
         return bytes(raw)
     raise DruidFormatError(f"Unsupported compression strategy {strategy:#x}")
@@ -370,8 +294,6 @@ class GenericIndexedV1:
         dictionary-predicate evaluation; this path is O(bytes) in C.
         Layout per element: [len i32 BE][utf8], len == -1 => null
         (same wire format get() reads one element of)."""
-        import pyarrow as pa
-
         n = self.num_elements
         if n == 0:
             return pa.array([], type=pa.string())

@@ -194,13 +194,20 @@ class DruidSegment:
         semantics: regex is RE2, like follows SQL %/_/backslash,
         icontains is Unicode-aware case folding; all agree with the
         residual Spark filter on the portable subset the option
-        contract documents. None when the column has no index, or for
-        a bound over an unsorted dictionary (no reverse lookup)."""
+        contract documents. None when the column has no index, for a
+        bound over an unsorted dictionary (no reverse lookup), or when
+        a value is neither a string nor None: a JSON number cannot be
+        ordered against the dictionary, and casting it to a string
+        would miss what Spark's ``col == 5`` matches (``"05"``)."""
+        kind = spec[0]
+        values = spec[1] if kind == "in" else spec[1:3]
+        if any(v is not None and not isinstance(v, str) for v in values):
+            return None
         idx = self._string_index(name)
         if idx is None:
             return None
         gi, _ = idx
-        kind, n = spec[0], len(gi)
+        n = len(gi)
         if n == 0:
             return np.empty(0, np.int64)
         if kind in ("in", "bound") and gi.flags & 0x01:

@@ -171,13 +171,6 @@ def stateful_running_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_static_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
-    """Stream-static join (Druid lookup-join analog): enrich each event
-    with a dimension row. Stateless — the static side is planned per
-    micro-batch (broadcast when small), so no streaming state at all."""
-    return events.join(dim, "user_id", "left")
-
-
 def stream_stream_click_purchase(events: DataFrame) -> DataFrame:
     """Stream-stream interval join: each purchase matched to the same
     user's clicks in the preceding 10 minutes. Both sides carry

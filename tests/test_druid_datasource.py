@@ -976,6 +976,72 @@ def test_prefix_filter_and_is_null_pushdown(registered, tmp_path):
     _assert_index_empty(batches, decoded, "seg_001")
 
 
+@pytest.mark.parametrize("sorted_dictionary", [True, False])
+def test_numeric_dimension_filter_values_scan(
+    registered, tmp_path, monkeypatch, sorted_dictionary
+):
+    """A dim_eq or dim_bound whose JSON value is a number cannot be
+    ordered against a string dictionary: the reader scans the segment
+    instead of raising, and Spark's re-applied filter decides. The value
+    is not cast to a string, since Spark's ``col == 5`` also matches
+    "05"."""
+    import numpy as np
+
+    from druid_datafusion_bridge_spark.sources import druid_format as fmt
+    from druid_datafusion_bridge_spark.sources import segment as segment_mod
+
+    values = ["7", "5", None, "05", "5", "7"]
+    if not sorted_dictionary:
+        # first-seen dictionary order with the sorted flag cleared
+        real_write = fmt.write_generic_indexed
+        monkeypatch.setattr(
+            fmt, "write_generic_indexed",
+            lambda elements, sorted_flag=True: real_write(elements, sorted_flag=False),
+        )
+        monkeypatch.setattr(
+            segment_mod, "_dictionary_encode",
+            lambda col: ([None, "7", "5", "05"], np.array([1, 2, 0, 3, 2, 1], np.uint32)),
+        )
+    write_segment(
+        pa.table({
+            "__time": pa.array(
+                [1704067200000 + i for i in range(len(values))], pa.timestamp("ms")
+            ),
+            "user_dim": pa.array(values, pa.string()),
+        }),
+        str(tmp_path / "seg_000"),
+    )
+    monkeypatch.undo()
+    seg = segment_mod.DruidSegment(str(tmp_path / "seg_000"))
+    try:
+        # the sorted/allowReverseLookup flag of the stored dictionary
+        assert bool(seg._string_index("user_dim")[0].flags & 0x01) == sorted_dictionary
+    finally:
+        seg.close()
+
+    df = registered.read.format("druidsegment").option("path", str(tmp_path)).load()
+    scan, _ = _read_tasks(DruidSegmentReader(df.schema, {"path": str(tmp_path)}))
+    for opt, value, spark_filter, want in [
+        ("dim_eq", "5", F.col("user_dim") == 5, ["05", "5", "5"]),
+        ("dim_eq", "[5, 7]", F.col("user_dim").isin(5, 7), ["05", "5", "5", "7", "7"]),
+        ("dim_bound", "[1, 6, false, false]",
+         F.col("user_dim").between(1, 6), ["05", "5", "5"]),
+    ]:
+        option = f'{{"user_dim": {value}}}'
+        batches, _ = _read_tasks(
+            DruidSegmentReader(df.schema, {"path": str(tmp_path), opt: option})
+        )
+        assert _values(batches, "seg_000", "user_dim") == _values(
+            scan, "seg_000", "user_dim"
+        )
+        got = (
+            registered.read.format("druidsegment")
+            .option("path", str(tmp_path)).option(opt, option).load()
+            .filter(spark_filter).select("user_dim").collect()
+        )
+        assert sorted(r.user_dim for r in got) == want
+
+
 def test_dictionary_predicate_filters(registered, tmp_path):
     """Regex / contains / icontains (s1l, s1m): evaluated once per
     DISTINCT dictionary value, answered via bitmap union — correct

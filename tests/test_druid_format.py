@@ -134,33 +134,66 @@ def test_vsize_ints_bad_version():
 # --- LZ4 block codec ------------------------------------------------------
 
 
-def test_lz4_literal_roundtrip():
+def test_lz4_roundtrip_and_real_compression():
+    """LZ4 blocks go through Arrow's lz4_raw codec: repetitive input
+    must actually shrink, and the block round-trips bit-exactly."""
     data = b"hello world " * 100 + bytes(range(256))
-    comp = fmt.lz4_block_compress_literal(data)
-    assert fmt.lz4_block_decompress(comp, len(data)) == data
+    comp = fmt.compress_block(fmt.LZ4, data)
+    assert len(comp) < len(data) // 2
+    assert fmt.decompress_block(fmt.LZ4, comp, len(data)) == data
+
+
+# Hand-built blocks, made without the codec under test, check the
+# decoder against the LZ4 block format itself. Each ends in a run of at
+# least 5 literals with its last match starting 12 or more bytes before
+# the end: the block format's end-of-block rule, which lz4-java's
+# encoder keeps and liblz4's decoder enforces.
+_LZ4_MATCH_BLOCK = bytes([0x84]) + b"ABCDEFGH" + b"\x08\x00" + bytes([0x50]) + b"xyz12"
+_LZ4_RLE_BLOCK = bytes([0x1F]) + b"A" + b"\x01\x00" + bytes([0x00, 0x50]) + b"BCDEF"
 
 
 def test_lz4_with_matches():
-    # Hand-built block with a real match sequence: 8 literals then an
-    # 8-byte match at offset 8 (doubles the literals), then final literals.
+    # 8 literals then an 8-byte match at offset 8 (doubles the
+    # literals), then final literals.
     lit = b"ABCDEFGH"
-    block = bytes([0x84]) + lit + b"\x08\x00" + bytes([0x30]) + b"xyz"
-    out = fmt.lz4_block_decompress(block, 8 + 8 + 3)
-    assert out == lit + lit + b"xyz"
+    out = fmt.decompress_block(fmt.LZ4, _LZ4_MATCH_BLOCK, 8 + 8 + 5)
+    assert out == lit + lit + b"xyz12"
+    comp = fmt.compress_block(fmt.LZ4, out)
+    assert fmt.decompress_block(fmt.LZ4, comp, len(out)) == out
 
 
 def test_lz4_overlapping_match_rle():
     # 1 literal 'A', then match offset 1 len 19 => run-length expansion
-    block = bytes([0x1F]) + b"A" + b"\x01\x00" + bytes([0x00])
-    out = fmt.lz4_block_decompress(block, 20)
-    assert out == b"A" * 20
+    out = fmt.decompress_block(fmt.LZ4, _LZ4_RLE_BLOCK, 20 + 5)
+    assert out == b"A" * 20 + b"BCDEF"
+    comp = fmt.compress_block(fmt.LZ4, out)
+    assert fmt.decompress_block(fmt.LZ4, comp, len(out)) == out
 
 
 @given(st.binary(min_size=0, max_size=2048))
 @settings(max_examples=50, deadline=None)
-def test_lz4_literal_roundtrip_property(data):
-    comp = fmt.lz4_block_compress_literal(data)
-    assert fmt.lz4_block_decompress(comp, len(data)) == data
+def test_lz4_roundtrip_property(data):
+    comp = fmt.compress_block(fmt.LZ4, data)
+    assert fmt.decompress_block(fmt.LZ4, comp, len(data)) == data
+
+
+def test_lz4_truncated_block_errors():
+    for block in (b"\xf0", _LZ4_RLE_BLOCK[:-1]):
+        with pytest.raises(fmt.DruidFormatError):
+            fmt.decompress_block(fmt.LZ4, block, 25)
+
+
+@pytest.mark.parametrize("strategy", [fmt.LZ4, fmt.ZSTD], ids=["lz4", "zstd"])
+def test_block_shorter_than_out_size_errors(strategy):
+    # Arrow hands back a full-size buffer for a short LZ4 block, so the
+    # size check must be ours; ZSTD must fail the same way.
+    raw = bytes(range(256)) * 4
+    comp = fmt.compress_block(strategy, raw)
+    for out_size in (len(raw) + 1, len(raw) + 8):
+        with pytest.raises(fmt.DruidFormatError):
+            fmt.decompress_block(strategy, comp, out_size)
+    assert fmt.decompress_block(strategy, comp, len(raw)) == raw
+    assert fmt.decompress_block(strategy, fmt.compress_block(strategy, b""), 0) == b""
 
 
 # --- Compressed columnar numerics ----------------------------------------
@@ -215,7 +248,7 @@ def test_corrupt_and_unknown_compression_errors():
     # LZF/ZSTD are supported beyond reference parity (the reference
     # errors on both, compression/mod.rs:43-44) but corrupt blocks must
     # fail loudly as DruidFormatError, and unknown strategy ids too.
-    for strat in (fmt.LZF, fmt.ZSTD):
+    for strat in (fmt.LZ4, fmt.LZF, fmt.ZSTD):
         with pytest.raises(fmt.DruidFormatError):
             fmt.decompress_block(strat, b"xx", 2)
     with pytest.raises(fmt.DruidFormatError):
