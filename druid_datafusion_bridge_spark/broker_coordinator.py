@@ -9,6 +9,7 @@ from __future__ import annotations
 import json
 import threading
 
+from .functions.druid_sql import floor_ms, granularity_period
 from .native_query import native_query
 
 
@@ -198,17 +199,15 @@ class CoordinatorAPIMixin:
         ds = body.get("dataSource")
         if not ds:
             raise ValueError("compaction config needs a dataSource")
+        gran = body.get("granularitySpec", {}).get(
+            "segmentGranularity"
+        ) or body.get("segmentGranularity", "day")
+        # validated here: a bad granularity is a 400 now, not a
+        # compaction that fails on every duty cycle
+        granularity_period(gran)
         with self._lock:
             cfgs = dict(self._compaction_configs)
-            cfgs[ds] = {
-                "dataSource": ds,
-                "segmentGranularity": (
-                    body.get("granularitySpec", {}).get(
-                        "segmentGranularity"
-                    )
-                    or body.get("segmentGranularity", "day")
-                ),
-            }
+            cfgs[ds] = {"dataSource": ds, "segmentGranularity": gran}
             self._compaction_configs = cfgs
         self._ensure_duty_thread()
         return {"status": "accepted"}
@@ -293,7 +292,6 @@ class CoordinatorAPIMixin:
         import os
         import shutil
 
-        from .native_query import _SIMPLE_GRANULARITIES
         from .sources.datasource import find_segment_dirs, load_plan_meta
         from .sources.ingest import compact_segments
 
@@ -304,29 +302,17 @@ class CoordinatorAPIMixin:
             root = self._segment_roots.get(ds)
             if root is None:
                 continue
-            gran = str(cfg.get("segmentGranularity", "day"))
-            period = _SIMPLE_GRANULARITIES.get(gran.lower(), gran)
+            # validated at POST, so this cannot raise
+            period = granularity_period(cfg["segmentGranularity"])
             try:
                 dirs = find_segment_dirs(root)
             except Exception:
                 continue
             metas = load_plan_meta(root, dirs)
             # bucket each segment by its interval start at the target
-            # granularity — pure metadata, no decodes
-            import datetime as _dt
-
-            def bucket(ms: int) -> str:
-                d = _dt.datetime.fromtimestamp(
-                    ms / 1000, _dt.timezone.utc
-                )
-                if period == "PT1H":
-                    return d.strftime("%Y-%m-%dT%H")
-                if period == "P1M":
-                    return d.strftime("%Y-%m")
-                if period == "P1Y":
-                    return d.strftime("%Y")
-                return d.strftime("%Y-%m-%d")  # day default
-            buckets = {bucket(m["start"]) for m in metas.values()}
+            # granularity, on the writer's grid — pure metadata, no
+            # decodes
+            buckets = {floor_ms(m["start"], period) for m in metas.values()}
             if len(dirs) <= len(buckets):
                 continue  # one segment per bucket: healthy
             staging = f"{root}.compacting.{os.getpid()}"
@@ -474,15 +460,14 @@ class CoordinatorAPIMixin:
             },
         }
 
-    def _kill_task(self, ds: str, interval: str) -> int:
+    def _kill_task(self, ds: str, lo: int, hi: int) -> int:
         """``{"type": "kill"}`` task (api-reference.md): permanently
-        delete the datasource's segments WHOLLY CONTAINED in the given
-        "start/end" ISO interval (Druid's containment rule — partially
-        overlapping segments survive). Deletes from deep storage, then
-        re-registers (or deregisters an emptied datasource) so
+        delete the datasource's segments WHOLLY CONTAINED in the
+        ``[lo, hi)`` epoch-millis interval (Druid's containment rule —
+        partially overlapping segments survive). Deletes from deep
+        storage, then re-registers (or deregisters an emptied datasource) so
         sys.segments, the table map, and the result cache all move in
         the same step. Returns the number of segments killed."""
-        import datetime
         import shutil
 
         from .sources.datasource import find_segment_dirs, segment_timeline
@@ -491,14 +476,6 @@ class CoordinatorAPIMixin:
         if root is None:
             raise ValueError(f"unknown datasource {ds!r}")
 
-        def ms(s: str) -> int:
-            d = datetime.datetime.fromisoformat(s.replace("Z", "+00:00"))
-            if d.tzinfo is None:
-                d = d.replace(tzinfo=datetime.timezone.utc)
-            return int(d.timestamp() * 1000)
-
-        lo_s, hi_s = interval.split("/")
-        lo, hi = ms(lo_s), ms(hi_s)
         killed = [
             s.dir for s in segment_timeline(root)
             if lo <= s.meta["start"] and s.meta["end"] <= hi

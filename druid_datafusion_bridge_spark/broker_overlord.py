@@ -14,7 +14,6 @@ import threading
 from .broker_util import (
     _EXTERN_RE,
     _INGEST_SQL_RE,
-    _PARTITIONED_BY,
     _bind_params,
     _druid_types,
     _json_safe,
@@ -22,6 +21,8 @@ from .broker_util import (
     _strip_sql_head,
     _word_in_sql,
 )
+from .functions.druid_sql import granularity_period
+from .retention import interval_ms
 
 
 class OverlordAPIMixin:
@@ -74,18 +75,10 @@ class OverlordAPIMixin:
             raise ValueError("REPLACE requires OVERWRITE ALL")
         if verb == "INSERT" and overwrite:
             raise ValueError("INSERT cannot OVERWRITE; use REPLACE")
-        grain = " ".join(m.group("grain").strip("'\"").upper().split())
-        period = _PARTITIONED_BY.get(grain, grain if grain.startswith("P") else None)
-        if period is None:
-            raise ValueError(
-                f"unsupported PARTITIONED BY {m.group('grain')!r}"
-            )
-        # pre-flight the period BEFORE any storage is touched: a bogus
-        # 'PFOO' must be a clean 400, not a failure deep in the writer
-        if period != "ALL":
-            from .functions.druid_sql import parse_period
-
-            parse_period(period)
+        # resolved BEFORE any storage is touched: a bogus 'PFOO' is a
+        # clean 400, not a failure deep in the writer. ALL [TIME] is
+        # one segment bucket for all time (period None).
+        period = granularity_period(m.group("grain").strip("'\"").upper())
         cluster = [
             c.strip().strip('"')
             for c in (m.group("cluster") or "").split(",")
@@ -528,6 +521,10 @@ class OverlordAPIMixin:
         )
         if not ds:
             raise ValueError("task has no dataSource")
+        if body.get("type") == "kill":
+            # parsed at submit: a reversed or slash-less interval is a
+            # 400, not a failed task (or a kill of nothing)
+            kill_lo, kill_hi = interval_ms(body["interval"])
         with self._lock:
             self._task_seq += 1
             task_id = f"{body.get('type', 'index_parallel')}_{ds}_{self._task_seq}"
@@ -545,7 +542,7 @@ class OverlordAPIMixin:
         t0 = time.monotonic()
         try:
             if body.get("type") == "kill":
-                n = self._kill_task(ds, body["interval"])
+                n = self._kill_task(ds, kill_lo, kill_hi)
                 self._record_task({
                     "id": task_id, "status": "SUCCESS", "dataSource": ds,
                     "type": "kill", "createdTime": created,

@@ -155,14 +155,6 @@ _EXTERN_RE = re.compile(
     re.I | re.S,
 )
 
-# PARTITIONED BY keywords -> granularity periods; ALL [TIME] = the
-# engine's ALL granularity (one segment bucket for all time)
-_PARTITIONED_BY = {
-    "HOUR": "PT1H", "DAY": "P1D", "WEEK": "P1W", "MONTH": "P1M",
-    "YEAR": "P1Y", "ALL": "ALL", "ALL TIME": "ALL",
-}
-
-
 def _sub_outside_literals(sql: str, fn) -> str:
     """Apply ``fn(chunk) -> chunk`` to the parts of ``sql`` that are
     NOT inside single-quoted string literals."""

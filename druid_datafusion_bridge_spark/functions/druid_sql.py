@@ -22,6 +22,15 @@ Period strings are ISO-8601 durations as Druid uses them ('PT15M',
 sub-month periods are exact epoch-millisecond arithmetic. Scale: every
 function here is a scalar expression — no shuffle, no Python, no state.
 
+Granularities have one rule, kept here next to the period grammar:
+:func:`granularity_period` resolves a Druid name or period,
+:func:`granularity_spec` / :func:`granularity_bucket` resolve and apply
+a whole granularity spec (native queries; None for ALL),
+:func:`segment_bucket` is that bucket for stored rows (segment writes,
+ingestion rollup; ALL stamped at the epoch), and :func:`floor_ms` is
+the same grid in plain Python for segment metadata (the compaction
+duty).
+
 A third mechanism, the SQL-TEXT REWRITE (:func:`rewrite_datasketches_
 sql`, applied on every broker SQL path), covers what a scalar SQL UDF
 cannot express: DataSketches aggregates onto Spark's own DataSketches
@@ -41,6 +50,7 @@ literal/comment-masked, paren-balanced, and idempotent by construction
 
 from __future__ import annotations
 
+import datetime as _dt
 import re
 from collections.abc import Mapping
 
@@ -93,8 +103,7 @@ def _origin_col(origin: Column | str) -> Column:
 #: Default anchor for week-based periods: the Monday preceding the
 #: epoch. Druid (ISO chronology) floors P1W to MONDAY boundaries; the
 #: raw epoch is a Thursday, which would bucket the same rows into
-#: different "weeks" than Druid and this repo's own
-#: model.granularity_trunc (date_trunc('week') = Monday).
+#: different "weeks" than Druid (and than date_trunc('week')).
 _MONDAY_EPOCH = "1969-12-29 00:00:00"
 
 
@@ -172,6 +181,166 @@ def _is_week_period(period: str) -> bool:
     return g["w"] > 0 and not any(
         g[k] for k in ("y", "mo", "d", "h", "mi", "s")
     )
+
+
+# Druid "simple" granularity names -> ISO periods (public Druid docs,
+# granularities.md). The one table: segment, query, compaction and
+# PARTITIONED BY granularities all resolve through granularity_period.
+_SIMPLE_GRANULARITIES = {
+    "second": "PT1S",
+    "minute": "PT1M",
+    "five_minute": "PT5M",
+    "ten_minute": "PT10M",
+    "fifteen_minute": "PT15M",
+    "thirty_minute": "PT30M",
+    "hour": "PT1H",
+    "six_hour": "PT6H",
+    "eight_hour": "PT8H",
+    "day": "P1D",
+    "week": "P1W",
+    "month": "P1M",
+    "quarter": "P3M",
+    "year": "P1Y",
+}
+
+
+def granularity_period(g: str) -> str | None:
+    """A granularity string -> its ISO-8601 period, or None for ALL.
+
+    Accepts a Druid simple name (case-insensitive: ``"day"``,
+    ``"ten_minute"``), an ISO period (``"PT2H"``) or ``ALL`` /
+    ``ALL TIME``; anything else raises ValueError, so a bad segment
+    granularity fails when the task is submitted, not in the writer."""
+    name = " ".join(str(g).split()).lower()
+    if name in ("all", "all time"):
+        return None
+    if name in _SIMPLE_GRANULARITIES:
+        return _SIMPLE_GRANULARITIES[name]
+    try:
+        parse_period(str(g))
+    except ValueError:
+        raise ValueError(
+            f"unsupported granularity {g!r}: use a Druid name "
+            f"({', '.join(_SIMPLE_GRANULARITIES)}, all), an ISO-8601 "
+            "period, or ALL TIME"
+        ) from None
+    return str(g)
+
+
+def segment_max_rows(tuning: Mapping) -> int:
+    """A ``tuningConfig`` -> the row cap per segment: Druid's
+    ``partitionsSpec.maxRowsPerSegment`` (dynamic partitioning), the
+    legacy top-level ``maxRowsPerSegment``, else Druid's 5,000,000."""
+    return int(
+        tuning.get("partitionsSpec", {}).get("maxRowsPerSegment")
+        or tuning.get("maxRowsPerSegment")
+        or 5_000_000
+    )
+
+
+def _utc_origin(origin: str | None) -> str | None:
+    """A granularity origin -> a naive UTC instant string. Druid parses
+    the origin as an INSTANT (UTC when no offset is given, explicit
+    offsets honoured)."""
+    if origin is None:
+        return None
+    inst = _dt.datetime.fromisoformat(origin.replace("Z", "+00:00"))
+    if inst.tzinfo is None:
+        inst = inst.replace(tzinfo=_dt.timezone.utc)
+    inst = inst.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    return inst.isoformat(sep=" ")
+
+
+def granularity_spec(g) -> dict | None:
+    """The one resolution of a Druid granularity spec: None for all,
+    else Druid's object form — ``{"type": "none"}``, ``{"type":
+    "period", "period", "origin", "timeZone"}`` or ``{"type":
+    "duration", "duration", "origin"}``, origins as naive UTC instants.
+
+    Strings are :func:`granularity_period` strings or ``"none"``
+    (case-insensitive, Druid accepts ``"DAY"``); a resolved spec
+    resolves to itself. Unsupported forms raise ValueError."""
+    if g is None:
+        return None
+    if isinstance(g, str):
+        if g.strip().lower() == "none":
+            return {"type": "none"}
+        period = granularity_period(g)
+        if period is None:
+            return None
+        g = {"type": "period", "period": period}
+    kind = g.get("type")
+    if kind == "all":
+        return None
+    if kind == "none":
+        return {"type": "none"}
+    if kind == "period":
+        return {
+            "type": "period",
+            "period": g["period"],
+            "origin": _utc_origin(g.get("origin")),
+            "timeZone": g.get("timeZone"),
+        }
+    if kind == "duration":
+        return {
+            "type": "duration",
+            "duration": int(g["duration"]),
+            "origin": _utc_origin(g.get("origin")),
+        }
+    raise ValueError(f"unsupported granularity type {kind!r}")
+
+
+def granularity_bucket(col: Column | str, g) -> Column | None:
+    """Bucket a timestamp column by any granularity spec
+    :func:`granularity_spec` accepts; None for all. Periods floor
+    through :func:`time_floor` (origin and timeZone honoured), durations
+    on an epoch-millisecond grid from their origin, and none is the
+    millisecond identity."""
+    spec = granularity_spec(g)
+    if spec is None:
+        return None
+    c = _col(col).cast("timestamp")
+    if spec["type"] == "none":
+        return c
+    if spec["type"] == "period":
+        # timeZone (granularities.md): bucket on that zone's LOCAL
+        # chronology — LA days start at local midnight, not 00:00 UTC
+        return time_floor(c, spec["period"], spec["origin"], spec["timeZone"])
+    ms = spec["duration"]
+    o = (
+        F.unix_millis(_origin_col(spec["origin"]))
+        if spec["origin"] is not None
+        else F.lit(0).cast("long")
+    )
+    return F.timestamp_millis(
+        o + F.floor((F.unix_millis(c) - o) / ms).cast("long") * ms
+    )
+
+
+def segment_bucket(col: Column | str, g) -> Column:
+    """The time bucket a row is stored (or rolled up) under:
+    :func:`granularity_bucket`, with ALL as one bucket stamped at the
+    epoch (Druid's timestamp for an ALL bucket)."""
+    bucket = granularity_bucket(col, g)
+    return F.timestamp_millis(F.lit(0)) if bucket is None else bucket
+
+
+def floor_ms(ms: int, period: str | None) -> int:
+    """:func:`time_floor`'s default grid in plain Python, for the
+    metadata plane (segment interval starts): epoch millis -> the start
+    of its ``period`` bucket, 0 (the epoch, as :func:`segment_bucket`)
+    for ALL (None). Clock periods are epoch-anchored, weeks
+    Monday-anchored, months calendar months counted from 1970-01."""
+    if period is None:
+        return 0
+    months, millis = parse_period(period)
+    if millis:
+        o = -3 * 86_400_000 if _is_week_period(period) else 0
+        return o + (ms - o) // millis * millis
+    d = _dt.datetime(1970, 1, 1) + _dt.timedelta(milliseconds=ms)
+    k = ((d.year - 1970) * 12 + d.month - 1) // months * months
+    start = _dt.datetime(1970 + k // 12, k % 12 + 1, 1)
+    return (start - _dt.datetime(1970, 1, 1)) // _dt.timedelta(milliseconds=1)
 
 
 def time_ceil(

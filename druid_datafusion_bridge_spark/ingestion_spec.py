@@ -48,7 +48,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .native_query import _SIMPLE_GRANULARITIES, _filter_pred, _aggregator, _granularity_col
+from .functions.druid_sql import (
+    granularity_period,
+    granularity_spec,
+    segment_bucket,
+    segment_max_rows,
+)
+from .native_query import _aggregator, _filter_pred
 from .sources.ingest import write_druid_segments
 from .sources.segment import TIME_COLUMN
 
@@ -280,25 +286,21 @@ def ingest(
     inner = spec.get("spec", spec)
     schema = inner["dataSchema"]
     io_config = inner.get("ioConfig", {})
-    tuning = inner.get("tuningConfig", {})
+    # resolved before any input is read or storage touched: a bad
+    # segmentGranularity fails the task up front
+    period = granularity_period(
+        schema.get("granularitySpec", {}).get("segmentGranularity", "day")
+    )
+    max_rows = segment_max_rows(inner.get("tuningConfig", {}))
 
     from .functions import register_druid_sql_functions
 
     register_druid_sql_functions(spark)
     df = _read_input(spark, io_config, deep_storage)
     df = transform_rows(df, schema)
-
-    gran_spec = schema.get("granularitySpec", {})
-    seg_gran = gran_spec.get("segmentGranularity", "day")
-    period = _SIMPLE_GRANULARITIES.get(str(seg_gran).lower(), seg_gran)
-    max_rows = (
-        tuning.get("partitionsSpec", {}).get("maxRowsPerSegment")
-        or tuning.get("maxRowsPerSegment")
-        or 5_000_000
-    )
     out_dir = os.path.join(deep_storage, schema["dataSource"])
     return write_druid_segments(
-        df, out_dir, granularity=period, max_rows_per_segment=int(max_rows)
+        df, out_dir, granularity=period, max_rows_per_segment=max_rows
     )
 
 
@@ -349,22 +351,13 @@ def transform_rows(df: DataFrame, schema: dict) -> DataFrame:
 
     query_gran: Any = gran_spec.get("queryGranularity", "none")
     rollup = bool(gran_spec.get("rollup", True))
-    seg_gran_str = str(gran_spec.get("segmentGranularity", "day")).lower()
-    if isinstance(query_gran, str) and query_gran.lower() == "all":
-        # Druid's ALL queryGranularity collapses every row of a segment
-        # into one time bucket — the segment's own interval start
-        query_gran = _SIMPLE_GRANULARITIES.get(seg_gran_str, seg_gran_str)
-        bucket = _granularity_col({"type": "period", "period": query_gran},
-                                  TIME_COLUMN)
-    else:
-        bucket = _granularity_col(
-            None if query_gran in ("none", None) else query_gran,
-            TIME_COLUMN,
-        )
+    if granularity_spec(query_gran or "none") is None:
+        # Druid's ALL queryGranularity (any spelling) collapses every
+        # row of a segment into one time bucket — the segment's own
+        # interval start
+        query_gran = gran_spec.get("segmentGranularity", "day")
     keys = [
-        (bucket if bucket is not None else F.col(TIME_COLUMN)).alias(
-            TIME_COLUMN
-        ),
+        segment_bucket(TIME_COLUMN, query_gran or "none").alias(TIME_COLUMN),
         *[c.alias(n) for n, c in dims],
     ]
     metrics = schema.get("metricsSpec") or []
@@ -404,15 +397,10 @@ def _compact_task(
                 "are rewritten with their stored schema)"
             )
     ds = spec["dataSource"]
-    gran_spec = spec.get("granularitySpec", {})
-    seg_gran = gran_spec.get("segmentGranularity", "day")
-    period = _SIMPLE_GRANULARITIES.get(str(seg_gran).lower(), seg_gran)
-    tuning = spec.get("tuningConfig", {})
-    max_rows = (
-        tuning.get("partitionsSpec", {}).get("maxRowsPerSegment")
-        or tuning.get("maxRowsPerSegment")
-        or 5_000_000
+    period = granularity_period(
+        spec.get("granularitySpec", {}).get("segmentGranularity", "day")
     )
+    max_rows = segment_max_rows(spec.get("tuningConfig", {}))
     input_spec = spec.get("ioConfig", {}).get("inputSpec", {})
     intervals = None
     if input_spec:
@@ -431,6 +419,6 @@ def _compact_task(
         os.path.join(deep_storage, ds),
         os.path.join(deep_storage, dst),
         granularity=period,
-        max_rows_per_segment=int(max_rows),
+        max_rows_per_segment=max_rows,
         intervals=intervals,
     )

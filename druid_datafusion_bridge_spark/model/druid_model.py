@@ -11,56 +11,23 @@ Reference semantics being re-expressed:
 
 Spark mapping: `__time` => TimestampType column; dimension/metric split =>
 StructField metadata {"druid.role": ...}; interval => min/max stats;
-rollup => groupBy(granularity bucket + dims).agg(metric aggs). Segments
-are written by sources.ingest (write_druid_segments).
+rollup => groupBy(granularity bucket + dims).agg(metric aggs), the
+bucket being functions.druid_sql.segment_bucket — the one
+granularity rule segment writes, ingestion specs and native queries
+share. Segments are written by sources.ingest (write_druid_segments).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.druid_sql import segment_bucket
+
 TIME_COLUMN = "__time"
-
-# ISO-8601 period -> seconds, for the granularities Druid commonly uses.
-_PERIOD_SECONDS = {
-    "PT1S": 1,
-    "PT1M": 60,
-    "PT5M": 300,
-    "PT15M": 900,
-    "PT30M": 1800,
-    "PT1H": 3600,
-    "PT6H": 21600,
-    # no P1D here: it is a CALENDAR unit (checked first below) — an
-    # epoch-seconds duplicate would be dead code whose semantics
-    # silently diverge under non-UTC session zones if the lookup order
-    # ever changed
-}
-# Calendar granularities that need date_trunc, not epoch math.
-_CALENDAR_UNIT = {"P1D": "day", "P1W": "week", "P1M": "month", "P3M": "quarter", "P1Y": "year"}
-
-
-def granularity_trunc(col: Column | str, period: str) -> Column:
-    """Druid queryGranularity bucketing: truncate a timestamp to an
-    ISO-8601 period (epoch-floor for sub-day, date_trunc for calendar).
-
-    Equivalent DuckDB for the epoch path:
-    ``CAST(to_timestamp(floor(epoch(ts)/N)*N) AS TIMESTAMP)``.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    if str(period).upper() == "ALL":
-        # Druid's ALL granularity: one bucket for all time (the epoch
-        # stands in as its timestamp, as in Druid's result rows)
-        return F.to_timestamp(F.lit("1970-01-01 00:00:00"))
-    if period in _CALENDAR_UNIT:
-        return F.date_trunc(_CALENDAR_UNIT[period], c)
-    if period in _PERIOD_SECONDS:
-        n = _PERIOD_SECONDS[period]
-        return (F.floor(c.cast("long") / n) * n).cast("timestamp")
-    raise ValueError(f"unsupported granularity {period!r}")
 
 
 @dataclass(frozen=True)
@@ -162,7 +129,7 @@ class DruidTable:
                 agg_cols.append(F.count(metric).alias(f"count_{metric}"))
             else:
                 raise ValueError(f"unsupported aggregator {how!r}")
-        bucket = granularity_trunc(TIME_COLUMN, granularity).alias(TIME_COLUMN)
+        bucket = segment_bucket(TIME_COLUMN, granularity).alias(TIME_COLUMN)
         return self.df.groupBy(bucket, *[F.col(d) for d in dims]).agg(*agg_cols)
 
 

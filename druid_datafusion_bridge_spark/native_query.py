@@ -12,8 +12,9 @@ engine.
 
 Everything compiles to declarative DataFrame operations — filter trees
 become Catalyst predicates (parquet/segment pushdown eligible),
-granularities become the same ``time_floor`` used by the Druid SQL
-dialect (functions/druid_sql.py), aggregations become two-phase hash
+granularities become ``granularity_bucket`` (functions/druid_sql.py:
+the same ``time_floor`` the Druid SQL dialect uses, and the same rule
+segment writes bucket by), aggregations become two-phase hash
 aggregates, topN becomes partial-agg + per-bucket window. No Python
 runs per row.
 
@@ -70,29 +71,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .functions.druid_sql import parse_period, time_floor
+from .functions.druid_sql import granularity_bucket, granularity_spec, parse_period
 
 __all__ = ["native_query"]
-
-# Druid "simple" granularity strings -> ISO periods (public Druid docs,
-# granularities.md). "none" means millisecond identity.
-_SIMPLE_GRANULARITIES = {
-    "second": "PT1S",
-    "minute": "PT1M",
-    "five_minute": "PT5M",
-    "ten_minute": "PT10M",
-    "fifteen_minute": "PT15M",
-    "thirty_minute": "PT30M",
-    "hour": "PT1H",
-    "six_hour": "PT6H",
-    "eight_hour": "PT8H",
-    "day": "P1D",
-    "week": "P1W",
-    "month": "P1M",
-    "quarter": "P3M",
-    "year": "P1Y",
-}
-
 
 def _ts_lit(iso: str) -> Column:
     """Timestamp literal from an ISO-8601 instant (Z == UTC, the
@@ -819,64 +800,6 @@ def _having_pred(h: dict) -> Column:
     raise ValueError(f"unsupported having type {kind!r}")
 
 
-def _granularity_col(g: Any, time_col: str) -> Column | None:
-    """granularity spec -> bucket column, or None for 'all'. Simple
-    strings are case-insensitive (Druid accepts \"DAY\"); the object
-    forms {\"type\": \"all\"/\"none\"} are legal spellings too."""
-    if g is None or (isinstance(g, str) and g.lower() == "all"):
-        return None
-    c = F.col(time_col).cast("timestamp")
-    if isinstance(g, str):
-        g = g.lower()
-        if g == "none":
-            return c
-        period = _SIMPLE_GRANULARITIES.get(g)
-        if period is None:
-            raise ValueError(f"unsupported granularity {g!r}")
-        return time_floor(c, period)
-    kind = g.get("type")
-    if kind == "all":
-        return None
-    if kind == "none":
-        return c
-    if kind == "period":
-        origin = g.get("origin")
-        tz = g.get("timeZone")
-        if origin is not None:
-            # Druid parses origin as an INSTANT (UTC when no offset
-            # given; explicit offsets honored) — normalize to a naive
-            # UTC string. time_floor itself shifts the instant into the
-            # zone's wall clock when tz is given (r10: the helper owns
-            # the shift; converting here too double-shifted).
-            import datetime as _dt
-
-            inst = _dt.datetime.fromisoformat(
-                origin.replace("Z", "+00:00")
-            )
-            if inst.tzinfo is None:
-                inst = inst.replace(tzinfo=_dt.timezone.utc)
-            origin = (
-                inst.astimezone(_dt.timezone.utc)
-                .replace(tzinfo=None)
-                .isoformat(sep=" ")
-            )
-        # timeZone (granularities.md): bucket on that zone's LOCAL
-        # chronology — LA days start at local midnight, not 00:00 UTC
-        return time_floor(c, g["period"], origin, tz)
-    if kind == "duration":
-        ms = int(g["duration"])
-        org = g.get("origin")
-        o = (
-            F.unix_millis(_ts_lit(org))
-            if org is not None
-            else F.lit(0).cast("long")
-        )
-        return F.timestamp_millis(
-            o + F.floor((F.unix_millis(c) - o) / ms).cast("long") * ms
-        )
-    raise ValueError(f"unsupported granularity type {kind!r}")
-
-
 def _dimensions(spec: dict) -> list[tuple[str, Column]]:
     """dimensions field -> [(outputName, column expr)]."""
     out = []
@@ -1035,7 +958,7 @@ def _agg_select(
     """Shared groupBy/timeseries/topN aggregation core: bucket +
     dimensions -> aggregators -> postAggregations (deferred by the
     timeseries zero-fill path, which must fill before computing)."""
-    bucket = _granularity_col(spec.get("granularity", "all"), time_col)
+    bucket = granularity_bucket(time_col, spec.get("granularity", "all"))
     keys = []
     if bucket is not None:
         keys.append(bucket.alias("timestamp"))
@@ -1143,22 +1066,13 @@ def _bucket_grid(spark, intervals, g) -> DataFrame | None:
     one-column ``timestamp`` frame built from literals (explode of a
     sequence; bounded by bucket count, no data scan). Druid's grid
     starts at bucketStart(interval start), i.e. the floor."""
-    if g is None or (isinstance(g, str) and g.lower() in ("all", "none")):
+    spec = granularity_spec(g)
+    if spec is None or spec["type"] == "none":
         return None
-    if isinstance(g, str):
-        period = _SIMPLE_GRANULARITIES.get(g.lower())
-        if period is None:
-            return None
-        months, millis = parse_period(period)
-        gran: Any = g.lower()
-    elif g.get("type") == "period":
-        months, millis = parse_period(g["period"])
-        gran = g
-    elif g.get("type") == "duration":
-        months, millis = 0, int(g["duration"])
-        gran = g
+    if spec["type"] == "period":
+        months, millis = parse_period(spec["period"])
     else:
-        return None
+        months, millis = 0, spec["duration"]
     if isinstance(intervals, str):
         intervals = [intervals]
     bounds = [tuple(iv.split("/")) for iv in intervals]
@@ -1170,7 +1084,7 @@ def _bucket_grid(spark, intervals, g) -> DataFrame | None:
         F.col("s").cast("timestamp").alias("__t"),
         F.col("e").cast("timestamp").alias("__e"),
     )
-    start = _granularity_col(gran, "__t")
+    start = granularity_bucket(F.col("__t"), spec)
     if months:
         # Month buckets are origin + k*months (ONE clamped calendar
         # addition per bucket — time_floor's exact grid). Stepping a
@@ -1178,14 +1092,7 @@ def _bucket_grid(spark, intervals, g) -> DataFrame | None:
         # boundary and drift off the data's buckets (origin Jan 31:
         # floor+1mo = Feb 29, +1mo again = Mar 29, but the data
         # buckets to origin+2mo = Mar 31).
-        origin = None
-        if isinstance(gran, dict):
-            origin = gran.get("origin")
-            if origin is not None:
-                origin = origin.replace("Z", "").replace("T", " ")
-        org = F.lit(origin).cast("timestamp") if origin else F.lit(
-            "1970-01-01 00:00:00"
-        ).cast("timestamp")
+        org = F.lit(spec["origin"] or "1970-01-01 00:00:00").cast("timestamp")
         k0 = (
             F.floor(F.months_between(F.col("__t"), org) / months) * months
         ).cast("int")

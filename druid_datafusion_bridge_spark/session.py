@@ -56,11 +56,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Split size tuned to the local test scale so small parquet files
         # still fan out across cores (at cluster scale with TB inputs the
-        # 128m default is right — override via env).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"),
-        )
+        # 128m default is right — pass it through extra_conf).
+        .config("spark.sql.files.maxPartitionBytes", "4m")
         .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))

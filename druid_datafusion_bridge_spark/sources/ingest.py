@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..model.druid_model import granularity_trunc
+from ..functions.druid_sql import segment_bucket
 from .segment import TIME_COLUMN
 
 MANIFEST_SCHEMA = (
@@ -34,14 +34,16 @@ MANIFEST_SCHEMA = (
 def write_druid_segments(
     df: DataFrame,
     path: str,
-    granularity: str = "P1D",
+    granularity: str | None = "P1D",
     dimensions: list[str] | None = None,
     max_rows_per_segment: int = 5_000_000,
     version: str = "",
     sort_by: list[str] | None = None,
 ) -> DataFrame:
     """Write `df` as a directory of Druid v9 segments, one (or more, for
-    hot intervals) per `granularity` bucket of `__time`.
+    hot intervals) per `granularity` bucket of `__time`. `granularity`
+    is any spec functions.druid_sql.segment_bucket accepts (a Druid
+    name, an ISO period, or None / ``"ALL"`` for one bucket).
 
     Returns the manifest DataFrame (segment_dir, interval bounds,
     num_rows); collecting it triggers the distributed write.
@@ -118,8 +120,7 @@ def write_druid_segments(
             drop_spark_zip_finders()
 
     bucketed = df.select(
-        *data_cols,
-        granularity_trunc(F.col(TIME_COLUMN), granularity).alias("__bucket"),
+        *data_cols, segment_bucket(TIME_COLUMN, granularity).alias("__bucket")
     )
     # Hot-interval sharding (Druid numShards): count per bucket (cheap
     # partial-agg pass), broadcast the tiny bucket->shard-count table
@@ -148,7 +149,7 @@ def compact_segments(
     spark,
     src_root: str,
     dst_root: str,
-    granularity: str = "P1D",
+    granularity: str | None = "P1D",
     dimensions: list[str] | None = None,
     max_rows_per_segment: int = 5_000_000,
     intervals: list[str] | None = None,

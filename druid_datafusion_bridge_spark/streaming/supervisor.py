@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.druid_sql import granularity_period, segment_max_rows
+
 __all__ = ["StreamingSupervisor"]
 
 
@@ -202,17 +204,14 @@ class StreamingSupervisor:
         self.spec = spec
         self._schema = inner["dataSchema"]
         self._io = inner.get("ioConfig", {})
-        tuning = inner.get("tuningConfig", {})
-        self._max_rows = int(
-            tuning.get("partitionsSpec", {}).get("maxRowsPerSegment")
-            or tuning.get("maxRowsPerSegment")
-            or 5_000_000
+        # resolved at submit: a bad segmentGranularity is a 400, not a
+        # failure in every micro-batch's handoff
+        self._max_rows = segment_max_rows(inner.get("tuningConfig", {}))
+        self._period = granularity_period(
+            self._schema.get("granularitySpec", {}).get(
+                "segmentGranularity", "day"
+            )
         )
-        gran = self._schema.get("granularitySpec", {})
-        from ..native_query import _SIMPLE_GRANULARITIES
-
-        seg = str(gran.get("segmentGranularity", "day"))
-        self._period = _SIMPLE_GRANULARITIES.get(seg.lower(), seg)
         self.deep_storage = deep_storage
         self.out_root = os.path.join(deep_storage, self.data_source)
         self.checkpoint = os.path.join(

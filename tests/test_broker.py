@@ -1182,12 +1182,20 @@ def test_sql_task_insert_replace_ingestion(spark, tmp_path):
         s.stop()
 
 
+def _segment_ids(base, ds):
+    return sorted(r["segment_id"] for r in _post(base + "/druid/v2/sql", {
+        "query": "SELECT segment_id FROM sys.segments "
+                 f"WHERE datasource = '{ds}'",
+        "context": {"useCache": False}}))
+
+
 def test_kill_task_and_coordinator_endpoints(spark, tmp_path):
     """Segment lifecycle completion: the coordinator datasource
     endpoints report segment metadata from the planning manifest, and a
     kill task permanently deletes the segments WHOLLY CONTAINED in its
-    interval (partial overlaps survive); killing the rest deregisters
-    the emptied datasource everywhere."""
+    interval (partial overlaps survive), and a malformed interval is a
+    400; killing the rest deregisters the emptied datasource
+    everywhere."""
     s = DruidBrokerShim(spark, {}, deep_storage=str(tmp_path / "deep"))
     port = s.start()
     base = f"http://127.0.0.1:{port}"
@@ -1241,6 +1249,15 @@ def test_kill_task_and_coordinator_endpoints(spark, tmp_path):
         ) as r:
             assert json.loads(
                 r.read())["status"]["numSegmentsKilled"] == 0
+        # the interval is parsed at submit: a reversed or slash-less
+        # one is a 400 and kills nothing
+        for bad in ("2025-01-01T00:00:00Z/2024-01-01T00:00:00Z",
+                    "2024-01-01T00:00:00Z"):
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                _post(base + "/druid/indexer/v1/task", {
+                    "type": "kill", "dataSource": "life", "interval": bad})
+            assert ei.value.code == 400, bad
+        assert len(_segment_ids(base, "life")) == 2
         # killing everything deregisters the datasource
         _post(base + "/druid/indexer/v1/task", {
             "type": "kill", "dataSource": "life",
@@ -1495,6 +1512,109 @@ def test_auto_compaction_duty_heals_fragmentation(spark, tmp_path):
         with urllib.request.urlopen(req) as r:
             assert r.status == 200
         assert s.run_auto_compaction() == {}
+    finally:
+        s.stop()
+
+
+def test_auto_compaction_buckets_on_the_writer_grid(spark, tmp_path):
+    """The compaction duty's health check buckets segment starts on the
+    same grid the writer uses: a week config folds the 7 daily segments
+    of one ISO week (Monday..Sunday) into one; a root compacted at PT15M
+    is healthy on the next cycle (nothing rewritten, same segment ids);
+    an unknown granularity is refused with a 400 at config time."""
+    s = DruidBrokerShim(spark, {}, deep_storage=str(tmp_path / "deep"))
+    s._compaction_period_s = 3600.0  # the test runs every duty cycle
+    port = s.start()
+    base = f"http://127.0.0.1:{port}"
+    try:
+        days = ", ".join(
+            f"(TIMESTAMP '2024-01-0{d} 12:00:00', {d})" for d in range(1, 8)
+        )
+        _post(base + "/druid/v2/sql/task", {
+            "query": f"INSERT INTO wk SELECT * FROM VALUES {days} "
+                     "AS t(__time, v) PARTITIONED BY DAY"})
+        assert len(_segment_ids(base, "wk")) == 7
+        _post(base + "/druid/coordinator/v1/config/compaction", {
+            "dataSource": "wk", "segmentGranularity": "week"})
+        assert s.run_auto_compaction() == {"wk": 1}
+        rows = _post(base + "/druid/v2/sql", {
+            "query": "SELECT SUM(v) AS total FROM wk",
+            "context": {"useCache": False}})
+        assert rows == [{"total": 28}]
+        assert s.run_auto_compaction() == {}
+
+        # two INSERTs leave two segments in the same quarter hours
+        for m in (5, 7):
+            _post(base + "/druid/v2/sql/task", {
+                "query": "INSERT INTO q SELECT * FROM VALUES "
+                         f"(TIMESTAMP '2024-01-01 00:0{m}:00', 1), "
+                         f"(TIMESTAMP '2024-01-01 00:2{m}:00', 2) "
+                         "AS t(__time, v) PARTITIONED BY DAY"})
+        _post(base + "/druid/coordinator/v1/config/compaction", {
+            "dataSource": "q",
+            "granularitySpec": {"segmentGranularity": "PT15M"}})
+        assert s.run_auto_compaction() == {"q": 2}
+        ids = _segment_ids(base, "q")
+        assert len(ids) == 2
+        assert s.run_auto_compaction() == {}
+        assert _segment_ids(base, "q") == ids
+
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _post(base + "/druid/coordinator/v1/config/compaction", {
+                "dataSource": "q", "segmentGranularity": "fortnight"})
+        assert ei.value.code == 400
+        with urllib.request.urlopen(
+            base + "/druid/coordinator/v1/config/compaction"
+        ) as r:
+            cfgs = json.loads(r.read())["compactionConfigs"]
+        assert cfgs == [
+            {"dataSource": "q", "segmentGranularity": "PT15M"},
+            {"dataSource": "wk", "segmentGranularity": "week"},
+        ]
+    finally:
+        s.stop()
+
+
+def test_sql_partitioned_by_lands_on_time_floor_grid(spark, tmp_path):
+    """PARTITIONED BY takes any granularity a query takes — an ISO
+    period literal or a Druid name such as QUARTER — and writes one
+    segment per TIME_FLOOR bucket of the inserted rows."""
+    import os
+
+    from druid_datafusion_bridge_spark.functions import time_floor
+    from druid_datafusion_bridge_spark.sources.datasource import (
+        find_segment_dirs,
+    )
+
+    deep = tmp_path / "deep"
+    s = DruidBrokerShim(spark, {}, deep_storage=str(deep))
+    port = s.start()
+    base = f"http://127.0.0.1:{port}"
+    cases = [
+        ("'PT2H'", "PT2H", ["2024-01-01 00:30:00", "2024-01-01 01:59:00",
+                            "2024-01-01 02:00:00", "2024-01-01 05:10:00"]),
+        ("QUARTER", "P3M", ["2024-01-15 00:00:00", "2024-03-31 23:00:00",
+                            "2024-04-01 00:00:00", "2024-11-30 08:00:00"]),
+    ]
+    try:
+        for i, (grain, period, times) in enumerate(cases):
+            values = ", ".join(
+                f"(TIMESTAMP '{t}', {k})" for k, t in enumerate(times)
+            )
+            _post(base + "/druid/v2/sql/task", {
+                "query": f"INSERT INTO p{i} SELECT * FROM VALUES {values} "
+                         f"AS t(__time, v) PARTITIONED BY {grain}"})
+            expected = sorted(
+                r[0] for r in spark.createDataFrame(
+                    [(t,) for t in times], "s string"
+                ).select(F.unix_millis(time_floor(
+                    F.col("s").cast("timestamp"), period))).distinct().collect()
+            )
+            got = sorted(
+                int(os.path.basename(d).split("_")[1])
+                for d in find_segment_dirs(str(deep / f"p{i}"))
+            )
+            assert got == expected and len(got) == 3, grain
     finally:
         s.stop()
 

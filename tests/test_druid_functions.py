@@ -147,28 +147,87 @@ def test_sql_registration_matches_column_helpers(spark):
 
 def test_week_flooring_is_iso_monday_everywhere(spark):
     """P1W must floor to MONDAY (Druid's ISO chronology) in the Column
-    helper, the SQL TIME_FLOOR, and the model layer's granularity_trunc
-    alike — an epoch-anchored week grid lands on Thursdays (the epoch's
-    weekday) and buckets the same rows into different 'weeks'."""
-    from druid_datafusion_bridge_spark.model.druid_model import (
-        granularity_trunc,
-    )
-
+    helper and the SQL TIME_FLOOR alike — an epoch-anchored week grid
+    lands on Thursdays (the epoch's weekday) and buckets the same rows
+    into different 'weeks'."""
     df = spark.createDataFrame([("2024-01-09 10:00:00",)], "s string").select(
         F.col("s").cast("timestamp").alias("ts")
     )
     register_druid_sql_functions(spark)
     df.createOrReplaceTempView("wk_t")
     monday = dt.datetime(2024, 1, 8, 0, 0)
-    row = df.select(
-        time_floor("ts", "P1W").alias("helper"),
-        granularity_trunc(F.col("ts"), "P1W").alias("model"),
-    ).collect()[0]
-    assert row["helper"] == monday and row["model"] == monday
+    row = df.select(time_floor("ts", "P1W").alias("helper")).collect()[0]
+    assert row["helper"] == monday
     assert (
         spark.sql("SELECT TIME_FLOOR(ts, 'P1W') FROM wk_t").collect()[0][0]
         == monday
     )
+
+
+_GRANULARITY_NAMES = [
+    "second", "minute", "five_minute", "ten_minute", "fifteen_minute",
+    "thirty_minute", "hour", "six_hour", "eight_hour", "day", "week",
+    "month", "quarter", "year",
+]
+
+
+def test_floor_ms_matches_time_floor_for_every_granularity(spark):
+    """The metadata plane's floor_ms (compaction's health check) and the
+    row plane's time_floor (every segment write and query bucket) put
+    an instant in the same bucket, for every Druid simple granularity
+    and a few multi-unit periods — including pre-1970 instants, month
+    ends, and the Sunday/Monday edge of ISO weeks."""
+    from druid_datafusion_bridge_spark.functions.druid_sql import (
+        floor_ms,
+        granularity_period,
+    )
+
+    samples = [
+        "1900-03-01 12:34:56.789", "1965-07-31 23:00:00",
+        "1969-12-28 12:00:00", "1969-12-29 00:00:00",
+        "1969-12-31 23:59:59.999", "1970-01-01 00:00:00",
+        "2023-02-28 23:59:00", "2024-01-07 23:59:59.999",
+        "2024-01-08 00:00:00", "2024-01-31 23:59:59.999",
+        "2024-02-29 18:00:00", "2024-03-31 23:30:00",
+        "2024-06-15 13:47:21.123", "2024-12-31 23:59:59.999",
+    ]
+    epoch = dt.datetime(1970, 1, 1)
+    millis = [
+        (dt.datetime.fromisoformat(s) - epoch) // dt.timedelta(milliseconds=1)
+        for s in samples
+    ]
+    periods = [granularity_period(g) for g in _GRANULARITY_NAMES]
+    periods += ["PT2H", "P2D", "P2W", "P2M"]
+    df = spark.createDataFrame([(m,) for m in millis], "ms long").select(
+        "ms", F.timestamp_millis("ms").alias("ts")
+    )
+    rows = df.select(
+        "ms",
+        *[F.unix_millis(time_floor("ts", p)).alias(p) for p in periods],
+    ).collect()
+    assert len(rows) == len(samples)
+    for r in rows:
+        for p in periods:
+            assert floor_ms(r["ms"], p) == r[p], (p, r["ms"])
+        assert floor_ms(r["ms"], None) == 0  # ALL: one bucket at the epoch
+
+
+def test_granularity_period_resolves_names_periods_and_all():
+    """Simple names (any case), ISO periods and ALL [TIME] resolve; a
+    name Druid lacks, "none" (not a segment grain) or a bad period
+    raises."""
+    from druid_datafusion_bridge_spark.functions.druid_sql import (
+        granularity_period,
+    )
+
+    assert [granularity_period(g) for g in ("DAY", "ten_minute", "Quarter")] == [
+        "P1D", "PT10M", "P3M"]
+    assert granularity_period("PT2H") == "PT2H"
+    assert granularity_period("all") is None
+    assert granularity_period("ALL  TIME") is None
+    for bad in ("fortnight", "none", "PFOO", "P1M1D", ""):
+        with pytest.raises(ValueError):
+            granularity_period(bad)
 
 
 def test_time_floor_origin_keeps_day_and_time(spark):

@@ -323,10 +323,23 @@ def test_compact_task_interval_scope_and_loud_fields(spark, tmp_path):
 def test_ingest_query_granularity_all_buckets_to_segment_start(spark, tmp_path):
     """queryGranularity ALL collapses each segment's rows into one time
     bucket (the segment interval start) — not per-row timestamps."""
+    _check_query_granularity_all(spark, tmp_path, "all")
+
+
+@pytest.mark.parametrize(
+    "query_gran", [{"type": "all"}, "ALL TIME"], ids=["object", "all_time"]
+)
+def test_ingest_query_granularity_all_spellings(spark, tmp_path, query_gran):
+    """Every spelling of ALL takes the segment-start rule — not per-row
+    timestamps, and not the epoch."""
+    _check_query_granularity_all(spark, tmp_path, query_gran)
+
+
+def _check_query_granularity_all(spark, tmp_path, query_gran):
     base = _write_json_input(tmp_path)
     storage = str(tmp_path / "deepall")
     spec = _spec(base)
-    spec["spec"]["dataSchema"]["granularitySpec"]["queryGranularity"] = "all"
+    spec["spec"]["dataSchema"]["granularitySpec"]["queryGranularity"] = query_gran
     ingest(spark, spec, storage).collect()
     df = (
         spark.read.format("druidsegment")
@@ -514,3 +527,60 @@ def test_inline_csv_header_and_format_field_discipline(spark, tmp_path):
             "inputSource": {"type": "local", "baseDir": str(tmp_path)},
             "inputFormat": {"type": "json", "flattenSpec": {}},
         })
+
+
+@pytest.mark.parametrize("granularity,period", [
+    ("ten_minute", "PT10M"), ("eight_hour", "PT8H"), ("PT2H", "PT2H"),
+])
+def test_segment_granularity_buckets_like_time_floor(spark, tmp_path,
+                                                     granularity, period):
+    """Any granularity a query accepts is a segment granularity too, on
+    the same grid: one segment per non-empty TIME_FLOOR bucket, named by
+    the bucket start and holding exactly that bucket's rows."""
+    import os
+
+    from druid_datafusion_bridge_spark.functions import (
+        parse_period,
+        time_floor,
+    )
+
+    t0 = 1_704_067_200_000  # 2024-01-01T00:00:00Z
+    millis = [t0 + k * 37 * 60_000 for k in range(40)]  # ~25 hours
+    data = "".join(
+        json.dumps({"t": m, "v": str(k)}) + "\n" for k, m in enumerate(millis)
+    )
+    spec = {
+        "type": "index_parallel",
+        "spec": {
+            "dataSchema": {
+                "dataSource": "grid",
+                "timestampSpec": {"column": "t", "format": "millis"},
+                "dimensionsSpec": {"dimensions": ["v"]},
+                "granularitySpec": {"segmentGranularity": granularity,
+                                    "queryGranularity": "none",
+                                    "rollup": False},
+            },
+            "ioConfig": {"inputSource": {"type": "inline", "data": data},
+                         "inputFormat": {"type": "json"}},
+        },
+    }
+    manifest = ingest(spark, spec, str(tmp_path / "deep")).collect()
+    expected = {
+        r["b"]: r["n"]
+        for r in spark.createDataFrame([(m,) for m in millis], "ms long")
+        .groupBy(
+            F.unix_millis(time_floor(F.timestamp_millis("ms"), period)).alias("b")
+        )
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    got = {
+        int(os.path.basename(m["segment_dir"]).split("_")[1]): m["num_rows"]
+        for m in manifest
+    }
+    assert got == expected and len(got) > 1
+    step = parse_period(period)[1]
+    for m in manifest:
+        start = int(os.path.basename(m["segment_dir"]).split("_")[1])
+        assert start <= m["interval_start_ms"]
+        assert m["interval_end_ms"] <= start + step
