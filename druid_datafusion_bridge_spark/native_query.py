@@ -1065,7 +1065,13 @@ def _bucket_grid(spark, intervals, g) -> DataFrame | None:
     """All granularity buckets intersecting the query intervals — a
     one-column ``timestamp`` frame built from literals (explode of a
     sequence; bounded by bucket count, no data scan). Druid's grid
-    starts at bucketStart(interval start), i.e. the floor."""
+    starts at bucketStart(interval start), i.e. the floor.
+
+    The sequence only proposes candidates, about one per bucket, from
+    the floored start to past the interval end; each buckets through
+    granularity_bucket, the rule the data buckets by, so a zone's local
+    grid (a P1M in America/Los_Angeles starts at 08:00Z, a P1D's start
+    moves across DST) is the data's grid exactly."""
     spec = granularity_spec(g)
     if spec is None or spec["type"] == "none":
         return None
@@ -1086,8 +1092,8 @@ def _bucket_grid(spark, intervals, g) -> DataFrame | None:
     )
     start = granularity_bucket(F.col("__t"), spec)
     if months:
-        # Month buckets are origin + k*months (ONE clamped calendar
-        # addition per bucket — time_floor's exact grid). Stepping a
+        # Month candidates are origin + k*months (ONE clamped calendar
+        # addition per candidate — time_floor's exact grid). Stepping a
         # sequence by an interval would re-add from each clamped
         # boundary and drift off the data's buckets (origin Jan 31:
         # floor+1mo = Feb 29, +1mo again = Mar 29, but the data
@@ -1099,17 +1105,21 @@ def _bucket_grid(spark, intervals, g) -> DataFrame | None:
         k1 = (
             F.floor(F.months_between(F.col("__e"), org) / months) * months
         ).cast("int") + F.lit(2 * months)
-        buckets = F.transform(
+        candidates = F.transform(
             F.sequence(k0 - F.lit(months), k1, F.lit(months)),
             lambda k: org + F.make_interval(F.lit(0), k),
         )
     else:
         step = F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0),
                                   F.lit(millis / 1000.0))
-        buckets = F.sequence(start, F.col("__e"), step)
+        candidates = F.sequence(start, F.col("__e") + step, step)
     return (
         base.select(
-            F.explode(buckets).alias("timestamp"), "__e", start.alias("__s0"),
+            F.explode(candidates).alias("__c"), "__e", start.alias("__s0"),
+        )
+        .select(
+            granularity_bucket(F.col("__c"), spec).alias("timestamp"),
+            "__e", "__s0",
         )
         .filter(
             (F.col("timestamp") < F.col("__e"))

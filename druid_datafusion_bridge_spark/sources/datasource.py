@@ -52,6 +52,11 @@ headers, a few KB); column bytes are decoded on executors inside
 read(), which yields Arrow RecordBatches (zero row objects), one per
 unit. For 100 TB = ~100k segments this planning cost is a metadata
 listing, and decode parallelism is core-count wide.
+
+Types: ``_COLUMN_TYPES`` is the one place a column type crosses the
+Spark boundary — the manifest's type key maps to the Spark type of the
+schema and the Arrow type read() emits; the segment side of the same
+mapping is segment.py's ``_VALUE_TYPES``.
 """
 
 from __future__ import annotations
@@ -59,10 +64,12 @@ from __future__ import annotations
 import dataclasses
 import heapq
 import os
+import re
 from dataclasses import dataclass
 from typing import NamedTuple
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import (
@@ -242,39 +249,19 @@ def register_druid_datasource(spark) -> None:
         spark.dataSource.register(DruidSegmentDataSource)
 
 
-_SPARK_TYPES = {
-    "timestamp[ms]": TimestampType(),
-    "string": StringType(),
-    "int64": LongType(),
-    "float": FloatType(),
-    "double": DoubleType(),
-    "binary": BinaryType(),
+# manifest type key (the segment schema's Arrow type, as a string) ->
+# (Spark type, Arrow type the reader emits). Spark timestamps are
+# microseconds, and dictionary strings flatten to plain strings.
+_COLUMN_TYPES = {
+    "timestamp[ms]": (TimestampType(), pa.timestamp("us")),
+    "string": (StringType(), pa.string()),
+    "int64": (LongType(), pa.int64()),
+    "float": (FloatType(), pa.float32()),
+    "double": (DoubleType(), pa.float64()),
+    "binary": (BinaryType(), pa.binary()),
     # multi-value string dimension (hasMultipleValues)
-    "list<item: string>": ArrayType(StringType()),
+    "list<item: string>": (ArrayType(StringType()), pa.list_(pa.string())),
 }
-
-
-def _arrow_of_spark(dt):
-    """Arrow type for a null-fill column of a Spark field (schema
-    evolution: the column exists in the union schema but not in this
-    segment)."""
-    import pyarrow as pa
-
-    if isinstance(dt, StringType):
-        return pa.string()
-    if isinstance(dt, LongType):
-        return pa.int64()
-    if isinstance(dt, FloatType):
-        return pa.float32()
-    if isinstance(dt, DoubleType):
-        return pa.float64()
-    if isinstance(dt, BinaryType):
-        return pa.binary()
-    if isinstance(dt, TimestampType):
-        return pa.timestamp("us")
-    if isinstance(dt, ArrayType):
-        return pa.list_(pa.string())
-    raise ValueError(f"No arrow mapping for spark type {dt}")
 
 
 def find_segment_dirs(path: str) -> list[str]:
@@ -292,6 +279,8 @@ def find_segment_dirs(path: str) -> list[str]:
 
 
 PLANMETA_NAME = "_planmeta.json"
+# the fields of one segment's v3 manifest entry (load_plan_meta)
+_PLANMETA_FIELDS = frozenset({"id", "start", "end", "rows", "size", "stats", "cols"})
 
 
 def segment_identity(seg_dir: str) -> list | None:
@@ -320,16 +309,14 @@ def _segment_version_key(name: str) -> tuple:
     keys of MIXED styles stay comparable (``b1`` vs a date-style
     ``20240105``: numeric tokens order before alphabetic ones,
     deterministically, instead of raising TypeError and killing every
-    query on the root). Name parsing shares _SEGMENT_NAME_RE with
+    query on the root). Name parsing shares _segment_name_match with
     segment_version_tag so the ordering and the metadata plane can
     never disagree about what the version IS."""
-    import re as _re
-
     m = _segment_name_match(name)
     v = (m.group("v") or "") if m else ""
     return tuple(
         (0, int(tok), "") if tok.isdigit() else (1, 0, tok)
-        for tok in _re.split(r"(\d+)", v)
+        for tok in re.split(r"(\d+)", v)
         if tok
     )
 
@@ -340,18 +327,7 @@ def _segment_version_key(name: str) -> tuple:
 # overshadowed by its own sibling shards). ONE pattern shared by the
 # overshadow ordering and the metadata-plane version tag, so the two
 # can never drift apart.
-_SEGMENT_NAME_RE = None  # compiled lazily below (re imported in-function)
-
-
-def _segment_name_match(name: str):
-    global _SEGMENT_NAME_RE
-    if _SEGMENT_NAME_RE is None:
-        import re as _re
-
-        _SEGMENT_NAME_RE = _re.compile(
-            r"^segment_\d+_\d{4,}(?:_(?P<v>.+))?$"
-        )
-    return _SEGMENT_NAME_RE.match(name)
+_segment_name_match = re.compile(r"^segment_\d+_\d{4,}(?:_(?P<v>.+))?$").match
 
 
 def segment_version_tag(name: str) -> str:
@@ -500,6 +476,8 @@ def load_plan_meta(root: str, seg_dirs: list[str]) -> dict[str, dict]:
         if isinstance(raw, dict) and raw.get("v") == 3:
             cached = raw.get("segments", {})
     except (OSError, ValueError):
+        pass
+    if not isinstance(cached, dict):
         cached = {}
 
     out: dict[str, dict] = {}
@@ -509,15 +487,16 @@ def load_plan_meta(root: str, seg_dirs: list[str]) -> dict[str, dict]:
         name = os.path.basename(seg_dir)
         ident = segment_identity(seg_dir)
         entry = cached.get(name)
-        if entry is None or ident is None or entry.get("id") != ident:
+        # a cache of facts the segment holds: an entry that is not a
+        # complete v3 record is stale, and the segment is re-opened
+        if (
+            not isinstance(entry, dict)
+            or not _PLANMETA_FIELDS <= entry.keys()
+            or ident is None
+            or entry["id"] != ident
+        ):
             seg = DruidSegment(seg_dir)
             try:
-                cols = []
-                for cname in seg.metadata.columns:
-                    key = str(seg.schema.field(cname).type)
-                    if key.startswith("dictionary"):
-                        key = "string"
-                    cols.append([cname, key])
                 entry = {
                     "id": ident,
                     "start": seg.metadata.interval_start_ms,
@@ -536,7 +515,10 @@ def load_plan_meta(root: str, seg_dirs: list[str]) -> dict[str, dict]:
                         for c, s in seg.column_stats().items()
                         if "min" in s and "max" in s
                     },
-                    "cols": cols,
+                    "cols": [
+                        [c, str(seg.schema.field(c).type)]
+                        for c in seg.metadata.columns
+                    ],
                 }
             finally:
                 seg.close()
@@ -719,7 +701,7 @@ class DruidSegmentDataSource(DataSource):
                 merged.setdefault(name, key)
         cols = _projected(self.options, list(merged))
         return StructType(
-            [StructField(name, _SPARK_TYPES[merged[name]], True) for name in cols]
+            [StructField(name, _COLUMN_TYPES[merged[name]][0], True) for name in cols]
         )
 
     def reader(self, schema: StructType) -> "DruidSegmentReader":
@@ -739,9 +721,12 @@ def _projected(options, all_columns: list[str]) -> list[str]:
 
 class DruidSegmentReader(DataSourceReader):
     def __init__(self, schema: StructType, options):
-        self.spark_schema = schema
         self.path = options.get("path")
         self.columns = [f.name for f in schema.fields]
+        # the Arrow type each output column is emitted as; the type
+        # table's Spark types hash, so it inverts into this lookup
+        arrow_of = dict(_COLUMN_TYPES.values())
+        self.arrow_types = [arrow_of[f.dataType] for f in schema.fields]
         # Option-driven pruning (cache-safe: options are relation
         # identity). Pruning is acceleration only — callers keep their
         # df.filter(), which Spark applies on top.
@@ -994,61 +979,33 @@ class DruidSegmentReader(DataSourceReader):
                     if r is None:
                         continue
                     rows = _intersect_rows(rows, r)
-            import pyarrow as pa_mod
-
             if rows is not None and len(rows) == 0:
                 # fully pruned — the empty sentinel partition, or a
-                # bitmap intersection that proved zero matches: emit an
-                # empty typed batch WITHOUT decoding any value column
-                # (a take() on a decoded batch would pay the whole
+                # bitmap intersection that proved zero matches: an empty
+                # typed batch WITHOUT decoding any value column (a
+                # take() on a decoded batch would pay the whole
                 # segment's decompression for a zero-row answer)
-                yield pa_mod.RecordBatch.from_arrays(
-                    [
-                        pa_mod.array([], type=_arrow_of_spark(f.dataType))
-                        for f in self.spark_schema.fields
-                    ],
-                    names=list(self.columns),
-                )
-                return
-
-            # schema evolution: columns this (older) segment lacks
-            # surface as NULLs — decode only what exists. A bitmap row
-            # set pushes INTO the decode: only the compressed blocks
-            # holding selected rows decompress (read_batch(rows=...)),
-            # so an index that keeps 0.1% of rows skips ~99.9% of the
-            # segment's block decompression instead of decoding
-            # everything and take()-ing afterwards.
-            present = [c for c in self.columns if c in seg.metadata.columns]
-            batch = seg.read_batch(present or [TIME_COLUMN], rows=rows)
-            n_rows = batch.num_rows
-            by_name = {
-                name: batch.column(i) for i, name in enumerate(batch.schema.names)
-            }
-            arrays0 = []
-            for f in self.spark_schema.fields:
-                if f.name in by_name:
-                    arrays0.append(by_name[f.name])
-                else:
-                    arrays0.append(
-                        pa_mod.nulls(n_rows, type=_arrow_of_spark(f.dataType))
-                    )
-            batch = pa_mod.RecordBatch.from_arrays(
-                arrays0, names=list(self.columns)
+                decoded, n_rows = {}, 0
+            else:
+                # schema evolution: columns this (older) segment lacks
+                # surface as NULLs — decode only what exists. A bitmap
+                # row set pushes INTO the decode: only the compressed
+                # blocks holding selected rows decompress
+                # (read_batch(rows=...)), so an index that keeps 0.1% of
+                # rows skips ~99.9% of the segment's block decompression
+                # instead of decoding everything and take()-ing
+                # afterwards.
+                present = [c for c in self.columns if c in seg.metadata.columns]
+                batch = seg.read_batch(present or [TIME_COLUMN], rows=rows)
+                decoded = dict(zip(batch.schema.names, batch.columns))
+                n_rows = batch.num_rows
+            yield pa.RecordBatch.from_arrays(
+                [
+                    decoded[c].cast(t) if c in decoded else pa.nulls(n_rows, t)
+                    for c, t in zip(self.columns, self.arrow_types)
+                ],
+                names=self.columns,
             )
-            # Spark timestamps are microseconds; dictionary columns flatten
-            # at the Arrow boundary (Spark's Python DataSource consumes
-            # plain arrays).
-            import pyarrow as pa
-
-            arrays = []
-            for i, name in enumerate(self.columns):
-                col = batch.column(i)
-                if pa.types.is_dictionary(col.type):
-                    col = col.cast(pa.string())
-                elif pa.types.is_timestamp(col.type):
-                    col = col.cast(pa.timestamp("us"))
-                arrays.append(col)
-            yield pa.RecordBatch.from_arrays(arrays, names=list(self.columns))
         finally:
             seg.close()
 

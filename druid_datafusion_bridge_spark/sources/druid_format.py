@@ -698,29 +698,36 @@ def write_string_column_v2(
     )
     out += write_compressed_ints(ids, strategy=strategy)
     if bitmap_index:
-        bt = BITMAP_TYPE_ROARING if bitmap_type is None else bitmap_type
-        arr = np.asarray(ids, np.int64)
-        # One argsort + boundary split yields every dictionary id's row
-        # list in O(N log N) total; a flatnonzero(arr == i) per id would
-        # rescan all rows once PER DISTINCT VALUE — quadratic for
-        # high-cardinality dimensions (100k values x 5M rows is 5e11
-        # comparisons), which is exactly the shape segment ingest sees.
-        # Measured: 1M rows x 100k distinct builds + serializes in
-        # ~3.3 s single-threaded (the per-value scan form was minutes).
-        order = np.argsort(arr, kind="stable")  # row ids, grouped by value
-        sorted_ids = arr[order]
-        # searchsorted over the (sorted) present ids gives each
-        # dictionary id's [start, end) slice; absent ids get an empty one
-        starts = np.searchsorted(sorted_ids, np.arange(len(dictionary)), "left")
-        ends = np.searchsorted(sorted_ids, np.arange(len(dictionary)), "right")
-        out += write_generic_indexed(
-            [
-                # rows within a value arrive ascending (stable argsort)
-                write_bitmap_blob(order[s:e], bt)
-                for s, e in zip(starts, ends)
-            ]
-        )
+        out += _bitmap_index(ids, np.arange(len(ids)), len(dictionary), bitmap_type)
     return bytes(out)
+
+
+def _bitmap_index(
+    ids: np.ndarray, row_of: np.ndarray, cardinality: int, bitmap_type: int | None
+) -> bytes:
+    """The inverted index of a string column: a GenericIndexed of one
+    typed bitmap blob per dictionary id, listing the rows that hold it.
+    ``ids`` are the flat dictionary ids and ``row_of`` maps each flat
+    position to its row (the identity for a single-value column).
+
+    One stable argsort groups every id's positions in O(N log N) total,
+    and searchsorted over the sorted ids gives each dictionary id its
+    [start, end) slice (empty when absent); a flatnonzero(ids == i) per
+    id would rescan all rows once PER DISTINCT VALUE, quadratic for the
+    high-cardinality dimensions segment ingest sees. Rows within a slice
+    arrive ascending; a multi-value row that repeats a value ("the the")
+    repeats its row, which the blob serializers dedup."""
+    bt = BITMAP_TYPE_ROARING if bitmap_type is None else bitmap_type
+    arr = np.asarray(ids, np.int64)
+    order = np.argsort(arr, kind="stable")
+    sorted_ids = arr[order]
+    rows = row_of[order]
+    values = np.arange(cardinality)
+    starts = np.searchsorted(sorted_ids, values, "left")
+    ends = np.searchsorted(sorted_ids, values, "right")
+    return write_generic_indexed(
+        [write_bitmap_blob(rows[s:e], bt) for s, e in zip(starts, ends)]
+    )
 
 
 def read_string_multi_column(data, base: int = 0):
@@ -782,32 +789,12 @@ def write_string_multi_column(
     out += write_compressed_ints(offsets, num_bytes=4, strategy=strategy)
     out += write_compressed_ints(ids, strategy=strategy)
     if bitmap_index:
-        bt = BITMAP_TYPE_ROARING if bitmap_type is None else bitmap_type
-        arr = np.asarray(ids, np.int64)
-        row_ends = np.asarray(offsets, np.int64)
         # flat position -> owning row (offsets are row-END positions)
+        row_ends = np.asarray(offsets, np.int64)
         row_of = np.repeat(
-            np.arange(len(row_ends), dtype=np.int64),
-            np.diff(row_ends, prepend=0),
+            np.arange(len(row_ends), dtype=np.int64), np.diff(row_ends, prepend=0)
         )
-        # same argsort+searchsorted O(N log N) build as the
-        # single-value path (see write_string_column_v2) — per-value
-        # flat scans would be quadratic in dictionary cardinality
-        order = np.argsort(arr, kind="stable")
-        sorted_ids = arr[order]
-        rows_sorted = row_of[order]
-        rng = np.arange(len(dictionary))
-        starts = np.searchsorted(sorted_ids, rng, "left")
-        ends = np.searchsorted(sorted_ids, rng, "right")
-        out += write_generic_indexed(
-            [
-                # slices arrive row-ascending (stable argsort preserves
-                # flat = row order), but one row may repeat a value
-                # ("the the ..."): blobs hold each row once
-                write_bitmap_blob(np.unique(rows_sorted[s:e]), bt)
-                for s, e in zip(starts, ends)
-            ]
-        )
+        out += _bitmap_index(ids, row_of, len(dictionary), bitmap_type)
     return bytes(out)
 
 
@@ -1079,24 +1066,6 @@ def locate_string_bitmap_index(data, base: int = 0) -> GenericIndexedV1 | None:
     if pos >= len(data):
         return None
     return GenericIndexedV1(data, pos)
-
-
-def read_string_bitmap_index(data, base: int = 0) -> list[np.ndarray] | None:
-    """Parse the optional bitmap inverted index appended after a v2
-    string column's ids: a GenericIndexed of typed bitmap blobs, one
-    per dictionary id (rows where that value occurs). Returns None for
-    columns written without an index. Decodes EVERY value's bitmap —
-    for a single-value lookup use ``read_string_bitmap_blob``."""
-    bm = locate_string_bitmap_index(data, base)
-    if bm is None:
-        return None
-    out = []
-    for i in range(len(bm)):
-        blob = bm.get(i)
-        out.append(
-            np.empty(0, np.uint32) if blob is None else read_bitmap_blob(blob)
-        )
-    return out
 
 
 def read_string_bitmap_blob(

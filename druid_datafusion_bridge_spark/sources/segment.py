@@ -11,27 +11,77 @@ Write side (no reference counterpart — its fixture is pre-built by Druid
 itself): encodes a pyarrow Table into a spec-exact segment directory so
 the read side can be round-trip tested, and so multi-segment layouts can
 be produced for partitioned scans.
+
+Types: ``_VALUE_TYPES`` is the one place a Druid ``valueType`` maps to
+its Arrow type, the Arrow input types the writer stores as it, its
+``druid_format`` reader and writer, its values per compressed block
+(shared by the codec and the zone maps) and its descriptor part. The
+schema, ``read_column`` and ``write_segment`` all read that row.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from . import druid_format as fmt
 
 TIME_COLUMN = "__time"
 
-_VALUE_TYPE_TO_ARROW = {
-    "STRING": pa.string(),
-    "LONG": pa.int64(),
-    "FLOAT": pa.float32(),
-    "DOUBLE": pa.float64(),
-    "COMPLEX": pa.binary(),
+
+class _ValueType(NamedTuple):
+    """How one Druid ``valueType`` is read, written and typed."""
+
+    arrow: pa.DataType  # the schema type (STRING reads dictionary-encoded)
+    inputs: tuple  # the Arrow input types write_segment stores as this type
+    dtype: type | None  # stored numpy dtype; None for non-numeric layouts
+    read: Callable  # druid_format reader: (data, payload, rows=) -> values
+    write: Callable  # druid_format writer of the single-value layout
+    size_per: int  # values per compressed block, shared with the zone maps
+    part: str  # the column descriptor's ``parts`` type
+
+
+# The reference's schema mapping (src/segment/mod.rs:119-127), plus each
+# type's codec. ``__time`` is a LONG column that surfaces as
+# timestamp[ms]; a STRING column with ``hasMultipleValues`` surfaces as
+# list<string>.
+_VALUE_TYPES = {
+    "STRING": _ValueType(
+        pa.string(), (pa.string(), pa.large_string()), None,
+        fmt.read_string_column, fmt.write_string_column_v2, 0, "stringDictionary",
+    ),
+    "LONG": _ValueType(
+        pa.int64(), (pa.int64(), pa.int32()), np.int64,
+        fmt.read_compressed_longs, fmt.write_compressed_longs, 0x2000, "longV2",
+    ),
+    "FLOAT": _ValueType(
+        pa.float32(), (pa.float32(),), np.float32,
+        fmt.read_compressed_floats, fmt.write_compressed_floats, 0x4000, "floatV2",
+    ),
+    "DOUBLE": _ValueType(
+        pa.float64(), (pa.float64(),), np.float64,
+        fmt.read_compressed_doubles, fmt.write_compressed_doubles, 0x2000, "doubleV2",
+    ),
+    "COMPLEX": _ValueType(
+        pa.binary(), (pa.binary(), pa.large_binary()), None,
+        fmt.read_complex_column, fmt.write_complex_column, 0, "complexColumn",
+    ),
 }
+_VALUE_TYPE_OF_INPUT = {
+    t: vt for vt, row in _VALUE_TYPES.items() for t in row.inputs
+}
+
+
+def _value_type(name: str, vt: str) -> _ValueType:
+    if vt not in _VALUE_TYPES:
+        raise fmt.DruidFormatError(f"Unknown valueType {vt!r} for {name}")
+    return _VALUE_TYPES[vt]
+
 
 # Arrow compute kernel (function name, options) of each filter kind
 # DruidSegment._filter_ids answers with one pass over the dictionary
@@ -75,9 +125,7 @@ class DruidSegment:
         if vt == "STRING" and desc.get("hasMultipleValues"):
             # multi-value dimension => array<string> (SURVEY §1.3 mapping)
             return pa.list_(pa.string())
-        if vt not in _VALUE_TYPE_TO_ARROW:
-            raise fmt.DruidFormatError(f"Unknown valueType {vt!r} for {name}")
-        return _VALUE_TYPE_TO_ARROW[vt]
+        return _value_type(name, vt).arrow
 
     def num_rows(self) -> int:
         """COUNT(*) == length of __time (src/segment/mod.rs:103-109)."""
@@ -106,9 +154,6 @@ class DruidSegment:
         data = self.smoosh.map_file(name)
         desc, payload = fmt.parse_column_header(data)
         vt = desc["valueType"].upper()
-        if name == TIME_COLUMN:
-            millis = fmt.read_compressed_longs(data, payload, rows=rows)
-            return pa.array(millis, type=pa.timestamp("ms"))
         if vt == "STRING" and desc.get("hasMultipleValues"):
             dictionary, offsets, ids = fmt.read_string_multi_column(data, payload)
             values = pa.DictionaryArray.from_arrays(
@@ -121,25 +166,17 @@ class DruidSegment:
             elif rows is not None:
                 arr = arr.take(pa.array(np.asarray(rows, np.int64)))
             return arr
+        values = _value_type(name, vt).read(data, payload, rows=rows)
         if vt == "STRING":
-            dictionary, ids = fmt.read_string_column(data, payload, rows=rows)
+            dictionary, ids = values
             return pa.DictionaryArray.from_arrays(
                 pa.array(ids.astype(np.int32)), dictionary
             )
-        if vt == "LONG":
-            return pa.array(fmt.read_compressed_longs(data, payload, rows=rows))
-        if vt == "DOUBLE":
-            return pa.array(fmt.read_compressed_doubles(data, payload, rows=rows))
-        if vt == "FLOAT":
-            return pa.array(fmt.read_compressed_floats(data, payload, rows=rows))
-        if vt == "COMPLEX":
-            # the reference errors here (src/column/mod.rs:59-61); we
-            # return the opaque blobs (HLL sketches etc.) for query-time
-            # merge via Spark's Datasketches functions
-            return pa.array(
-                fmt.read_complex_column(data, payload, rows=rows), type=pa.binary()
-            )
-        raise fmt.DruidFormatError(f"Unsupported column type {vt} for {name}")
+        # numbers, and COMPLEX blobs: the reference errors on COMPLEX
+        # (src/column/mod.rs:59-61); we return the opaque blobs (HLL
+        # sketches etc.) for query-time merge via Spark's Datasketches
+        # functions
+        return pa.array(values, type=self._arrow_type(name, desc))
 
     # Filters selecting more dictionary ids than this fall back to a
     # scan: unioning thousands of bitmap blobs costs more than decoding
@@ -239,8 +276,6 @@ class DruidSegment:
             ]))
         if kind == "bound":
             return None
-        import pyarrow.compute as pc
-
         if kind not in _KERNELS:
             raise ValueError(f"unknown dimension filter kind {kind!r}")
         fn, kwargs = _KERNELS[kind]
@@ -389,25 +424,19 @@ class DruidSegment:
         self.smoosh.close()
 
 
-# Block sizes (values per compressed block) shared by the codec writers
-# and the zone-map stats so block ids in blockMins/blockMaxs line up
-# with the physical blocks sliced decode skips to.
-_LONG_SIZE_PER = 0x2000
-_DOUBLE_SIZE_PER = 0x2000
-_FLOAT_SIZE_PER = 0x4000
-
-
-def _block_minmax(arr: np.ndarray, size_per: int, cast) -> dict:
+def _block_minmax(arr: np.ndarray, size_per: int) -> dict:
     """Per-block [min, max] zone maps for a numeric column — the
     block-granular analog of the segment-level min/max: a numeric
     predicate decodes only blocks whose range overlaps it (standard
     columnar zone-map technique, as in Parquet/ORC page stats; Druid
-    itself stores none, so this is beyond-reference surface)."""
+    itself stores none, so this is beyond-reference surface). Blocks
+    are the codec's, so block ids line up with the physical blocks
+    sliced decode skips to."""
     mins, maxs = [], []
     for i in range(0, len(arr), size_per):
         c = arr[i : i + size_per]
-        mins.append(cast(c.min()))
-        maxs.append(cast(c.max()))
+        mins.append(c.min().item())
+        maxs.append(c.max().item())
     return {
         "blockSize": size_per,
         "blockMins": mins,
@@ -421,15 +450,16 @@ def write_segment(
     path: str,
     dimensions: list[str] | None = None,
     strategy: int = fmt.LZ4,
-    query_granularity: str = "NONE",
     max_chunk_size: int | str = fmt.MAX_CHUNK_SIZE,
 ) -> None:
     """Encode a pyarrow Table as a Druid v9 segment directory.
 
     Requires a `__time` timestamp column (every Druid segment has one,
-    src/segment/mod.rs:103-109). String columns become dictionary-encoded
-    string columns (dims by default); int64 -> LONG, float64 -> DOUBLE,
-    float32 -> FLOAT metrics.
+    src/segment/mod.rs:103-109). Every other column stores as the
+    _VALUE_TYPES row whose ``inputs`` hold its Arrow type: strings
+    become dictionary-encoded string columns (dims by default), a list
+    of strings a multi-value string column, int64/int32 LONG, float64
+    DOUBLE, float32 FLOAT and binary COMPLEX.
     """
     if TIME_COLUMN not in table.column_names:
         raise fmt.DruidFormatError(f"segment requires a {TIME_COLUMN} column")
@@ -439,19 +469,22 @@ def write_segment(
     logical: dict[str, bytes] = {}
     dims: list[str] = []
     # per-column min/max of the STORED values (post null->0 legacy fill)
-    # for numeric metrics — persisted in metadata.drd's container so a
+    # for numeric columns — persisted in metadata.drd's container so a
     # planner can skip segments whose range excludes a predicate without
     # decoding any value column (the numeric analog of the __time
     # interval in index.drd). Omitted when NaN is present (NaN breaks
     # ordering) or the column is empty.
     col_stats: dict[str, dict[str, float | int]] = {}
 
-    time_ms = None
     for name in names:
         chunked = table.column(name)
         col = chunked.combine_chunks() if chunked.num_chunks else pa.array([], chunked.type)
         if isinstance(col, pa.ChunkedArray):
             col = col.chunk(0)
+        multi = (
+            pa.types.is_list(col.type)
+            and _VALUE_TYPE_OF_INPUT.get(col.type.value_type) == "STRING"
+        )
         if name == TIME_COLUMN:
             if col.null_count:
                 raise fmt.DruidFormatError(
@@ -460,129 +493,65 @@ def write_segment(
                 )
             # safe=False: sub-millisecond precision truncates to Druid's
             # epoch-millis unit (src/column/time.rs:10-14)
-            millis = col.cast(pa.timestamp("ms"), safe=False).cast(pa.int64())
-            time_ms = millis.to_numpy(zero_copy_only=False)
-            payload = fmt.write_compressed_longs(
-                time_ms, size_per=_LONG_SIZE_PER, strategy=strategy
-            )
-            if time_ms.size:
-                # __time zone maps: interval predicates skip blocks
-                # WITHIN a surviving segment (segments are usually
-                # time-ordered, so a narrow interval touches few blocks)
-                col_stats[name] = {
-                    "min": int(time_ms.min()),
-                    "max": int(time_ms.max()),
-                    **_block_minmax(time_ms, _LONG_SIZE_PER, int),
-                }
-            desc = {"valueType": "LONG", "hasMultipleValues": False,
-                    "parts": [{"type": "longV2"}]}
-        elif pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
-            dictionary, ids = _dictionary_encode(col)
-            payload = fmt.write_string_column_v2(
-                dictionary, ids, strategy=strategy, bitmap_index=True
-            )
-            desc = {"valueType": "STRING", "hasMultipleValues": False,
-                    "parts": [{"type": "stringDictionary"}],
-                    "bitmapIndex": True}
-            if dimensions is None or name in dimensions:
-                dims.append(name)
-        elif pa.types.is_list(col.type) and (
-            pa.types.is_string(col.type.value_type)
-            or pa.types.is_large_string(col.type.value_type)
-        ):
-            # multi-value string dimension: flatten values + row offsets.
-            # Null rows and empty rows both encode as zero-length rows
-            # (Druid's MVD model has no row-level null distinct from []).
-            import pyarrow.compute as pc
-
-            lengths = pc.list_value_length(col).to_numpy(zero_copy_only=False)
-            lengths = np.nan_to_num(lengths.astype(np.float64)).astype(np.int64)
-            row_ends = np.cumsum(lengths)  # null row => length 0
-            flat = col.flatten()  # values of non-null rows, in row order
-            dictionary, ids = _dictionary_encode(flat.cast(pa.string()))
-            payload = fmt.write_string_multi_column(
-                dictionary, row_ends.astype(np.uint32), ids, strategy=strategy,
-                bitmap_index=True,
-            )
-            desc = {"valueType": "STRING", "hasMultipleValues": True,
-                    "parts": [{"type": "stringDictionary"}],
-                    "bitmapIndex": True}
-            if dimensions is None or name in dimensions:
-                dims.append(name)
-        elif pa.types.is_int64(col.type) or pa.types.is_int32(col.type):
-            import pyarrow.compute as pc
-
-            ints = col.cast(pa.int64())
-            if ints.null_count:
-                # Druid v9 legacy numeric nulls read back as 0 — fill
-                # Arrow-side so the values stay int64 end-to-end (a
-                # numpy round-trip through float64+NaN would silently
-                # round values past 2^53)
-                ints = pc.fill_null(ints, 0)
-            ivals = ints.to_numpy(zero_copy_only=False)
-            payload = fmt.write_compressed_longs(
-                ivals, size_per=_LONG_SIZE_PER, strategy=strategy
-            )
-            if ivals.size:
-                col_stats[name] = {
-                    "min": int(ivals.min()),
-                    "max": int(ivals.max()),
-                    **_block_minmax(ivals, _LONG_SIZE_PER, int),
-                }
-            desc = {"valueType": "LONG", "hasMultipleValues": False,
-                    "parts": [{"type": "longV2"}]}
-        elif pa.types.is_float64(col.type):
-            vals = col.to_numpy(zero_copy_only=False)
-            if col.null_count:
-                # only NULLS become 0 (legacy Druid numeric-null
-                # semantics); genuine NaN / +-Inf are legal IEEE values
-                # and must round-trip unchanged
-                mask = col.is_null().to_numpy(zero_copy_only=False)
-                vals = vals.copy()
-                vals[mask] = 0.0
-            payload = fmt.write_compressed_doubles(
-                vals, size_per=_DOUBLE_SIZE_PER, strategy=strategy
-            )
-            if vals.size and not np.isnan(vals).any():
-                col_stats[name] = {
-                    "min": float(vals.min()),
-                    "max": float(vals.max()),
-                    **_block_minmax(vals, _DOUBLE_SIZE_PER, float),
-                }
-            desc = {"valueType": "DOUBLE", "hasMultipleValues": False,
-                    "parts": [{"type": "doubleV2"}]}
-        elif pa.types.is_float32(col.type):
-            vals = col.to_numpy(zero_copy_only=False)
-            if col.null_count:
-                mask = col.is_null().to_numpy(zero_copy_only=False)
-                vals = vals.copy()
-                vals[mask] = 0.0
-            payload = fmt.write_compressed_floats(
-                vals, size_per=_FLOAT_SIZE_PER, strategy=strategy
-            )
-            if vals.size and not np.isnan(vals).any():
-                col_stats[name] = {
-                    "min": float(vals.min()),
-                    "max": float(vals.max()),
-                    **_block_minmax(vals, _FLOAT_SIZE_PER, float),
-                }
-            desc = {"valueType": "FLOAT", "hasMultipleValues": False,
-                    "parts": [{"type": "floatV2"}]}
-        elif pa.types.is_binary(col.type) or pa.types.is_large_binary(col.type):
-            # COMPLEX metric column (e.g. Datasketches HLL blobs)
-            payload = fmt.write_complex_column(col.to_pylist())
-            desc = {"valueType": "COMPLEX", "hasMultipleValues": False,
-                    "parts": [{"type": "complexColumn"}]}
+            col = col.cast(pa.timestamp("ms"), safe=False)
+            vt = "LONG"
+        elif multi:
+            vt = "STRING"
+        elif col.type in _VALUE_TYPE_OF_INPUT:
+            vt = _VALUE_TYPE_OF_INPUT[col.type]
         else:
             raise fmt.DruidFormatError(
                 f"Unsupported arrow type {col.type} for column {name}"
             )
+        row = _VALUE_TYPES[vt]
+        desc = {"valueType": vt, "hasMultipleValues": multi,
+                "parts": [{"type": row.part}]}
+        if row.dtype is not None:
+            # Druid v9 legacy numeric nulls read back as 0 — filled
+            # Arrow-side, so int64 stays exact past 2^53 and genuine
+            # NaN / +-Inf round-trip unchanged
+            vals = pc.fill_null(col.cast(row.arrow), 0).to_numpy(zero_copy_only=False)
+            payload = row.write(vals, size_per=row.size_per, strategy=strategy)
+            if vals.size and not np.isnan(vals).any():
+                # on __time, the zone maps let interval predicates skip
+                # blocks WITHIN a surviving segment (segments are
+                # usually time-ordered, so a narrow interval touches few
+                # blocks)
+                col_stats[name] = {
+                    "min": vals.min().item(),
+                    "max": vals.max().item(),
+                    **_block_minmax(vals, row.size_per),
+                }
+            if name == TIME_COLUMN:
+                time_ms = vals
+        elif vt == "COMPLEX":
+            # COMPLEX metric column (e.g. Datasketches HLL blobs)
+            payload = row.write(col.to_pylist())
+        else:
+            desc["bitmapIndex"] = True
+            if multi:
+                # flatten values + row offsets. Null rows and empty rows
+                # both encode as zero-length rows (Druid's MVD model has
+                # no row-level null distinct from [])
+                lengths = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+                lengths = np.nan_to_num(lengths.astype(np.float64)).astype(np.int64)
+                row_ends = np.cumsum(lengths)  # null row => length 0
+                flat = col.flatten()  # values of non-null rows, in row order
+                dictionary, ids = _dictionary_encode(flat.cast(pa.string()))
+                payload = fmt.write_string_multi_column(
+                    dictionary, row_ends.astype(np.uint32), ids, strategy=strategy,
+                    bitmap_index=True,
+                )
+            else:
+                dictionary, ids = _dictionary_encode(col)
+                payload = row.write(
+                    dictionary, ids, strategy=strategy, bitmap_index=True
+                )
+            if dimensions is None or name in dimensions:
+                dims.append(name)
         logical[name] = fmt.build_column(desc, payload)
 
-    if time_ms is None or len(time_ms) == 0:
-        interval = (0, 0)
-    else:
-        interval = (int(time_ms.min()), int(time_ms.max()) + 1)
+    interval = (int(time_ms.min()), int(time_ms.max()) + 1) if len(time_ms) else (0, 0)
 
     meta = fmt.SegmentMetadata(
         columns=names, dimensions=[d for d in dims],
@@ -597,8 +566,7 @@ def write_segment(
             "container": {"columnStats": col_stats},
             "aggregators": None,
             "timestampSpec": {"column": TIME_COLUMN, "format": "millis"},
-            "queryGranularity": {"type": "none"} if query_granularity == "NONE" else
-            {"type": "period", "period": query_granularity},
+            "queryGranularity": {"type": "none"},
             "rollup": False,
         },
         separators=(",", ":"),

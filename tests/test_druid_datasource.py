@@ -295,13 +295,22 @@ def test_value_pruning_skips_whole_segments(registered, tmp_path):
 
 def test_schema_evolution_across_segments(registered, tmp_path):
     """Segments are self-describing and accrete columns over time: the
-    datasource must expose the UNION schema, null-fill columns a
-    segment predates, and still answer filters on the new column
-    (old-segment rows have NULL there => dropped by equality, exactly
-    Druid's semantics)."""
-    import pyarrow as pa
+    datasource must expose the UNION schema, null-fill a column of each
+    type (double, float, binary, multi-value string, long, string) in
+    the segment that predates it, and still answer filters on the new
+    column (old-segment rows are NULL there => dropped by a not-null
+    filter, exactly Druid's semantics). A fully pruned unit emits an
+    empty batch of the same output types."""
     from druid_datafusion_bridge_spark.sources.segment import write_segment
 
+    late_columns = {
+        "double": pa.array([1.5, float("inf"), -2.0], pa.float64()),
+        "float": pa.array([0.5, 2.5, -1.0], pa.float32()),
+        "binary": pa.array([b"\x01", None, b""], pa.binary()),
+        "multi_value": pa.array([["x", "y"], None, []], pa.list_(pa.string())),
+        "long": pa.array([1, 2, 3], pa.int64()),
+        "string": pa.array(["se", "no", None]),
+    }
     old = pa.table(
         {
             "__time": pa.array([1704067200000 + i for i in range(4)],
@@ -309,32 +318,53 @@ def test_schema_evolution_across_segments(registered, tmp_path):
             "site": pa.array(["a", "b", "a", "b"]),
         }
     )
-    new = pa.table(
-        {
-            "__time": pa.array([1704067300000 + i for i in range(3)],
-                               pa.timestamp("ms")),
-            "site": pa.array(["a", "c", "c"]),
-            "country": pa.array(["se", "no", "se"]),
-            "clicks": pa.array([1, 2, 3], pa.int64()),
-        }
-    )
-    write_segment(old, str(tmp_path / "seg_000"))
-    write_segment(new, str(tmp_path / "seg_001"))
+    for kind, late in late_columns.items():
+        root = tmp_path / kind
+        new = pa.table(
+            {
+                "__time": pa.array([1704067300000 + i for i in range(3)],
+                                   pa.timestamp("ms")),
+                "site": pa.array(["a", "c", "c"]),
+                "late": late,
+            }
+        )
+        write_segment(old, str(root / "seg_000"))
+        write_segment(new, str(root / "seg_001"))
 
-    df = registered.read.format("druidsegment").option("path", str(tmp_path)).load()
-    assert set(df.columns) == {"__time", "site", "country", "clicks"}
-    rows = df.orderBy("__time").collect()
-    assert len(rows) == 7
-    assert [r["country"] for r in rows[:4]] == [None] * 4
-    assert [r["clicks"] for r in rows[4:]] == [1, 2, 3]
-    # filter on the late-added column: old-segment rows are NULL => drop
-    assert df.filter(F.col("country") == "se").count() == 2
-    # aggregation across the union schema
-    got = {
-        (r["site"], r["n"])
-        for r in df.groupBy("site").agg(F.count("*").alias("n")).collect()
-    }
-    assert got == {("a", 3), ("b", 2), ("c", 2)}
+        df = registered.read.format("druidsegment").option("path", str(root)).load()
+        assert df.columns == ["__time", "site", "late"], kind
+        rows = df.orderBy("__time").collect()
+        assert len(rows) == 7, kind
+        assert [r["late"] for r in rows[:4]] == [None] * 4, kind
+        want = late.to_pylist()
+        if kind == "multi_value":
+            want = [v or [] for v in want]  # a null MVD row reads as []
+        if kind == "binary":
+            want = [None if v is None else bytearray(v) for v in want]
+        assert [r["late"] for r in rows[4:]] == want, kind
+        # filter on the late-added column: old-segment rows are NULL => drop
+        assert df.filter(F.col("late").isNotNull()).count() == sum(
+            v is not None for v in want
+        ), kind
+        # aggregation across the union schema
+        got = {
+            (r["site"], r["n"])
+            for r in df.groupBy("site").agg(F.count("*").alias("n")).collect()
+        }
+        assert got == {("a", 3), ("b", 2), ("c", 2)}, kind
+
+        reader = DruidSegmentReader(df.schema, {"path": str(root)})
+        (batch,) = reader.read(
+            datasource.ScanTask(
+                (datasource.SegmentPartition(str(root / "seg_000"), empty=True),)
+            )
+        )
+        assert batch.num_rows == 0, kind
+        assert batch.schema == pa.schema([
+            ("__time", pa.timestamp("us")),
+            ("site", pa.string()),
+            ("late", late.type),
+        ]), kind
 
 
 def test_bitmap_index_in_list_union(registered, tmp_path):
@@ -1595,6 +1625,50 @@ def test_partial_planning_keeps_whole_root_manifest(
     assert sorted(opens) == sorted([new, other])
 
 
+@pytest.mark.parametrize(
+    "corrupt",
+    [
+        lambda segs: list(segs.values()),
+        lambda segs: {k: list(v.items()) for k, v in segs.items()},
+        lambda segs: {
+            k: {f: x for f, x in v.items() if f != "rows"}
+            for k, v in segs.items()
+        },
+    ],
+    ids=["segments_list", "entry_list", "entry_without_rows"],
+)
+def test_malformed_plan_manifest_is_rebuilt(tmp_path, corrupt):
+    """_planmeta.json caches facts the segments hold, so a manifest
+    whose ``segments`` or entries are not v3 records plans like a cold
+    root: the bad entries are re-opened and rewritten, never raised."""
+    import json as _json
+
+    from druid_datafusion_bridge_spark.sources.datasource import PLANMETA_NAME
+
+    for k in range(2):
+        write_segment(
+            pa.table({
+                "__time": pa.array(
+                    [BASE_MS + 1000 * k + i for i in range(3)], pa.timestamp("ms")
+                ),
+                "site": pa.array(["a", "b", "c"]),
+            }),
+            str(tmp_path / f"seg_00{k}"),
+        )
+    root = str(tmp_path)
+    schema = _schema(root)
+    path = tmp_path / PLANMETA_NAME
+    good = _json.loads(path.read_text())
+    path.write_text(_json.dumps({"v": 3, "segments": corrupt(good["segments"])}))
+
+    assert _schema(root) == schema
+    batches, _ = _read_tasks(DruidSegmentReader(schema, {"path": root}))
+    assert {k: _values(batches, k, "site") for k in batches} == {
+        "seg_000": ["a", "b", "c"], "seg_001": ["a", "b", "c"],
+    }
+    assert _json.loads(path.read_text()) == good
+
+
 def test_stale_plan_manifest_never_prunes_wrong(registered, tmp_path):
     """Compaction-swap vs a stale planning manifest: a planner reading
     `_planmeta.json` written BEFORE a root was rewritten must re-open
@@ -1994,8 +2068,11 @@ def test_row_windows_decode_as_slices_of_the_whole_segment(tmp_path, monkeypatch
     from druid_datafusion_bridge_spark.sources import segment as segment_mod
 
     real_ints = fmt.write_compressed_ints
-    monkeypatch.setattr(segment_mod, "_LONG_SIZE_PER", 7)
-    monkeypatch.setattr(segment_mod, "_DOUBLE_SIZE_PER", 7)
+    for vt in ("LONG", "DOUBLE"):
+        monkeypatch.setitem(
+            segment_mod._VALUE_TYPES, vt,
+            segment_mod._VALUE_TYPES[vt]._replace(size_per=7),
+        )
     monkeypatch.setattr(
         fmt,
         "write_compressed_ints",

@@ -462,6 +462,42 @@ def test_zerofill_grid_matches_origin_anchored_month_buckets(spark):
                    "2024-04-30 00:00:00": 0}
 
 
+@pytest.mark.parametrize(
+    "period, times, interval, want",
+    [
+        # LA months start at 08:00Z: the grid must not fall back to
+        # UTC month starts and drop both real rows
+        ("P1M", ["2024-01-15 12:00:00", "2024-02-15 12:00:00"],
+         "2024-01-01T08:00Z/2024-03-01T08:00Z",
+         {"2024-01-01 08:00:00": 1, "2024-02-01 08:00:00": 1}),
+        # LA local midnight moves from 08:00Z to 07:00Z on 2024-03-10
+        ("P1D", ["2024-03-09 12:00:00", "2024-03-11 12:00:00"],
+         "2024-03-09T08:00Z/2024-03-12T07:00Z",
+         {"2024-03-09 08:00:00": 1, "2024-03-10 08:00:00": 0,
+          "2024-03-11 07:00:00": 1}),
+    ],
+    ids=["month", "day_across_dst"],
+)
+def test_zerofill_grid_follows_the_period_time_zone(
+    spark, period, times, interval, want
+):
+    """The zero-fill grid buckets in the granularity's timeZone, like
+    the data: every row lands on a grid bucket, and the empty local
+    day between the rows zero-fills."""
+    df = spark.createDataFrame(
+        [(t, 1) for t in times], "ts string, v long"
+    ).selectExpr("CAST(ts AS TIMESTAMP) AS __time", "v")
+    spec = {
+        "queryType": "timeseries",
+        "granularity": {"type": "period", "period": period,
+                        "timeZone": "America/Los_Angeles"},
+        "intervals": [interval],
+        "aggregations": [{"type": "longSum", "name": "n", "fieldName": "v"}],
+    }
+    got = {str(r["timestamp"]): r["n"] for r in native_query(df, spec).collect()}
+    assert got == want
+
+
 def test_groupby_default_limit_is_dimension_ordered(events):
     """limitSpec with a limit but no columns cuts dimension-ordered
     (Druid's DefaultLimitSpec), not partitioning-dependently."""
