@@ -136,7 +136,7 @@ def cmd_scan(
     )
 
     cols = [c.strip() for c in columns.split(",")] if columns else None
-    batches = []  # (batch, present column set) per planned segment
+    batches = []  # one batch per planned segment
     for _, _, n_rows, seg_dir in taken:
         seg = DruidSegment(seg_dir)
         try:
@@ -156,16 +156,7 @@ def cmd_scan(
                 else np.argpartition(times, k - 1)
             )[:k]
             rows = np.sort(part.astype(np.int64))
-            batch = seg.read_batch(read_cols, rows=rows)
-            # flatten dictionary columns: per-segment dictionaries
-            # differ, plain values merge uniformly
-            arrays = [
-                a.dictionary_decode() if pa.types.is_dictionary(a.type) else a
-                for a in batch.columns
-            ]
-            batches.append(
-                pa.RecordBatch.from_arrays(arrays, names=batch.schema.names)
-            )
+            batches.append(seg.read_batch(read_cols, rows=rows))
         finally:
             seg.close()
     if not batches:

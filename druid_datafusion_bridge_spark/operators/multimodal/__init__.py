@@ -2,19 +2,22 @@
 
 Real from-scratch codecs for PPM, PNG (DEFLATE via stdlib zlib + all
 five scanline filters), GIF (genuine LZW both directions), BMP,
-baseline JPEG (DCT + Huffman, grayscale and 4:4:4 color, restart
-markers) and RIFF/PCM WAV; MP3 stays stubbed (psychoacoustic codec out
-of scope — the container ships no codec libraries). Everything
-Spark-side is Arrow-batched mapInPandas: payloads stay in executor-side
-batches end-to-end (never collected); one Python worker per core
-streams batches; ``spark.sql.execution.arrow.maxRecordsPerBatch``
-bounds peak memory for large blobs.
+baseline JPEG (DCT + Huffman, grayscale, 4:4:4 and 4:2:0 color,
+restart markers) and RIFF/PCM WAV; MP3 stays stubbed (psychoacoustic
+codec out of scope — the package depends on no codec library). Each
+format has one module-level encoder and one decoder. Everything
+Spark-side is Arrow-batched mapInPandas through one executor harness
+(:func:`.core._map_docs`), which ships this package's zip to the
+workers so the operator bodies call those codecs by reference:
+payloads stay in executor-side batches end-to-end (never collected);
+one Python worker per core streams batches;
+``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds peak memory
+for large blobs.
 
-Package layout (r11 pure-move split of the former single module):
-:mod:`.core` (binary plumbing, stub features, PPM/WAV, resize, video
-container walk), :mod:`.images` (PNG/GIF/BMP), :mod:`.jpeg`. This
-__init__ re-exports every public name — the import surface is
-unchanged."""
+Package layout: :mod:`.core` (the harness, binary plumbing, stub
+features, PPM/WAV, resize, video container walk), :mod:`.images`
+(PNG/GIF/BMP), :mod:`.jpeg`. This __init__ re-exports every public
+name."""
 
 from __future__ import annotations
 
@@ -47,13 +50,13 @@ from .images import (  # noqa: F401
     _gif_encode,
     _gif_lzw_decode,
     _gif_lzw_encode,
-    _gif_walk,
     _png_encode,
     _png_encode_typed,
     bmp_channel_stats,
     decode_bmp,
     decode_gif,
     decode_png,
+    encode_png,
     gif_channel_stats,
     png_channel_stats,
     png_color_type_stats,

@@ -1,19 +1,26 @@
-"""Binary-payload plumbing, stub features, PPM/WAV codecs, resize, video container walk.
+"""Binary-payload plumbing, the executor harness, stub features, PPM/WAV codecs, resize, video container walk.
 
-Part of the :mod:`..multimodal` package split (r11, pure move — the
-single file hit 2,162 lines after the JPEG codec landed): shared
-schemas/stubs live in :mod:`.core`; the package __init__ re-exports
-every public name so ``from ...operators.multimodal import X`` keeps
-working."""
+Every multimodal operator runs through :func:`_map_docs`: it ships this
+package to the workers (``sources.datasource.ship_package``, as for the
+DataSource and the ingest writer) and maps a per-document function over
+the Arrow batches. So each format keeps exactly one module-level
+encoder and decoder, and the operator bodies call them by reference.
+:mod:`.images` (PNG/GIF/BMP) and :mod:`.jpeg` build on this module; the
+package __init__ re-exports every public name."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import struct
+import zlib
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import spread
 
@@ -22,6 +29,92 @@ FEATURE_SCHEMA = (
     "doc_id long, modality string, n_bytes long, width int, height int, "
     "feat array<float>"
 )
+
+PAYLOAD_SCHEMA = "doc_id long, payload binary"
+
+
+def _map_docs(
+    df: DataFrame,
+    per_doc: Callable[..., Iterable[tuple]],
+    schema: str,
+    id_col: str = "doc_id",
+    inputs: tuple[str, ...] = ("payload",),
+) -> DataFrame:
+    """The one executor harness of the multimodal operators: select
+    ``id_col`` (aliased to ``doc_id``) and the ``inputs`` columns, then
+    map ``per_doc(doc_id, *inputs)`` over the Arrow batches
+    (mapInPandas; nothing collected). ``per_doc`` returns zero or more
+    rows in ``schema``'s column order: a decoder emits one row per
+    payload, the video walker one per sampled frame. ``per_doc`` and
+    the codecs it calls are pickled by reference, so the package zip is
+    shipped to the workers first."""
+    from ...sources.datasource import ship_package
+
+    ship_package(df.sparkSession)
+    columns = StructType.fromDDL(schema).names
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            docs = zip(*(pdf[c] for c in pdf.columns))
+            yield pd.DataFrame(
+                [row for doc in docs for row in per_doc(*doc)], columns=columns
+            )
+
+    return df.select(F.col(id_col).alias("doc_id"), *inputs).mapInPandas(
+        run, schema=schema
+    )
+
+
+def _with_payload(
+    docs: DataFrame, id_col: str, encode: Callable[[int], bytes]
+) -> DataFrame:
+    """The ``with_*_payload`` shape: one ``encode(doc_id)`` payload per
+    doc. spread() first (r12): an under-partitioned corpus would
+    otherwise funnel all codec work into one task; the payload laws are
+    pure functions of doc_id, so the rebalance is value-transparent."""
+    return _map_docs(
+        spread(docs.select(id_col)),
+        lambda doc_id: [(doc_id, encode(doc_id))],
+        PAYLOAD_SCHEMA,
+        id_col,
+        inputs=(),
+    )
+
+
+def _loud_on_malformed(fmt: str):
+    """Decorator for a decoder: a cut or corrupt payload raises
+    ``ValueError("truncated or malformed <fmt>: ...")`` instead of the
+    bare IndexError / struct.error / zlib.error of an unchecked offset
+    walk or np.frombuffer's own short-buffer ValueError. The decoder's
+    named rejections ("not a PNG", "unsupported ...") pass through."""
+
+    def wrap(decode):
+        @functools.wraps(decode)
+        def checked(data: bytes):
+            try:
+                return decode(data)
+            except (IndexError, struct.error, zlib.error) as exc:
+                raise ValueError(f"truncated or malformed {fmt}: {exc}") from exc
+            except ValueError as exc:
+                if "buffer" not in str(exc):
+                    raise
+                raise ValueError(f"truncated or malformed {fmt}: {exc}") from exc
+
+        return checked
+
+    return wrap
+
+
+def _rgb_stats(fmt: str, decode, doc_id: int, payload: bytes) -> list[tuple]:
+    """One PPM_STATS_SCHEMA row: the per-channel sums and means of an
+    RGB image ``decode(payload)`` returns. Any other channel layout is
+    the loud ``unsupported <fmt> layout``."""
+    w, h, pix = decode(payload)
+    if pix.shape[2:] != (3,):
+        raise ValueError(f"unsupported {fmt} layout")
+    sums = [int(s) for s in pix.reshape(-1, 3).sum(axis=0, dtype=np.int64)]
+    n = w * h
+    return [(doc_id, w, h, *sums, *(s / n for s in sums))]
 
 
 def with_binary_payload(
@@ -60,39 +153,17 @@ def _decode_stub(payload: bytes) -> tuple[int, int, list[float]]:
     return width, height, feat
 
 
+def _feature_row(doc_id, payload, modality, n_bytes) -> list[tuple]:
+    return [(doc_id, modality, n_bytes, *_decode_stub(payload))]
+
+
 def extract_features(blobs: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    mapInPandas: one pandas batch in, one out per Arrow chunk; the UDF
-    boundary carries only (doc_id, payload, modality, n_bytes).
-    """
-
-    # Defined inside the closure so cloudpickle ships it by value — a
-    # module-level reference would require this package on the worker's
-    # sys.path, which a driver launched outside the repo doesn't have.
-    def decode(payload: bytes) -> tuple[int, int, list[float]]:
-        n = len(payload)
-        width = (n % 64) + 1
-        height = (n % 48) + 1
-        s = sum(payload[:16]) if n else 0
-        feat = [float(n), float(s), float(payload[0] if n else 0), float(n % 7)]
-        return width, height, feat
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = pdf["payload"].map(decode)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": pdf["modality"],
-                    "n_bytes": pdf["n_bytes"],
-                    "width": decoded.map(lambda t: t[0]),
-                    "height": decoded.map(lambda t: t[1]),
-                    "feat": decoded.map(lambda t: t[2]),
-                }
-            )
-
-    return blobs.mapInPandas(run, schema=FEATURE_SCHEMA)
+    """Arrow-batched feature extraction over binary payloads: the UDF
+    boundary carries only (doc_id, payload, modality, n_bytes)."""
+    return _map_docs(
+        blobs, _feature_row, FEATURE_SCHEMA,
+        inputs=("payload", "modality", "n_bytes"),
+    )
 
 
 def frame_sample(blobs: DataFrame, every_n_bytes: int = 32) -> DataFrame:
@@ -135,10 +206,6 @@ def resize(blobs: DataFrame, target_w: int = 32, target_h: int = 32) -> DataFram
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Closure-shipped, no module references (driver may run outside
-        # this repo's sys.path).
-        import pandas as pd  # noqa: F811 — re-import for the worker
-
         out_len = max(1, (target_w * target_h) // 64)
 
         def shrink(payload: bytes) -> bytes:
@@ -172,46 +239,31 @@ PPM_STATS_SCHEMA = (
 )
 
 
+def _ppm_encode(doc_id: int) -> bytes:
+    """The PPM payload law: a binary P6 image with pixel_byte(i) =
+    (doc_id*7 + i*13) % 256 over a (4 + id%5) x (3 + id%4) canvas."""
+    w, h = 4 + doc_id % 5, 3 + doc_id % 4
+    pix = bytes((doc_id * 7 + i * 13) % 256 for i in range(w * h * 3))
+    return b"P6\n%d %d\n255\n" % (w, h) + pix
+
+
 def with_ppm_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach a REAL binary P6 PPM image per doc — deterministic pixels
-    pixel_byte(i) = (doc_id*7 + i*13) % 256 over a doc-dependent
-    (4 + id%5) x (3 + id%4) canvas — generated executor-side in Arrow
-    batches. Unlike the stub payloads, these are valid images any PPM
-    reader opens; the closed-form pixel law lets a SQL oracle verify a
-    real decoder's output independently."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def make(doc_id: int) -> bytes:
-            w, h = 4 + doc_id % 5, 3 + doc_id % 4
-            n = w * h * 3
-            pix = bytes((doc_id * 7 + i * 13) % 256 for i in range(n))
-            return b"P6\n%d %d\n255\n" % (w, h) + pix
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda d: make(int(d))),
-                }
-            )
-
-    return spread(docs.select(id_col)).mapInPandas(run, schema="doc_id long, payload binary")
+    """Attach a REAL binary P6 PPM image per doc (see _ppm_encode) —
+    generated executor-side in Arrow batches. Unlike the stub payloads,
+    these are valid images any PPM reader opens; the closed-form pixel
+    law lets a SQL oracle verify a real decoder's output independently."""
+    return _with_payload(docs, id_col, _ppm_encode)
 
 
-def decode_ppm(data: bytes):
-    """REAL P6 PPM decoder, pure numpy — no codec libraries needed.
-    Parses the header (magic, width, height, maxval, any whitespace
-    layout) and returns (width, height, pixels[h, w, 3] uint8).
-    This is the one image format the container can genuinely decode;
-    JPEG (entropy/DCT) remains stubbed in _decode_stub; PNG has a
-    real decoder below (decode_png)."""
-    import numpy as np
-
-    if data[:2] != b"P6":
-        raise ValueError("not a P6 PPM")
-    # header = 4 whitespace-separated tokens: magic, w, h, maxval;
-    # pixel data starts after exactly ONE whitespace byte past maxval
-    pos, tokens = 2, []
+def _p6_frame(data: bytes, pos: int):
+    """Parse the P6 image starting at byte ``pos``: magic, then width,
+    height and maxval in any whitespace layout, then exactly ONE
+    whitespace byte before the pixels. Returns (width, height,
+    pixels[h, w, 3] uint8, offset just past the pixels) — the one P6
+    parser behind decode_ppm and the video container walk."""
+    if data[pos : pos + 2] != b"P6":
+        raise ValueError(f"not a P6 PPM frame at byte {pos}")
+    pos, tokens = pos + 2, []
     while len(tokens) < 3:
         while pos < len(data) and data[pos : pos + 1].isspace():
             pos += 1
@@ -224,67 +276,23 @@ def decode_ppm(data: bytes):
     if maxval != 255:
         raise ValueError(f"unsupported maxval {maxval}")
     pix = np.frombuffer(data, dtype=np.uint8, count=w * h * 3, offset=pos)
-    return w, h, pix.reshape(h, w, 3)
+    return w, h, pix.reshape(h, w, 3), pos + w * h * 3
+
+
+@_loud_on_malformed("PPM")
+def decode_ppm(data: bytes):
+    """REAL P6 PPM decoder, pure numpy — no codec libraries needed.
+    Returns (width, height, pixels[h, w, 3] uint8)."""
+    w, h, pix, _end = _p6_frame(data, 0)
+    return w, h, pix
 
 
 def ppm_channel_stats(blobs: DataFrame) -> DataFrame:
     """Decode P6 payloads (REAL decoder) and emit per-channel sums and
-    means — the working form of the decode->feature-extract pipeline.
-    Arrow-batched mapInPandas; nothing collected."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Closure-shipped decoder copy: no module references (the
-        # grading driver unpickles outside this repo's sys.path).
-        import numpy as np
-
-        def decode(data: bytes):
-            if data[:2] != b"P6":
-                raise ValueError("not a P6 PPM")
-            pos, tokens = 2, []
-            while len(tokens) < 3:
-                while pos < len(data) and data[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(data) and not data[pos : pos + 1].isspace():
-                    pos += 1
-                tokens.append(int(data[start:pos]))
-            pos += 1
-            w, h, maxval = tokens
-            if maxval != 255:
-                raise ValueError(f"unsupported maxval {maxval}")
-            pix = np.frombuffer(data, dtype=np.uint8, count=w * h * 3, offset=pos)
-            return w, h, pix.reshape(h, w, 3)
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, pix = decode(bytes(payload))
-                except IndexError as exc:
-                    # decode() uses no struct calls — int()/frombuffer
-                    # raise ValueError themselves, already loud
-                    raise ValueError(
-                        f"truncated or malformed PPM: {exc}"
-                    ) from exc
-                sums = pix.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                n = w * h
-                rows.append(
-                    (
-                        int(doc_id), w, h,
-                        int(sums[0]), int(sums[1]), int(sums[2]),
-                        sums[0] / n, sums[1] / n, sums[2] / n,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height",
-                    "sum_r", "sum_g", "sum_b",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return blobs.mapInPandas(run, schema=PPM_STATS_SCHEMA)
+    means — the working form of the decode->feature-extract pipeline."""
+    return _map_docs(
+        blobs, functools.partial(_rgb_stats, "PPM", decode_ppm), PPM_STATS_SCHEMA
+    )
 
 
 WAV_STATS_SCHEMA = (
@@ -293,49 +301,34 @@ WAV_STATS_SCHEMA = (
 )
 
 
-def with_wav_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach a REAL mono 16-bit PCM WAV per doc — deterministic
-    samples sample(i) = ((doc_id*31 + i*17) % 65536) - 32768 over a
+def _wav_encode(doc_id: int) -> bytes:
+    """The WAV payload law: mono 16-bit PCM at 8 kHz, samples
+    sample(i) = ((doc_id*31 + i*17) % 65536) - 32768 over a
     doc-dependent length (64 + id % 129), canonical 44-byte RIFF
-    header. Valid audio any WAV reader opens; the closed-form sample
-    law lets a SQL oracle verify the decoder independently."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        def make(doc_id: int) -> bytes:
-            n = 64 + doc_id % 129
-            i = np.arange(n, dtype=np.int64)
-            samples = ((doc_id * 31 + i * 17) % 65536 - 32768).astype("<i2")
-            data = samples.tobytes()
-            hdr = (
-                b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
-                + b"data" + struct.pack("<I", len(data))
-            )
-            return hdr + data
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda d: make(int(d))),
-                }
-            )
-
-    return spread(docs.select(id_col)).mapInPandas(run, schema="doc_id long, payload binary")
+    header."""
+    n = 64 + doc_id % 129
+    i = np.arange(n, dtype=np.int64)
+    data = ((doc_id * 31 + i * 17) % 65536 - 32768).astype("<i2").tobytes()
+    return (
+        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
+        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
+        + b"data" + struct.pack("<I", len(data))
+        + data
+    )
 
 
+def with_wav_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Attach a REAL mono 16-bit PCM WAV per doc (see _wav_encode) —
+    valid audio any WAV reader opens; the closed-form sample law lets a
+    SQL oracle verify the decoder independently."""
+    return _with_payload(docs, id_col, _wav_encode)
+
+
+@_loud_on_malformed("WAV")
 def decode_wav(data: bytes):
     """REAL WAV decoder, pure numpy: RIFF validation, chunk walk to
     fmt/data (tolerates extra chunks), 16-bit mono PCM samples.
     Returns (sample_rate, samples int16 ndarray)."""
-    import struct
-
-    import numpy as np
-
     if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE file")
     pos, rate, samples = 12, None, None
@@ -356,67 +349,35 @@ def decode_wav(data: bytes):
     return rate, samples
 
 
+def _wav_amplitude_row(doc_id: int, payload: bytes) -> list[tuple]:
+    rate, s = decode_wav(payload)
+    s64 = s.astype(np.int64)
+    total = int(s64.sum())
+    return [(
+        doc_id, len(s), rate, total, int((s64 * s64).sum()),
+        int(np.abs(s64).max()) if len(s) else 0,
+        total / len(s) if len(s) else 0.0,
+    )]
+
+
 def wav_amplitude_stats(blobs: DataFrame) -> DataFrame:
     """Decode PCM WAV payloads (REAL decoder) and emit amplitude
-    statistics — integer sums exact, mean as double. Arrow-batched."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Closure-shipped decoder copy (driver may unpickle outside the
-        # repo's sys.path).
-        import struct
-
-        import numpy as np
-
-        def decode(data: bytes):
-            if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE file")
-            pos, rate, samples = 12, None, None
-            while pos + 8 <= len(data):
-                cid = data[pos : pos + 4]
-                (size,) = struct.unpack_from("<I", data, pos + 4)
-                body = pos + 8
-                if cid == b"fmt ":
-                    fmt, channels, rate = struct.unpack_from("<HHI", data, body)
-                    (bits,) = struct.unpack_from("<H", data, body + 14)
-                    if fmt != 1 or channels != 1 or bits != 16:
-                        raise ValueError("only 16-bit mono PCM supported")
-                elif cid == b"data":
-                    samples = np.frombuffer(
-                        data, dtype="<i2", count=size // 2, offset=body
-                    )
-                pos = body + size + (size & 1)
-            if rate is None or samples is None:
-                raise ValueError("missing fmt or data chunk")
-            return rate, samples
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, s = decode(bytes(payload))
-                s64 = s.astype(np.int64)
-                rows.append(
-                    (
-                        int(doc_id), len(s), rate,
-                        int(s64.sum()), int((s64 * s64).sum()),
-                        int(np.abs(s64).max()) if len(s) else 0,
-                        s64.sum() / len(s) if len(s) else 0.0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_samples", "sample_rate",
-                    "sum_amp", "sum_sq", "peak", "mean_amp",
-                ],
-            )
-
-    return blobs.mapInPandas(run, schema=WAV_STATS_SCHEMA)
+    statistics — integer sums exact, mean as double."""
+    return _map_docs(blobs, _wav_amplitude_row, WAV_STATS_SCHEMA)
 
 
 PPM_RESIZE_SCHEMA = (
     "doc_id long, width int, height int, out_w int, out_h int, "
     "sum_resized long, mean_resized double"
 )
+
+
+def _ppm_resize_row(out_w: int, out_h: int, doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, pix = decode_ppm(payload)
+    sy = (np.arange(out_h) * h) // out_h
+    sx = (np.arange(out_w) * w) // out_w
+    s = int(pix[sy][:, sx].sum(dtype=np.int64))
+    return [(doc_id, w, h, out_w, out_h, s, s / (out_w * out_h * 3))]
 
 
 def ppm_resize_stats(blobs: DataFrame, out_w: int = 2, out_h: int = 2) -> DataFrame:
@@ -426,53 +387,10 @@ def ppm_resize_stats(blobs: DataFrame, out_w: int = 2, out_h: int = 2) -> DataFr
     resized image's integer pixel sum + mean. Because nearest-neighbor
     selects exact source pixels, the generator's closed-form pixel law
     predicts every output byte — a SQL oracle can check a real resize
-    end-to-end. Arrow-batched mapInPandas; nothing collected."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Closure-shipped decoder copy (driver unpickles off-sys.path).
-        import numpy as np
-
-        def decode(data: bytes):
-            if data[:2] != b"P6":
-                raise ValueError("not a P6 PPM")
-            pos, tokens = 2, []
-            while len(tokens) < 3:
-                while pos < len(data) and data[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(data) and not data[pos : pos + 1].isspace():
-                    pos += 1
-                tokens.append(int(data[start:pos]))
-            pos += 1
-            w, h, maxval = tokens
-            if maxval != 255:
-                raise ValueError(f"unsupported maxval {maxval}")
-            pix = np.frombuffer(data, dtype=np.uint8, count=w * h * 3, offset=pos)
-            return w, h, pix.reshape(h, w, 3)
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, pix = decode(bytes(payload))
-                sy = (np.arange(out_h) * h) // out_h
-                sx = (np.arange(out_w) * w) // out_w
-                small = pix[sy][:, sx]
-                s = int(small.sum(dtype=np.int64))
-                rows.append(
-                    (
-                        int(doc_id), w, h, out_w, out_h,
-                        s, s / (out_w * out_h * 3),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "out_w", "out_h",
-                    "sum_resized", "mean_resized",
-                ],
-            )
-
-    return blobs.mapInPandas(run, schema=PPM_RESIZE_SCHEMA)
+    end-to-end."""
+    return _map_docs(
+        blobs, functools.partial(_ppm_resize_row, out_w, out_h), PPM_RESIZE_SCHEMA
+    )
 
 
 WAV_RESAMPLE_SCHEMA = (
@@ -481,64 +399,25 @@ WAV_RESAMPLE_SCHEMA = (
 )
 
 
+def _wav_resample_row(factor: int, doc_id: int, payload: bytes) -> list[tuple]:
+    rate, samples = decode_wav(payload)
+    out = samples[::factor].astype(np.int64)
+    return [(
+        doc_id, rate, rate // factor, len(samples), len(out),
+        int(out.sum()), int(np.abs(out).max()),
+    )]
+
+
 def wav_resample_stats(blobs: DataFrame, factor: int = 2) -> DataFrame:
     """REAL audio resample by integer decimation: decode each PCM WAV
     (pure-numpy RIFF walker), keep every ``factor``-th sample, and emit
     the downsampled stream's stats at the reduced rate. Decimation
     selects exact source samples, so the generator's closed-form sample
     law predicts every output value — a SQL oracle verifies the decode
-    AND the resampling. Arrow-batched mapInPandas; nothing collected."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Closure-shipped decoder copy (driver may unpickle outside the
-        # repo's sys.path).
-        import struct
-
-        import numpy as np
-
-        def decode(data: bytes):
-            if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE file")
-            pos, rate, samples = 12, None, None
-            while pos + 8 <= len(data):
-                cid = data[pos : pos + 4]
-                (size,) = struct.unpack_from("<I", data, pos + 4)
-                body = pos + 8
-                if cid == b"fmt ":
-                    fmt, channels, rate = struct.unpack_from("<HHI", data, body)
-                    (bits,) = struct.unpack_from("<H", data, body + 14)
-                    if fmt != 1 or channels != 1 or bits != 16:
-                        raise ValueError("only 16-bit mono PCM supported")
-                elif cid == b"data":
-                    samples = np.frombuffer(
-                        data, dtype="<i2", count=size // 2, offset=body
-                    )
-                pos = body + size + (size & 1)
-            if rate is None or samples is None:
-                raise ValueError("missing fmt or data chunk")
-            return rate, samples
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, samples = decode(bytes(payload))
-                out = samples[::factor].astype(np.int64)
-                rows.append(
-                    (
-                        int(doc_id), int(rate), int(rate // factor),
-                        int(len(samples)), int(len(out)),
-                        int(out.sum()), int(np.abs(out).max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "out_rate", "n_in", "n_out",
-                    "sum_out", "peak_out",
-                ],
-            )
-
-    return blobs.mapInPandas(run, schema=WAV_RESAMPLE_SCHEMA)
+    AND the resampling."""
+    return _map_docs(
+        blobs, functools.partial(_wav_resample_row, factor), WAV_RESAMPLE_SCHEMA
+    )
 
 
 VIDEO_FRAME_SCHEMA = (
@@ -547,85 +426,41 @@ VIDEO_FRAME_SCHEMA = (
 )
 
 
+def _video_encode(doc_id: int) -> bytes:
+    """The video payload law: a stream of 2 + doc_id % 3 concatenated
+    binary P6 frames (the MJPEG idea with an uncompressed codec); frame
+    f is a 4x3 image with pixel_byte(i) = (doc_id*7 + f*11 + i*13) % 256."""
+    return b"".join(
+        b"P6\n4 3\n255\n"
+        + bytes((doc_id * 7 + f * 11 + i * 13) % 256 for i in range(4 * 3 * 3))
+        for f in range(2 + doc_id % 3)
+    )
+
+
 def with_video_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach a REAL multi-frame video container per doc: a stream of
-    concatenated binary P6 PPM frames (the MJPEG idea with an
-    uncompressed codec the container can genuinely parse). Frame f of
-    doc d is a 4x3 image with pixel_byte(i) = (d*7 + f*11 + i*13) % 256;
-    frame count is 2 + d % 3. Valid input for any PPM-stream reader;
-    the closed-form law lets SQL verify real frame extraction."""
+    """Attach a REAL multi-frame video container per doc (see
+    _video_encode) — valid input for any PPM-stream reader; the
+    closed-form law lets SQL verify real frame extraction."""
+    return _with_payload(docs, id_col, _video_encode)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def make(doc_id: int) -> bytes:
-            frames = []
-            for f in range(2 + doc_id % 3):
-                pix = bytes(
-                    (doc_id * 7 + f * 11 + i * 13) % 256 for i in range(4 * 3 * 3)
-                )
-                frames.append(b"P6\n4 3\n255\n" + pix)
-            return b"".join(frames)
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda d: make(int(d))),
-                }
-            )
-
-    return spread(docs.select(id_col)).mapInPandas(run, schema="doc_id long, payload binary")
+def _video_frame_rows(every: int, doc_id: int, payload: bytes) -> Iterator[tuple]:
+    pos, idx = 0, 0
+    while pos < len(payload):
+        w, h, pix, pos = _p6_frame(payload, pos)
+        if idx % every == 0:
+            s = int(pix.sum(dtype=np.int64))
+            yield (doc_id, idx, w, h, s, s / (w * h * 3))
+        idx += 1
 
 
 def video_frame_stats(blobs: DataFrame, every: int = 2) -> DataFrame:
     """REAL video frame pipeline: walk the concatenated-PPM container
     frame by frame (parsing each P6 header to find the next frame
     boundary — no fixed stride assumed), keep every ``every``-th frame
-    (temporal sampling), decode it, and emit per-frame pixel stats.
-    The mapInPandas batch yields MULTIPLE rows per input row (one per
-    sampled frame) — the shape a real video pipeline needs. Nothing
-    collected; Arrow-batched."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def frames(data: bytes):
-            pos, idx = 0, 0
-            while pos < len(data):
-                if data[pos : pos + 2] != b"P6":
-                    raise ValueError(f"bad frame header at {pos}")
-                p, tokens = pos + 2, []
-                while len(tokens) < 3:
-                    while p < len(data) and data[p : p + 1].isspace():
-                        p += 1
-                    start = p
-                    while p < len(data) and not data[p : p + 1].isspace():
-                        p += 1
-                    tokens.append(int(data[start:p]))
-                p += 1
-                w, h, maxval = tokens
-                if maxval != 255:
-                    raise ValueError(f"unsupported maxval {maxval}")
-                pix = np.frombuffer(data, dtype=np.uint8, count=w * h * 3, offset=p)
-                yield idx, w, h, pix
-                pos = p + w * h * 3
-                idx += 1
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for idx, w, h, pix in frames(bytes(payload)):
-                    if idx % every != 0:
-                        continue
-                    s = int(pix.sum(dtype=np.int64))
-                    rows.append(
-                        (int(doc_id), idx, w, h, s, s / (w * h * 3))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "width", "height",
-                    "sum_pix", "mean_pix",
-                ],
-            )
-
-    return blobs.mapInPandas(run, schema=VIDEO_FRAME_SCHEMA)
+    (temporal sampling), decode it, and emit per-frame pixel stats —
+    MULTIPLE rows per input row, the shape a real video pipeline
+    needs."""
+    return _map_docs(
+        blobs, functools.partial(_video_frame_rows, every), VIDEO_FRAME_SCHEMA
+    )

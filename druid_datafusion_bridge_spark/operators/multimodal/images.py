@@ -1,161 +1,26 @@
 """REAL PNG / GIF (from-scratch LZW) / BMP codecs with payload builders and channel stats.
 
-Part of the :mod:`..multimodal` package split (r11, pure move — the
-single file hit 2,162 lines after the JPEG codec landed): shared
-schemas/stubs live in :mod:`.core`; the package __init__ re-exports
-every public name so ``from ...operators.multimodal import X`` keeps
-working."""
+One module-level encoder and one decoder per format; the operators run
+them on the workers through :func:`.core._map_docs`."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import struct
+import zlib
 
-import pandas as pd
+import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import spread
-
-from .core import PPM_STATS_SCHEMA
-
-
-def _png_encode(doc_id: int) -> bytes:
-    """REAL PNG encoder (executor-side fixture): 8-bit RGB, not
-    interlaced, pixel law pixel_byte(i) = (doc_id*7 + i*13) % 256 over
-    a (4 + id%5) x (3 + id%4) canvas — the SAME law as the PPM
-    fixtures, so the closed-form SQL oracle carries over. Each scanline
-    uses filter type row % 5, so a decoder must implement ALL five
-    PNG filters (None/Sub/Up/Average/Paeth) to reproduce the law."""
-    import struct
-    import zlib
-
-    w, h = 4 + doc_id % 5, 3 + doc_id % 4
-    bpp = 3
-    raw = [
-        bytes(
-            (doc_id * 7 + (row * w * bpp + i) * 13) % 256
-            for i in range(w * bpp)
-        )
-        for row in range(h)
-    ]
-
-    def paeth(a: int, b: int, c: int) -> int:
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        if pa <= pb and pa <= pc:
-            return a
-        return b if pb <= pc else c
-
-    stream = bytearray()
-    prev = bytes(w * bpp)
-    for row in range(h):
-        ft = row % 5
-        line = raw[row]
-        stream.append(ft)
-        for i in range(w * bpp):
-            left = line[i - bpp] if i >= bpp else 0
-            up = prev[i]
-            ul = prev[i - bpp] if i >= bpp else 0
-            pred = (
-                0 if ft == 0
-                else left if ft == 1
-                else up if ft == 2
-                else (left + up) // 2 if ft == 3
-                else paeth(left, up, ul)
-            )
-            stream.append((line[i] - pred) % 256)
-        prev = line
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(stream)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def with_png_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach a REAL binary PNG per doc (see _png_encode) — valid files
-    any PNG reader opens (verified byte-for-byte against the pixel law
-    in tests). Generated executor-side in Arrow batches. The encoder is
-    closure-shipped (no module references — the grading driver
-    unpickles outside this repo's sys.path), mirroring _png_encode."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
-        def paeth(a: int, b: int, c: int) -> int:
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            if pa <= pb and pa <= pc:
-                return a
-            return b if pb <= pc else c
-
-        def chunk(tag: bytes, body: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(body))
-                + tag
-                + body
-                + struct.pack(">I", zlib.crc32(tag + body))
-            )
-
-        def make(doc_id: int) -> bytes:
-            w, h = 4 + doc_id % 5, 3 + doc_id % 4
-            bpp = 3
-            raw = [
-                bytes(
-                    (doc_id * 7 + (row * w * bpp + i) * 13) % 256
-                    for i in range(w * bpp)
-                )
-                for row in range(h)
-            ]
-            stream = bytearray()
-            prev = bytes(w * bpp)
-            for row in range(h):
-                ft = row % 5
-                line = raw[row]
-                stream.append(ft)
-                for i in range(w * bpp):
-                    left = line[i - bpp] if i >= bpp else 0
-                    up = prev[i]
-                    ul = prev[i - bpp] if i >= bpp else 0
-                    pred = (
-                        0 if ft == 0
-                        else left if ft == 1
-                        else up if ft == 2
-                        else (left + up) // 2 if ft == 3
-                        else paeth(left, up, ul)
-                    )
-                    stream.append((line[i] - pred) % 256)
-                prev = line
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(bytes(stream)))
-                + chunk(b"IEND", b"")
-            )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda d: make(int(d))),
-                }
-            )
-
-    return spread(docs.select(id_col)).mapInPandas(run, schema="doc_id long, payload binary")
+from .core import (
+    PPM_STATS_SCHEMA,
+    _loud_on_malformed,
+    _map_docs,
+    _rgb_stats,
+    _with_payload,
+)
 
 
 #: PNG color type -> stored channels (8-bit only; depth 16 and Adam7
@@ -164,6 +29,82 @@ def with_png_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
+def _png_predict(ft: int, left: int, up: int, ul: int) -> int:
+    """The predictor of PNG scanline filter type ``ft`` from the bytes
+    to the left, above and upper-left: None, Sub, Up, Average, Paeth."""
+    if ft == 0:
+        return 0
+    if ft == 1:
+        return left
+    if ft == 2:
+        return up
+    if ft == 3:
+        return (left + up) // 2
+    p = left + up - ul
+    pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
+    if pa <= pb and pa <= pc:
+        return left
+    return up if pb <= pc else ul
+
+
+def _png_chunk(tag: bytes, body: bytes) -> bytes:
+    return (
+        struct.pack(">I", len(body)) + tag + body
+        + struct.pack(">I", zlib.crc32(tag + body))
+    )
+
+
+def encode_png(pix, plte: bytes | None = None) -> bytes:
+    """REAL PNG encoder — stdlib zlib, no codec libraries: 8-bit, not
+    interlaced, uint8[h, w, C] pixels with C = 1 (gray, or palette
+    indices when ``plte`` is given), 2 (gray+alpha), 3 (RGB) or 4
+    (RGBA). Scanline r uses filter type r % 5, so a decoder must
+    implement ALL five PNG filters (None/Sub/Up/Average/Paeth) to
+    reproduce the pixels."""
+    h, w, bpp = pix.shape
+    ctype = 3 if plte is not None else {1: 0, 2: 4, 3: 2, 4: 6}[bpp]
+    stride = w * bpp
+    raw = pix.tobytes()
+    stream = bytearray()
+    prev = bytes(stride)
+    for row in range(h):
+        ft = row % 5
+        line = raw[row * stride : (row + 1) * stride]
+        stream.append(ft)
+        for i in range(stride):
+            left = line[i - bpp] if i >= bpp else 0
+            ul = prev[i - bpp] if i >= bpp else 0
+            stream.append((line[i] - _png_predict(ft, left, prev[i], ul)) % 256)
+        prev = line
+    out = b"\x89PNG\r\n\x1a\n" + _png_chunk(
+        b"IHDR", struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
+    )
+    if plte is not None:
+        out += _png_chunk(b"PLTE", plte)
+    return (
+        out
+        + _png_chunk(b"IDAT", zlib.compress(bytes(stream)))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def _png_encode(doc_id: int) -> bytes:
+    """The RGB PNG payload law: pixel_byte(i) = (doc_id*7 + i*13) % 256
+    over a (4 + id%5) x (3 + id%4) canvas — the SAME law as the PPM
+    payloads, so the closed-form SQL oracle carries over."""
+    w, h = 4 + doc_id % 5, 3 + doc_id % 4
+    pix = (doc_id * 7 + np.arange(h * w * 3) * 13) % 256
+    return encode_png(pix.astype(np.uint8).reshape(h, w, 3))
+
+
+def with_png_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Attach a REAL binary PNG per doc (see _png_encode) — valid files
+    any PNG reader opens (verified byte-for-byte against the pixel law
+    in tests). Generated executor-side in Arrow batches."""
+    return _with_payload(docs, id_col, _png_encode)
+
+
+@_loud_on_malformed("PNG")
 def decode_png(data: bytes):
     """REAL PNG decoder — pure stdlib zlib + numpy, no codec libraries:
     signature check, chunk walk with CRC32 verification, IHDR parse,
@@ -175,11 +116,6 @@ def decode_png(data: bytes):
     (gray), 2 (gray+alpha), 3 (RGB / palette-expanded) or 4 (RGBA).
     16-bit depth and Adam7 interlace raise loudly. Formats needing
     psychoacoustic codecs (MP3) stay stubbed."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     if data[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG")
     pos, w, plte = 8, None, None
@@ -217,14 +153,6 @@ def decode_png(data: bytes):
     stride = w * bpp
     if len(stream) != h * (1 + stride):
         raise ValueError("IDAT length mismatch")
-
-    def paeth(a: int, b: int, c: int) -> int:
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        if pa <= pb and pa <= pc:
-            return a
-        return b if pb <= pc else c
-
     out = np.zeros((h, stride), dtype=np.uint8)
     prev = bytes(stride)
     for row in range(h):
@@ -234,16 +162,8 @@ def decode_png(data: bytes):
         recon = bytearray(stride)
         for i in range(stride):
             left = recon[i - bpp] if i >= bpp else 0
-            up = prev[i]
             ul = prev[i - bpp] if i >= bpp else 0
-            pred = (
-                0 if ft == 0
-                else left if ft == 1
-                else up if ft == 2
-                else (left + up) // 2 if ft == 3
-                else paeth(left, up, ul)
-            )
-            recon[i] = (line[i] + pred) % 256
+            recon[i] = (line[i] + _png_predict(ft, left, prev[i], ul)) % 256
         out[row] = np.frombuffer(bytes(recon), dtype=np.uint8)
         prev = bytes(recon)
     px = out.reshape(h, w, bpp)
@@ -258,112 +178,11 @@ def decode_png(data: bytes):
 def png_channel_stats(blobs: DataFrame) -> DataFrame:
     """Decode PNG payloads (REAL decoder) to per-channel sums/means —
     schema-identical to ppm_channel_stats so both image paths share one
-    oracle shape. Arrow-batched mapInPandas; the decoder is
-    closure-shipped (the grading driver unpickles outside this repo's
-    sys.path)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
-        import numpy as np
-
-        def paeth(a: int, b: int, c: int) -> int:
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            if pa <= pb and pa <= pc:
-                return a
-            return b if pb <= pc else c
-
-        def decode(data: bytes):
-            if data[:8] != b"\x89PNG\r\n\x1a\n":
-                raise ValueError("not a PNG")
-            pos, w = 8, None
-            idat = bytearray()
-            while pos < len(data):
-                (length,) = struct.unpack(">I", data[pos : pos + 4])
-                tag = data[pos + 4 : pos + 8]
-                body = data[pos + 8 : pos + 8 + length]
-                (crc,) = struct.unpack(
-                    ">I", data[pos + 8 + length : pos + 12 + length]
-                )
-                if zlib.crc32(tag + body) != crc:
-                    raise ValueError(f"bad CRC in {tag!r} chunk")
-                if tag == b"IHDR":
-                    w, h, depth, ctype, comp, filt, inter = struct.unpack(
-                        ">IIBBBBB", body
-                    )
-                    if (depth, ctype, comp, filt, inter) != (8, 2, 0, 0, 0):
-                        raise ValueError("unsupported PNG layout")
-                elif tag == b"IDAT":
-                    idat += body
-                elif tag == b"IEND":
-                    break
-                pos += 12 + length
-            if w is None:
-                raise ValueError("missing IHDR")
-            stream = zlib.decompress(bytes(idat))
-            bpp, stride = 3, w * 3
-            if len(stream) != h * (1 + stride):
-                raise ValueError("IDAT length mismatch")
-            out = np.zeros((h, stride), dtype=np.uint8)
-            prev = bytes(stride)
-            for row in range(h):
-                base = row * (1 + stride)
-                ft = stream[base]
-                line = stream[base + 1 : base + 1 + stride]
-                recon = bytearray(stride)
-                for i in range(stride):
-                    left = recon[i - bpp] if i >= bpp else 0
-                    up = prev[i]
-                    ul = prev[i - bpp] if i >= bpp else 0
-                    pred = (
-                        0 if ft == 0
-                        else left if ft == 1
-                        else up if ft == 2
-                        else (left + up) // 2 if ft == 3
-                        else paeth(left, up, ul)
-                    )
-                    recon[i] = (line[i] + pred) % 256
-                out[row] = np.frombuffer(bytes(recon), dtype=np.uint8)
-                prev = bytes(recon)
-            return w, h, out.reshape(h, w, 3)
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, pix = decode(bytes(payload))
-                except (IndexError, struct.error, zlib.error) as exc:
-                    raise ValueError(
-                        f"truncated or malformed PNG: {exc}"
-                    ) from exc
-                except ValueError as exc:
-                    # np.frombuffer's own short-buffer ValueError
-                    if "buffer" in str(exc):
-                        raise ValueError(
-                            f"truncated or malformed PNG: {exc}"
-                        ) from exc
-                    raise
-                sums = pix.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                n = w * h
-                rows.append(
-                    (
-                        int(doc_id), w, h,
-                        int(sums[0]), int(sums[1]), int(sums[2]),
-                        sums[0] / n, sums[1] / n, sums[2] / n,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height",
-                    "sum_r", "sum_g", "sum_b",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return blobs.mapInPandas(run, schema=PPM_STATS_SCHEMA)
+    oracle shape. RGB and palette PNGs (expanded to RGB) are accepted;
+    any other channel layout raises ``unsupported PNG layout``."""
+    return _map_docs(
+        blobs, functools.partial(_rgb_stats, "PNG", decode_png), PPM_STATS_SCHEMA
+    )
 
 
 def _gif_lzw_encode(indices: bytes) -> bytes:
@@ -469,8 +288,6 @@ def _gif_encode(doc_id: int) -> bytes:
     (6 + id%7) canvas, image data LZW-compressed for real by
     _gif_lzw_encode. Valid files any GIF reader opens; the closed-form
     laws let a SQL oracle verify the decode independently."""
-    import struct
-
     w, h = 8 + doc_id % 9, 6 + doc_id % 7
     indices = bytes((doc_id * 7 + p * 13) % 256 for p in range(w * h))
     palette = bytearray()
@@ -495,6 +312,7 @@ def _gif_encode(doc_id: int) -> bytes:
     )
 
 
+@_loud_on_malformed("GIF")
 def decode_gif(data: bytes):
     """REAL GIF decoder, pure python+numpy — no codec libraries:
     header + logical screen descriptor, global/local color table,
@@ -504,30 +322,9 @@ def decode_gif(data: bytes):
     Deliberate documented subset: non-interlaced images (interlaced
     raises loudly; the fixtures and the overwhelming majority of
     data-pipeline GIFs are progressive-free)."""
-    import struct
-
-    import numpy as np
-
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF")
-    try:
-        return _gif_walk(data, struct, np)
-    except (IndexError, struct.error) as exc:
-        # unchecked-offset walks on a cut payload must still be the
-        # documented LOUD error, not a bare IndexError
-        raise ValueError(f"truncated or malformed GIF: {exc}") from exc
-    except ValueError as exc:
-        # np.frombuffer on a cut color table / pixel block raises its
-        # own ValueError ("buffer is smaller...") — same contract
-        if "buffer" in str(exc):
-            raise ValueError(
-                f"truncated or malformed GIF: {exc}"
-            ) from exc
-        raise
-
-
-def _gif_walk(data: bytes, struct, np):
-    w_s, h_s, packed, _bg, _ar = struct.unpack("<HHBBB", data[6:13])
+    _w_s, _h_s, packed, _bg, _ar = struct.unpack("<HHBBB", data[6:13])
     pos = 13
     gct = None
     if packed & 0x80:
@@ -570,7 +367,6 @@ def _gif_walk(data: bytes, struct, np):
                 ln = data[pos]
                 lzw += data[pos + 1 : pos + 1 + ln]
                 pos += 1 + ln
-            pos += 1
             idx = np.frombuffer(
                 _gif_lzw_decode(bytes(lzw), w * h), dtype=np.uint8
             )
@@ -585,233 +381,17 @@ def _gif_walk(data: bytes, struct, np):
 def with_gif_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a REAL binary GIF87a per doc (see _gif_encode) — valid
     files any GIF reader opens, image data LZW-compressed for real.
-    Generated executor-side in Arrow batches; the encoder is
-    closure-shipped (no module references — the grading driver
-    unpickles outside this repo's sys.path), mirroring _gif_encode."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        def lzw_encode(indices: bytes) -> bytes:
-            CLEAR, EOI = 256, 257
-            codes = []
-
-            def fresh():
-                return {bytes([i]): i for i in range(256)}, 258, 9
-
-            table, nxt, width = fresh()
-            codes.append((CLEAR, width))
-            cur = b""
-            for b in indices:
-                k = bytes([b])
-                if cur + k in table:
-                    cur += k
-                    continue
-                codes.append((table[cur], width))
-                table[cur + k] = nxt
-                nxt += 1
-                if nxt == (1 << width) + 1 and width < 12:
-                    width += 1
-                elif nxt == 4096:
-                    codes.append((CLEAR, width))
-                    table, nxt, width = fresh()
-                cur = k
-            if cur:
-                codes.append((table[cur], width))
-            codes.append((EOI, width))
-            buf = nbits = 0
-            out = bytearray()
-            for code, w in codes:
-                buf |= code << nbits
-                nbits += w
-                while nbits >= 8:
-                    out.append(buf & 0xFF)
-                    buf >>= 8
-                    nbits -= 8
-            if nbits:
-                out.append(buf & 0xFF)
-            return bytes(out)
-
-        def make(doc_id: int) -> bytes:
-            w, h = 8 + doc_id % 9, 6 + doc_id % 7
-            indices = bytes(
-                (doc_id * 7 + p * 13) % 256 for p in range(w * h)
-            )
-            palette = bytearray()
-            for i in range(256):
-                palette += bytes((i, (2 * i) % 256, (3 * i) % 256))
-            lzw = lzw_encode(indices)
-            blocks = bytearray()
-            for i in range(0, len(lzw), 255):
-                chunk = lzw[i : i + 255]
-                blocks.append(len(chunk))
-                blocks += chunk
-            blocks.append(0)
-            return (
-                b"GIF87a"
-                + struct.pack("<HH", w, h)
-                + bytes((0xF7, 0, 0))
-                + bytes(palette)
-                + b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
-                + bytes((8,))
-                + bytes(blocks)
-                + b"\x3b"
-            )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda d: make(int(d))),
-                }
-            )
-
-    # id_col is ALIASED to doc_id before the UDF so the closure and
-    # output schema stay fixed whatever the caller's column is named
-    return spread(docs.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        run, schema="doc_id long, payload binary"
-    )
+    Generated executor-side in Arrow batches."""
+    return _with_payload(docs, id_col, _gif_encode)
 
 
 def gif_channel_stats(blobs: DataFrame) -> DataFrame:
     """Decode GIF payloads (REAL LZW decoder) and emit per-channel sums
     and means — the compressed-palette-image twin of ppm/png_channel_
-    stats. Arrow-batched mapInPandas; decoder closure-shipped."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        def lzw_decode(data: bytes, n_expected: int) -> bytes:
-            CLEAR, EOI = 256, 257
-            out = bytearray()
-            table = [bytes([i]) for i in range(256)] + [b"", b""]
-            nxt, width = 258, 9
-            prev = None
-            buf = nbits = pos = 0
-            while len(out) < n_expected:
-                while nbits < width:
-                    if pos >= len(data):
-                        raise ValueError("LZW stream truncated")
-                    buf |= data[pos] << nbits
-                    pos += 1
-                    nbits += 8
-                code = buf & ((1 << width) - 1)
-                buf >>= width
-                nbits -= width
-                if code == CLEAR:
-                    table = [bytes([i]) for i in range(256)] + [b"", b""]
-                    nxt, width, prev = 258, 9, None
-                    continue
-                if code == EOI:
-                    break
-                if prev is None or code < nxt:
-                    entry = table[code]
-                elif code == nxt:
-                    entry = prev + prev[:1]
-                else:
-                    raise ValueError(f"LZW code {code} out of range")
-                out.extend(entry)
-                if prev is not None and nxt < 4096:
-                    table.append(prev + entry[:1])
-                    nxt += 1
-                    if nxt == (1 << width) and width < 12:
-                        width += 1
-                prev = entry
-            return bytes(out[:n_expected])
-
-        def decode(data: bytes):
-            if data[:6] not in (b"GIF87a", b"GIF89a"):
-                raise ValueError("not a GIF")
-            _w, _h, packed, _bg, _ar = struct.unpack(
-                "<HHBBB", data[6:13]
-            )
-            pos = 13
-            gct = None
-            if packed & 0x80:
-                n = 2 << (packed & 0x07)
-                gct = np.frombuffer(
-                    data, dtype=np.uint8, count=n * 3, offset=pos
-                ).reshape(n, 3)
-                pos += n * 3
-            while pos < len(data):
-                b0 = data[pos]
-                if b0 == 0x21:
-                    pos += 2
-                    while data[pos]:
-                        pos += 1 + data[pos]
-                    pos += 1
-                elif b0 == 0x2C:
-                    _l, _t, w, h, ip = struct.unpack(
-                        "<HHHHB", data[pos + 1 : pos + 10]
-                    )
-                    pos += 10
-                    table = gct
-                    if ip & 0x80:
-                        n = 2 << (ip & 0x07)
-                        table = np.frombuffer(
-                            data, dtype=np.uint8, count=n * 3, offset=pos
-                        ).reshape(n, 3)
-                        pos += n * 3
-                    if ip & 0x40:
-                        raise ValueError("interlaced GIFs unsupported")
-                    if data[pos] != 8:
-                        raise ValueError("unsupported min code size")
-                    pos += 1
-                    lzw = bytearray()
-                    while data[pos]:
-                        ln = data[pos]
-                        lzw += data[pos + 1 : pos + 1 + ln]
-                        pos += 1 + ln
-                    idx = np.frombuffer(
-                        lzw_decode(bytes(lzw), w * h), dtype=np.uint8
-                    )
-                    return w, h, table[idx].reshape(h, w, 3)
-                elif b0 == 0x3B:
-                    break
-                else:
-                    raise ValueError(f"unexpected GIF block 0x{b0:02x}")
-            raise ValueError("no image block in GIF")
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, pix = decode(bytes(payload))
-                except (IndexError, struct.error) as exc:
-                    # a cut payload otherwise surfaces as a bare
-                    # IndexError/struct.error from the UDF — match the
-                    # documented loud contract (decode_gif, ppm stats)
-                    raise ValueError(
-                        f"truncated or malformed GIF: {exc}"
-                    ) from exc
-                except ValueError as exc:
-                    # np.frombuffer's own short-buffer ValueError
-                    if "buffer" in str(exc):
-                        raise ValueError(
-                            f"truncated or malformed GIF: {exc}"
-                        ) from exc
-                    raise
-                sums = pix.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                n = w * h
-                rows.append(
-                    (
-                        int(doc_id), w, h,
-                        int(sums[0]), int(sums[1]), int(sums[2]),
-                        sums[0] / n, sums[1] / n, sums[2] / n,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height",
-                    "sum_r", "sum_g", "sum_b",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return blobs.mapInPandas(run, schema=PPM_STATS_SCHEMA)
+    stats."""
+    return _map_docs(
+        blobs, functools.partial(_rgb_stats, "GIF", decode_gif), PPM_STATS_SCHEMA
+    )
 
 
 def _bmp_encode(doc_id: int) -> bytes:
@@ -822,8 +402,6 @@ def _bmp_encode(doc_id: int) -> bytes:
     through every case), so a decoder that mis-handles stride shows up
     immediately. Rows are stored BOTTOM-UP in BGR order, the format's
     two famous quirks."""
-    import struct
-
     w, h = 3 + doc_id % 6, 2 + doc_id % 5
     stride = (w * 3 + 3) // 4 * 4
     rows = bytearray()
@@ -842,154 +420,51 @@ def _bmp_encode(doc_id: int) -> bytes:
     return bytes(header) + bytes(rows)
 
 
+
 def with_bmp_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a REAL binary 24-bit BMP per doc (see _bmp_encode) —
     generated executor-side in Arrow batches, like the PPM/PNG/GIF
     payload builders."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def make(doc_id: int) -> bytes:
-            import struct
-
-            w, h = 3 + doc_id % 6, 2 + doc_id % 5
-            stride = (w * 3 + 3) // 4 * 4
-            rows = bytearray()
-            for fr in range(h - 1, -1, -1):
-                for col in range(w):
-                    base = (fr * w + col) * 3
-                    for ch in (2, 1, 0):
-                        rows.append((doc_id * 11 + (base + ch) * 19) % 256)
-                rows += b"\x00" * (stride - w * 3)
-            img_size = stride * h
-            header = b"BM" + struct.pack(
-                "<IHHI", 54 + img_size, 0, 0, 54
-            ) + struct.pack(
-                "<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size,
-                2835, 2835, 0, 0,
-            )
-            return bytes(header) + bytes(rows)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda d: make(int(d))),
-                }
-            )
-
-    return spread(docs.select(id_col)).mapInPandas(
-        run, schema="doc_id long, payload binary"
-    )
+    return _with_payload(docs, id_col, _bmp_encode)
 
 
+@_loud_on_malformed("BMP")
 def decode_bmp(data: bytes):
     """REAL 24-bit BMP decoder, pure numpy: validates the BM magic,
     BITMAPINFOHEADER, bpp=24, BI_RGB (uncompressed); honors the pixel
     data offset, 4-byte row stride, bottom-up row order (negative
     height = top-down, also handled), and BGR byte order. Returns
-    (width, height, pixels[h, w, 3] uint8, RGB, top-down). Truncated
-    or malformed payloads raise the documented ValueError."""
-    import struct
-
-    import numpy as np
-
+    (width, height, pixels[h, w, 3] uint8, RGB, top-down)."""
     if data[:2] != b"BM":
         raise ValueError("not a BMP")
-    try:
-        offset = struct.unpack_from("<I", data, 10)[0]
-        hdr_size, w, h = struct.unpack_from("<Iii", data, 14)
-        planes, bpp, comp = struct.unpack_from("<HHI", data, 26)
-        if hdr_size < 40:
-            raise ValueError(f"unsupported DIB header size {hdr_size}")
-        if bpp != 24 or comp != 0:
-            raise ValueError(
-                f"unsupported BMP: bpp={bpp} compression={comp} "
-                "(24-bit BI_RGB only)"
-            )
-        top_down = h < 0
-        h = abs(h)
-        stride = (w * 3 + 3) // 4 * 4
-        raw = np.frombuffer(
-            data, dtype=np.uint8, count=stride * h, offset=offset
-        ).reshape(h, stride)
-        rows = raw[:, : w * 3].reshape(h, w, 3)
-        if not top_down:
-            rows = rows[::-1]
-        return w, h, rows[:, :, ::-1]  # BGR -> RGB
-    except (struct.error, ValueError) as exc:
-        if isinstance(exc, ValueError) and "BMP" in str(exc) or (
-            isinstance(exc, ValueError) and "DIB" in str(exc)
-        ):
-            raise
-        raise ValueError(f"truncated or malformed BMP: {exc}") from exc
+    offset = struct.unpack_from("<I", data, 10)[0]
+    hdr_size, w, h = struct.unpack_from("<Iii", data, 14)
+    _planes, bpp, comp = struct.unpack_from("<HHI", data, 26)
+    if hdr_size < 40:
+        raise ValueError(f"unsupported DIB header size {hdr_size}")
+    if bpp != 24 or comp != 0:
+        raise ValueError(
+            f"unsupported BMP: bpp={bpp} compression={comp} "
+            "(24-bit BI_RGB only)"
+        )
+    top_down = h < 0
+    h = abs(h)
+    stride = (w * 3 + 3) // 4 * 4
+    raw = np.frombuffer(
+        data, dtype=np.uint8, count=stride * h, offset=offset
+    ).reshape(h, stride)
+    rows = raw[:, : w * 3].reshape(h, w, 3)
+    if not top_down:
+        rows = rows[::-1]
+    return w, h, rows[:, :, ::-1]  # BGR -> RGB
 
 
 def bmp_channel_stats(blobs: DataFrame) -> DataFrame:
     """Decode 24-bit BMP payloads (REAL decoder — stride, bottom-up,
-    BGR all honored) to per-channel sums and means. Arrow-batched
-    mapInPandas; nothing collected."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Closure-shipped decoder copy: no module references
-        import struct
-
-        import numpy as np
-
-        def decode(data: bytes):
-            if data[:2] != b"BM":
-                raise ValueError("not a BMP")
-            offset = struct.unpack_from("<I", data, 10)[0]
-            _hs, w, h = struct.unpack_from("<Iii", data, 14)
-            _planes, bpp, comp = struct.unpack_from("<HHI", data, 26)
-            if bpp != 24 or comp != 0:
-                raise ValueError(
-                    f"unsupported BMP: bpp={bpp} compression={comp}"
-                )
-            top_down = h < 0
-            h = abs(h)
-            stride = (w * 3 + 3) // 4 * 4
-            raw = np.frombuffer(
-                data, dtype=np.uint8, count=stride * h, offset=offset
-            ).reshape(h, stride)
-            rows = raw[:, : w * 3].reshape(h, w, 3)
-            if not top_down:
-                rows = rows[::-1]
-            return w, h, rows[:, :, ::-1]
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, pix = decode(bytes(payload))
-                except (IndexError, struct.error) as exc:
-                    raise ValueError(
-                        f"truncated or malformed BMP: {exc}"
-                    ) from exc
-                except ValueError as exc:
-                    if "buffer" in str(exc):
-                        raise ValueError(
-                            f"truncated or malformed BMP: {exc}"
-                        ) from exc
-                    raise
-                sums = pix.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                n = w * h
-                rows.append(
-                    (
-                        int(doc_id), w, h,
-                        int(sums[0]), int(sums[1]), int(sums[2]),
-                        sums[0] / n, sums[1] / n, sums[2] / n,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height",
-                    "sum_r", "sum_g", "sum_b",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return blobs.mapInPandas(run, schema=PPM_STATS_SCHEMA)
+    BGR all honored) to per-channel sums and means."""
+    return _map_docs(
+        blobs, functools.partial(_rgb_stats, "BMP", decode_bmp), PPM_STATS_SCHEMA
+    )
 
 
 #: The ctype cycle the color-type fixtures walk: grayscale, palette,
@@ -998,266 +473,57 @@ _PNG_TYPE_CYCLE = (0, 3, 4, 6)
 
 
 def _png_encode_typed(doc_id: int) -> bytes:
-    """REAL PNG encoder across color types (executor-side fixture):
-    ctype cycles _PNG_TYPE_CYCLE by doc_id, canvas (3 + id%4) x
-    (2 + id%3), raw scanline byte law byte(i) = (id*11 + i*17) % 256
-    (indices counted over the whole image), scanline filter row % 5 —
-    so a decoder must handle every color type AND all five filters.
-    Palette images carry a 256-entry PLTE with palette[i] =
-    ((5i)%256, (7i)%256, (11i)%256)."""
-    import struct
-    import zlib
-
+    """The color-type PNG payload law: ctype cycles _PNG_TYPE_CYCLE by
+    doc_id, canvas (3 + id%4) x (2 + id%3), raw scanline byte law
+    byte(i) = (id*11 + i*17) % 256 (indices counted over the whole
+    image) — with encode_png's filter row % 5, a decoder must handle
+    every color type AND all five filters. Palette images carry a
+    256-entry PLTE with palette[i] = ((5i)%256, (7i)%256, (11i)%256)."""
     ctype = _PNG_TYPE_CYCLE[doc_id % 4]
     bpp = _PNG_CHANNELS[ctype]
     w, h = 3 + doc_id % 4, 2 + doc_id % 3
-    stride = w * bpp
-    raw = [
-        bytes(
-            (doc_id * 11 + (row * stride + i) * 17) % 256
-            for i in range(stride)
-        )
-        for row in range(h)
-    ]
-
-    def paeth(a: int, b: int, c: int) -> int:
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        if pa <= pb and pa <= pc:
-            return a
-        return b if pb <= pc else c
-
-    stream = bytearray()
-    prev = bytes(stride)
-    for row in range(h):
-        ft = row % 5
-        line = raw[row]
-        stream.append(ft)
-        for i in range(stride):
-            left = line[i - bpp] if i >= bpp else 0
-            up = prev[i]
-            ul = prev[i - bpp] if i >= bpp else 0
-            pred = (
-                0 if ft == 0
-                else left if ft == 1
-                else up if ft == 2
-                else (left + up) // 2 if ft == 3
-                else paeth(left, up, ul)
-            )
-            stream.append((line[i] - pred) % 256)
-        prev = line
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+    pix = (doc_id * 11 + np.arange(h * w * bpp) * 17) % 256
+    plte = None
     if ctype == 3:
         plte = bytes(
             v
             for i in range(256)
             for v in ((5 * i) % 256, (7 * i) % 256, (11 * i) % 256)
         )
-        out += chunk(b"PLTE", plte)
-    return out + chunk(b"IDAT", zlib.compress(bytes(stream))) + chunk(
-        b"IEND", b""
-    )
+    return encode_png(pix.astype(np.uint8).reshape(h, w, bpp), plte)
+
+
+PNG_COLOR_TYPE_SCHEMA = (
+    "doc_id long, ctype int, width int, height int, "
+    "sum_r long, sum_g long, sum_b long, sum_a long, mean_rgb double"
+)
+
+
+def _png_color_type_row(doc_id: int) -> list[tuple]:
+    payload = _png_encode_typed(doc_id)
+    ctype = payload[25]  # IHDR's color type byte
+    w, h, px = decode_png(payload)
+    a64 = px.astype(np.int64)
+    n = w * h
+    if ctype in (0, 4):  # gray expands to r = g = b
+        r = g = b = int(a64[:, :, 0].sum())
+    else:  # RGB, palette expanded to RGB, RGBA
+        r, g, b = (int(a64[:, :, c].sum()) for c in range(3))
+    a = int(a64[:, :, -1].sum()) if ctype in (4, 6) else 255 * n
+    return [(doc_id, ctype, w, h, r, g, b, a, (r + g + b) / (3.0 * n))]
 
 
 def png_color_type_stats(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """End-to-end color-type PNG lane: per doc, build the typed fixture
     PNG (_png_encode_typed law) and decode it with the REAL generalized
     decoder, emitting canonical-RGBA channel sums — gray expands to
-    r=g=b, palette expands through PLTE, missing alpha reads 255. One
-    Arrow-batched mapInPandas; everything closure-shipped (the grading
-    driver unpickles outside this repo's sys.path). Any color-type,
-    PLTE, filter, or inflate bug is a value mismatch against the
-    closed-form oracle."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
-        import numpy as np
-
-        CH = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-        CYCLE = (0, 3, 4, 6)
-
-        def paeth(a: int, b: int, c: int) -> int:
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            if pa <= pb and pa <= pc:
-                return a
-            return b if pb <= pc else c
-
-        def chunk(tag: bytes, body: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(body))
-                + tag
-                + body
-                + struct.pack(">I", zlib.crc32(tag + body))
-            )
-
-        def make(doc_id: int) -> bytes:
-            ctype = CYCLE[doc_id % 4]
-            bpp = CH[ctype]
-            w, h = 3 + doc_id % 4, 2 + doc_id % 3
-            stride = w * bpp
-            raw = [
-                bytes(
-                    (doc_id * 11 + (row * stride + i) * 17) % 256
-                    for i in range(stride)
-                )
-                for row in range(h)
-            ]
-            stream = bytearray()
-            prev = bytes(stride)
-            for row in range(h):
-                ft = row % 5
-                line = raw[row]
-                stream.append(ft)
-                for i in range(stride):
-                    left = line[i - bpp] if i >= bpp else 0
-                    up = prev[i]
-                    ul = prev[i - bpp] if i >= bpp else 0
-                    pred = (
-                        0 if ft == 0
-                        else left if ft == 1
-                        else up if ft == 2
-                        else (left + up) // 2 if ft == 3
-                        else paeth(left, up, ul)
-                    )
-                    stream.append((line[i] - pred) % 256)
-                prev = line
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-            out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            if ctype == 3:
-                plte = bytes(
-                    v
-                    for i in range(256)
-                    for v in (
-                        (5 * i) % 256, (7 * i) % 256, (11 * i) % 256
-                    )
-                )
-                out += chunk(b"PLTE", plte)
-            return (
-                out
-                + chunk(b"IDAT", zlib.compress(bytes(stream)))
-                + chunk(b"IEND", b"")
-            )
-
-        def decode(data: bytes):
-            if data[:8] != b"\x89PNG\r\n\x1a\n":
-                raise ValueError("not a PNG")
-            pos, w, plte = 8, None, None
-            idat = bytearray()
-            while pos < len(data):
-                (length,) = struct.unpack(">I", data[pos : pos + 4])
-                tag = data[pos + 4 : pos + 8]
-                body = data[pos + 8 : pos + 8 + length]
-                (crc,) = struct.unpack(
-                    ">I", data[pos + 8 + length : pos + 12 + length]
-                )
-                if zlib.crc32(tag + body) != crc:
-                    raise ValueError(f"bad CRC in {tag!r} chunk")
-                if tag == b"IHDR":
-                    w, h, depth, ctype, comp, filt, inter = struct.unpack(
-                        ">IIBBBBB", body
-                    )
-                    if ctype not in CH or (depth, comp, filt, inter) != (
-                        8, 0, 0, 0,
-                    ):
-                        raise ValueError("unsupported PNG layout")
-                elif tag == b"PLTE":
-                    plte = body
-                elif tag == b"IDAT":
-                    idat += body
-                elif tag == b"IEND":
-                    break
-                pos += 12 + length
-            if w is None:
-                raise ValueError("missing IHDR")
-            stream = zlib.decompress(bytes(idat))
-            bpp = CH[ctype]
-            stride = w * bpp
-            if len(stream) != h * (1 + stride):
-                raise ValueError("IDAT length mismatch")
-            out = np.zeros((h, stride), dtype=np.uint8)
-            prev = bytes(stride)
-            for row in range(h):
-                base = row * (1 + stride)
-                ft = stream[base]
-                line = stream[base + 1 : base + 1 + stride]
-                recon = bytearray(stride)
-                for i in range(stride):
-                    left = recon[i - bpp] if i >= bpp else 0
-                    up = prev[i]
-                    ul = prev[i - bpp] if i >= bpp else 0
-                    pred = (
-                        0 if ft == 0
-                        else left if ft == 1
-                        else up if ft == 2
-                        else (left + up) // 2 if ft == 3
-                        else paeth(left, up, ul)
-                    )
-                    recon[i] = (line[i] + pred) % 256
-                out[row] = np.frombuffer(bytes(recon), dtype=np.uint8)
-                prev = bytes(recon)
-            px = out.reshape(h, w, bpp)
-            if ctype == 3:
-                if plte is None:
-                    raise ValueError("palette PNG missing PLTE")
-                pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
-                px = pal[px[:, :, 0]]
-            return w, h, ctype, px
-
-        def stats(doc_id: int):
-            w, h, ctype, px = decode(make(int(doc_id)))
-            n = w * h
-            a64 = px.astype(np.int64)
-            if ctype in (0, 3) or (ctype == 4):
-                if ctype == 3:
-                    r, g, b = (
-                        a64[:, :, 0].sum(),
-                        a64[:, :, 1].sum(),
-                        a64[:, :, 2].sum(),
-                    )
-                    a = 255 * n
-                elif ctype == 0:
-                    s = a64[:, :, 0].sum()
-                    r = g = b = s
-                    a = 255 * n
-                else:  # gray + alpha
-                    s = a64[:, :, 0].sum()
-                    r = g = b = s
-                    a = a64[:, :, 1].sum()
-            else:  # RGBA
-                r, g, b, a = (a64[:, :, c].sum() for c in range(4))
-            return (
-                int(ctype), int(w), int(h), int(r), int(g), int(b),
-                int(a), float(r + g + b) / (3.0 * n),
-            )
-
-        for pdf in batches:
-            rows = [(int(d), *stats(d)) for d in pdf[id_col]]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "ctype", "width", "height",
-                    "sum_r", "sum_g", "sum_b", "sum_a", "mean_rgb",
-                ],
-            )
-
-    return spread(docs.select(id_col)).mapInPandas(
-        run,
-        schema=(
-            "doc_id long, ctype int, width int, height int, "
-            "sum_r long, sum_g long, sum_b long, sum_a long, "
-            "mean_rgb double"
-        ),
+    r=g=b, palette expands through PLTE, missing alpha reads 255. Any
+    color-type, PLTE, filter, or inflate bug is a value mismatch against
+    the closed-form oracle."""
+    return _map_docs(
+        spread(docs.select(id_col)),
+        _png_color_type_row,
+        PNG_COLOR_TYPE_SCHEMA,
+        id_col,
+        inputs=(),
     )

@@ -1,21 +1,19 @@
-"""From-scratch baseline JPEG codec: DCT + Huffman, grayscale and 4:4:4 color, DRI restarts.
+"""From-scratch baseline JPEG codec: DCT + Huffman, grayscale, 4:4:4 and 4:2:0 color, DRI restarts.
 
-Part of the :mod:`..multimodal` package split (r11, pure move — the
-single file hit 2,162 lines after the JPEG codec landed): shared
-schemas/stubs live in :mod:`.core`; the package __init__ re-exports
-every public name so ``from ...operators.multimodal import X`` keeps
-working."""
+``encode_jpeg``/``decode_jpeg`` are the one encoder and decoder; the
+payload builders and stats operators run them on the workers through
+:func:`.core._map_docs`."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import struct
 
-import pandas as pd
+import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .. import spread
+from .core import PPM_STATS_SCHEMA, _map_docs, _rgb_stats, _with_payload
 
 
 # --- baseline JPEG (SOF0, grayscale): real DCT + Huffman codec --------
@@ -69,18 +67,14 @@ def _jpeg_tables():
 
 
 def _jpeg_encoder():
-    """Build the self-contained baseline JPEG encoder
+    """Build the baseline JPEG encoder
     ``encode(pixels, restart_interval=0) -> bytes`` — uint8[h, w] emits
     grayscale SOF0; uint8[h, w, 3] RGB converts to YCbCr (BT.601/JFIF,
     floor(x + 0.5) rounding) and emits 3-component 4:4:4 with
     interleaved per-MCU blocks and per-component DC predictors. Quant
-    table all-ones for max fidelity. Returned as a dynamic closure so
-    mapInPandas pickles it BY VALUE — the grading driver unpickles
-    outside this repo's sys.path (the ppm/png/gif precedent)."""
-    import struct
-
-    import numpy as np
-
+    table all-ones for max fidelity. ``subsampling="420"`` averages
+    chroma over 2x2 (floor(mean + 0.5)). Built once, as
+    ``encode_jpeg``."""
     zig = _jpeg_zigzag()
     dc_bits, dc_vals, ac_bits, ac_vals = _jpeg_tables()
 
@@ -257,7 +251,7 @@ def _jpeg_encoder():
 
 
 def _jpeg_decoder():
-    """Build the self-contained baseline JPEG decoder
+    """Build the baseline JPEG decoder
     ``decode(data: bytes) -> (w, h, pixels)`` — a GENERAL baseline
     decoder: parses DQT/DHT/SOF0/DRI/SOS, rebuilds whatever Huffman
     tables DHT declares, entropy-decodes with byte unstuffing and
@@ -271,11 +265,7 @@ def _jpeg_decoder():
     the encoder and the closed-form oracles use) to uint8[h, w, 3].
     Progressive SOFs, non-dividing sampling grids, and 16-bit quant
     tables raise the documented ValueError; truncated payloads are
-    loud."""
-    import struct
-
-    import numpy as np
-
+    loud. Built once, as ``decode_jpeg``."""
     zig = _jpeg_zigzag()
     k = np.arange(8)
     T = np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / 16)
@@ -545,177 +535,92 @@ decode_jpeg = _jpeg_decoder()
 encode_jpeg = _jpeg_encoder()
 
 
-def with_jpeg_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach a REAL baseline JFIF per doc: width 8*(1 + doc_id%3),
-    height 8*(1 + doc_id%2), each 8x8 block constant at
-    (doc_id*7 + b*13) % 256 for raster block index b — block-constant
-    so the lossy pipeline round-trips bit-exactly (DC-only blocks; see
-    the codec header) and the registry oracle stays closed-form."""
-    encode = _jpeg_encoder()
+def _block_image(blocks, size: int):
+    """Expand one value (or RGB triple) per size x size block to pixels."""
+    return np.repeat(np.repeat(blocks, size, axis=0), size, axis=1).astype(np.uint8)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        def make(doc_id: int) -> bytes:
-            bwn, bhn = 1 + doc_id % 3, 1 + doc_id % 2
-            blocks = (doc_id * 7 + np.arange(bwn * bhn) * 13) % 256
-            pix = np.repeat(
-                np.repeat(blocks.reshape(bhn, bwn), 8, axis=0), 8, axis=1
-            ).astype(np.uint8)
-            return encode(pix)
+def _jpeg_gray_encode(doc_id: int) -> bytes:
+    """The grayscale JPEG payload law: width 8*(1 + doc_id%3), height
+    8*(1 + doc_id%2), each 8x8 block constant at (doc_id*7 + b*13) % 256
+    for raster block index b — block-constant so the lossy pipeline
+    round-trips bit-exactly (DC-only blocks; see the codec header)."""
+    bwn, bhn = 1 + doc_id % 3, 1 + doc_id % 2
+    blocks = (doc_id * 7 + np.arange(bwn * bhn) * 13) % 256
+    return encode_jpeg(_block_image(blocks.reshape(bhn, bwn), 8))
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda d: make(int(d))),
-                }
-            )
 
-    return spread(docs.select(id_col)).mapInPandas(
-        run, schema="doc_id long, payload binary"
+def _rgb_blocks(doc_id: int, b):
+    """The color JPEG laws' RGB per block (or macroblock) index ``b``."""
+    return np.stack(
+        [
+            (doc_id * 11 + b * 17) % 256,
+            (doc_id * 13 + b * 19) % 256,
+            (doc_id * 7 + b * 23) % 256,
+        ],
+        axis=-1,
     )
 
 
-def jpeg_luma_stats(blobs: DataFrame) -> DataFrame:
-    """Decode baseline JPEG payloads (REAL decoder — Huffman, dequant,
-    IDCT) to luminance sum/mean. Arrow-batched mapInPandas; the decoder
-    closure ships by value (no module references)."""
-    decode = _jpeg_decoder()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, pix = decode(bytes(payload))
-                total = int(pix.astype(np.int64).sum())
-                rows.append(
-                    (int(doc_id), w, h, total, total / (w * h))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "sum_y", "mean_y"],
-            )
-
-    return blobs.mapInPandas(
-        run,
-        schema="doc_id long, width int, height int, sum_y long, "
-               "mean_y double",
-    )
-
-
-def with_jpeg_color_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach a REAL 3-component 4:4:4 baseline JFIF per doc: width
-    8*(1 + doc_id%3), height 8*(1 + doc_id%2), each 8x8 block a
-    constant RGB of ((doc_id*11 + b*17) % 256, (doc_id*13 + b*19) %
-    256, (doc_id*7 + b*23) % 256) for raster block index b —
+def _jpeg_color_encode(doc_id: int) -> bytes:
+    """The 4:4:4 color JPEG payload law: width 8*(1 + doc_id%3), height
+    8*(1 + doc_id%2), each 8x8 block a constant RGB (_rgb_blocks) —
     block-constant in YCbCr too (the forward conversion is per-pixel),
     so the DCT pipeline round-trips the rounded YCbCr exactly and the
     decoded RGB is the deterministic two-round law the oracle
     recomputes in closed form."""
-    encode = _jpeg_encoder()
+    bwn, bhn = 1 + doc_id % 3, 1 + doc_id % 2
+    b = np.arange(bwn * bhn).reshape(bhn, bwn)
+    return encode_jpeg(_block_image(_rgb_blocks(doc_id, b), 8))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        def make(doc_id: int) -> bytes:
-            bwn, bhn = 1 + doc_id % 3, 1 + doc_id % 2
-            b = np.arange(bwn * bhn).reshape(bhn, bwn)
-            rgb = np.stack(
-                [
-                    (doc_id * 11 + b * 17) % 256,
-                    (doc_id * 13 + b * 19) % 256,
-                    (doc_id * 7 + b * 23) % 256,
-                ],
-                axis=-1,
-            ).astype(np.uint8)
-            return encode(np.repeat(np.repeat(rgb, 8, 0), 8, 1))
+def _jpeg_420_encode(doc_id: int) -> bytes:
+    """The 4:2:0 color JPEG payload law (the layout most JPEGs in the
+    wild use): width 16*(1 + doc_id%2), height 16, each 16x16
+    MACROBLOCK a constant RGB (_rgb_blocks) — constant chroma survives
+    the 2x2 averaging and the replication upsampling exactly, so decoded
+    pixels follow the same closed-form two-round law as the 4:4:4
+    payloads."""
+    m = np.arange(1 + doc_id % 2).reshape(1, -1)
+    return encode_jpeg(_block_image(_rgb_blocks(doc_id, m), 16), subsampling="420")
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda d: make(int(d))),
-                }
-            )
 
-    return spread(docs.select(id_col)).mapInPandas(
-        run, schema="doc_id long, payload binary"
+def with_jpeg_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Attach a REAL baseline grayscale JFIF per doc (see
+    _jpeg_gray_encode); the registry oracle stays closed-form."""
+    return _with_payload(docs, id_col, _jpeg_gray_encode)
+
+
+def _luma_row(doc_id: int, payload: bytes) -> list[tuple]:
+    w, h, pix = decode_jpeg(payload)
+    total = int(pix.astype(np.int64).sum())
+    return [(doc_id, w, h, total, total / (w * h))]
+
+
+def jpeg_luma_stats(blobs: DataFrame) -> DataFrame:
+    """Decode baseline JPEG payloads (REAL decoder — Huffman, dequant,
+    IDCT) to luminance sum/mean."""
+    return _map_docs(
+        blobs,
+        _luma_row,
+        "doc_id long, width int, height int, sum_y long, mean_y double",
     )
+
+
+def with_jpeg_color_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Attach a REAL 3-component 4:4:4 baseline JFIF per doc (see
+    _jpeg_color_encode)."""
+    return _with_payload(docs, id_col, _jpeg_color_encode)
 
 
 def jpeg_rgb_stats(blobs: DataFrame) -> DataFrame:
     """Decode color JPEG payloads (REAL decoder — per-component
-    Huffman, dequant, IDCT, YCbCr->RGB) to per-channel sums and means.
-    Arrow-batched mapInPandas; decoder closure ships by value."""
-    decode = _jpeg_decoder()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, pix = decode(bytes(payload))
-                sums = pix.astype(np.int64).sum(axis=(0, 1))
-                n = w * h
-                rows.append(
-                    (int(doc_id), w, h, int(sums[0]), int(sums[1]),
-                     int(sums[2]), sums[0] / n, sums[1] / n, sums[2] / n)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "sum_r", "sum_g",
-                         "sum_b", "mean_r", "mean_g", "mean_b"],
-            )
-
-    return blobs.mapInPandas(
-        run,
-        schema="doc_id long, width int, height int, sum_r long, "
-               "sum_g long, sum_b long, mean_r double, mean_g double, "
-               "mean_b double",
+    Huffman, dequant, IDCT, YCbCr->RGB) to per-channel sums and means."""
+    return _map_docs(
+        blobs, functools.partial(_rgb_stats, "JPEG", decode_jpeg), PPM_STATS_SCHEMA
     )
 
 
 def with_jpeg_420_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach a REAL 4:2:0 baseline JFIF per doc (the layout most JPEGs
-    in the wild use): width 16*(1 + doc_id%2), height 16, each 16x16
-    MACROBLOCK a constant RGB of ((doc_id*11 + m*17) % 256,
-    (doc_id*13 + m*19) % 256, (doc_id*7 + m*23) % 256) — constant
-    chroma survives the 2x2 averaging and the replication upsampling
-    exactly, so decoded pixels follow the same closed-form two-round
-    law as the 4:4:4 payloads."""
-    encode = _jpeg_encoder()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def make(doc_id: int) -> bytes:
-            bwn = 1 + doc_id % 2
-            m = np.arange(bwn).reshape(1, bwn)
-            rgb = np.stack(
-                [
-                    (doc_id * 11 + m * 17) % 256,
-                    (doc_id * 13 + m * 19) % 256,
-                    (doc_id * 7 + m * 23) % 256,
-                ],
-                axis=-1,
-            ).astype(np.uint8)
-            return encode(
-                np.repeat(np.repeat(rgb, 16, 0), 16, 1),
-                subsampling="420",
-            )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda d: make(int(d))),
-                }
-            )
-
-    return spread(docs.select(id_col)).mapInPandas(
-        run, schema="doc_id long, payload binary"
-    )
+    """Attach a REAL 4:2:0 baseline JFIF per doc (see _jpeg_420_encode)."""
+    return _with_payload(docs, id_col, _jpeg_420_encode)

@@ -367,20 +367,3 @@ def quantiles_from_counters(
         aggs.append(F.max(F.when(crossing, est)).alias(out_col))
     return cum.groupBy(*group_cols).agg(*aggs)
 
-
-def quantile_from_counters(
-    counters: DataFrame,
-    group_cols: list[str],
-    width: float,
-    q: float = 0.5,
-    out_col: str = "p50_est",
-) -> DataFrame:
-    """Single-quantile shorthand for quantiles_from_counters."""
-    return quantiles_from_counters(counters, group_cols, width, {out_col: q})
-
-
-def median_from_counters(
-    counters: DataFrame, group_cols: list[str], width: float
-) -> DataFrame:
-    """Median shorthand for quantile_from_counters(q=0.5)."""
-    return quantile_from_counters(counters, group_cols, width, q=0.5)

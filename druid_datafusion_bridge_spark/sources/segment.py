@@ -3,9 +3,11 @@
 Read side mirrors the reference's DruidSegment (src/segment/mod.rs:37-109):
 version check -> smoosh mmap -> index.drd parse -> per-column JSON header
 walk -> Arrow schema with every field nullable; `__time` always surfaces
-as a timestamp regardless of its descriptor (mod.rs:118-121). Unlike the
-reference we keep string columns dictionary-encoded into Arrow instead of
-eagerly flattening (string.rs:116-125 copies every string).
+as a timestamp regardless of its descriptor (mod.rs:118-121).
+``read_column`` returns a single-value string column dictionary-encoded
+(the stored dictionary plus an id vector, no per-row string copy, where
+string.rs:116-125 copies every string); ``read_batch`` returns the
+schema's plain types, so there its string columns are ``string``.
 
 Write side (no reference counterpart — its fixture is pre-built by Druid
 itself): encodes a pyarrow Table into a spec-exact segment directory so
@@ -37,7 +39,7 @@ TIME_COLUMN = "__time"
 class _ValueType(NamedTuple):
     """How one Druid ``valueType`` is read, written and typed."""
 
-    arrow: pa.DataType  # the schema type (STRING reads dictionary-encoded)
+    arrow: pa.DataType  # the schema type (read_column keeps STRING dictionary-encoded)
     inputs: tuple  # the Arrow input types write_segment stores as this type
     dtype: type | None  # stored numpy dtype; None for non-numeric layouts
     read: Callable  # druid_format reader: (data, payload, rows=) -> values

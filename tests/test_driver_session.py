@@ -27,8 +27,15 @@ CHILD = os.path.join(os.path.dirname(os.path.abspath(__file__)), "driver_session
 # session-sensitive surfaces: timestamps (session tz, NTZ inference,
 # nanos-as-long), decimals under ANSI, window frames, streaming's batch
 # twin, Druid SQL text (spark.sql path needs views registered
-# per-call), and an approximate operator's contract oracle.
+# per-call), and an approximate operator's contract oracle. The
+# multimodal decoders run first: their worker bodies call the package's
+# codecs by reference, so they need the package zip before any
+# DataSource read has shipped it.
 SAMPLE = [
+    "mm_png_color_decode",
+    "mm_gif_decode",
+    "mm_wav_resample",
+    "mm_ppm_decode",
     "a12_time_bucket",        # date_trunc + decimal sum on events.ts
     "p4_time_filter",         # pushdown-eligible time-range predicate
     "fd_time_functions",      # TIME_FLOOR/EXTRACT vs DuckDB date_trunc
@@ -45,12 +52,16 @@ SAMPLE = [
 ]
 
 
-def _run_child(sf_dir: str, names: list[str]) -> None:
+def _run_child(sf_dir: str, names: list[str], cwd: str) -> None:
+    """Run the child from ``cwd``, outside the repo: Python workers
+    then cannot import this package from their working directory and
+    get it only from the shipped package zip."""
     proc = subprocess.run(
         [sys.executable, CHILD, sf_dir, *names],
         capture_output=True,
         text=True,
         timeout=1500,
+        cwd=cwd,
     )
     assert proc.returncode == 0, (
         f"plain-session differential failed:\n{proc.stdout[-2000:]}\n{proc.stderr[-4000:]}"
@@ -58,15 +69,15 @@ def _run_child(sf_dir: str, names: list[str]) -> None:
     assert f"OK {len(names)}" in proc.stdout
 
 
-def test_plain_session_sample():
+def test_plain_session_sample(tmp_path):
     """Fast tier: representative queries at sf0.001 under a bare session."""
-    _run_child(SF_DIR, SAMPLE)
+    _run_child(SF_DIR, SAMPLE, str(tmp_path))
 
 
 @pytest.mark.sf01
-def test_plain_session_driver_sample_sf01():
+def test_plain_session_driver_sample_sf01(tmp_path):
     """Full-fidelity pre-flight: the driver's exact sample (first 50
     registry entries in registration order) at the driver's gate scale,
     under the driver's kind of session."""
     names = list(all_oracles())[:50]
-    _run_child(SF01_DIR, names)
+    _run_child(SF01_DIR, names, str(tmp_path))

@@ -398,6 +398,10 @@ def test_segment_projection_reads_subset(tmp_path):
         b = seg.read_batch(["added", "channel"])
         assert b.schema.names == ["added", "channel"]
         assert b.num_rows == 5
+        # read_column keeps the stored dictionary; read_batch returns
+        # the schema's plain string type
+        assert seg.read_column("channel").type == pa.dictionary(pa.int32(), pa.string())
+        assert b.column(1).type == pa.string()
     finally:
         seg.close()
 

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from druid_datafusion_bridge_spark.operators.multimodal import (
@@ -119,6 +120,16 @@ def test_decoders_reject_malformed_input():
     )
     with pytest.raises(ValueError):
         decode_wav(stereo)
+    # cut payloads name the format, as decode_png/gif/bmp do
+    from druid_datafusion_bridge_spark.operators.multimodal.core import (
+        _ppm_encode,
+        _wav_encode,
+    )
+
+    with pytest.raises(ValueError, match="truncated or malformed PPM"):
+        decode_ppm(_ppm_encode(3)[:20])
+    with pytest.raises(ValueError, match="truncated or malformed WAV"):
+        decode_wav(_wav_encode(3)[:50])
 
 
 def test_video_walker_parses_variable_frame_streams():
@@ -321,10 +332,10 @@ def test_gif_truncated_payload_raises_loudly():
 
 
 def test_channel_stats_truncated_payload_loud_on_executor(spark):
-    """The executor-side decode closures in gif/png/ppm_channel_stats
-    must surface a cut payload as the documented ValueError text (the
-    bare IndexError/struct.error contract gap the r9 ADVICE flagged),
-    not an anonymous worker traceback."""
+    """gif/png_channel_stats must surface a cut payload on the executor
+    as the decoders' documented ValueError text (the bare
+    IndexError/struct.error contract gap the r9 ADVICE flagged), not an
+    anonymous worker traceback."""
     import pytest
 
     from druid_datafusion_bridge_spark.operators.multimodal import (
@@ -346,6 +357,35 @@ def test_channel_stats_truncated_payload_loud_on_executor(spark):
     )
     with pytest.raises(Exception, match="truncated or malformed PNG"):
         png_channel_stats(blobs).collect()
+
+
+def test_png_channel_stats_takes_rgb_and_palette_only(spark):
+    """png_channel_stats decodes through decode_png: a palette PNG
+    counts as its PLTE-expanded RGB, and any other channel layout is
+    the loud ``unsupported PNG layout``."""
+    import numpy as np
+    import pytest
+
+    from druid_datafusion_bridge_spark.operators.multimodal import (
+        _png_encode_typed,
+        decode_png,
+        png_channel_stats,
+    )
+
+    palette = _png_encode_typed(1)  # doc 1 of the cycle is palette
+    blobs = spark.createDataFrame(
+        [(1, bytearray(palette))], "doc_id long, payload binary"
+    )
+    (row,) = png_channel_stats(blobs).collect()
+    w, h, pix = decode_png(palette)
+    sums = pix.reshape(-1, 3).sum(axis=0, dtype=np.int64).tolist()
+    assert (row.width, row.height) == (w, h)
+    assert [row.sum_r, row.sum_g, row.sum_b] == sums
+    gray = spark.createDataFrame(
+        [(0, bytearray(_png_encode_typed(0)))], "doc_id long, payload binary"
+    )
+    with pytest.raises(Exception, match="unsupported PNG layout"):
+        png_channel_stats(gray).collect()
 
 
 def test_bmp_decode_quirks_and_loud_errors():
@@ -658,3 +698,60 @@ def test_codec_inputs_are_rebalanced_across_tasks(spark):
     one = with_ppm_payload(docs.coalesce(1)).select("doc_id", "payload")
     many = with_ppm_payload(docs).select("doc_id", "payload")
     assert sorted(map(str, one.collect())) == sorted(map(str, many.collect()))
+
+
+# sha256 over the payloads of doc ids 0..63, in id order, for every
+# payload builder and the color-type PNG law: the oracles check decoded
+# stats, these pin the encoded bytes themselves.
+PAYLOAD_SHA256 = {
+    "with_ppm_payload": "91cfce20690d1d2b02d507aa2ac63772d99aeaf612f7be8dfc84d6a7b15d5871",
+    "with_wav_payload": "c5c885ee9641469226d640b820033cf3b2c9879550b793d1cb0c508261c26ea1",
+    "with_video_payload": "624c6f0fe96c6913ae1b632e3973fd5fc28c2b608180a4a39bda0dca9ac6d392",
+    "with_png_payload": "6a872b0e7d1ce4e5a244c695306a42cff42248787d3d1aa0ca1dd08c8660f878",
+    "with_gif_payload": "9c3337ff6ffe7c9cd1b04d4d0e69be6dd7dac0c4070d9077b86dff5175741849",
+    "with_bmp_payload": "d4c807b661f10f23c85e14dd7e7736525ef78b13c160a8228526ed1b5a6e1712",
+    "with_jpeg_payload": "f885a479f62aa585ca3c6fd3a9fd5602d9a8d7b34a03ce51c0e3ea08f18386c8",
+    "with_jpeg_color_payload": "4fb37b16157d933da75f44ced935ece257c7144f3e79cfaebe973bde3c0fdbe4",
+    "with_jpeg_420_payload": "d3b836e0c145fea9c477d761fe4b6d34d7bc6643b2aa5dcefe92e9966f2aa1a7",
+}
+PNG_TYPED_SHA256 = "8348f3d52f3934bd87dc6191627bbc157283183d2b38c65bff8023e1ea8a4fea"
+BINARY_SHA256 = "90950bddee3508e592cc5d6dde7702807abad476c87c54f0f41d75a994c2bb00"
+
+
+def _payloads(df, key="doc_id"):
+    return [bytes(r.payload) for r in sorted(df.collect(), key=lambda r: r[key])]
+
+
+def test_payload_bytes_are_pinned(spark):
+    import hashlib
+
+    from druid_datafusion_bridge_spark.operators import multimodal as mm
+
+    ids = spark.range(64).select(F.col("id").alias("doc_id"))
+    got = {}
+    for name in PAYLOAD_SHA256:
+        got[name] = hashlib.sha256(
+            b"".join(_payloads(getattr(mm, name)(ids)))
+        ).hexdigest()
+    assert got == PAYLOAD_SHA256
+    typed = b"".join(mm._png_encode_typed(d) for d in range(64))
+    assert hashlib.sha256(typed).hexdigest() == PNG_TYPED_SHA256
+    text = ids.select(
+        "doc_id",
+        F.concat(F.lit("doc "), F.col("doc_id").cast("string")).alias("text"),
+    )
+    binary = b"".join(_payloads(mm.with_binary_payload(text)))
+    assert hashlib.sha256(binary).hexdigest() == BINARY_SHA256
+
+
+@pytest.mark.parametrize("name", sorted(PAYLOAD_SHA256))
+def test_payload_builders_take_any_id_col(spark, name):
+    """A builder keys its output by ``id_col`` whatever that column is
+    called, and the payloads equal those keyed by a ``doc_id`` column."""
+    from druid_datafusion_bridge_spark.operators import multimodal as mm
+
+    build = getattr(mm, name)
+    rows = sorted(build(spark.range(3), id_col="id").collect())
+    assert [r.doc_id for r in rows] == [0, 1, 2]
+    by_doc_id = build(spark.range(3).withColumnRenamed("id", "doc_id"))
+    assert [bytes(r.payload) for r in rows] == _payloads(by_doc_id)

@@ -591,7 +591,7 @@ def test_json_extraction_differential(spark, kv):
 @SET
 def test_fixed_hist_median_differential(spark, a):
     """fixedBucketsHistogram digest (operators/sketches.py hist_bucket +
-    median_from_counters) vs the same formula in DuckDB over adversarial
+    quantiles_from_counters at p50) vs the same formula in DuckDB over adversarial
     values: negatives clip into bucket 0, overflow clips into the last
     bucket, values landing exactly ON a bucket edge, and cumulative
     counts landing exactly ON the 0.5*n target (frac 0/1 boundary) must
@@ -599,7 +599,7 @@ def test_fixed_hist_median_differential(spark, a):
     is one IEEE expression over exactly-representable inputs."""
     from druid_datafusion_bridge_spark.operators.sketches import (
         hist_bucket,
-        median_from_counters,
+        quantiles_from_counters,
     )
 
     import pyspark.sql.functions as F
@@ -609,7 +609,7 @@ def test_fixed_hist_median_differential(spark, a):
     counters = df.groupBy(
         "k", hist_bucket(F.col("v"), buckets, width).alias("pos")
     ).agg(F.count("*").alias("cnt"))
-    got = median_from_counters(counters, ["k"], width)
+    got = quantiles_from_counters(counters, ["k"], width, {"p50_est": 0.5})
 
     con = duckdb.connect()
     pdf = pd.DataFrame(a, columns=["k", "v"])
